@@ -46,8 +46,10 @@ def _cpu_probe() -> dict:
 
 
 def main() -> None:
+    from kgx.session import default_parallelism, get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     replicate_factor = int(os.environ.get("KGX_BENCH_REPLICATE", "8"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
@@ -55,8 +57,6 @@ def main() -> None:
     # minutes (BENCH/BASELINE.md methodology) — recording a no-Spark busy
     # loop next to the timings lets any reader normalize a noisy draw
     probe = _cpu_probe()
-
-    from kgx.session import get_spark
 
     spark = get_spark(
         "kgx-bench", master=f"local[{cpus}]", shuffle_partitions=2 * cpus

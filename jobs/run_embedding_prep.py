@@ -47,14 +47,21 @@ def main(argv=None) -> int:
     p.add_argument("--biased", action="store_true",
                    help="node2vec second-order biased walks instead of "
                         "the uniform DeepWalk sampler")
-    p.add_argument("--w-return", type=int, default=1,
-                   help="node2vec return weight (~1/p), --biased only")
-    p.add_argument("--w-near", type=int, default=4,
-                   help="node2vec distance-1 weight, --biased only")
-    p.add_argument("--w-far", type=int, default=2,
-                   help="node2vec distance-2 weight (~1/q), --biased only")
+    # the weights default to None so one given without --biased is caught
+    weights = {"w_return": 1, "w_near": 4, "w_far": 2}
+    p.add_argument("--w-return", type=int,
+                   help="node2vec return weight (~1/p), --biased only (default 1)")
+    p.add_argument("--w-near", type=int,
+                   help="node2vec distance-1 weight, --biased only (default 4)")
+    p.add_argument("--w-far", type=int,
+                   help="node2vec distance-2 weight (~1/q), --biased only (default 2)")
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
+    if not args.biased and any(getattr(args, k) is not None for k in weights):
+        p.error("--w-return/--w-near/--w-far apply only to --biased walks")
+    for k, default in weights.items():
+        if getattr(args, k) is None:
+            setattr(args, k, default)
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F

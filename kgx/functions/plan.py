@@ -19,6 +19,13 @@ bound attributes; CollapseProject cannot inline across a Generate, so
 downstream lambdas read row values instead of re-running expressions.
 Cost: one extra narrow operator per row — no shuffle, no caching, no
 memory pinning (unlike persist(), which needs lifecycle management).
+
+:func:`materialize` is the other barrier: a stage boundary that later
+plans read many times.  ``persist()`` would serve the rows, but its
+InMemoryRelation carries the whole upstream plan, so every downstream SQL
+execution and AQE re-plan re-renders it — on 1,000 documents the curation
+funnel's last stage built a 38 MB plan string that way.  An eager ``localCheckpoint`` leaves
+a short ``Scan ExistingRDD`` leaf instead; :func:`release` frees it.
 """
 
 from __future__ import annotations
@@ -34,3 +41,22 @@ def project_barrier(df: DataFrame) -> DataFrame:
     return df.select(
         F.explode(F.array(F.struct(*[F.col(c) for c in df.columns]))).alias("_row")
     ).select("_row.*")
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Pin ``df`` with an eager ``localCheckpoint``: one job computes its
+    rows into executor storage, and the returned frame reads them back
+    through a leaf scan with none of ``df``'s lineage in its plan.
+
+    Trade-off: checkpoint blocks are not replicated, and the lineage that
+    could recompute them is gone, so losing an executor fails the job
+    instead of retrying it.  Jobs that must survive that keep durable
+    snapshots (``resume=True``) as their recovery path.  Free the blocks
+    with :func:`release` once the consumers have run."""
+    return df.localCheckpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Drop the checkpoint blocks of a frame returned by :func:`materialize`
+    (``DataFrame.unpersist`` only knows the cache manager's entries)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)

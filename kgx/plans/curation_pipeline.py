@@ -17,10 +17,12 @@ the survivors, text rewrites last —
    (:func:`kgx.operators.curation.sentence_prune`); documents whose every
    sentence was seen elsewhere drop out.
 
-Each stage materializes its survivor set once (persisted (doc_id, text) —
-never wider), so the funnel metrics cost no recomputation and downstream
-stages reuse the cached survivors.  Output: ``curated/`` parquet (doc_id,
-text) plus a one-row ``funnel`` table recording per-stage document counts —
+Each stage materializes its survivor set once (an eager local checkpoint
+of (doc_id, text) — never wider, see :func:`kgx.functions.plan.materialize`),
+so the funnel metrics cost no recomputation, downstream stages reuse the
+stored survivors, and each stage's plan starts from a short leaf scan
+instead of every upstream stage's plan.  Output: ``curated/`` parquet
+(doc_id, text) plus a one-row ``funnel`` table recording per-stage document counts —
 the number a 100 TB curation run reports to its operators.
 
 The reference has no corpus curation (one trusted document per request,
@@ -36,7 +38,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgx.functions.plan import materialize, release
 from kgx.operators import curation, dedup, textstats
+from kgx.plans.lineage import read_or_empty
 
 
 @dataclass
@@ -56,7 +60,7 @@ class CurationConfig:
     quality_kwargs: dict = field(default_factory=dict)
 
 
-# Shared stage builders — run() (count-instrumented, persisted) and
+# Shared stage builders — run() (count-instrumented, checkpointed) and
 # funnel_final() (the lazy gate-query/oracle view) compose the SAME stages,
 # so the metrics job and the correctness oracle can never drift.
 
@@ -100,51 +104,48 @@ def _stage_prune(docs_txt: DataFrame) -> DataFrame:
     )
 
 
-#: survivor tables persisted by funnel_final — bounded ((doc_id, text),
+#: survivor tables checkpointed by funnel_final — bounded ((doc_id, text),
 #: never wider than the corpus); clear with clear_funnel_cache()
 _FUNNEL_CACHE: list[DataFrame] = []
 
 
 def clear_funnel_cache() -> None:
     while _FUNNEL_CACHE:
-        _FUNNEL_CACHE.pop().unpersist()
+        release(_FUNNEL_CACHE.pop())
 
 
-def funnel_final(
-    documents: DataFrame, cfg: CurationConfig, persist: bool = True
-) -> DataFrame:
+def funnel_final(documents: DataFrame, cfg: CurationConfig) -> DataFrame:
     """The curated corpus as ONE DataFrame (doc_id, text): quality gate →
     exact dedup → near-dup keep-one → PII scrub → sentence prune.  This is
     the gate-query view of :func:`run` — the DuckDB oracle
     (kgx.oracles.curation_funnel_sql) replays the identical five-stage
     composition as CTEs.
 
-    ``persist`` (default on) caches the two survivor-set boundaries that
-    the downstream plan references many times — near-dup clustering reads
-    its input ~6× (shingles, sizes, signature verify, corpus map-back) and
-    sentence prune reads its input 3× (instances, keep-key join, text
-    rejoin), so a fully lazy composition re-evaluates the quality+dedup
-    chain multiplicatively (measured: minutes instead of seconds at sf0.1).
-    Cached tables are (doc_id, text) only; call :func:`clear_funnel_cache`
-    when done (mirrors __spark_entry__'s bounded extraction cache).
+    The survivor-set boundaries that the downstream plan references many
+    times are pinned — near-dup clustering reads its input ~6× (shingles,
+    sizes, signature verify, corpus map-back) and sentence prune reads its
+    input 3× (instances, keep-key join, text rejoin), so a fully lazy
+    composition re-evaluates the quality+dedup chain multiplicatively
+    (measured: minutes instead of seconds at sf0.1).  Boundaries are
+    (doc_id, text) only; call :func:`clear_funnel_cache` when done (mirrors
+    __spark_entry__'s bounded extraction cache).
 
-    Boundaries are materialized EAGERLY (a count() per persisted boundary):
-    inside one fully-lazy job the near-dup plan references its cached input
-    from several concurrent shuffle-map branches (signatures, two
-    verification sides, the keep semi-join), and branches racing a COLD
-    cache each recompute the whole upstream chain — measured ~2× the
-    stage-sequential cost at sf0.1.  Three cheap extra jobs buy
-    populated-once caches."""
-    from pyspark import StorageLevel
+    Each boundary is an eager local checkpoint
+    (:func:`kgx.functions.plan.materialize`), not a lazy cache: inside one
+    fully-lazy job the near-dup plan references its input from several
+    concurrent shuffle-map branches (signatures, two verification sides,
+    the keep semi-join), and branches racing a COLD cache each recompute
+    the whole upstream chain — measured ~2× the stage-sequential cost at
+    sf0.1.  The returned plan reads every boundary through a short
+    ``Scan ExistingRDD`` leaf, so it no longer embeds the upstream stages'
+    plans (a persisted boundary's plan text grew to MBs by the prune)."""
 
     def _mark(df: DataFrame) -> DataFrame:
-        if persist:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            _FUNNEL_CACHE.append(df)
-            df.count()
+        df = materialize(df)
+        _FUNNEL_CACHE.append(df)
         return df
 
-    # the INPUT is cached too: the quality gate derives ~10 stat columns
+    # the INPUT is pinned too: the quality gate derives ~10 stat columns
     # from text, and Catalyst's collapsed projection re-evaluates the input
     # plan once per derived column — multiplicative when the input is a
     # computed view (a rendered fixture, a decoded/normalized upstream)
@@ -182,16 +183,13 @@ def _stage_lineage_path(out_dir: str) -> str:
 
 def read_stage_lineage(spark: SparkSession, out_dir: str) -> dict[str, dict]:
     """{stage: {"metric": ..., "n_docs": ..., "n_pii": ...}} for committed
-    stages; empty on a fresh out_dir."""
-    try:
-        rows = (
-            spark.read.schema(CURATION_LINEAGE_SCHEMA)
-            .parquet(_stage_lineage_path(out_dir))
-            .collect()
-        )
-    except Exception:
-        return {}
-    return {r["stage"]: r.asDict() for r in rows}
+    stages; empty on a fresh out_dir.  A lineage table that exists but
+    cannot be read raises: treating it as empty would silently redo every
+    committed stage."""
+    lineage = read_or_empty(
+        spark, _stage_lineage_path(out_dir), CURATION_LINEAGE_SCHEMA
+    )
+    return {r["stage"]: r.asDict() for r in lineage.collect()}
 
 
 def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
@@ -227,15 +225,19 @@ def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
         else:
             break
 
-    # persist the input: the quality stage's collapsed projection
-    # re-evaluates the input plan per derived stat column (see funnel_final)
-    documents = documents.persist()
-    funnel: dict[str, int] = {"input": documents.count()}
-    persisted: list[DataFrame] = [documents]
+    # every stage boundary is pinned (see funnel_final) and released on
+    # return; the input too, because the quality stage's collapsed
+    # projection re-evaluates the input plan per derived stat column
+    pinned: list[DataFrame] = []
+    funnel: dict[str, int] = {}
+
+    def _pin(df: DataFrame) -> DataFrame:
+        df = materialize(df)
+        pinned.append(df)
+        return df
 
     def _commit(stage: str, metric: str, df: DataFrame, n_pii: int = 0) -> DataFrame:
-        df = df.persist()
-        persisted.append(df)
+        df = _pin(df)
         funnel[metric] = df.count()
         if resume:
             df.write.mode("overwrite").parquet(
@@ -248,50 +250,52 @@ def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
             ).write.mode("append").parquet(_stage_lineage_path(cfg.out_dir))
         return df
 
-    if start_idx > 0:
-        last_stage, _ = stage_defs[start_idx - 1]
-        docs = spark.read.parquet(
-            _stage_snapshot_path(cfg.out_dir, last_stage)
-        ).persist()
-        persisted.append(docs)
-        for name, metric in stage_defs[:start_idx]:
-            funnel[metric] = int(done[name]["n_docs"])
-            if name == "pii":
-                funnel["pii_redactions"] = int(done[name]["n_pii"])
-        if last_stage == "pii":
-            docs = docs.select("doc_id", "text")
-    else:
-        docs = documents
+    try:
+        documents = _pin(documents)
+        funnel["input"] = documents.count()
 
-    for name, metric in stage_defs[start_idx:]:
-        if name == "quality":
-            docs = _commit(name, metric, _stage_quality(docs, cfg))
-        elif name == "exact_dedup":
-            # persisted: the near-dup stage reads its input ~6x — shingles,
-            # sizes, verify, corpus map-back
-            docs = _commit(name, metric, _stage_exact(docs))
-        elif name == "near_dup":
-            docs = _commit(name, metric, _stage_near_dup(docs, cfg))
-        elif name == "pii":
-            scrubbed = _stage_pii(docs).persist()
-            persisted.append(scrubbed)
-            n_pii = int(
-                scrubbed.agg(F.coalesce(F.sum("n_pii"), F.lit(0))).collect()[0][0]
+        if start_idx > 0:
+            last_stage, _ = stage_defs[start_idx - 1]
+            docs = _pin(
+                spark.read.parquet(_stage_snapshot_path(cfg.out_dir, last_stage))
             )
-            funnel["pii_redactions"] = n_pii
-            docs = _commit(name, metric, scrubbed.select("doc_id", "text"), n_pii)
+            for name, metric in stage_defs[:start_idx]:
+                funnel[metric] = int(done[name]["n_docs"])
+                if name == "pii":
+                    funnel["pii_redactions"] = int(done[name]["n_pii"])
+            if last_stage == "pii":
+                docs = docs.select("doc_id", "text")
+        else:
+            docs = documents
 
-    # final: corpus-wide sentence prune (keep-first; fully-pruned docs drop
-    # out) — its output IS the curated table, so no separate snapshot
-    final = (_stage_prune(docs) if cfg.prune_sentences else docs).persist()
-    persisted.append(final)
-    funnel["final_docs"] = final.count()
+        for name, metric in stage_defs[start_idx:]:
+            if name == "quality":
+                docs = _commit(name, metric, _stage_quality(docs, cfg))
+            elif name == "exact_dedup":
+                # pinned: the near-dup stage reads its input ~6x — shingles,
+                # sizes, verify, corpus map-back
+                docs = _commit(name, metric, _stage_exact(docs))
+            elif name == "near_dup":
+                docs = _commit(name, metric, _stage_near_dup(docs, cfg))
+            elif name == "pii":
+                scrubbed = _pin(_stage_pii(docs))
+                n_pii = int(
+                    scrubbed.agg(F.coalesce(F.sum("n_pii"), F.lit(0))).collect()[0][0]
+                )
+                funnel["pii_redactions"] = n_pii
+                docs = _commit(name, metric, scrubbed.select("doc_id", "text"), n_pii)
 
-    if cfg.write:
-        final.write.mode("overwrite").parquet(os.path.join(cfg.out_dir, "curated"))
-        spark.createDataFrame([funnel]).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(cfg.out_dir, "funnel")
-        )
-    for df in persisted:
-        df.unpersist()
+        # final: corpus-wide sentence prune (keep-first; fully-pruned docs
+        # drop out) — its output IS the curated table, so no separate snapshot
+        final = _pin(_stage_prune(docs) if cfg.prune_sentences else docs)
+        funnel["final_docs"] = final.count()
+
+        if cfg.write:
+            final.write.mode("overwrite").parquet(os.path.join(cfg.out_dir, "curated"))
+            spark.createDataFrame([funnel]).coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(cfg.out_dir, "funnel")
+            )
+    finally:
+        for df in pinned:
+            release(df)
     return funnel

@@ -30,6 +30,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,12 +63,21 @@ def lineage_path(out_dir: str) -> str:
     return os.path.join(out_dir, "lineage")
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = lineage_path(out_dir)
+def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """The parquet table at ``path``, or an empty one when the path does
+    not exist (a fresh output dir).  Any other read error propagates: a
+    corrupt or unreachable commit log must fail the job, not read as
+    "nothing committed" and silently redo committed work."""
     try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], schema)
+
+
+def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    return read_or_empty(spark, lineage_path(out_dir), LINEAGE_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:

@@ -11,6 +11,10 @@ is what we'd ship in ``spark-defaults.conf`` for a 1000-executor job:
 - Shuffle partitions default to 2x cores locally; on a real cluster AQE
   coalesces from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
   downward, so oversizing is safe and undersizing is not.
+- ANSI mode pinned on, not inherited from a cluster's ``spark-defaults``:
+  every fixed-point operator (PageRank, k-means, PQ/ADC, BM25, node2vec
+  weights, token_mix rates) relies on bigint overflow raising
+  ARITHMETIC_OVERFLOW; with ANSI off it would wrap around silently.
 """
 
 from __future__ import annotations
@@ -56,6 +60,7 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -12,7 +12,8 @@ SF_DIR = os.environ.get("KGX_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from kgx.session import get_spark
 
-    s = get_spark("kgx-tests", master="local[8]", shuffle_partitions=8)
+    # master defaults to local[default_parallelism()]: the host's cores
+    s = get_spark("kgx-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -135,10 +135,8 @@ def test_funnel_final_matches_run_survivors(spark):
     assert {d for d, _ in lazy} == {1, 4, 5}
 
 
-def test_funnel_plan_reuses_cached_survivors(spark):
-    # the funnel plan must read its survivor-set boundaries from cache
-    # (InMemoryTableScan) and contain no cartesian anywhere — a fully lazy
-    # composition re-evaluates the quality+dedup chain multiplicatively
+@pytest.fixture(scope="module")
+def funnel_plan(spark):
     from kgx.plans.curation_pipeline import clear_funnel_cache, funnel_final
 
     rows = [(i, GOOD.replace("research", f"research{i}")) for i in range(8)]
@@ -148,17 +146,51 @@ def test_funnel_plan_reuses_cached_survivors(spark):
         quality_kwargs={"max_symbol_ratio": 0.2},
     )
     try:
-        df = funnel_final(documents, cfg)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "InMemoryTableScan" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoop" not in plan
+        yield funnel_final(documents, cfg)
     finally:
         clear_funnel_cache()
+
+
+def test_funnel_plan_reuses_cached_survivors(spark, funnel_plan):
+    # the funnel plan must read its survivor-set boundaries from
+    # checkpointed data (a Scan ExistingRDD leaf over localCheckpoint
+    # blocks, no persisted InMemoryRelation) and contain no cartesian
+    # anywhere — a fully lazy composition re-evaluates the quality+dedup
+    # chain multiplicatively
+    plan = funnel_plan._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    assert "Scan ExistingRDD" in plan
+    assert "localCheckpoint" in plan
+    assert "InMemoryTableScan" not in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoop" not in plan
+
+
+def test_funnel_plan_text_stays_small(funnel_plan):
+    # each checkpointed boundary cuts the upstream stages out of the plan;
+    # with persisted boundaries every InMemoryRelation embedded its whole
+    # upstream plan and this text was ~2 MB on these 8 documents
+    size = len(funnel_plan._jdf.queryExecution().toString())
+    assert size < 200_000, size
+
+
+def test_corrupt_stage_lineage_raises(spark, tmp_path):
+    # a corrupt funnel lineage must fail the resumed job, not read as
+    # "nothing committed" and silently redo every stage
+    import os
+
+    from kgx.plans.curation_pipeline import _stage_lineage_path, read_stage_lineage
+
+    out = str(tmp_path)
+    assert read_stage_lineage(spark, out) == {}  # fresh out_dir
+    os.makedirs(_stage_lineage_path(out))
+    with open(os.path.join(_stage_lineage_path(out), "part-0.parquet"), "w") as f:
+        f.write("not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        read_stage_lineage(spark, out)
 
 
 def _resume_cfg(out, **kw):

@@ -1012,3 +1012,20 @@ def test_run_embedding_prep_job_biased_walks(spark, prep_graph, tmp_path):
     materialized = {(r.start_label, r.walk_id): list(r.walk)
                     for r in spark.read.parquet(prep_out + "/walks").collect()}
     assert materialized == direct
+
+
+def test_run_embedding_prep_rejects_weights_without_biased(capsys):
+    """The node2vec weight flags only shape --biased walks; passing one
+    without --biased is a usage error, not a silently ignored flag."""
+    import sys
+
+    sys.path.insert(0, "jobs")
+    try:
+        import run_embedding_prep
+    finally:
+        sys.path.pop(0)
+    for flag in ("--w-return", "--w-near", "--w-far"):
+        with pytest.raises(SystemExit) as exc:
+            run_embedding_prep.main(["--graph", "g", "--out", "o", flag, "3"])
+        assert exc.value.code == 2
+        assert "--biased" in capsys.readouterr().err

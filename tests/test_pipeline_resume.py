@@ -303,3 +303,21 @@ def test_append_lineage_hdfs_uses_temp_then_rename(spark, monkeypatch):
         assert not [f for f in os.listdir(lin.lineage_path(d)) if f.endswith(".tmp")]
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_unreadable_lineage_raises(spark):
+    """Only an ABSENT lineage table reads as "no buckets done".  A corrupt
+    one, or a location that cannot be read at all, must fail the job:
+    treating it as empty would silently recompute every committed bucket."""
+    d = tempfile.mkdtemp(prefix="kgx_lin_bad_")
+    try:
+        assert lin.completed_buckets(spark, d) == []  # fresh out_dir
+        os.makedirs(lin.lineage_path(d))
+        with open(os.path.join(lin.lineage_path(d), "part-0.parquet"), "w") as f:
+            f.write("not a parquet file")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            lin.completed_buckets(spark, d)
+        with pytest.raises(Exception, match="UnsupportedFileSystem|No FileSystem"):
+            lin.read_lineage(spark, "nosuchfs://bucket/out")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

@@ -38,7 +38,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from kgx.session import get_spark
 
-    spark = get_spark("oracle-compare", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-compare", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"

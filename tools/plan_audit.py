@@ -187,7 +187,7 @@ def main() -> None:
     from kgx.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark("plan-audit", master="local[8]")
+    spark = get_spark("plan-audit")
     sf = "/root/testdata/sf0.01"
     qs = entrymod.queries()
 
