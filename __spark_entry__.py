@@ -729,10 +729,11 @@ def q_kg_scd2_intervals(spark, sf_dir):
     gaps-and-islands per triple — the point-in-time table a versioned
     KG serves.  One bounded window (≤ 3 rows per triple) + one
     map-side-combined min/max aggregate."""
+    from kgx.functions.plan import materialize
     from kgx.operators import extract
     from kgx.plans import versions
 
-    t = extract.triples_table(_graphs(spark, sf_dir)).localCheckpoint()
+    t = materialize(extract.triples_table(_graphs(spark, sf_dir)))
     dnum = "cast(substr(doc_id, 5) as bigint)"  # doc_id = 'doc-<n>'
     runs = (
         t.where(f"pred != 'acquired' AND {dnum} % 3 != 0")
@@ -743,7 +744,7 @@ def q_kg_scd2_intervals(spark, sf_dir):
         )
         .unionByName(t.withColumn("run_seq", F.lit(3).cast("long")))
     )
-    return versions.scd2_intervals(runs, n_runs=3)
+    return versions.scd2_intervals(runs)
 
 
 def q_graph_kcore(spark, sf_dir):

@@ -30,7 +30,7 @@ def main(argv=None) -> int:
     p.add_argument("--out", required=True, help="analytics output root")
     p.add_argument("--pagerank-iters", type=int, default=5)
     p.add_argument("--checkpoint-every", type=int, default=0,
-                   help="localCheckpoint cadence for deep pagerank runs (0 = off)")
+                   help="checkpoint cadence for deep pagerank runs (0 = off)")
     p.add_argument("--lpa-iters", type=int, default=3)
     p.add_argument("--kcore-k", type=int, default=2)
     p.add_argument("--negatives-k", type=int, default=2,

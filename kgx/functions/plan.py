@@ -26,6 +26,8 @@ InMemoryRelation carries the whole upstream plan, so every downstream SQL
 execution and AQE re-plan re-renders it — on 1,000 documents the curation
 funnel's last stage built a 38 MB plan string that way.  An eager ``localCheckpoint`` leaves
 a short ``Scan ExistingRDD`` leaf instead; :func:`release` frees it.
+Every pin in kgx goes through :func:`materialize`, so the pin policy lives
+here and nowhere else.
 """
 
 from __future__ import annotations
@@ -51,8 +53,10 @@ def materialize(df: DataFrame) -> DataFrame:
     Trade-off: checkpoint blocks are not replicated, and the lineage that
     could recompute them is gone, so losing an executor fails the job
     instead of retrying it.  Jobs that must survive that keep durable
-    snapshots (``resume=True``) as their recovery path.  Free the blocks
-    with :func:`release` once the consumers have run."""
+    snapshots (``resume=True``) as their recovery path; a deployment on
+    preemptible executors changes this one function instead (e.g. to a
+    reliable ``checkpoint()``).  Free the blocks with :func:`release` once
+    the consumers have run."""
     return df.localCheckpoint(eager=True)
 
 

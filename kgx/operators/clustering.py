@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kgx.functions.plan import materialize
 from kgx.operators.similarity import _dot, quantized
 
 #: Ranking expression for the argmax assignment: cosine without the
@@ -120,7 +121,7 @@ def kmeans_assign(
     )
     for _ in range(rounds):
         assigned = _assign(base, cents)
-        # localCheckpoint would truncate lineage for deep runs (the PageRank
+        # a pin would truncate lineage for deep runs (the PageRank
         # stance, graphstats.pagerank); at the 2-3 rounds used here the plan
         # stays shallow enough to leave lazy.
         cents = _update(assigned)
@@ -160,16 +161,11 @@ def semdedup(
         from kgx.operators.similarity import auto_centroids
 
         k = auto_centroids(embeddings, target_cluster_size)
-    # materialize the k-means result once: the within-cluster pair join
-    # consumes it three times (the assigns left-join plus both x/y sides),
-    # and without a cut each consumer re-runs the full Lloyd's iteration
-    # chain.  localCheckpoint (the linking.connected_components stance) both
-    # truncates the deep per-round lineage and caches the tiny
-    # (vec_id, cluster) table.
-    assigns = (
-        kmeans_assign(embeddings, k, rounds)
-        .select("vec_id", "cluster")
-        .localCheckpoint()
+    # pinned: the within-cluster pair join consumes it three times (the
+    # assigns left-join plus both x/y sides), and without the cut each
+    # consumer re-runs the full Lloyd's iteration chain
+    assigns = materialize(
+        kmeans_assign(embeddings, k, rounds).select("vec_id", "cluster")
     )
     base = quantized(embeddings).where(F.col("nrm") > 0)
     vb = assigns.join(base, "vec_id")
@@ -337,7 +333,6 @@ def pq_topk(
     m: int = 8,
     k_codes: int = 16,
     rounds: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """PQ asymmetric-distance top-k search (ADC, Jégou et al. 2011) —
     the retrieval half of IVF-PQ, composing over :func:`pq_codes`'
@@ -354,20 +349,13 @@ def pq_topk(
     n_queries·m and collapse map-side (one sum aggregate keyed on
     (query_id, vec_id) — the shuffle carries only pre-combined score
     rows); final top-k is a per-query window over k-bounded rows.
-    ``materialize`` (default on) pins the m·k_codes codebook with one
-    eager ``localCheckpoint``: it feeds TWO consumers (the codes-assign
-    broadcast and the LUT join), and a lazy plan would re-run the whole
-    Lloyd chain per consumer (the multi-branch stance of
-    common_neighbor_candidates / training_pairs).
 
     Output: (query_id, rank int, vec_id, adc_dist) — k rows per query,
     ascending exact-integer ADC distance, ties → min vec_id, self
     excluded.
     """
     _pq_validate(n_queries, k, m, k_codes, rounds)
-    codes, lut = _pq_index(
-        quantized(embeddings), m, k_codes, rounds, n_queries, materialize
-    )
+    codes, lut = _pq_index(quantized(embeddings), m, k_codes, rounds, n_queries)
     scored = (
         codes.join(F.broadcast(lut), ["subspace", "code"])
         .where(F.col("vec_id") != F.col("query_id"))
@@ -386,20 +374,17 @@ def _pq_validate(n_queries: int, k: int, m: int, k_codes: int, rounds: int) -> N
 
 
 def _pq_index(
-    base: DataFrame, m: int, k_codes: int, rounds: int,
-    n_queries: int, materialize: bool,
+    base: DataFrame, m: int, k_codes: int, rounds: int, n_queries: int
 ) -> tuple[DataFrame, DataFrame]:
     """The shared PQ index of the search family: train the per-subspace
     codebook over ``base`` (a :func:`~kgx.operators.similarity.quantized`
     table), assign codes, and build the query ADC lookup table.  Returns
     (codes (vec_id, subspace, code), lut (query_id, subspace, code,
-    lut_dist)).  ``materialize`` pins the trained codebook with one eager
-    ``localCheckpoint`` — it feeds TWO consumers (codes assignment + the
-    LUT join), the training_pairs multi-branch stance."""
+    lut_dist))."""
     sub = _pq_sub_table(base, m)
-    cents = _pq_train(sub, k_codes, rounds)
-    if materialize:
-        cents = cents.localCheckpoint(eager=True)
+    # pinned: codes assignment and the LUT join read the trained codebook,
+    # and a lazy plan would re-run the whole Lloyd chain per consumer
+    cents = materialize(_pq_train(sub, k_codes, rounds))
     codes = _pq_assign(sub, cents).select("vec_id", "subspace", "code")
     qsub = sub.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), "subspace", F.col("sq").alias("qsq")
@@ -431,7 +416,6 @@ def ivf_pq_topk(
     m: int = 8,
     k_codes: int = 16,
     rounds: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Full IVF-PQ approximate search (Jégou et al. 2011) — the composed
     billion-vector architecture: the coarse IVF quantizer
@@ -451,8 +435,7 @@ def ivf_pq_topk(
     lookups (centroids for probes, LUT for scoring).  The candidate →
     codes join is the only corpus-scale shuffle (AQE-decided, keyed on
     vec_id); scores collapse map-side before the final per-query top-k
-    window.  ``materialize`` pins the trained codebook once for its two
-    consumers (the pq_topk stance).
+    window.
 
     Output: (query_id, rank int, vec_id, adc_dist) — ascending ADC
     distance over probed-cell candidates only, ties → min vec_id, self
@@ -493,9 +476,7 @@ def ivf_pq_topk(
         .where(F.col("rn") <= nprobe)
         .select("query_id", "cell")
     )
-    codes, lut = _pq_index(
-        quantized(embeddings), m, k_codes, rounds, n_queries, materialize
-    )
+    codes, lut = _pq_index(quantized(embeddings), m, k_codes, rounds, n_queries)
     cand = (
         probes.join(cells, "cell")
         .where(F.col("vec_id") != F.col("query_id"))

@@ -152,7 +152,7 @@ def sentence_dedup_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def sentence_prune(documents: DataFrame, materialize: bool = False) -> DataFrame:
+def sentence_prune(documents: DataFrame) -> DataFrame:
     """Keep-first-occurrence sentence-level dedup — the removal half of the
     CCNet pass (:func:`sentence_dedup_stats` is the detection half).
 
@@ -168,20 +168,6 @@ def sentence_prune(documents: DataFrame, materialize: bool = False) -> DataFrame
     the surviving 0-based index *array* joins back to the one-row-per-document
     table where a position-aware higher-order ``filter`` rebuilds the text
     map-side.  The only exchange touching text is that final doc_id equi-join.
-
-    ``materialize``: the ``inst`` instance table feeds two plan branches
-    (the first-occurrence aggregate and the keep-key join side), so a lazy
-    plan runs the sentence-split regex over the corpus text THREE times
-    (both branches + the final rebuild); ``True`` pins ``inst`` — pure
-    bigints, far smaller than the text — with an eager ``localCheckpoint``,
-    cutting the split to the two-pass minimum.  Default OFF, unlike
-    minhash_lsh_pairs' analogous shingle-table switch, because the A/B
-    measurement splits the other way here: at sf0.1 the lazy plan wins
-    (minima 0.31 s vs 0.37 s, alternating 5-round A/B, persisted input) —
-    a sentence split over short cached docs is cheaper than the checkpoint
-    barrier, whereas the LSH shingle+md5-per-token pass is not.  Flip it on
-    for long-document corpora or computed-view inputs, where each extra
-    branch re-runs the full text pass.
     """
     sents = F.expr(_SENT_EXPR)
     # order key: doc_id * 2^20 + idx (narrative docs are far below 2^20
@@ -195,8 +181,7 @@ def sentence_prune(documents: DataFrame, materialize: bool = False) -> DataFrame
         F.expr(spark_md5_60("lower(sentence)")).alias("h"),
         (F.col("doc_id") * (1 << 20) + F.col("idx")).alias("k"),
     )
-    if materialize:
-        inst = inst.localCheckpoint(eager=True)
+    # not pinned: A/B at sf0.1 lost (minima 0.37 s pinned vs 0.31 s lazy)
     first = inst.groupBy("h").agg(F.min("k").alias("k_min"))
     kept = (
         inst.join(first, "h")

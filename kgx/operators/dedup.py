@@ -136,33 +136,21 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join via inverted index.
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard ≥ threshold.
     ``max_shingle_df`` drops shingles appearing in more than that many docs
-    before the self-join (the skew guard for web-scale corpora).
-
-    ``materialize`` (default on — same stance and rationale as
-    :func:`minhash_lsh_pairs`): the shingle table feeds up to FOUR plan
-    branches (the hot-shingle aggregate, the per-doc sizes, and both
-    self-join sides), and each branch of a lazy plan re-runs the
-    tokenize + shingle + md5-per-shingle pass.  Eager ``localCheckpoint``s
-    — the base table (covers the hot aggregate + anti-join input) and the
-    filtered table (covers sizes + both join sides) — pin it to one pass;
-    both are (doc_id, bigint) rows, far smaller than the text.  Measured
-    at sf0.1 (alternating 3-round A/B, warmed): 2.47-4.04 s vs 2.92-4.14 s
-    — uniformly ordered in the checkpoint's favor, and the gap grows with
-    document length (each extra branch re-runs the full text pass)."""
-    sh = shingle_table(documents, n)
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    before the self-join (the skew guard for web-scale corpora)."""
+    # pinned: the hot-shingle aggregate, the per-doc sizes and both
+    # self-join sides read the shingle table (the filtered one is pinned
+    # again); A/B at sf0.1: 2.47-4.04 s pinned vs 2.92-4.14 s lazy
+    sh = plan_fn.materialize(shingle_table(documents, n))
     if max_shingle_df is not None:
         hot = sh.groupBy("shingle_hash").count().where(F.col("count") > max_shingle_df)
-        sh = sh.join(hot.select("shingle_hash"), "shingle_hash", "left_anti")
-        if materialize:
-            sh = sh.localCheckpoint(eager=True)
+        sh = plan_fn.materialize(
+            sh.join(hot.select("shingle_hash"), "shingle_hash", "left_anti")
+        )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -248,7 +236,6 @@ def minhash_lsh_pairs(
     max_bucket: int = 200,
     shingle_expr: str | None = None,
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Banded-LSH candidate generation + exact Jaccard verification.
 
@@ -275,27 +262,14 @@ def minhash_lsh_pairs(
     sides).  Same output bit-for-bit, ~4× less work: the corpus-wide cost
     is one shingle+hash pass and one minhash pass, and the only shuffles
     carry (band, band_hash, id) buckets and candidate-id arrays.
-
-    ``materialize`` (default on, round-4 profiling find): the hashed-
-    shingle table feeds THREE separate plan branches — the signature
-    aggregate plus the two verification join sides — and Spark re-evaluates
-    an unmaterialized subplan per branch (exchange reuse does not apply:
-    each branch exchanges on a different key), so the tokenize + shingle +
-    md5-per-shingle pass ran 3× per corpus.  An eager ``localCheckpoint``
-    (the same stance as semdedup's cluster assignment and the CC rounds)
-    pins it to one pass; the materialized table is (id, hs) — the same
-    order of magnitude as the corpus text, which is what production dedup
-    pipelines materialize as their signature table anyway.  Measured
-    (alternating A/B, 6 rounds each, sf0.1, persisted input): minima
-    3.26 s vs 3.58 s and a uniformly better distribution — a ~9% win that
-    GROWS at scale, where the input is a computed view / long web text and
-    each extra branch re-runs the full tokenize+shingle+md5 pass instead
-    of reading a small cache.  ``False`` keeps the fully-lazy plan.
     """
     rows = num_hashes // bands
-    sets_all = hashed_shingles(documents, n, shingle_expr, id_col)
-    if materialize:
-        sets_all = sets_all.localCheckpoint(eager=True)
+    # pinned: the signature aggregate and both verification join sides
+    # read the (id, hs) table, each exchanging on a different key; A/B at
+    # sf0.1, 6 rounds: minima 3.26 s pinned vs 3.58 s lazy
+    sets_all = plan_fn.materialize(
+        hashed_shingles(documents, n, shingle_expr, id_col)
+    )
     sigs = _signatures_from(sets_all, num_hashes, id_col)
     banded = sigs.select(
         id_col,

@@ -25,11 +25,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgx.functions.plan import materialize
+
 
 def edge_list(triples: DataFrame) -> DataFrame:
     """Distinct global (subj, obj) label edges from doc-level triples.
     Self-loops were already excluded at extraction (SURVEY P5)."""
     return triples.select("subj", "obj").distinct()
+
+
+def _undirected_edges(triples: DataFrame) -> DataFrame:
+    """The distinct edge set in both directions, pinned
+    (:func:`~kgx.functions.plan.materialize`): every caller reads it from
+    several plan branches, so a lazy plan would replay the union+distinct
+    shuffle and the upstream extraction per branch."""
+    e = edge_list(triples)
+    return materialize(
+        e.union(
+            e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
+        ).distinct()
+    )
 
 
 def degree_stats(triples: DataFrame) -> DataFrame:
@@ -74,9 +89,10 @@ def pagerank(
     table plus one aggregate — the rank table carries only (label, rank)
     bigints, so at 10^12-doc scale the per-iteration shuffle is the edge
     list key-joined against a table orders of magnitude smaller than the
-    corpus.  ``checkpoint_every`` truncates lineage every k rounds via
-    ``localCheckpoint`` (eager) — set it for deep iteration counts in jobs;
-    leave None in lazy gate queries (5 rounds of joins plan fine).
+    corpus.  ``checkpoint_every`` pins the ranks every k rounds
+    (:func:`~kgx.functions.plan.materialize`), truncating lineage — set it
+    for deep iteration counts in jobs; leave None in lazy gate queries
+    (5 rounds of joins plan fine).
     """
     e = edge_list(triples)
     nodes = (
@@ -107,13 +123,11 @@ def pagerank(
             .alias("rank"),
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks
 
 
-def entity_cooccurrence(
-    nodes: DataFrame, min_co: int = 2, materialize: bool = True
-) -> DataFrame:
+def entity_cooccurrence(nodes: DataFrame, min_co: int = 2) -> DataFrame:
     """Document-level entity co-occurrence with an exact-integer lift
     score — the edge-weighting signal entity-linking and KG-completion
     pipelines hang off the raw co-mention counts (PMI's monotone cousin,
@@ -137,19 +151,10 @@ def entity_cooccurrence(
     margin table is one row per distinct entity, which at KG scale can be
     too large to force-broadcast); only the 1-row corpus count is an
     explicit broadcast.  Output: (label_a, label_b, co_docs, docs_a,
-    docs_b, lift_bp).
-
-    ``materialize`` (default on): the distinct (doc_id, label) table
-    feeds FOUR branches (per-doc arrays, both margin joins, the corpus
-    count), so a lazy plan re-runs its distinct shuffle and the upstream
-    extraction per branch; one eager ``localCheckpoint`` pins it
-    (alternating A/B at sf0.1: 2.07-2.62 s lazy vs 1.74-2.15 s pinned,
-    uniformly ordered; contamination_screen's analogous 2-branch shingle
-    table was A/B'd the same way and measured WORSE checkpointed — cheap
-    recompute beats the barrier there — so it stays lazy)."""
-    dl = nodes.select("doc_id", "label").distinct()
-    if materialize:
-        dl = dl.localCheckpoint(eager=True)
+    docs_b, lift_bp)."""
+    # pinned: four branches read it (per-doc arrays, both margin joins, the
+    # corpus count); A/B at sf0.1: 2.07-2.62 s lazy vs 1.74-2.15 s pinned
+    dl = materialize(nodes.select("doc_id", "label").distinct())
     per_doc = dl.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("label")).alias("ls")
     )
@@ -196,9 +201,7 @@ def entity_cooccurrence(
     )
 
 
-def label_propagation(
-    triples: DataFrame, iters: int = 3, materialize: bool = True
-) -> DataFrame:
+def label_propagation(triples: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous frequency-vote label propagation (community detection)
     over the UNDIRECTED distinct edge set: ``community_0(u) = u``;
     ``community_{t+1}(u)`` = the most frequent community among u's
@@ -220,23 +223,14 @@ def label_propagation(
     scale each round shuffles the edge list against a table orders of
     magnitude smaller than the corpus.  Output: (label, community).
 
-    ``materialize`` (default on): the undirected edge set is
-    loop-invariant but referenced once per round plus the label init, so
-    a lazy plan re-runs its union+distinct shuffle (and everything
-    upstream) iters+1 times; one eager ``localCheckpoint`` pins it.
-    Alternating A/B at sf0.1 (checkpointed triples input, 3 iters):
-    1.81-2.41 s lazy vs 1.60-2.06 s pinned, uniformly ordered — and the
-    win scales with iters and upstream plan cost.  (The per-round LABELS
-    state needs no checkpoint: each round references it exactly once, so
-    lineage stays linear — unlike kcore's twice-referenced state.)"""
+    The per-round LABELS state is not pinned: each round references it
+    exactly once, so lineage stays linear — unlike kcore's
+    twice-referenced state."""
     from pyspark.sql.window import Window
 
-    e = edge_list(triples)
-    und = e.union(
-        e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-    ).distinct()
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    # loop-invariant, read by the label init and every round; A/B at
+    # sf0.1, 3 iters: 1.81-2.41 s lazy vs 1.60-2.06 s pinned
+    und = _undirected_edges(triples)
     labels = (
         und.select(F.col("subj").alias("node")).distinct()
         .select("node", F.col("node").alias("community"))
@@ -300,6 +294,22 @@ def triangle_counts(triples: DataFrame) -> DataFrame:
     )
 
 
+def _peel(und: DataFrame, k: int) -> DataFrame:
+    """One k-core round over the undirected edge list: drop every node of
+    degree < ``k`` and the edges touching it.  Pinned, because the next
+    round reads the result twice (see :func:`kcore`)."""
+    keep = (
+        und.groupBy("subj")
+        .agg(F.count("*").alias("deg"))
+        .where(F.col("deg") >= k)
+        .select("subj")
+    )
+    return materialize(
+        und.join(keep, "subj", "left_semi")
+        .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
+    )
+
+
 def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
     """Synchronous k-core peel over the UNDIRECTED distinct edge set:
     each round drops every node whose current degree is below ``k`` (and
@@ -325,29 +335,14 @@ def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
     peel round references the live edge list TWICE — the degree aggregate
     and the semi-join probe — so a lazy chained plan re-evaluates the
     upstream extraction 2^iters times.  The edge list is therefore
-    eagerly ``localCheckpoint``ed every round: it only SHRINKS, the
-    per-round materialization is two bigint-pair columns, and the
-    checkpoint is exactly the lineage cut a fixpoint-seeking job needs
+    pinned every round (:func:`~kgx.functions.plan.materialize`): it only
+    SHRINKS, the per-round materialization is two bigint-pair columns,
+    and the pin is exactly the lineage cut a fixpoint-seeking job needs
     anyway (measured: 386 s lazy → seconds checkpointed at sf0.01).
     """
-    e = edge_list(triples)
-    und = (
-        e.union(e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected_edges(triples)
     for _ in range(iters):
-        keep = (
-            und.groupBy("subj")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("subj")
-        )
-        und = (
-            und.join(keep, "subj", "left_semi")
-            .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
-            .localCheckpoint(eager=True)
-        )
+        und = _peel(und, k)
     return (
         und.groupBy(F.col("subj").alias("label"))
         .agg(F.count("*").cast("long").alias("core_degree"))
@@ -355,11 +350,7 @@ def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
 
 
 def negative_samples(
-    triples: DataFrame,
-    k: int = 2,
-    buckets: int = 64,
-    materialize: bool = True,
-    assume_distinct: bool = False,
+    triples: DataFrame, k: int = 2, buckets: int = 64
 ) -> DataFrame:
     """Deterministic hash-bucketed negative sampling for KG-embedding
     training (TransE-family): each distinct (subj, pred, obj) triple gets
@@ -381,23 +372,22 @@ def negative_samples(
     construction, no skew, no candidate enumeration wider than the k-way
     explode.
     """
+    # pinned: three branches read the distinct triple set (both halves of
+    # the node union + the k-way candidate explode)
+    tri = materialize(triples.select("subj", "pred", "obj").distinct())
+    return _negative_samples(tri, k, buckets)
+
+
+def _negative_samples(t: DataFrame, k: int, buckets: int) -> DataFrame:
+    """Body of :func:`negative_samples` over ``t``, an already-distinct,
+    already-pinned (subj, pred, obj) frame — :func:`training_pairs` calls
+    it on its own pinned triple set, so the distinct and the pin run once."""
     from pyspark.sql.window import Window
 
     from kgx.functions.hashing import spark_md5_60
 
     if k < 1 or buckets < 1:
         raise ValueError(f"bad sampling shape k={k} buckets={buckets}")
-    # the distinct triple set feeds THREE branches (both halves of the node
-    # union + the k-way candidate explode); ``materialize`` (default on)
-    # pins it with one eager localCheckpoint — callers whose input is
-    # already materialized (training_pairs) pass False to skip the barrier,
-    # and ``assume_distinct`` skips the dedup exchange entirely when the
-    # caller's input is already a distinct (subj, pred, obj) set
-    t = triples.select("subj", "pred", "obj")
-    if not assume_distinct:
-        t = t.distinct()
-    if materialize:
-        t = t.localCheckpoint(eager=True)
     nodes = (
         t.select(F.col("subj").alias("label"))
         .union(t.select(F.col("obj").alias("label")))
@@ -448,30 +438,15 @@ def kcore_fixpoint(
     """k-core peel run to the FIXPOINT (for jobs; the gate query
     :func:`kcore` uses a fixed round count so its oracle can unroll).
     Returns (core degrees, rounds used).  Each round's edge list is
-    already an eager ``localCheckpoint`` (see :func:`kcore`), so the
-    driver-side convergence test reads a materialized count — no extra
-    evaluation; lineage stays one round deep regardless of depth.
+    already pinned (see :func:`kcore`), so the driver-side convergence
+    test reads a materialized count — no extra evaluation; lineage stays
+    one round deep regardless of depth.
     """
-    e = edge_list(triples)
-    und = (
-        e.union(e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected_edges(triples)
     n = und.count()
     rounds = 0
     for _ in range(max_rounds):
-        keep = (
-            und.groupBy("subj")
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("subj")
-        )
-        und = (
-            und.join(keep, "subj", "left_semi")
-            .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
-            .localCheckpoint(eager=True)
-        )
+        und = _peel(und, k)
         rounds += 1
         m = und.count()
         if m == n:
@@ -487,7 +462,6 @@ def common_neighbor_candidates(
     triples: DataFrame,
     max_degree: int = 64,
     min_common: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Link-prediction candidate generation over the KG: node pairs that
     share >= ``min_common`` neighbors, with their exact common-neighbor
@@ -505,22 +479,10 @@ def common_neighbor_candidates(
     (kgx.operators.dedup).  Hub neighborhoods still participate through
     their non-hub co-neighbors; full (uncapped) degrees are used for the
     Jaccard denominator.  One count aggregate on (a, b), two AQE-decided
-    margin joins, one left join onto the canonical edge set.
-
-    ``materialize`` (default on): the undirected edge set feeds FOUR plan
-    branches (degrees, neighbor lists, the canonical-edge left join, and
-    its own union+distinct shuffle per consumer), so a lazy plan re-runs
-    the upstream extraction and the distinct shuffle per branch.  One
-    eager ``localCheckpoint`` pins it — same stance as kcore's per-round
-    state; alternating A/B at sf0.1: 1.87-2.01 s lazy vs 1.17-1.57 s
-    checkpointed even with an already-checkpointed triples input (the gap
-    widens when triples is a live extraction plan)."""
-    e = edge_list(triples)
-    und = e.union(
-        e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-    ).distinct()
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    margin joins, one left join onto the canonical edge set."""
+    # read by degrees, neighbor lists and the canonical-edge left join;
+    # A/B at sf0.1: 1.87-2.01 s lazy vs 1.17-1.57 s pinned
+    und = _undirected_edges(triples)
     deg = und.groupBy("subj").agg(F.count("*").cast("long").alias("deg"))
     nbrs = und.groupBy("subj").agg(
         F.sort_array(F.collect_list("obj")).alias("ns")
@@ -574,7 +536,7 @@ def common_neighbor_candidates(
 
 
 def training_pairs(
-    triples: DataFrame, k: int = 2, buckets: int = 64, materialize: bool = True
+    triples: DataFrame, k: int = 2, buckets: int = 64
 ) -> DataFrame:
     """The KG-embedding training set, composed end-to-end: every distinct
     (subj, pred, obj) triple as a positive example plus its ``k``
@@ -592,24 +554,14 @@ def training_pairs(
     Scale shape: a union of two already-bounded plans — the distinct
     triple projection and the bucketed sample join — plus one
     hash-partitioned left-anti join on the (subj, pred, obj) key for the
-    filtered setting; nothing wider than the triple key shuffles.
-
-    ``materialize`` (default on): the distinct-triple set feeds THREE plan
-    branches (the positive union arm, the anti-join build side, and
-    negative_samples' own input), and an unpersisted input would
-    re-evaluate the upstream plan per branch (exchange reuse does not
-    apply — each consumer exchanges differently).  One eager
-    ``localCheckpoint`` of the already-bounded distinct projection pins it
-    to a single evaluation — the same stance as kcore's per-round state
-    and minhash_lsh_pairs' shingle table."""
-    tri = triples.select("subj", "pred", "obj").distinct()
-    if materialize:
-        tri = tri.localCheckpoint(eager=True)
+    filtered setting; nothing wider than the triple key shuffles."""
+    # pinned: three branches read it (the positive union arm, the anti-join
+    # build side, and the negative sampler's input), each exchanging
+    # differently, so exchange reuse cannot stand in for the pin
+    tri = materialize(triples.select("subj", "pred", "obj").distinct())
     pos = tri.withColumn("is_positive", F.lit(1).cast("long"))
     neg = (
-        negative_samples(
-            tri, k=k, buckets=buckets, materialize=False, assume_distinct=True
-        )
+        _negative_samples(tri, k, buckets)
         .select(
             "subj",
             "pred",
@@ -622,7 +574,7 @@ def training_pairs(
 
 
 def _walk_scaffold(
-    triples: DataFrame, walks_per_node: int, materialize: bool, with_prev: bool
+    triples: DataFrame, walks_per_node: int, with_prev: bool
 ) -> tuple[DataFrame, DataFrame]:
     """Shared scaffolding of the walk samplers (random_walks /
     node2vec_walks): pinned distinct edge list → sorted adjacency table
@@ -630,10 +582,8 @@ def _walk_scaffold(
     predecessor column second-order samplers track.  One definition so a
     future change to the pin stance or adjacency semantics cannot drift
     between samplers."""
-    e = edge_list(triples)
-    if materialize:
-        # feeds the adjacency aggregate + both halves of the node union
-        e = e.localCheckpoint(eager=True)
+    # pinned: the adjacency aggregate and both node-union halves read it
+    e = materialize(edge_list(triples))
     adj = e.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("nbrs"))
     nodes = (
         e.select(F.col("subj").alias("label"))
@@ -670,7 +620,6 @@ def random_walks(
     length: int = 4,
     walks_per_node: int = 2,
     seed: int = 0,
-    materialize: bool = True,
 ) -> DataFrame:
     """DeepWalk-style deterministic random-walk corpus over the directed
     KG edge list — the graph→sequence export a skip-gram / node2vec
@@ -689,12 +638,8 @@ def random_walks(
     Scale shape: each of the ``length − 1`` steps is ONE label
     equi-join of the walk frontier against the adjacency table
     (AQE-decided build side), and frontier rows carry only (labels,
-    ≤ length-string array), never text.  ``materialize`` (default on)
-    pins the distinct EDGE list with one eager ``localCheckpoint`` — it
-    feeds the adjacency aggregate plus both halves of the node union,
-    and on extraction-fed input a lazy plan replays the whole
-    extraction subtree per branch (the checkpointed-edge-table stance
-    of the other graph ops).  The adjacency table itself deliberately
+    ≤ length-string array), never text.  The distinct EDGE list is
+    pinned (:func:`_walk_scaffold`).  The adjacency table deliberately
     stays LAZY: the split A/B (200k-edge synthetic, alternating
     3-round, warmed) read edge-pin-only 0.84/0.80/0.75 s vs +adj-pin
     1.56/1.06/1.08 s — every step's join probes one identical exchange
@@ -712,7 +657,7 @@ def random_walks(
         raise ValueError(
             f"bad walk shape length={length} walks_per_node={walks_per_node}"
         )
-    adj, cur = _walk_scaffold(triples, walks_per_node, materialize, with_prev=False)
+    adj, cur = _walk_scaffold(triples, walks_per_node, with_prev=False)
     for i in range(1, length):
         h = spark_md5_60(
             f"concat_ws('|', cur, cast(walk_id as string), '{i}', '{seed}')"
@@ -861,9 +806,7 @@ def transe_margin(
     )
 
 
-def two_hop_stats(
-    triples: DataFrame, max_degree: int = 64, materialize: bool = True
-) -> DataFrame:
+def two_hop_stats(triples: DataFrame, max_degree: int = 64) -> DataFrame:
     """Two-hop neighborhood size per node — the graph-expansion signal
     (how fast does each entity's neighborhood grow?) that prices
     traversal queries and flags hub-adjacent entities before a
@@ -879,18 +822,9 @@ def two_hop_stats(
     would emit degree² pairs); reported degrees stay uncapped.  One
     distinct shuffle on the (label, hop2) pair key, one left-anti join
     dropping 1-hop edges, one count aggregate.
-
-    ``materialize`` (default on): the undirected edge set feeds FOUR
-    plan branches (degrees, neighbor arrays, the anti-join build side,
-    and its own union+distinct per consumer) — one eager
-    ``localCheckpoint`` pins it, same as common_neighbor_candidates.
     """
-    e = edge_list(triples)
-    und = e.union(
-        e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-    ).distinct()
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    # read by degrees, neighbor arrays and the anti-join build side
+    und = _undirected_edges(triples)
     deg = und.groupBy("subj").agg(F.count("*").cast("long").alias("degree"))
     nbrs = und.groupBy("subj").agg(
         F.sort_array(F.collect_list("obj")).alias("ns")
@@ -940,7 +874,6 @@ def node2vec_walks(
     w_return: int = 1,
     w_near: int = 4,
     w_far: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """node2vec second-order biased walk corpus (Grover & Leskovec 2016)
     over the directed KG edge list — :func:`random_walks`' DeepWalk
@@ -972,10 +905,9 @@ def node2vec_walks(
     both consumers (SPARK-36718, the transe_margin stance).  Step 1 has
     no predecessor, so it skips the prev join entirely and picks
     uniformly (index ``(h % (deg·w_far)) div w_far`` — identical to the
-    fold with constant weights).  ``materialize`` pins the distinct
-    edge list once (the random_walks stance, via the shared
-    :func:`_walk_scaffold`); the adjacency table stays lazy for the
-    same measured reason.
+    fold with constant weights).  The distinct edge list is pinned once
+    (the random_walks stance, via the shared :func:`_walk_scaffold`);
+    the adjacency table stays lazy for the same measured reason.
 
     Output: (start_label, walk_id, walk array<string>, walk_len).
     """
@@ -990,7 +922,7 @@ def node2vec_walks(
             f"node2vec weights must be >= 1 (zero-total draws would stall "
             f"walkers): w_return={w_return} w_near={w_near} w_far={w_far}"
         )
-    adj, cur = _walk_scaffold(triples, walks_per_node, materialize, with_prev=True)
+    adj, cur = _walk_scaffold(triples, walks_per_node, with_prev=True)
     padj = adj.select(
         F.col("subj").alias("psubj"), F.col("nbrs").alias("pnbrs")
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgx.functions.plan import materialize
 from kgx.operators.textstats import TOKENS_EXPR
 
 
@@ -103,7 +104,6 @@ def bm25_topk(
     k: int = 10,
     k1_centi: int = 120,
     b_centi: int = 75,
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-k documents for a keyword query under fixed-point BM25 — the
     retrieval pass a targeted-data-selection pipeline runs over the
@@ -143,21 +143,9 @@ def bm25_topk(
     bounded branches) and ride in on a broadcast one-row cross join; the
     final top-k is ``orderBy().limit(k)`` — Spark's
     TakeOrderedAndProject, a per-partition heap + driver merge of k rows,
-    never a global sort.
-
-    ``materialize`` (default on — the multi-branch stance of
-    :func:`kgx.operators.dedup.jaccard_pairs`): the per-term tf table
-    feeds TWO plan branches (the df aggregate and the scoring join), and
-    a lazy plan re-runs the corpus-wide token explode per branch — the
-    dominant cost.  The eager ``localCheckpoint`` pins it to one pass;
-    the pinned table is (token, doc_id, tf) for the query terms only, so
-    its size is bounded by the matched postings.  Measured at sf0.1
-    (alternating 3-round A/B, warmed, local[8]): 1.20/0.90/1.66 s pinned
-    vs 1.27/0.92/4.65 s lazy — ordered in the checkpoint's favor every
-    round, and the gap grows with document length (the lazy plan replays
-    the full-corpus explode).  An ad-hoc query recomputes postings from
-    text by design — a standing retrieval deployment feeds this scorer
-    from a materialized :func:`inverted_postings` table instead.
+    never a global sort.  An ad-hoc query recomputes postings from text
+    by design — a standing retrieval deployment feeds this scorer from a
+    materialized :func:`inverted_postings` table instead.
 
     Output: (doc_id, score_milli, n_terms, rank) — rank 1..k by
     (score_milli DESC, doc_id) — deterministic total order.
@@ -169,14 +157,16 @@ def bm25_topk(
     if not (k > 0 and k1_centi >= 0 and 0 <= b_centi <= 100):
         raise ValueError("need k > 0, k1_centi >= 0, 0 <= b_centi <= 100")
     K, B = int(k1_centi), int(b_centi)
-    tf = (
+    # pinned: the df aggregate and the scoring join read the per-term tf
+    # table (bounded by the matched postings), so the corpus-wide token
+    # explode runs once; A/B at sf0.1: 1.20/0.90/1.66 s pinned vs
+    # 1.27/0.92/4.65 s lazy
+    tf = materialize(
         _doc_tokens(documents)
         .where(F.col("token").isin([str(t) for t in query_terms]))
         .groupBy("token", "doc_id")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    if materialize:
-        tf = tf.localCheckpoint(eager=True)
     dfreq = tf.groupBy("token").agg(F.count("*").cast("long").alias("df"))
     dl = documents.select(
         "doc_id", F.expr(f"cast(size({TOKENS_EXPR}) as bigint)").alias("dl")
@@ -210,9 +200,7 @@ def bm25_topk(
     return topk.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def unigram_surprisal(
-    documents: DataFrame, materialize: bool = False
-) -> DataFrame:
+def unigram_surprisal(documents: DataFrame) -> DataFrame:
     """Per-document mean unigram surprisal in (quantized) bits — the
     perplexity-style quality screen of CCNet/RedPajama run with the
     corpus's OWN unigram statistics instead of a trained LM: documents
@@ -231,22 +219,13 @@ def unigram_surprisal(
     count aggregate — whose 1-row sum is T, broadcast back — and (b) the
     scoring join probe side; the count side arrives AQE-decided (vocab
     size is unbounded on the open web, so no forced broadcast hint —
-    the alias-dictionary stance).  ``materialize`` pins the exploded
-    token table with one eager ``localCheckpoint`` so the explode runs
-    once, not twice — but unlike the bm25/jaccard pins the table here is
-    CORPUS-scale (every token row) while the replayed work is one cheap
-    projection+explode, and the A/B at sf0.1 (alternating 5-round,
-    warmed, local[8]) read lazy 0.84/0.64/0.70/0.58/0.58 s vs pinned
-    1.06/0.68/0.72/0.63/0.61 s — lazy won every round, so the default
-    stays lazy (the pagerank-edge-list stance: measured losers don't
-    checkpoint).
+    the alias-dictionary stance).
 
     Output: (doc_id, n_tokens, total_bits, mean_milli_bits) — one row per
     document with ≥ 1 token.
     """
+    # not pinned: A/B at sf0.1 lost all 5 rounds (corpus-scale table)
     toks = _doc_tokens(documents)
-    if materialize:
-        toks = toks.localCheckpoint(eager=True)
     ct = toks.groupBy("token").agg(F.count("*").cast("long").alias("ct"))
     total = ct.agg(F.sum("ct").cast("long").alias("t_total"))
     scored = (

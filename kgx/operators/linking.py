@@ -13,8 +13,8 @@ the north star adds:
    reproducible)
 3. connected-components merge over the candidate edge list via the
    large-star/small-star algorithm (Kiveris et al., "Connected Components in
-   MapReduce and Beyond") — pure DataFrame self-joins + aggregations with
-   ``localCheckpoint`` per round to truncate lineage; converges in
+   MapReduce and Beyond") — pure DataFrame self-joins + aggregations, pinned
+   per round to truncate lineage; converges in
    O(log n) rounds, no GraphFrames dependency
 4. content-derived canonical ids (sha2 of the component-minimum label) —
    stable across runs/partitions, never ``monotonically_increasing_id``.
@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgx.functions.plan import materialize
 
 #: org-suffix vocabulary used by the deterministic alias normalizer; matches
 #: the corpus generator's org name shapes plus common real-world suffixes.
@@ -136,7 +138,7 @@ def connected_components(
       most production CC implementations make.
     - otherwise: large-star/small-star alternation (Kiveris et al.) — two
       shuffles per round, edge set monotonically contracts toward stars,
-      ``localCheckpoint`` truncates lineage.  O(log n) rounds, no driver
+      a per-round pin truncates lineage.  O(log n) rounds, no driver
       materialization, no GraphFrames dependency.
     """
     if driver_threshold is None:
@@ -180,14 +182,13 @@ def connected_components(
         # small-star: attach smaller-or-equal neighbors to the minimum
         directed = e.select(F.col("v").alias("u"), F.col("u").alias("v"))  # u > v
         mins2 = directed.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
+        e = materialize(
             directed.join(mins2, "u")
             .select(F.col("m").alias("a"), F.col("v").alias("b"))
             .union(directed.join(mins2, "u").select(F.col("m").alias("a"), F.col("u").alias("b")))
             .where(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         cur = _checksum(e)
         if cur == prev:
@@ -230,26 +231,17 @@ def canonical_map(
     nodes: DataFrame,
     use_minhash: bool = False,
     min_jaccard: float = 0.7,
-    materialize: bool = True,
 ) -> DataFrame:
     """Full canonicalization: alias (+ optional LSH) candidates → connected
     components → (label, canonical_label, canonical_id).
 
     ``canonical_id`` is content-derived (sha2 of the canonical label) so it
     is stable across runs and partition layouts.
-    Labels that join no component map to themselves.
-
-    ``materialize`` (default on): the distinct-label table feeds the
-    alias stem self-join (two references), the optional MinHash edges,
-    the final map-back join, and — through the candidate edges — the
-    connected-components driver threshold count, so a lazy plan re-runs
-    the label distinct (and upstream extraction) per branch.  One eager
-    ``localCheckpoint`` of the bounded label table pins it: alternating
-    A/B at sf0.1, 2.25-5.00 s lazy vs 1.67-2.15 s pinned, uniformly
-    ordered."""
-    labels = distinct_labels(nodes)
-    if materialize:
-        labels = labels.localCheckpoint(eager=True)
+    Labels that join no component map to themselves."""
+    # pinned: the alias stem self-join (twice), the optional MinHash edges,
+    # the map-back join and the connected-components threshold count read
+    # it; A/B at sf0.1: 2.25-5.00 s lazy vs 1.67-2.15 s pinned
+    labels = materialize(distinct_labels(nodes))
     cand = alias_edges(labels)
     if use_minhash:
         cand = cand.unionByName(

@@ -3533,30 +3533,24 @@ FROM ds_counts c JOIN ds_totals t USING (stratum)
 """.strip()
 
 
-def kg_scd2_sql(n_runs: int = 3) -> str:
+def kg_scd2_sql() -> str:
     """Oracle for SCD2 validity intervals over simulated run appends
     (mirror of kgx.plans.versions.scd2_intervals composed with the
     q_kg_scd2_intervals run synthesis): the same three post-extraction
-    slices stamped run_seq 1..3, islands via run_seq - row_number().
-    The run synthesis is defined for EXACTLY three runs (the engine side
-    hardcodes three unionByName slices) — a larger n_runs would silently
-    alias extra runs to the full slice with no engine counterpart."""
-    if n_runs != 3:
-        raise ValueError(
-            f"kg_scd2_sql run synthesis is defined for exactly 3 runs, "
-            f"got n_runs={n_runs}"
-        )
-    runs = []
-    for r in range(1, n_runs + 1):
-        pred_f = "AND pred <> 'acquired'" if r == 1 else ""
-        mod = {1: "CAST(substr(t.doc_id, 5) AS BIGINT) % 3 <> 0",
-               2: "CAST(substr(t.doc_id, 5) AS BIGINT) % 5 <> 4",
-               3: "TRUE"}[r if r <= 3 else 3]
-        runs.append(
-            f"SELECT subj, pred, obj, CAST({r} AS BIGINT) AS run_seq "
-            f"FROM tri t WHERE {mod} {pred_f}"
-        )
-    union = "\nUNION ALL\n".join(runs)
+    slices stamped run_seq 1..3, islands via run_seq - row_number(),
+    ``is_current`` against the log's own max(run_seq) (a scalar
+    subquery, as the engine's broadcast 1-row aggregate)."""
+    dnum = "CAST(substr(t.doc_id, 5) AS BIGINT)"
+    slices = [
+        f"{dnum} % 3 <> 0 AND pred <> 'acquired'",
+        f"{dnum} % 5 <> 4",
+        "TRUE",
+    ]
+    union = "\nUNION ALL\n".join(
+        f"SELECT subj, pred, obj, CAST({r} AS BIGINT) AS run_seq "
+        f"FROM tri t WHERE {where}"
+        for r, where in enumerate(slices, 1)
+    )
     return f"""
 WITH {_tri_cte_head()},
 sc_runs AS ({union}),
@@ -3570,6 +3564,6 @@ sc_isl AS (
 SELECT subj, pred, obj,
        CAST(min(run_seq) AS BIGINT) AS first_seq,
        CAST(max(run_seq) AS BIGINT) AS last_seq,
-       (max(run_seq) = {n_runs}) AS is_current
+       (max(run_seq) = (SELECT max(run_seq) FROM sc_runs)) AS is_current
 FROM sc_isl GROUP BY subj, pred, obj, island
 """.strip()

@@ -37,7 +37,7 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgx.operators import extract, spans as spans_op
@@ -79,10 +79,13 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def _bucketed(docs: DataFrame, n_buckets: int) -> DataFrame:
-    return docs.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+def _bucket(doc_id: str | Column, n_buckets: int) -> Column:
+    """The partition unit every table and the raw prepartition agree on."""
+    return F.pmod(F.xxhash64(doc_id), F.lit(n_buckets))
+
+
+def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    return df.withColumn("bucket", _bucket("doc_id", n_buckets).cast("int"))
 
 
 def prepartition_raw(
@@ -109,7 +112,7 @@ def prepartition_raw(
     fid = final_doc_id if final_doc_id is not None else F.col("doc_id")
     return raw.repartition(
         n_buckets * salt_factor,
-        F.pmod(F.xxhash64(fid), F.lit(n_buckets)),
+        _bucket(fid, n_buckets),
         F.pmod(F.xxhash64(fid, F.lit(1)), F.lit(salt_factor)),
     )
 
@@ -163,9 +166,7 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
         from kgx.operators import validate as validate_op
 
         graphs = validate_op.valid_graphs(graphs)
-    graphs = graphs.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets)).cast("int")
-    )
+    graphs = _bucketed(graphs, cfg.n_buckets)
 
     graphs_path = os.path.join(cfg.out_dir, "graphs")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -196,9 +197,7 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
 
     def _write_flat(args):
         name, fn = args
-        flat = fn(stored).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets)).cast("int")
-        )
+        flat = _bucketed(fn(stored), cfg.n_buckets)
         flat.write.mode("overwrite").partitionBy("bucket").parquet(
             os.path.join(cfg.out_dir, name)
         )
@@ -249,11 +248,9 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
         )
         cmap.write.mode("overwrite").parquet(os.path.join(cfg.out_dir, "canonical_map"))
         canon = linking.canonical_triples(extract.triples_table(all_graphs), cmap)
-        canon.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_buckets)).cast("int")
-        ).write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(cfg.out_dir, "triples_canonical")
-        )
+        _bucketed(canon, cfg.n_buckets).write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(os.path.join(cfg.out_dir, "triples_canonical"))
 
     t_stage = time.time()
     # per_bucket_rows is already on the driver — the commit is a direct

@@ -71,7 +71,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def scd2_intervals(runs: DataFrame, n_runs: int) -> DataFrame:
+def scd2_intervals(runs: DataFrame) -> DataFrame:
     """Slowly-changing-dimension type-2 validity intervals over a
     triple append log — the point-in-time table a versioned KG serves
     ("what did the graph assert at run r?"): given (subj, pred, obj,
@@ -82,15 +82,17 @@ def scd2_intervals(runs: DataFrame, n_runs: int) -> DataFrame:
     as ``run_seq - row_number()`` island keys per triple.
 
     Scale shape: one distinct projection + one window partitioned by
-    the triple key (bounded by n_runs rows per partition — never a
+    the triple key (bounded by the run count per partition — never a
     global sort) + one map-side-combined min/max aggregate on
     (triple, island).  Only key columns and two ints ever shuffle.
-    ``is_current`` = the segment reaches ``n_runs`` (the newest run) —
-    passed explicitly so the plan needs no second global max scan.
+    ``is_current`` = the segment reaches the newest run in the log,
+    ``max(run_seq)``: a 1-row aggregate broadcast onto the segments, not
+    a global window.
 
     Output: (subj, pred, obj, first_seq, last_seq, is_current).
     """
     pres = runs.select("subj", "pred", "obj", "run_seq").distinct()
+    newest = runs.agg(F.max("run_seq").alias("__newest"))
     w = Window.partitionBy("subj", "pred", "obj").orderBy("run_seq")
     islands = pres.withColumn(
         "island", F.col("run_seq") - F.row_number().over(w)
@@ -101,12 +103,13 @@ def scd2_intervals(runs: DataFrame, n_runs: int) -> DataFrame:
             F.min("run_seq").cast("long").alias("first_seq"),
             F.max("run_seq").cast("long").alias("last_seq"),
         )
+        .crossJoin(F.broadcast(newest))
         .select(
             "subj",
             "pred",
             "obj",
             "first_seq",
             "last_seq",
-            (F.col("last_seq") == F.lit(int(n_runs))).alias("is_current"),
+            (F.col("last_seq") == F.col("__newest")).alias("is_current"),
         )
     )

@@ -202,10 +202,6 @@ def test_unigram_surprisal_exact_vs_python_reference(spark):
     means = {d: v[2] for d, v in got.items()}
     # rare-vocab doc scores strictly above the all-stopword doc
     assert means[3] > means[5]
-    # lazy and pinned plans agree
-    lazy = {r.doc_id: (r.n_tokens, r.total_bits, r.mean_milli_bits)
-            for r in indexing.unigram_surprisal(sdf, materialize=False).collect()}
-    assert lazy == got
 
 
 @pytest.mark.parametrize("seed", [7, 41])

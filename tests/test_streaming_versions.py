@@ -357,10 +357,25 @@ def test_scd2_intervals_gaps_and_islands(spark):
         rows, "subj string, pred string, obj string, run_seq long"
     )
     got = {(r.subj, r.first_seq, r.last_seq, r.is_current)
-           for r in versions.scd2_intervals(runs, n_runs=3).collect()}
+           for r in versions.scd2_intervals(runs).collect()}
     assert got == {
         ("a", 1, 1, False), ("a", 3, 3, True),
         ("c", 2, 3, True),
         ("e", 1, 2, False),
         ("g", 2, 2, False),
+    }
+    # the newest run is read from the log itself: here it is 5, and a
+    # segment ending at run 3 is no longer current
+    later = runs.unionByName(spark.createDataFrame(
+        [("a", "r", "b", 4), ("a", "r", "b", 5), ("i", "r", "j", 5)],
+        "subj string, pred string, obj string, run_seq long",
+    ))
+    got = {(r.subj, r.first_seq, r.last_seq, r.is_current)
+           for r in versions.scd2_intervals(later).collect()}
+    assert got == {
+        ("a", 1, 1, False), ("a", 3, 5, True),
+        ("c", 2, 3, False),
+        ("e", 1, 2, False),
+        ("g", 2, 2, False),
+        ("i", 5, 5, True),
     }
