@@ -2,9 +2,10 @@
 
 ``entry(spark)`` runs the flagship KG pipeline (documents → interleaved
 spans → Arrow-batched extraction → label-resolved triples) at sf0.001.
-``queries()`` exposes every implemented operator from SURVEY.md §2 over the
-driver testdata; ``oracle_sql()`` gives the DuckDB-equivalent SQL, generated
-from the same pattern tables the engine executes (kgx.oracles).
+``QUERIES`` is the one query registry: every implemented operator from
+SURVEY.md §2 over the driver testdata, paired with its DuckDB-equivalent SQL
+generated from the same pattern tables the engine executes (kgx.oracles).
+``queries()`` and ``oracle_sql()`` are its two driver views.
 """
 
 from __future__ import annotations
@@ -12,11 +13,14 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kgx import oracles as O
 
 
 def _narrative(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1475,266 +1479,154 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_kg_triples(spark, "/root/testdata/sf0.001")
 
 
+#: The one query registry: ``(name, engine query, DuckDB oracle)`` rows.  The
+#: oracle is a ``kgx.oracles`` function, or a ``partial`` of it carrying only
+#: the arguments that differ from its defaults.  THE ORDER IS LOAD-BEARING:
+#: the driver's correctness gate records the FIRST 50 rows only.
+QUERIES = (
+    ("kg_spans", q_kg_spans, O.spans_sql),
+    ("kg_doc_text", q_kg_doc_text, O.doc_text_sql),
+    ("kg_mentions", q_kg_mentions, O.mentions_sql),
+    ("kg_nodes", q_kg_nodes, O.nodes_sql),
+    ("kg_triples", q_kg_triples, O.triples_sql),
+    ("link_canonical_map", q_link_canonical_map, O.canonical_map_sql),
+    ("link_canonical_triples", q_link_canonical_triples, O.canonical_triples_sql),
+    ("link_minhash_pairs", q_link_minhash_pairs, O.link_minhash_sql),
+    ("dedup_exact", q_dedup_exact, O.dedup_exact_sql),
+    ("dedup_jaccard_pairs", q_dedup_jaccard_pairs, O.dedup_jaccard_sql),
+    ("dedup_minhash_lsh", q_dedup_minhash_lsh, O.dedup_minhash_sql),
+    ("dedup_clusters", q_dedup_clusters, O.dedup_clusters_sql),
+    ("dedup_simhash_pairs", q_dedup_simhash_pairs, O.dedup_simhash_sql),
+    ("ann_topk", q_ann_topk, O.ann_topk_sql),
+    ("ann_ivf_topk", q_ann_ivf_topk, partial(O.ann_ivf_sql, target_cell_size=32)),
+    (
+        "emb_near_dup_pairs",
+        q_emb_near_dup_pairs,
+        partial(O.emb_near_dup_sql, target_cell_size=32),
+    ),
+    ("text_stats", q_text_stats, O.text_stats_sql),
+    ("quality_filter", q_quality_filter, partial(O.quality_filter_sql, min_tokens=20)),
+    ("token_counts", q_token_counts, O.token_counts_sql),
+    ("vocab_topk", q_vocab_topk, O.vocab_topk_sql),
+    ("pii_scrub", q_pii_scrub, O.pii_scrub_sql),
+    ("sentence_dedup", q_sentence_dedup, O.sentence_dedup_sql),
+    ("sentence_prune", q_sentence_prune, O.sentence_prune_sql),
+    ("curation_funnel", q_curation_funnel, O.curation_funnel_sql),
+    ("funnel_export", q_funnel_export, O.funnel_export_sql),
+    ("graph_degrees", q_graph_degrees, O.graph_degrees_sql),
+    ("graph_pagerank", q_graph_pagerank, O.graph_pagerank_sql),
+    ("graph_triangles", q_graph_triangles, O.graph_triangles_sql),
+    ("balanced_sample", q_balanced_sample, O.balanced_sample_sql),
+    ("contamination", q_contamination, partial(O.contamination_sql, n=3)),
+    ("fingerprints_winnowed", q_fingerprints_winnowed, O.winnowed_fingerprints_sql),
+    ("language_id", q_language_id, O.language_id_sql),
+    ("video_decode_real", q_video_decode_real, O.video_decode_real_sql),
+    ("media_inventory", q_media_inventory, O.media_inventory_sql),
+    ("asof_last_click", q_asof_last_click, O.asof_last_click_sql),
+    (
+        "range_clicks_before_purchase",
+        q_range_clicks_before_purchase,
+        O.range_clicks_sql,
+    ),
+    ("sessions", q_sessions, partial(O.sessions_sql, gap_sec=21600)),
+    ("w2_latest_event_per_user", q_latest_event_per_user, O.latest_event_sql),
+    ("w3_retention_tail", q_retention_tail, O.retention_tail_sql),
+    ("ann_ivfpq_topk", q_ann_ivfpq_topk, O.ann_ivfpq_sql),
+    ("jn6_customers_no_orders", q_customers_no_orders, O.customers_no_orders_sql),
+    ("s2_binary_ingest", q_s2_binary_ingest, O.binary_ingest_sql),
+    ("graph_kcore", q_graph_kcore, O.graph_kcore_sql),
+    ("a1_pricing_summary", q_pricing_summary, O.pricing_summary_sql),
+    (
+        "a8_event_value_quantiles",
+        q_a8_event_value_quantiles,
+        O.event_value_quantiles_sql,
+    ),
+    (
+        "bloom_contamination",
+        q_bloom_contamination,
+        partial(O.bloom_contamination_sql, n=3),
+    ),
+    ("jn2_graph_fetch", q_jn2_graph_fetch, O.graph_fetch_sql),
+    ("a7_bucket_metrics", q_a7_bucket_metrics, O.bucket_metrics_sql),
+    ("fn_scalar_suite", q_fn_scalar_suite, O.scalar_suite_sql),
+    ("p6_p8_text_gate", q_p6_p8_text_gate, O.text_gate_sql),
+    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
+    ("j1_props_parse", q_j1_props_parse, O.props_parse_sql),
+    ("j2_json_repair", q_j2_json_repair, O.json_repair_sql),
+    ("j3_graph_coercion", q_j3_graph_coercion, O.graph_coercion_sql),
+    ("p9_graph_checks", q_p9_graph_checks, O.graph_checks_sql),
+    ("p10_media_security", q_p10_media_security, O.media_security_sql),
+    ("s5_csv_prose", q_s5_csv_prose, O.csv_prose_sql),
+    ("jn6_customers_with_orders", q_customers_with_orders, O.customers_with_orders_sql),
+    ("s7_llm_fake_edges", q_s7_llm_fake_edges, O.llm_edges_sql),
+    ("media_decode_fake", q_media_decode_fake, O.media_decode_sql),
+    ("media_decode_real", q_media_decode_real, O.media_decode_real_sql),
+    ("audio_decode_real", q_audio_decode_real, O.audio_decode_real_sql),
+    ("video_frames_real", q_video_frames_real, O.video_frames_real_sql),
+    ("media_resize_real", q_media_resize_real, O.media_resize_real_sql),
+    ("fingerprints", q_fingerprints, O.fingerprints_sql),
+    ("graph_label_prop", q_graph_label_prop, O.graph_label_prop_sql),
+    ("graph_entity_pmi", q_graph_entity_pmi, O.entity_pmi_sql),
+    ("a3_latest_order_per_customer", q_latest_order_per_customer, O.latest_order_sql),
+    ("a9_rollup_order_stats", q_a9_rollup_order_stats, O.rollup_order_stats_sql),
+    ("kg_version_diff", q_kg_version_diff, O.kg_version_diff_sql),
+    ("graph_link_candidates", q_graph_link_candidates, O.graph_link_candidates_sql),
+    ("kg_training_pairs", q_kg_training_pairs, O.kg_training_pairs_sql),
+    ("kg_negative_samples", q_kg_negative_samples, O.kg_negative_samples_sql),
+    ("media_frames", q_media_frames, O.media_frames_sql),
+    ("media_resize", q_media_resize, O.media_resize_sql),
+    ("emb_kmeans", q_emb_kmeans, partial(O.emb_kmeans_sql, target_cluster_size=64)),
+    (
+        "semdedup",
+        q_semdedup,
+        partial(O.semdedup_sql, min_cosine=0.4, target_cluster_size=64),
+    ),
+    (
+        "inverted_postings",
+        q_inverted_postings,
+        partial(O.inverted_postings_sql, min_df=2, max_df=400),
+    ),
+    ("media_captions", q_media_captions, O.media_caption_pairs_sql),
+    ("seq_pack_interleaved", q_seq_pack_interleaved, O.seq_pack_interleaved_sql),
+    ("hll_registers", q_hll_registers, O.hll_registers_sql),
+    (
+        "cm_registers",
+        q_cm_registers,
+        partial(O.cm_registers_sql, col_expr="cast(user_id as varchar)"),
+    ),
+    ("bloom_registers", q_bloom_registers, partial(O.bloom_registers_sql, n=3)),
+    ("hist_registers", q_hist_registers, O.hist_registers_sql),
+    ("cm_heavy_hitters", q_cm_heavy_hitters, O.cm_heavy_hitters_sql),
+    ("hll_by_group", q_hll_by_group, O.hll_grouped_sql),
+    ("lm_trigram_counts", q_lm_trigram_counts, O.lm_ngram_counts_sql),
+    ("seq_pack", q_seq_pack, O.seq_pack_sql),
+    ("shard_manifest", q_shard_manifest, O.shard_manifest_sql),
+    ("token_mix", q_token_mix, O.token_mix_sql),
+    ("repetition_stats", q_repetition_stats, O.repetition_sql),
+    ("bm25_topk", q_bm25_topk, partial(O.bm25_topk_sql, **BM25_GATE)),
+    ("unigram_surprisal", q_unigram_surprisal, O.unigram_surprisal_sql),
+    ("graph_random_walks", q_graph_random_walks, O.graph_random_walks_sql),
+    ("walk_skipgram_pairs", q_walk_skipgram_pairs, O.walk_skipgram_pairs_sql),
+    ("kg_transe_margin", q_kg_transe_margin, O.kg_transe_margin_sql),
+    ("pq_codes", q_pq_codes, O.pq_codes_sql),
+    ("pq_topk", q_pq_topk, O.pq_topk_sql),
+    ("ann_recall", q_ann_recall, O.ann_recall_sql),
+    ("graph_two_hop", q_graph_two_hop, O.graph_two_hop_sql),
+    ("a2_user_type_stats", q_user_type_stats, O.user_type_stats_sql),
+    ("graph_node2vec_walks", q_graph_node2vec_walks, O.node2vec_walks_sql),
+    ("lsh_recall", q_lsh_recall, O.lsh_recall_sql),
+    ("dataset_split", q_dataset_split, O.dataset_split_sql),
+    ("kg_scd2_intervals", q_kg_scd2_intervals, O.kg_scd2_sql),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """All 104 oracle-backed queries.  THE ORDER IS LOAD-BEARING: the
-    driver's correctness gate records the FIRST 50 entries only, so the
-    dict is split into an explicit gate set (the 50 highest-information
-    rows: the full reference extraction contract kg_*/link_*, every dedup
-    / similarity / curation family head, and this round's bugfix witness
-    s2_binary_ingest) followed by the rotation remainder (54 rows, every
-    one still oracle-backed).  docs/COVERAGE.md maps each remainder row to
-    its judge-verifiable one-liner:
+    """Every registered engine query, in ``QUERIES`` order (first 50 = the
+    driver gate).  Each rotated-out row is verifiable in one command:
     ``python tools/compare_oracle.py /root/testdata/sf0.01 <name>``."""
-    return {
-        # ---- driver gate set (first 50 — order matters, see docstring) ----
-        "kg_spans": q_kg_spans,
-        "kg_doc_text": q_kg_doc_text,
-        "kg_mentions": q_kg_mentions,
-        "kg_nodes": q_kg_nodes,
-        "kg_triples": q_kg_triples,
-        "link_canonical_map": q_link_canonical_map,
-        "link_canonical_triples": q_link_canonical_triples,
-        "link_minhash_pairs": q_link_minhash_pairs,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "ann_topk": q_ann_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "emb_near_dup_pairs": q_emb_near_dup_pairs,
-        "text_stats": q_text_stats,
-        "quality_filter": q_quality_filter,
-        "token_counts": q_token_counts,
-        "vocab_topk": q_vocab_topk,
-        "pii_scrub": q_pii_scrub,
-        "sentence_dedup": q_sentence_dedup,
-        "sentence_prune": q_sentence_prune,
-        "curation_funnel": q_curation_funnel,
-        "funnel_export": q_funnel_export,
-        "graph_degrees": q_graph_degrees,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_triangles": q_graph_triangles,
-        "balanced_sample": q_balanced_sample,
-        "contamination": q_contamination,
-        "fingerprints_winnowed": q_fingerprints_winnowed,
-        "language_id": q_language_id,
-        # live-media witness in the driver gate (r4): video_decode_real
-        # exercises synthesize → Arrow binary → stdlib RIFF/AVI parse; the
-        # plain rolling-hash `fingerprints` rotated out in its place (its
-        # stronger winnowed sibling stays in-gate above)
-        "video_decode_real": q_video_decode_real,
-        "media_inventory": q_media_inventory,
-        "asof_last_click": q_asof_last_click,
-        "range_clicks_before_purchase": q_range_clicks_before_purchase,
-        "sessions": q_sessions,
-        "w2_latest_event_per_user": q_latest_event_per_user,
-        "w3_retention_tail": q_retention_tail,
-        # r5: ann_ivfpq_topk promoted IN-gate (the composed IVF-PQ ANN
-        # flagship); a2_user_type_stats rotated out — the A1/A2
-        # counts-and-averages family stays in-gate via a1_pricing_summary
-        "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        "jn6_customers_no_orders": q_customers_no_orders,
-        # r4: s2_binary_ingest promoted into the gate set (driver-green
-        # witness for the /Length PDF-codec fix); jn6_customers_with_orders
-        # rotated out — its anti-join sibling stays, and LEFT SEMI is pinned
-        # by pytest + the oracle one-liner (docs/COVERAGE.md).
-        "s2_binary_ingest": q_s2_binary_ingest,
-        # r4 session-4: graph_kcore + bloom_contamination promoted into the
-        # gate (witnesses for the two new operator families: bounded-round
-        # iterative peel with per-round lineage cuts, and the mergeable
-        # Bloom bitmap + broadcast probe).  Rotated out in their place:
-        # a3_latest_order_per_customer (top-1-per-group family stays
-        # in-gate via w2_latest_event_per_user; JN3/W2 semantics identical)
-        # and a9_rollup_order_stats (grouping-sets family; its quantile
-        # sibling a8 stays in-gate).  Both remain oracle-backed one-liners
-        # (docs/COVERAGE.md).
-        "graph_kcore": q_graph_kcore,
-        "a1_pricing_summary": q_pricing_summary,
-        "a8_event_value_quantiles": q_a8_event_value_quantiles,
-        "bloom_contamination": q_bloom_contamination,
-        "jn2_graph_fetch": q_jn2_graph_fetch,
-        "a7_bucket_metrics": q_a7_bucket_metrics,
-        "fn_scalar_suite": q_fn_scalar_suite,
-        "p6_p8_text_gate": q_p6_p8_text_gate,
-        # ---- rotation remainder (54 — outside the driver's 50-row cap;
-        # each is oracle-backed and judge-verifiable via
-        # `python tools/compare_oracle.py /root/testdata/sf0.01 <name>`;
-        # full mapping + rationale in docs/COVERAGE.md) ----
-        "j1_props_parse": q_j1_props_parse,
-        "j2_json_repair": q_j2_json_repair,
-        "j3_graph_coercion": q_j3_graph_coercion,
-        "p9_graph_checks": q_p9_graph_checks,
-        "p10_media_security": q_p10_media_security,
-        "s5_csv_prose": q_s5_csv_prose,
-        "jn6_customers_with_orders": q_customers_with_orders,
-        "s7_llm_fake_edges": q_s7_llm_fake_edges,
-        "media_decode_fake": q_media_decode_fake,
-        "media_decode_real": q_media_decode_real,
-        "audio_decode_real": q_audio_decode_real,
-        "video_frames_real": q_video_frames_real,
-        "media_resize_real": q_media_resize_real,
-        "fingerprints": q_fingerprints,
-        "graph_label_prop": q_graph_label_prop,
-        "graph_entity_pmi": q_graph_entity_pmi,
-        "a3_latest_order_per_customer": q_latest_order_per_customer,
-        "a9_rollup_order_stats": q_a9_rollup_order_stats,
-        "kg_version_diff": q_kg_version_diff,
-        "graph_link_candidates": q_graph_link_candidates,
-        "kg_training_pairs": q_kg_training_pairs,
-        "kg_negative_samples": q_kg_negative_samples,
-        "media_frames": q_media_frames,
-        "media_resize": q_media_resize,
-        "emb_kmeans": q_emb_kmeans,
-        "semdedup": q_semdedup,
-        "inverted_postings": q_inverted_postings,
-        "media_captions": q_media_captions,
-        "seq_pack_interleaved": q_seq_pack_interleaved,
-        "hll_registers": q_hll_registers,
-        "cm_registers": q_cm_registers,
-        "bloom_registers": q_bloom_registers,
-        "hist_registers": q_hist_registers,
-        "cm_heavy_hitters": q_cm_heavy_hitters,
-        "hll_by_group": q_hll_by_group,
-        "lm_trigram_counts": q_lm_trigram_counts,
-        "seq_pack": q_seq_pack,
-        "shard_manifest": q_shard_manifest,
-        "token_mix": q_token_mix,
-        "repetition_stats": q_repetition_stats,
-        "bm25_topk": q_bm25_topk,
-        "unigram_surprisal": q_unigram_surprisal,
-        "graph_random_walks": q_graph_random_walks,
-        "walk_skipgram_pairs": q_walk_skipgram_pairs,
-        "kg_transe_margin": q_kg_transe_margin,
-        "pq_codes": q_pq_codes,
-        "pq_topk": q_pq_topk,
-        "ann_recall": q_ann_recall,
-        "graph_two_hop": q_graph_two_hop,
-        # rotated out r5 when ann_ivfpq_topk was promoted in-gate
-        "a2_user_type_stats": q_user_type_stats,
-        "graph_node2vec_walks": q_graph_node2vec_walks,
-        "lsh_recall": q_lsh_recall,
-        "dataset_split": q_dataset_split,
-        "kg_scd2_intervals": q_kg_scd2_intervals,
-    }
+    return {n: f for n, f, _ in QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    from kgx import oracles
-
-    return {
-        "kg_spans": oracles.spans_sql(),
-        "kg_doc_text": oracles.doc_text_sql(),
-        "kg_mentions": oracles.mentions_sql(),
-        "kg_nodes": oracles.nodes_sql(),
-        "kg_triples": oracles.triples_sql(),
-        "link_canonical_map": oracles.canonical_map_sql(),
-        "link_canonical_triples": oracles.canonical_triples_sql(),
-        "link_minhash_pairs": oracles.link_minhash_sql(),
-        "dedup_exact": oracles.dedup_exact_sql(),
-        "dedup_jaccard_pairs": oracles.dedup_jaccard_sql(),
-        "dedup_minhash_lsh": oracles.dedup_minhash_sql(),
-        "dedup_clusters": oracles.dedup_clusters_sql(),
-        "dedup_simhash_pairs": oracles.dedup_simhash_sql(),
-        "ann_topk": oracles.ann_topk_sql(),
-        "ann_ivf_topk": oracles.ann_ivf_sql(target_cell_size=32),
-        "emb_near_dup_pairs": oracles.emb_near_dup_sql(target_cell_size=32),
-        "text_stats": oracles.text_stats_sql(),
-        "quality_filter": oracles.quality_filter_sql(min_tokens=20),
-        "token_counts": oracles.token_counts_sql(),
-        "vocab_topk": oracles.vocab_topk_sql(k=200),
-        "pii_scrub": oracles.pii_scrub_sql(),
-        "sentence_dedup": oracles.sentence_dedup_sql(),
-        "sentence_prune": oracles.sentence_prune_sql(),
-        "curation_funnel": oracles.curation_funnel_sql(),
-        "funnel_export": oracles.funnel_export_sql(n_shards=8, capacity=128),
-        "graph_degrees": oracles.graph_degrees_sql(),
-        "graph_pagerank": oracles.graph_pagerank_sql(),
-        "graph_triangles": oracles.graph_triangles_sql(),
-        "graph_label_prop": oracles.graph_label_prop_sql(),
-        "graph_kcore": oracles.graph_kcore_sql(),
-        "kg_version_diff": oracles.kg_version_diff_sql(),
-        "graph_link_candidates": oracles.graph_link_candidates_sql(),
-        "kg_training_pairs": oracles.kg_training_pairs_sql(),
-        "kg_transe_margin": oracles.kg_transe_margin_sql(),
-        "pq_codes": oracles.pq_codes_sql(),
-        "pq_topk": oracles.pq_topk_sql(),
-        "ann_ivfpq_topk": oracles.ann_ivfpq_sql(),
-        "ann_recall": oracles.ann_recall_sql(),
-        "graph_two_hop": oracles.graph_two_hop_sql(),
-        "graph_node2vec_walks": oracles.node2vec_walks_sql(),
-        "lsh_recall": oracles.lsh_recall_sql(),
-        "dataset_split": oracles.dataset_split_sql(),
-        "kg_scd2_intervals": oracles.kg_scd2_sql(),
-        "kg_negative_samples": oracles.kg_negative_samples_sql(),
-        "graph_entity_pmi": oracles.entity_pmi_sql(),
-        "balanced_sample": oracles.balanced_sample_sql(),
-        "contamination": oracles.contamination_sql(bench_mod=19, n=3),
-        "fingerprints_winnowed": oracles.winnowed_fingerprints_sql(),
-        "language_id": oracles.language_id_sql(),
-        "fingerprints": oracles.fingerprints_sql(),
-        "media_inventory": oracles.media_inventory_sql(),
-        "asof_last_click": oracles.asof_last_click_sql(),
-        "range_clicks_before_purchase": oracles.range_clicks_sql(),
-        "sessions": oracles.sessions_sql(gap_sec=21600),
-        "w2_latest_event_per_user": oracles.latest_event_sql(),
-        "w3_retention_tail": oracles.retention_tail_sql(),
-        "a2_user_type_stats": oracles.user_type_stats_sql(),
-        "jn6_customers_no_orders": oracles.customers_no_orders_sql(),
-        "jn6_customers_with_orders": oracles.customers_with_orders_sql(),
-        "a3_latest_order_per_customer": oracles.latest_order_sql(),
-        "a1_pricing_summary": oracles.pricing_summary_sql(),
-        "a8_event_value_quantiles": oracles.event_value_quantiles_sql(),
-        "a9_rollup_order_stats": oracles.rollup_order_stats_sql(),
-        "jn2_graph_fetch": oracles.graph_fetch_sql(),
-        "a7_bucket_metrics": oracles.bucket_metrics_sql(),
-        "fn_scalar_suite": oracles.scalar_suite_sql(),
-        "p6_p8_text_gate": oracles.text_gate_sql(),
-        "j1_props_parse": oracles.props_parse_sql(),
-        "j2_json_repair": oracles.json_repair_sql(),
-        "j3_graph_coercion": oracles.graph_coercion_sql(),
-        "p9_graph_checks": oracles.graph_checks_sql(),
-        "p10_media_security": oracles.media_security_sql(),
-        "s5_csv_prose": oracles.csv_prose_sql(),
-        "s2_binary_ingest": oracles.binary_ingest_sql(),
-        "s7_llm_fake_edges": oracles.llm_edges_sql(),
-        "media_decode_fake": oracles.media_decode_sql(),
-        "media_decode_real": oracles.media_decode_real_sql(),
-        "audio_decode_real": oracles.audio_decode_real_sql(),
-        "video_decode_real": oracles.video_decode_real_sql(),
-        "video_frames_real": oracles.video_frames_real_sql(),
-        "media_resize_real": oracles.media_resize_real_sql(),
-        "media_frames": oracles.media_frames_sql(),
-        "media_resize": oracles.media_resize_sql(),
-        "emb_kmeans": oracles.emb_kmeans_sql(rounds=2, target_cluster_size=64),
-        "semdedup": oracles.semdedup_sql(
-            rounds=2, min_cosine=0.4, target_cluster_size=64
-        ),
-        "inverted_postings": oracles.inverted_postings_sql(min_df=2, max_df=400),
-        "media_captions": oracles.media_caption_pairs_sql(),
-        "seq_pack_interleaved": oracles.seq_pack_interleaved_sql(
-            capacity=4096, n_shards=8, media_token_cost=576
-        ),
-        "hll_registers": oracles.hll_registers_sql(m=64),
-        "bloom_registers": oracles.bloom_registers_sql(bench_mod=19, n=3),
-        "bloom_contamination": oracles.bloom_contamination_sql(bench_mod=19, n=3),
-        "hist_registers": oracles.hist_registers_sql(),
-        "cm_heavy_hitters": oracles.cm_heavy_hitters_sql(threshold=75),
-        "hll_by_group": oracles.hll_grouped_sql(),
-        "cm_registers": oracles.cm_registers_sql(
-            "cast(user_id as varchar)", depth=4, width=256
-        ),
-        "lm_trigram_counts": oracles.lm_ngram_counts_sql(n=3, min_count=2),
-        "seq_pack": oracles.seq_pack_sql(capacity=128, n_shards=8),
-        "shard_manifest": oracles.shard_manifest_sql(n_shards=8),
-        "token_mix": oracles.token_mix_sql(),
-        "repetition_stats": oracles.repetition_sql(),
-        "bm25_topk": oracles.bm25_topk_sql(**BM25_GATE),
-        "unigram_surprisal": oracles.unigram_surprisal_sql(),
-        "graph_random_walks": oracles.graph_random_walks_sql(
-            length=4, walks_per_node=2
-        ),
-        "walk_skipgram_pairs": oracles.walk_skipgram_pairs_sql(
-            length=4, walks_per_node=2, window=2
-        ),
-    }
+    """The DuckDB oracle SQL of every ``QUERIES`` row, keyed by name."""
+    return {n: o() for n, _, o in QUERIES}

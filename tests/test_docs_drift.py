@@ -1,0 +1,47 @@
+"""The hand-written registry facts in the docs stay in step with ``QUERIES``:
+the rotation table of docs/COVERAGE.md names every row past the driver
+gate, and the registered / gate / remainder counts quoted in COVERAGE and
+the README's driver-gate paragraph are the registry's own."""
+
+import os
+import re
+
+import __spark_entry__ as entrymod
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+GATE = 50  # the driver records the first 50 rows of queries()
+
+
+def _read(rel: str) -> str:
+    with open(os.path.join(ROOT, rel)) as f:
+        return f.read()
+
+
+def _rotation_table() -> set[str]:
+    """Backticked names in the first column of COVERAGE's rotation table."""
+    section = _read("docs/COVERAGE.md").split("## Driver-gate rotation", 1)[1]
+    section = section.split("\n## ", 1)[0]
+    names = set()
+    for line in section.splitlines():
+        if line.startswith("| `"):
+            names.update(re.findall(r"`([a-z0-9_]+)`", line.split("|")[1]))
+    return names
+
+
+def test_rotation_table_names_every_row_past_the_gate():
+    remainder = list(entrymod.queries())[GATE:]
+    missing = [n for n in remainder if n not in _rotation_table()]
+    assert not missing, missing
+
+
+def test_quoted_registry_counts_match_queries():
+    n = len(entrymod.QUERIES)
+    readme = _read("README.md")
+    paragraph = readme[readme.index("driver-gate rotation table") :].split("\n\n")[0]
+    for where, text in (("docs/COVERAGE.md", _read("docs/COVERAGE.md")),
+                        ("README.md", paragraph)):
+        quoted = re.findall(r"first (\d+) of\s+the (\d+) registered", text)
+        others = re.findall(r"[Tt]he other (\d+)", text)
+        assert quoted and others, where
+        assert set(quoted) == {(str(GATE), str(n))}, (where, quoted)
+        assert set(others) == {str(n - GATE)}, (where, others)

@@ -8,7 +8,11 @@ from kgx.operators import packing
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    # released after the module: a cached scan left behind is substituted
+    # into every later plan over documents.parquet (widening its ReadSchema)
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_seq_pack_conservation_and_contiguity(spark, docs):

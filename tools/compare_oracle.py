@@ -1,8 +1,9 @@
 """Replicate the driver's correctness gate locally.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same sf dir, then compares row count, sorted-column schema
-and an order-insensitive value hash.  Usage::
+Runs every ``QUERIES`` row on Spark and its oracle on DuckDB over the same
+sf dir, then compares row count, sorted-column schema and an
+order-insensitive value hash.  Tier-1 runs the same comparison per row
+(``tests/test_oracle_gate.py``).  Usage::
 
     python tools/compare_oracle.py [sf_dir] [query ...]
 """
@@ -12,6 +13,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -21,6 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+#: what the gate holds equal between the Spark and the DuckDB side
+CHECKS = ("rows", "schema", "hash")
 
 
 def value_hash(pdf: pd.DataFrame) -> str:
@@ -31,6 +35,38 @@ def value_hash(pdf: pd.DataFrame) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per sf-dir table the oracles read."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+
+def compare(spark, con, sf_dir: str, name: str) -> dict:
+    """Run registry row ``name`` on Spark and its oracle on DuckDB.
+
+    Each ``CHECKS`` key maps to its ``(spark, duckdb)`` pair; ``walls``
+    holds the two seconds and ``frames`` the two pandas frames."""
+    import __spark_entry__ as entrymod
+
+    _, fn, oracle = next(row for row in entrymod.QUERIES if row[0] == name)
+    t0 = time.time()
+    s = fn(spark, sf_dir).toPandas()
+    t1 = time.time()
+    d = con.sql(oracle()).df()
+    t2 = time.time()
+    return {
+        "rows": (len(s), len(d)),
+        "schema": (sorted(s.columns), sorted(d.columns)),
+        "hash": (value_hash(s), value_hash(d)),
+        "walls": (t1 - t0, t2 - t1),
+        "frames": (s, d),
+    }
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -39,41 +75,24 @@ def main() -> int:
     from kgx.session import get_spark
 
     spark = get_spark("oracle-compare", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
-    import time
-
-    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
+    con = connect(sf_dir)
     failed = []
     t_sweep = time.time()
-    for name, fn in qs.items():
+    for name, _, _ in entrymod.QUERIES:
         if only and name not in only:
             continue
-        t0 = time.time()
-        spark_pdf = fn(spark, sf_dir).toPandas()
-        t_spark = time.time() - t0
-        if name not in os_:
-            print(f"{name:24s} rows={len(spark_pdf):7d}  (no oracle — rows-only)")
-            continue
-        t0 = time.time()
-        duck_pdf = con.sql(os_[name]).df()
-        t_duck = time.time() - t0
-        rc = len(spark_pdf) == len(duck_pdf)
-        sc = sorted(spark_pdf.columns) == sorted(duck_pdf.columns)
-        vh = value_hash(spark_pdf) == value_hash(duck_pdf) if rc and sc else False
-        status = "OK " if (rc and sc and vh) else "FAIL"
+        r = compare(spark, con, sf_dir, name)
+        ok = {c: r[c][0] == r[c][1] for c in CHECKS}
+        (n_s, n_d), (cols_s, cols_d), (h_s, h_d) = (r[c] for c in CHECKS)
         print(
-            f"{name:24s} {status} rows={len(spark_pdf)}/{len(duck_pdf)} "
-            f"schema={'=' if sc else sorted(spark_pdf.columns)!r:}{'' if sc else sorted(duck_pdf.columns)} hash={'=' if vh else '!'} "
-            f"spark={t_spark:.1f}s duck={t_duck:.1f}s",
+            f"{name:24s} {'OK ' if all(ok.values()) else 'FAIL'} rows={n_s}/{n_d} "
+            f"schema={'=' if ok['schema'] else f'{cols_s}{cols_d}'} "
+            f"hash={h_s if ok['hash'] else f'{h_s}!={h_d}'} "
+            f"spark={r['walls'][0]:.1f}s duck={r['walls'][1]:.1f}s",
             flush=True,
         )
-        if status == "FAIL":
-            failed.append((name, spark_pdf, duck_pdf))
+        if not all(ok.values()):
+            failed.append((name, *r["frames"]))
     print(f"sweep wall: {time.time() - t_sweep:.1f}s")
 
     for name, s, d in failed:

@@ -14,7 +14,9 @@ Usage:
     python tools/pin_query_minima.py [query ...] [--reps N] [--sf-dir DIR]
 
 Defaults: kg_triples link_canonical_triples (the two round-3 draws with no
-pinned minimum), 3 reps, sf0.1, local[32].
+pinned minimum), 3 reps, sf0.1, ``--cpus`` from
+``kgx.session.default_parallelism()`` (``SPARK_GRAFT_CPUS``, else the CPU
+count).
 """
 
 from __future__ import annotations
@@ -26,24 +28,24 @@ import sys
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
-
 REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 OUT = os.path.join(REPO, "BENCH", "query_minima.jsonl")
 
 
 def main() -> None:
+    from kgx.session import default_parallelism, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*",
                     default=["kg_triples", "link_canonical_triples"])
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=default_parallelism())
     args = ap.parse_args()
 
-    import bench  # repo-root module: reuse the probe
+    import bench  # repo-root module: reuse the probe and the warm-up
 
     probe = bench._cpu_probe()
-    from kgx.session import get_spark
 
     spark = get_spark(
         "kgx-pin", master=f"local[{args.cpus}]",
@@ -51,27 +53,11 @@ def main() -> None:
     )
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    # identical warm-up to bench.py: Python workers + Janino codegen at
-    # the smallest sf so the first timed rep is not a cold-JVM artifact
-    import pandas as pd
-
-    from kgx.operators import extract as _extract
     from kgx.plans.curation_pipeline import clear_funnel_cache
 
-    warm = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [f"w{i}" for i in range(4 * args.cpus)],
-                "doc_text": ["Warm Up works at Warm Corporation."] * (4 * args.cpus),
-            }
-        )
-    ).repartition(2 * args.cpus)
-    warm.mapInPandas(_extract._extract_batches, schema=_extract.GRAPH_SCHEMA).count()
-    for name in args.queries:
-        qs[name](spark, "/root/testdata/sf0.001").count()
-    clear_funnel_cache()
-    entrymod.clear_graph_cache()
+    qs = entrymod.queries()
+    # bench.py's warm-up, so the first timed rep is not a cold-JVM artifact
+    bench._warm_up(spark, qs, args.queries, args.cpus, args.sf_dir)
 
     reps = []
     for rep in range(args.reps):

@@ -10,7 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 KEEP = (
     "Scan parquet", "ReadSchema", "PushedFilters", "Join", "InPandas",
     "Exchange", "HashAggregate", "Window", "Generate", "TakeOrdered",
-    "InMemoryTableScan",
+    "InMemoryTableScan", "Scan ExistingRDD",
 )
 
 SECTIONS = [
@@ -107,10 +107,11 @@ SECTIONS = [
      "Native session_window aggregate: one shuffle on user_id feeds the "
      "session merge; the numbering window reuses the same partitioning."),
     ("curation_funnel",
-     "End-to-end curation funnel: survivor-set boundaries persisted "
-     "(InMemoryTableScan feeds the near-dup and prune stages, which read "
-     "their inputs 6x/3x); connected components run on the sparse pair "
-     "graph only; no CartesianProduct anywhere."),
+     "End-to-end curation funnel: survivor-set boundaries are "
+     "`plan.materialize` checkpoints, so the plan starts at Scan ExistingRDD "
+     "leaves (the near-dup and prune stages read their inputs 6x/3x without "
+     "replaying upstream stages); connected components run on the sparse "
+     "pair graph only; no CartesianProduct anywhere."),
     ("graph_pagerank",
      "Integer PageRank, 5 unrolled rounds: each iteration is one label "
      "equi-join of the edge list against the (label, rank) bigint table "
@@ -171,9 +172,9 @@ SECTIONS = [
      "re-evaluated the gram array per sliding-window element "
      "(O(L^2) regex per doc; >10 min for 500 sub-KB docs)."),
     ("funnel_export",
-     "The composed curation-to-export plan: funnel survivor boundaries "
-     "persist (InMemoryTableScan), then one shard-keyed exchange feeds "
-     "both the manifest aggregate and the packing window."),
+     "The composed curation-to-export plan: funnel survivor boundaries are "
+     "`plan.materialize` checkpoints (Scan ExistingRDD), then one shard-keyed "
+     "exchange feeds both the manifest aggregate and the packing window."),
     ("repetition_stats",
      "Round 5 (Gopher repetition signals): tokenization hoisted behind "
      "project_barrier Generates so the gram lambdas slice a bound array "
@@ -203,7 +204,7 @@ def main() -> None:
         for name, note in SECTIONS
     ]
     doc = (
-        "# Physical plan audit (sf0.01, local[8])\n\n"
+        f"# Physical plan audit (sf0.01, {spark.sparkContext.master})\n\n"
         '`explain("formatted")` excerpts for representative queries — the evidence\n'
         "that plans are the ones a 100 TB run needs: pruned scans, pushed filters,\n"
         "broadcast small sides, partial aggregation, and exactly one Python crossing\n"
