@@ -23,32 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _busy(_):
-    x = 0
-    for i in range(20_000_000):
-        x += i
-    return x
-
-
-def _cpu_probe() -> dict:
-    """Single-core and all-core busy-loop walls (seconds) — quiet-host
-    reference ~0.8 s each; degraded windows read 1.2-4x that.  The all-core
-    loop runs one process per core, so it never reads oversubscription as a
-    degraded host."""
-    import multiprocessing as mp
-    import time as _t
-
-    from kgx.session import default_parallelism
-
-    out = {}
-    for n in (1, default_parallelism()):
-        with mp.Pool(n) as p:
-            t0 = _t.time()
-            p.map(_busy, range(n))
-            out[f"busyloop_{n}way_sec"] = round(_t.time() - t0, 3)
-    return out
-
-
 def _warm_up(spark, qs, names, cpus: int, sf_dir: str) -> None:
     """Warm executors, Python workers and codegen before ``sf_dir`` is timed.
 
@@ -86,16 +60,25 @@ def _warm_up(spark, qs, names, cpus: int, sf_dir: str) -> None:
 
 def main() -> None:
     from kgx.session import default_parallelism, get_spark
+    from perfbench import hostenv
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = default_parallelism()
     replicate_factor = int(os.environ.get("KGX_BENCH_REPLICATE", "8"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    # host-retention probe: this VM's deliverable CPU swings 1.5-5x between
-    # minutes (BENCH/BASELINE.md methodology) — recording a no-Spark busy
-    # loop next to the timings lets any reader normalize a noisy draw
-    probe = _cpu_probe()
+    # host probe: a no-Spark busy loop alone and on every core at once,
+    # recorded next to the timings so a slow host window can be told from a
+    # slow change.  One loop's wall over the slowest all-core loop's wall is
+    # the per-core retention ceiling any N-core scaling figure is bounded by
+    one_core, all_cores = hostenv.host_probe(1), hostenv.host_probe(cpus)
+    probe = {
+        "one_core": one_core,
+        "all_cores": all_cores,
+        "retention_ceiling": round(
+            one_core["busyloop_max_s"] / all_cores["busyloop_max_s"], 3
+        ),
+    }
 
     spark = get_spark(
         "kgx-bench", master=f"local[{cpus}]", shuffle_partitions=2 * cpus
@@ -147,7 +130,7 @@ def main() -> None:
         n_buckets = max(2 * cpus, 16)
         # single-file input -> spread the raw rows BEFORE the xN replication
         # so scan+replicate+prepartition-shuffle-write parallelize (the sf
-        # parquet is one sub-MB split; see BENCH/scaling.py note)
+        # parquet is one sub-MB split)
         documents = corpus.replicate(
             docs_src.load_documents(spark, sf_dir).repartition(2 * cpus),
             replicate_factor,

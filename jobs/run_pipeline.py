@@ -51,6 +51,21 @@ def main(argv=None) -> int:
     )
     args = p.parse_args(argv)
 
+    from kgx.plans import pipeline
+
+    # built before the session so a bad --buckets/--salt-factor fails first
+    cfg = pipeline.PipelineConfig(
+        out_dir=args.out,
+        n_buckets=args.buckets,
+        salt_factor=args.salt_factor,
+        resume=not args.no_resume,
+        run_id=args.run_id,
+        presplit=args.presplit,
+        validate=args.validate,
+        canonicalize=args.canonicalize,
+        use_minhash_linking=args.minhash_linking,
+    )
+
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
@@ -59,7 +74,6 @@ def main(argv=None) -> int:
 
         spark = get_spark("kgx-pipeline")
 
-    from kgx.plans import pipeline
     from kgx.sources import corpus, docs as docs_src
 
     if args.derive_corpus:
@@ -79,17 +93,6 @@ def main(argv=None) -> int:
     else:
         docs = spark.read.parquet(args.input)
 
-    cfg = pipeline.PipelineConfig(
-        out_dir=args.out,
-        n_buckets=args.buckets,
-        salt_factor=args.salt_factor,
-        resume=not args.no_resume,
-        run_id=args.run_id,
-        presplit=args.presplit,
-        validate=args.validate,
-        canonicalize=args.canonicalize,
-        use_minhash_linking=args.minhash_linking,
-    )
     metrics = pipeline.run(spark, docs, cfg)
     print(json.dumps(metrics))
     return 0

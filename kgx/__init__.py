@@ -10,10 +10,8 @@ a multi-executor cluster at 10^12-document scale:
 - ``kgx.functions``  : reusable Column expressions (hashing, shingles, text)
 - ``kgx.plans``      : the end-to-end pipeline with per-partition lineage and
                        checkpoint resumability
-- ``kgx.streaming``  : incremental ingest via Structured Streaming
 
-Everything is a pure ``DataFrame -> DataFrame`` function so stages compose in
-batch and in ``foreachBatch`` streaming alike.
+Everything is a pure ``DataFrame -> DataFrame`` function so stages compose.
 """
 
 __version__ = "0.1.0"

@@ -195,16 +195,6 @@ def semdedup(
     )
 
 
-def cluster_stats(assignments: DataFrame) -> DataFrame:
-    """Per-cluster summary over :func:`kmeans_assign` output:
-    (cluster, n_vecs, min_vec_id) — the shape cluster-balanced sampling and
-    SemDeDup bucket sizing consume."""
-    return assignments.groupBy("cluster").agg(
-        F.count("*").cast("long").alias("n_vecs"),
-        F.min("vec_id").alias("min_vec_id"),
-    )
-
-
 def _pq_sub_table(base: DataFrame, m: int) -> DataFrame:
     """(vec_id, q) → one row per (vec_id, subspace) carrying the dim/m
     subvector.  Dim-divisibility is enforced LOUDLY (the bloom-guard

@@ -349,23 +349,22 @@ def dataset_split(
     retry).  Hash uniformity makes the split self-stratifying within
     ANY stratum; this query emits the per-``strat_col`` audit that
     verifies it: (stratum, split, n_docs, share_bp) with floor-divided
-    basis-point shares per stratum.
+    basis-point shares per stratum.  A NULL ``strat_col`` (web-crawl
+    metadata is often missing) is its own stratum, keyed NULL and kept
+    apart from any literal string value.
 
     Scale shape: one integer projection + one map-side-combined count
-    aggregate on the (stratum, split) key + one AQE-decided join onto
-    the per-stratum totals; nothing but pre-combined counter rows ever
-    shuffles.  Output rows ≤ 3 × distinct strata.
+    aggregate on the (stratum, split) key + one window summing each
+    stratum's ≤ 3 counter rows into its total; nothing but pre-combined
+    counter rows ever shuffles.  Output rows ≤ 3 × distinct strata.
     """
     from kgx.functions.hashing import seeded
 
     if val_bp < 0 or test_bp < 0 or val_bp + test_bp > 10000:
         raise ValueError(f"bad split shares val_bp={val_bp} test_bp={test_bp}")
     h = seeded("cast(doc_id as string)", seed, "spark")
-    # NULL strata must stay IN the audit (web-crawl metadata is often
-    # missing): coalesce to a sentinel before grouping, or the inner
-    # equi-join below would silently drop every NULL-stratum document
     assigned = documents.select(
-        F.expr(f"coalesce({strat_col}, '(null)')").alias("stratum"),
+        F.expr(strat_col).alias("stratum"),
         F.expr(
             f"CASE WHEN ({h}) % 10000 < {test_bp} THEN 'test' "
             f"WHEN ({h}) % 10000 < {test_bp + val_bp} THEN 'val' "
@@ -375,12 +374,11 @@ def dataset_split(
     counts = assigned.groupBy("stratum", "split").agg(
         F.count("*").cast("long").alias("n_docs")
     )
-    totals = counts.groupBy("stratum").agg(
-        F.sum("n_docs").cast("long").alias("n_total")
-    )
-    return counts.join(totals, "stratum").select(
+    return counts.select(
         "stratum",
         "split",
         "n_docs",
-        F.expr("(10000 * n_docs) div n_total").cast("long").alias("share_bp"),
+        F.expr(
+            "(10000 * n_docs) div sum(n_docs) OVER (PARTITION BY stratum)"
+        ).cast("long").alias("share_bp"),
     )

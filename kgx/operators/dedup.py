@@ -197,28 +197,16 @@ def hashed_shingles(
     )
 
 
-def minhash_signatures(
-    documents: DataFrame,
-    n: int = 3,
-    num_hashes: int = 16,
-    shingle_expr: str | None = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, sig array<bigint>) — per-row computation, zero shuffle.
+def _signatures_from(sets_: DataFrame, num_hashes: int, id_col: str) -> DataFrame:
+    """(id, sig array<bigint>) from a prebuilt (id, hs) hashed-shingle
+    table — per-row computation, zero shuffle.
 
     One md5-60 base hash per shingle (:func:`hashed_shingles`), then the
     whole signature via the universal-hash family sig[s] = min over shingles
     of (a_s * h + b_s) mod p (kgx.functions.hashing.minhash_derived) — 16x
-    fewer md5 evaluations than hashing each (seed, shingle) pair."""
-    return _signatures_from(
-        hashed_shingles(documents, n, shingle_expr, id_col), num_hashes, id_col
-    )
-
-
-def _signatures_from(sets_: DataFrame, num_hashes: int, id_col: str) -> DataFrame:
-    """Signatures from a prebuilt (id, hs) hashed-shingle table — split out
-    so minhash_lsh_pairs can derive sigs AND verification sets from ONE
-    evaluation of the shingle pipeline."""
+    fewer md5 evaluations than hashing each (seed, shingle) pair.  Taking
+    the hashed table lets minhash_lsh_pairs derive sigs AND verification
+    sets from ONE evaluation of the shingle pipeline."""
     mins = ", ".join(
         "aggregate(hs, cast(9223372036854775807 as bigint), "
         f"(acc, x) -> least(acc, {hashing.minhash_derived('x', s)}))"

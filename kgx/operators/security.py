@@ -39,7 +39,3 @@ def classify_refs(df: DataFrame, ref_col: str = "media_ref") -> DataFrame:
         "accepted",
         F.col("is_allowed") & ~F.col("is_dangerous") & ~F.col("is_suspicious"),
     )
-
-
-def accepted_refs(df: DataFrame, ref_col: str = "media_ref") -> DataFrame:
-    return classify_refs(df, ref_col).where("accepted")

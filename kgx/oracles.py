@@ -3507,13 +3507,14 @@ def dataset_split_sql(
     """Oracle for the deterministic split audit (mirror of
     kgx.operators.curation.dataset_split): same seeded md5-60 threshold
     assignment (kgx.functions.hashing.seeded, duckdb dialect), same
-    NULL-stratum sentinel, same per-stratum floor-divided shares."""
+    NULL stratum (its own group, keyed NULL), same per-stratum
+    floor-divided shares over a windowed stratum total."""
     from kgx.functions.hashing import seeded
 
     h = seeded("CAST(doc_id AS VARCHAR)", seed, "duckdb")
     return f"""
 WITH ds_assigned AS (
-    SELECT coalesce({strat_col}, '(null)') AS stratum,
+    SELECT {strat_col} AS stratum,
            CASE WHEN ({h}) % 10000 < {test_bp} THEN 'test'
                 WHEN ({h}) % 10000 < {test_bp + val_bp} THEN 'val'
                 ELSE 'train' END AS split
@@ -3522,14 +3523,11 @@ WITH ds_assigned AS (
 ds_counts AS (
     SELECT stratum, split, CAST(count(*) AS BIGINT) AS n_docs
     FROM ds_assigned GROUP BY 1, 2
-),
-ds_totals AS (
-    SELECT stratum, CAST(sum(n_docs) AS BIGINT) AS n_total
-    FROM ds_counts GROUP BY 1
 )
-SELECT c.stratum, c.split, c.n_docs,
-       CAST((10000 * c.n_docs) // t.n_total AS BIGINT) AS share_bp
-FROM ds_counts c JOIN ds_totals t USING (stratum)
+SELECT stratum, split, n_docs,
+       CAST((10000 * n_docs) // sum(n_docs) OVER (PARTITION BY stratum)
+            AS BIGINT) AS share_bp
+FROM ds_counts
 """.strip()
 
 

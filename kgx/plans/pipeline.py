@@ -37,6 +37,7 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,17 +66,34 @@ class PipelineConfig:
                                   # deduplicated canonical triple table
     use_minhash_linking: bool = False  # add LSH candidates to alias edges
 
+    def __post_init__(self):
+        _check_shape(self.n_buckets, self.salt_factor)
+
+
+def _check_shape(n_buckets: int, salt_factor: int) -> None:
+    """Bucket ids are ``pmod(hash, n_buckets)`` and each bucket spreads over
+    ``salt_factor`` tasks.  A value below 1 would fail late with an
+    unrelated Spark error or write negative bucket ids, so it is refused
+    before any Spark job starts."""
+    for field, value in (("n_buckets", n_buckets), ("salt_factor", salt_factor)):
+        if value < 1:
+            raise ValueError(f"{field} must be >= 1, got {value}")
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff the Iceberg Spark runtime is on the JVM classpath.  The
     sandbox has no network and ships no iceberg jar (verified:
     tests/test_iceberg_boundary.py), so all persisted tables here are plain
     parquet directory tables with dynamic partition overwrite standing in
-    for Iceberg's atomic partition-level snapshot commit."""
+    for Iceberg's atomic partition-level snapshot commit.  Only the JVM's
+    ``ClassNotFoundException`` means "absent"; any other failure (a dead
+    gateway, a broken classpath) is raised, not read as a missing jar."""
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
         return True
-    except Exception:
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.ClassNotFoundException":
+            raise
         return False
 
 
@@ -109,6 +127,7 @@ def prepartition_raw(
     the sandbox spans synthesis), else bucket alignment silently breaks and
     the partitioned write degrades to tasks×buckets files.
     """
+    _check_shape(n_buckets, salt_factor)
     fid = final_doc_id if final_doc_id is not None else F.col("doc_id")
     return raw.repartition(
         n_buckets * salt_factor,

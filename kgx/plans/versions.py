@@ -1,14 +1,15 @@
-"""Versioned recompute — run_id appends, latest views, retention.
+"""Versioned recompute — snapshot diffs and SCD2 validity intervals.
 
 Maps the reference's document-version lifecycle (models.py:29-46 ``versions``
-table; main.py:202-285 update = full re-extract + new version row;
-database_service.py:280-312 cleanup keeps newest K versions) onto append-only
-tables + window views:
+table; main.py:202-285 update = full re-extract + new version row) onto an
+append-only triple log, one ``run_seq`` per pipeline run:
 
-- every pipeline run appends rows stamped with ``run_id`` / ``run_seq``
-- "current graph" = top-1 run per doc via a row_number window (SURVEY JN3/W2)
-- retention = everything beyond the newest K runs per doc (SURVEY A6/W3) —
-  the delete-set a MERGE/DELETE would consume on Iceberg.
+- :func:`snapshot_diff` — the added/removed changelog between two runs
+- :func:`scd2_intervals` — point-in-time validity intervals over the log
+
+The latest-version (SURVEY JN3/W2) and keep-newest-K retention (A6/W3)
+shapes run as the events twins ``w2_latest_event_per_user`` and
+``w3_retention_tail`` in ``__spark_entry__.QUERIES``.
 """
 
 from __future__ import annotations
@@ -16,32 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def stamp_run(df: DataFrame, run_id: str, run_seq: int) -> DataFrame:
-    return df.withColumn("run_id", F.lit(run_id)).withColumn(
-        "run_seq", F.lit(int(run_seq))
-    )
-
-
-def latest_per_doc(versioned: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Rows belonging to each doc's newest run (top-1-per-group join)."""
-    w = Window.partitionBy(key).orderBy(F.desc("run_seq"))
-    return (
-        versioned.withColumn("__r", F.dense_rank().over(w))
-        .where(F.col("__r") == 1)
-        .drop("__r")
-    )
-
-
-def retention_delete_set(versioned: DataFrame, keep: int, key: str = "doc_id") -> DataFrame:
-    """Rows OLDER than the newest ``keep`` runs per doc — feed to a DELETE."""
-    w = Window.partitionBy(key).orderBy(F.desc("run_seq"))
-    return (
-        versioned.withColumn("__r", F.dense_rank().over(w))
-        .where(F.col("__r") > keep)
-        .drop("__r")
-    )
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:

@@ -106,7 +106,3 @@ def spread_small_scan(spark, df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def load_spans(spark, sf_dir: str) -> DataFrame:
-    return spans_table(load_documents(spark, sf_dir))

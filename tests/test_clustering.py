@@ -108,15 +108,6 @@ def test_kmeans_plan_no_unbroadcast_cartesian(spark, emb):
     assert "CartesianProduct" not in plan
 
 
-def test_cluster_stats_partition_of_vectors(spark, emb):
-    assigns = clustering.kmeans_assign(emb, k=8, rounds=2)
-    stats = clustering.cluster_stats(assigns)
-    total = stats.agg(F.sum("n_vecs")).first()[0]
-    n_vecs = assigns.count()
-    assert total == n_vecs
-    assert stats.count() <= 8
-
-
 def test_semdedup_matches_pure_python(spark, emb):
     """Keep-first within-cluster dedup replayed exactly in Python over the
     same integer contract."""

@@ -273,15 +273,21 @@ def test_dataset_split_rejects_bad_shares(spark):
 
 
 def test_dataset_split_keeps_null_strata(spark):
-    """NULL-source documents must appear in the audit under a sentinel,
-    never silently dropped by the totals equi-join."""
+    """NULL-source documents must appear in the audit as their own stratum
+    (key None), never silently dropped, and never merged with documents
+    whose source is the literal string '(null)'."""
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [f"d{i}" for i in range(40)],
-                      "source": ["web" if i % 2 else None for i in range(40)]})
+                      "source": ["web" if i % 2 else None if i % 4 else "(null)"
+                                 for i in range(40)]})
     )
     rows = curation.dataset_split(df).collect()
-    by_stratum = {}
+    by_stratum, shares = {}, {}
     for r in rows:
         by_stratum[r.stratum] = by_stratum.get(r.stratum, 0) + r.n_docs
-    assert by_stratum.get("(null)", 0) == 20  # all NULL-source docs audited
+        shares[r.stratum] = shares.get(r.stratum, 0) + r.share_bp
+    assert by_stratum.get(None, 0) == 10      # all NULL-source docs audited
+    assert by_stratum.get("(null)", 0) == 10  # literal '(null)' kept apart
     assert sum(by_stratum.values()) == 40     # nothing dropped
+    # each stratum's shares are over its own total
+    assert all(10000 - 3 < bp <= 10000 for bp in shares.values()), shares

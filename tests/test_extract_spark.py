@@ -79,7 +79,7 @@ def test_flat_tables(spark):
 
 
 def test_pipeline_on_real_documents_parquet(spark, sf_dir):
-    sp = docs_src.load_spans(spark, sf_dir)
+    sp = docs_src.spans_table(docs_src.load_documents(spark, sf_dir))
     graphs = extract.extract_graphs(spans.with_doc_text(sp))
     total = graphs.count()
     assert total == docs_src.load_documents(spark, sf_dir).count()

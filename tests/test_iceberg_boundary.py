@@ -11,8 +11,11 @@ mechanism for Iceberg snapshots with the identical dataflow."""
 
 import glob
 import os
+from types import SimpleNamespace
 
 import pyspark
+import pytest
+from py4j.protocol import Py4JJavaError, Py4JNetworkError
 
 from kgx.plans import pipeline
 
@@ -34,6 +37,32 @@ def test_iceberg_detection_and_fail_fast(spark, tmp_path):
         raise AssertionError("expected RuntimeError for missing iceberg runtime")
     except RuntimeError as e:
         assert "iceberg-spark-runtime" in str(e)
+
+
+def _java_error(class_name):
+    jclass = SimpleNamespace(getName=lambda: class_name)
+    return Py4JJavaError(
+        "forName failed", SimpleNamespace(_target_id="o1", getClass=lambda: jclass)
+    )
+
+
+@pytest.mark.parametrize(
+    "error",
+    [_java_error("java.lang.LinkageError"), Py4JNetworkError("gateway gone")],
+    ids=["linkage_error", "dead_gateway"],
+)
+def test_iceberg_probe_reraises_anything_but_class_not_found(error):
+    """Only ``ClassNotFoundException`` means "no iceberg jar" (the real JVM
+    path is checked above): a broken classpath or a dead gateway must be
+    raised, not read as the parquet fallback."""
+
+    def for_name(_):
+        raise error
+
+    fake = SimpleNamespace(_jvm=SimpleNamespace(java=SimpleNamespace(
+        lang=SimpleNamespace(Class=SimpleNamespace(forName=for_name)))))
+    with pytest.raises(type(error)):
+        pipeline.iceberg_available(fake)
 
 
 def test_dynamic_partition_overwrite_is_bucket_idempotent(spark, tmp_path):

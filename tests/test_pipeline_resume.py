@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from jobs import run_pipeline
 from kgx.plans import lineage as lin
 from kgx.plans import pipeline
 from kgx.sources import corpus, docs as docs_src
@@ -321,3 +322,26 @@ def test_unreadable_lineage_raises(spark):
             lin.read_lineage(spark, "nosuchfs://bucket/out")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+_CLI = ["--input", "/nonexistent/in", "--out", "/nonexistent/out"]
+
+
+@pytest.mark.parametrize(
+    "start",
+    [
+        lambda spark: pipeline.PipelineConfig(out_dir="unused", n_buckets=0),
+        lambda spark: pipeline.PipelineConfig(out_dir="unused", salt_factor=-2),
+        lambda spark: pipeline.prepartition_raw(spark.range(4), -1),
+        lambda spark: pipeline.prepartition_raw(spark.range(4), 8, salt_factor=0),
+        lambda spark: run_pipeline.main(_CLI + ["--buckets", "0"]),
+        lambda spark: run_pipeline.main(_CLI + ["--salt-factor", "0"]),
+    ],
+    ids=["cfg_buckets", "cfg_salt", "raw_buckets", "raw_salt", "cli_buckets", "cli_salt"],
+)
+def test_bad_partition_shape_fails_before_any_spark_job(spark, start):
+    """A non-positive bucket count or salt factor is refused up front, naming
+    the field.  The CLI refuses it before reading ``--input`` (a missing
+    path here), so no Spark error can come first."""
+    with pytest.raises(ValueError, match=r"^(n_buckets|salt_factor) must be >= 1, got -?\d+$"):
+        start(spark)

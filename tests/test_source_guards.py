@@ -1,7 +1,10 @@
-"""Source-level guards: one pin policy, and a packaged zip that matches kgx/."""
+"""Source-level guards: one pin policy, no def that only tests reach, and a
+packaged zip that matches kgx/."""
 
 import ast
+import collections
 import pathlib
+import re
 import zipfile
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
@@ -56,6 +59,36 @@ def test_no_per_call_pin_switches():
         rel = path.relative_to(ROOT).as_posix()
         found += [(rel, fn, p) for fn, p in params if p in banned]
     assert found == []
+
+
+def test_every_def_has_a_non_test_caller():
+    """Every top-level ``def``/``class`` in the shipped sources is named
+    somewhere outside ``tests/`` other than on its own definition line, so
+    code that only tests reach is deleted rather than kept.  Referrers are
+    the shipped sources plus ``bench.py``, ``tools/`` and ``perfbench/``.
+
+    The one exception, ``estimate_count``, is the count-min read side:
+    ``test_sketches`` checks ``cm_registers`` against it (point estimates
+    never underestimate), so it is the reference that test compares
+    against rather than dead code."""
+    allowed = {"estimate_count"}
+    referrers = [*_sources(), ROOT / "bench.py"]
+    for d in ("tools", "perfbench"):
+        referrers += sorted((ROOT / d).rglob("*.py"))
+    words = collections.Counter()
+    for path in referrers:
+        words.update(re.findall(r"\w+", path.read_text()))
+    unreached = []
+    for path in _sources():
+        text = path.read_text()
+        lines = text.splitlines()
+        for node in ast.parse(text, str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                own = re.findall(r"\w+", lines[node.lineno - 1]).count(node.name)
+                if words[node.name] == own:
+                    unreached.append(node.name)
+    stray = sorted(set(unreached) - allowed)
+    assert stray == [], f"defs that only tests reach: {stray}"
 
 
 def test_dist_zip_matches_kgx_sources():
