@@ -45,19 +45,19 @@ def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GRAPH_CACHE: dict = {}
 
 
-def clear_graph_cache() -> None:
-    for df in _GRAPH_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _GRAPH_CACHE.clear()
-    try:
-        from kgx.plans.curation_pipeline import clear_funnel_cache
+def _evict_graphs() -> None:
+    while _GRAPH_CACHE:
+        _GRAPH_CACHE.popitem()[1].unpersist()
 
-        clear_funnel_cache()
-    except Exception:
-        pass  # session already stopped
+
+def clear_graph_cache() -> None:
+    """Free the extraction cache and the curation funnel's checkpoints.
+    Needs the live session that filled them; an unpersist or release that
+    fails raises."""
+    from kgx.plans.curation_pipeline import clear_funnel_cache
+
+    _evict_graphs()
+    clear_funnel_cache()
 
 
 def _graphs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,7 +78,7 @@ def _graphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     built = extract.extract_graphs(spans_op.with_doc_text(spread)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    clear_graph_cache()
+    _evict_graphs()  # graphs only: a live funnel frame keeps its checkpoints
     _GRAPH_CACHE[key] = built
     return built
 
@@ -1108,32 +1108,12 @@ def q_s5_csv_prose(spark, sf_dir):
     )
 
 
-def q_media_decode_fake(spark, sf_dir):
-    """Multimodal decode plumbing through the Arrow batch path: the
-    deterministic fake decoder (md5-byte-derived features/frame counts, the
-    sandbox stand-in for real codecs) quantized to integers so the DuckDB
-    oracle reproduces values exactly (no float-repr comparison)."""
-    from kgx.operators import media, spans as spans_op
-
-    inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
-    dec = media.decode_media(inv, fake=True)
-    return dec.select(
-        "doc_id",
-        "media_ref",
-        "frames",
-        F.expr(
-            "array_join(transform(feature, x -> cast(round(x * 255) as int)), ',')"
-        ).alias("feat_q"),
-    )
-
-
 def q_media_decode_real(spark, sf_dir):
     """LIVE image decode over real bytes (NEW r4): deterministic BMP/PPM
     blobs synthesized per media span (the object-store-fetch stand-in)
     flow through Arrow as a binary column and are parsed back by the
-    stdlib codecs (kgx.sources.miniimage) — no fake path anywhere in this
-    plan.  The oracle recomputes dims / fill color / container format from
-    the shared md5-60 derivation."""
+    stdlib codecs (kgx.sources.miniimage).  The oracle recomputes dims /
+    fill color / container format from the shared md5-60 derivation."""
     from kgx.operators import media, spans as spans_op
 
     inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
@@ -1144,7 +1124,7 @@ def q_audio_decode_real(spark, sf_dir):
     """LIVE audio decode over real bytes (NEW r4): deterministic 16-bit
     PCM WAVs synthesized per audio span flow through Arrow as a binary
     column and are parsed back by the stdlib RIFF codec
-    (kgx.sources.miniwav) — no fake path.  The oracle recomputes channel
+    (kgx.sources.miniwav).  The oracle recomputes channel
     count / frames / duration / amplitude from the shared md5-60
     derivation."""
     from kgx.operators import media, spans as spans_op
@@ -1157,7 +1137,7 @@ def q_media_resize_real(spark, sf_dir):
     """LIVE thumbnailing over real bytes (NEW r4): synthesized BMP/PPM
     blobs are decoded, nearest-neighbor aspect-fit resampled to 8×8, RE-
     ENCODED in the same container, and decoded back — the whole loop on
-    real bytes, no fake path.  The oracle recomputes target dims from the
+    real bytes.  The oracle recomputes target dims from the
     shared aspect-fit integer formula and the thumb means from the solid
     fill (nearest-neighbor preserves solid fills exactly)."""
     from kgx.operators import media, spans as spans_op
@@ -1172,7 +1152,7 @@ def q_video_decode_real(spark, sf_dir):
     """LIVE video decode over real bytes (NEW r4): deterministic
     uncompressed AVI containers synthesized per video span flow through
     Arrow as a binary column and are parsed back by the stdlib RIFF/AVI
-    codec (kgx.sources.miniavi) — no fake path.  The oracle recomputes
+    codec (kgx.sources.miniavi).  The oracle recomputes
     dims / fps / frame count / whole-video channel means from the shared
     md5-60 derivation (solid per-frame fills make the floor-means exact)."""
     from kgx.operators import media, spans as spans_op
@@ -1184,47 +1164,11 @@ def q_video_decode_real(spark, sf_dir):
 def q_video_frames_real(spark, sf_dir):
     """LIVE 1→N frame explode over real video bytes (NEW r4): each AVI row
     yields one row per contained frame with exact integer timestamps and
-    per-frame channel means — the real-codec counterpart of the fake
-    `media_frames` sampler, same Arrow streaming shape."""
+    per-frame channel means — frames stream out through Arrow batches."""
     from kgx.operators import media, spans as spans_op
 
     inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
     return media.video_frame_means(media.synthesize_video_blobs(inv))
-
-
-def q_media_frames(spark, sf_dir):
-    """Video frame sampling through the 1→N Arrow explode path (fake frame
-    synthesis; counts agree with media_decode's frames column).  Binary
-    frames compared as hex so DuckDB reproduces them."""
-    from kgx.operators import media, spans as spans_op
-
-    inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
-    fr = media.frame_sample(inv, fps=4, fake=True)
-    return fr.select(
-        "doc_id",
-        "media_ref",
-        "frame_idx",
-        "ts_ms",
-        F.hex("frame").alias("frame_hex"),
-    )
-
-
-def q_media_resize(spark, sf_dir):
-    """Image aspect-fit thumbnails (exact integer dims, fake bytes) through
-    the Arrow batch path."""
-    from kgx.operators import media, spans as spans_op
-
-    inv = media.media_inventory(spans_op.explode_spans(_spans(spark, sf_dir)))
-    rz = media.resize_media(inv, max_w=64, max_h=64, fake=True)
-    return rz.select(
-        "doc_id",
-        "media_ref",
-        "width",
-        "height",
-        "out_width",
-        "out_height",
-        F.hex("thumb").alias("thumb_hex"),
-    )
 
 
 def q_s7_llm_fake_edges(spark, sf_dir):
@@ -1559,7 +1503,6 @@ QUERIES = (
     ("s5_csv_prose", q_s5_csv_prose, O.csv_prose_sql),
     ("jn6_customers_with_orders", q_customers_with_orders, O.customers_with_orders_sql),
     ("s7_llm_fake_edges", q_s7_llm_fake_edges, O.llm_edges_sql),
-    ("media_decode_fake", q_media_decode_fake, O.media_decode_sql),
     ("media_decode_real", q_media_decode_real, O.media_decode_real_sql),
     ("audio_decode_real", q_audio_decode_real, O.audio_decode_real_sql),
     ("video_frames_real", q_video_frames_real, O.video_frames_real_sql),
@@ -1573,8 +1516,6 @@ QUERIES = (
     ("graph_link_candidates", q_graph_link_candidates, O.graph_link_candidates_sql),
     ("kg_training_pairs", q_kg_training_pairs, O.kg_training_pairs_sql),
     ("kg_negative_samples", q_kg_negative_samples, O.kg_negative_samples_sql),
-    ("media_frames", q_media_frames, O.media_frames_sql),
-    ("media_resize", q_media_resize, O.media_resize_sql),
     ("emb_kmeans", q_emb_kmeans, partial(O.emb_kmeans_sql, target_cluster_size=64)),
     (
         "semdedup",

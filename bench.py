@@ -39,7 +39,6 @@ def _warm_up(spark, qs, names, cpus: int, sf_dir: str) -> None:
     import pandas as pd
 
     from kgx.operators import extract
-    from kgx.plans.curation_pipeline import clear_funnel_cache
 
     warm = spark.createDataFrame(
         pd.DataFrame(
@@ -54,7 +53,6 @@ def _warm_up(spark, qs, names, cpus: int, sf_dir: str) -> None:
     if os.path.isdir(warm_dir) and os.path.realpath(warm_dir) != os.path.realpath(sf_dir):
         for name in names:
             qs[name](spark, warm_dir).count()
-    clear_funnel_cache()
     entrymod.clear_graph_cache()
 
 
@@ -115,9 +113,7 @@ def main() -> None:
             # later family reads it — release it so the dedup/funnel block
             # is not squeezed into a heap also holding 289k cached triples
             entrymod.clear_graph_cache()
-    from kgx.plans.curation_pipeline import clear_funnel_cache as _cfc
-
-    _cfc()
+    entrymod.clear_graph_cache()
 
     # headline: end-to-end pipeline (spans → extract → materialize + lineage)
     from kgx.plans import pipeline

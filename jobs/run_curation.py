@@ -32,6 +32,10 @@ def main(argv=None) -> int:
                    help="commit per-stage snapshots; skip stages already committed in --out")
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
+    if args.min_tokens < 0:
+        p.error(f"--min-tokens must be >= 0, got {args.min_tokens}")
+    if not 0 < args.near_dup_threshold <= 1:
+        p.error(f"--near-dup-threshold must be in (0, 1], got {args.near_dup_threshold}")
 
     from kgx.plans.curation_pipeline import CurationConfig, run
     from kgx.session import get_spark

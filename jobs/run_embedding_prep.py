@@ -62,6 +62,14 @@ def main(argv=None) -> int:
     for k, default in weights.items():
         if getattr(args, k) is None:
             setattr(args, k, default)
+    for flag, low in (
+        ("--walk-length", 1), ("--walks-per-node", 1), ("--window", 1),
+        ("--negatives-buckets", 1), ("--embedding-dim", 1),
+        ("--embedding-modulus", 1), ("--negatives-k", 0),
+    ):
+        value = getattr(args, flag[2:].replace("-", "_"))
+        if value < low:
+            p.error(f"{flag} must be >= {low}, got {value}")
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F

@@ -38,6 +38,10 @@ def main(argv=None) -> int:
                    help="tokens per packed training sequence")
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
+    for flag, low in (("--n-shards", 1), ("--capacity", 1)):
+        value = getattr(args, flag[2:].replace("-", "_"))
+        if value < low:
+            p.error(f"{flag} must be >= {low}, got {value}")
 
     from kgx.operators import packing
     from kgx.session import get_spark

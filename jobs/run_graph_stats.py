@@ -38,6 +38,13 @@ def main(argv=None) -> int:
     p.add_argument("--negatives-buckets", type=int, default=64)
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
+    for flag, low in (
+        ("--kcore-k", 1), ("--negatives-buckets", 1), ("--pagerank-iters", 0),
+        ("--lpa-iters", 0), ("--checkpoint-every", 0), ("--negatives-k", 0),
+    ):
+        value = getattr(args, flag[2:].replace("-", "_"))
+        if value < low:
+            p.error(f"{flag} must be >= {low}, got {value}")
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F

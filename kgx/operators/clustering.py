@@ -439,32 +439,14 @@ def ivf_pq_topk(
     itself stays UNFILTERED so trained codes match pq_topk and the
     oracle bit-for-bit).
     """
-    from kgx.operators.similarity import assign_cells
+    from kgx.operators.similarity import _ivf_probes, assign_cells
 
     if nprobe < 1 or n_centroids < 1:
         raise ValueError(f"bad IVF shape n_centroids={n_centroids} nprobe={nprobe}")
     _pq_validate(n_queries, k, m, k_codes, rounds)
-    base = quantized(embeddings).where(F.col("nrm") > 0)
     cells = assign_cells(embeddings, n_centroids).select("vec_id", "cell")
-    cents = base.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cell"), F.col("q").alias("cq")
-    )
-    qs = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("cdot"), F.asc("cell")
-    )
-    probes = (
-        qs.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "cell",
-            F.expr(_dot("qq", "cq")).alias("cdot"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "cell")
+    probes = _ivf_probes(embeddings, n_queries, n_centroids, nprobe).select(
+        "query_id", "cell"
     )
     codes, lut = _pq_index(quantized(embeddings), m, k_codes, rounds, n_queries)
     cand = (

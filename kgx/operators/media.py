@@ -1,28 +1,25 @@
-"""Multimodal span plumbing — typed metadata + decode/feature stages.
+"""Multimodal span plumbing — typed metadata + live decode/feature stages.
 
-Media spans are opaque references with typed metadata; the Spark-side
-contract (schema, partitioning, Arrow batch shape) is real and tested.
-Byte-level decode comes in two tiers:
+Media spans are opaque references with typed metadata
+(:func:`media_inventory`); every decode stage parses REAL bytes with the
+stdlib codecs for the three uncompressed formats the sandbox can carry —
+BMP/PPM images (kgx.sources.miniimage), 16-bit PCM WAV audio
+(kgx.sources.miniwav) and RIFF/AVI video (kgx.sources.miniavi), the same
+generator+parser approach minidoc took for PDF/DOCX.  The
+``synthesize_*_blobs`` stages materialize a deterministic binary column per
+span (the sandbox stand-in for an object-store fetch), so the full
+bytes-through-Arrow → parse → feature path runs and is oracle-checked
+end-to-end.
 
-* ``decode_media_bytes`` — LIVE decode of real image bytes for the two
-  uncompressed raster formats the stdlib can carry (BMP and binary PPM,
-  kgx.sources.miniimage — the same generator+parser de-stubbing approach
-  minidoc took for PDF/DOCX).  ``synthesize_media_blobs`` materializes a
-  deterministic binary column (the sandbox stand-in for an object-store
-  fetch) so the full bytes-through-Arrow → parse → feature path runs and
-  is oracle-checked end-to-end.
-* ``decode_media(fake=True)`` — deterministic md5-derived features for
-  formats whose codecs are absent offline (png/jpg/mp4/wav); the
-  ``fake=False`` signature raises ``NotImplementedError`` for those.
-
-At scale the decode stage is exactly this ``mapInPandas`` shape: binary
-columns stream through Arrow batches, the Python worker calls the codec, and
-bounded ``maxRecordsPerBatch`` keeps worker memory flat.
+Every codec stage is a per-row function run by :func:`_per_row`, the one
+Arrow row-map: binary columns stream through Arrow batches, the Python
+worker calls the codec once per row, and bounded ``maxRecordsPerBatch``
+keeps worker memory flat.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -59,47 +56,32 @@ def media_inventory(spans_flat: DataFrame) -> DataFrame:
     return out
 
 
-DECODED_SCHEMA = (
-    "doc_id string, media_ref string, frames int, feature array<double>"
-)
+def _per_row(
+    df: DataFrame, col: str, schema: str, fn: Callable[[object], list[tuple]]
+) -> DataFrame:
+    """The one Arrow row-map behind every codec stage: ``fn(value)`` runs
+    once per row of ``col`` inside a single ``mapInPandas`` and returns a
+    list of output tuples — one for a decode, several for a 1→N explode.
+    Each tuple is prefixed with its row's ``(doc_id, media_ref)``; the
+    output column names are ``schema``'s."""
+    names = [field.split()[0] for field in schema.split(",")]
 
-
-def decode_media(inventory: DataFrame, fake: bool = False) -> DataFrame:
-    """Arrow-batched decode/feature-extraction stage.
-
-    ``fake=True`` produces a deterministic 4-dim feature from the media_ref
-    hash (tests + demos).  ``fake=False`` is the production signature and
-    raises ``NotImplementedError`` in this sandbox (no codecs installed) —
-    the surrounding plumbing (schema, batching, partitioning) is the real
-    deliverable here.
-    """
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "png/jpg/mp4/wav codecs unavailable in this environment; "
-                    "use fake=True, or decode_media_bytes for the LIVE "
-                    "stdlib BMP/PPM path over a binary column"
+            rows = [
+                (doc, ref, *out)
+                for doc, ref, value in zip(
+                    pdf["doc_id"].tolist(),
+                    pdf["media_ref"].tolist(),
+                    pdf[col].tolist(),
                 )
-            feats, frames = [], []
-            for ref in pdf["media_ref"].tolist():
-                h = hashlib.md5(ref.encode()).digest()
-                feats.append([b / 255.0 for b in h[:4]])
-                frames.append(1 + h[4] % 8)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "frames": frames,
-                    "feature": feats,
-                }
-            )
+                for out in fn(value)
+            ]
+            yield pd.DataFrame(rows, columns=names)
 
-    return inventory.select("doc_id", "media_ref").mapInPandas(
-        _decode, schema=DECODED_SCHEMA
+    keys = ["doc_id", "media_ref"]
+    return df.select(*keys, *([col] if col not in keys else [])).mapInPandas(
+        _map, schema=schema
     )
 
 
@@ -132,65 +114,32 @@ def synthesize_media_blobs(inventory: DataFrame) -> DataFrame:
     format-general (gradient images are covered by unit tests)."""
     from kgx.sources import miniimage
 
-    def _blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for ref in pdf["media_ref"].tolist():
-                h = _md5_60(ref)
-                w = 1 + h % 31
-                ht = 1 + (h // 31) % 23
-                color = (h % 256, (h // 256) % 256, (h // 65536) % 256)
-                pixels = [[color] * w for _ in range(ht)]
-                enc = miniimage.encode_bmp if h % 2 == 0 else miniimage.encode_ppm
-                blobs.append(enc(pixels))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype(str),
-                    "media_ref": pdf["media_ref"],
-                    "content": blobs,
-                }
-            )
+    def _blob(ref: str) -> list[tuple]:
+        h = _md5_60(ref)
+        w = 1 + h % 31
+        ht = 1 + (h // 31) % 23
+        color = (h % 256, (h // 256) % 256, (h // 65536) % 256)
+        enc = miniimage.encode_bmp if h % 2 == 0 else miniimage.encode_ppm
+        return [(enc([[color] * w for _ in range(ht)]),)]
 
-    return inventory.select("doc_id", "media_ref").mapInPandas(
-        _blobs, schema=BLOB_SCHEMA
-    )
+    return _per_row(inventory, "media_ref", BLOB_SCHEMA, _blob)
 
 
 def decode_media_bytes(blobs: DataFrame) -> DataFrame:
     """LIVE image decode over a binary column: magic-sniffing stdlib
     BMP/PPM parse (kgx.sources.miniimage.sniff_decode) → dimensions and
-    exact integer per-channel means.  This is the production decode
-    signature — real bytes in, parsed features out, one Arrow crossing —
-    with no fake path; unsupported magic raises so corrupt blobs surface
+    exact integer per-channel means.  Real bytes in, parsed features out,
+    one Arrow crossing; unsupported magic raises so corrupt blobs surface
     instead of emitting garbage (same contract as the document codecs)."""
     from kgx.sources import miniimage
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, mr, mg, mb = [], [], [], [], [], []
-            for blob in pdf["content"].tolist():
-                fmt, pixels = miniimage.sniff_decode(bytes(blob))
-                r, g, b = miniimage.channel_means(pixels)
-                fmts.append(fmt)
-                ws.append(len(pixels[0]))
-                hs.append(len(pixels))
-                mr.append(r)
-                mg.append(g)
-                mb.append(b)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "format": fmts,
-                    "width": ws,
-                    "height": hs,
-                    "mean_r": mr,
-                    "mean_g": mg,
-                    "mean_b": mb,
-                }
-            )
+    def _decode(blob: bytes) -> list[tuple]:
+        fmt, pixels = miniimage.sniff_decode(bytes(blob))
+        return [
+            (fmt, len(pixels[0]), len(pixels), *miniimage.channel_means(pixels))
+        ]
 
-    return blobs.mapInPandas(_decode, schema=DECODED_REAL_SCHEMA)
+    return _per_row(blobs, "content", DECODED_REAL_SCHEMA, _decode)
 
 
 AUDIO_DECODED_SCHEMA = (
@@ -210,63 +159,32 @@ def synthesize_audio_blobs(inventory: DataFrame) -> DataFrame:
     tests; the square wave is the oracle-exact gate shape."""
     from kgx.sources import miniwav
 
-    def _blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for ref in pdf["media_ref"].tolist():
-                h = _md5_60(ref)
-                channels = 1 + h % 2
-                n_frames = 160 + h % 800
-                amp = 1000 + (h // 7) % 20000
-                frames = [amp if i % 2 == 0 else -amp for i in range(n_frames)]
-                samples = (
-                    frames if channels == 1
-                    else [v for v in frames for _ in range(2)]
-                )
-                blobs.append(miniwav.encode_wav(samples, 8000, channels))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype(str),
-                    "media_ref": pdf["media_ref"],
-                    "content": blobs,
-                }
-            )
+    def _blob(ref: str) -> list[tuple]:
+        h = _md5_60(ref)
+        channels = 1 + h % 2
+        amp = 1000 + (h // 7) % 20000
+        frames = [amp if i % 2 == 0 else -amp for i in range(160 + h % 800)]
+        samples = frames if channels == 1 else [v for v in frames for _ in range(2)]
+        return [(miniwav.encode_wav(samples, 8000, channels),)]
 
-    return (
-        inventory.where(F.col("media_type") == "audio")
-        .select("doc_id", "media_ref")
-        .mapInPandas(_blobs, schema=BLOB_SCHEMA)
-    )
+    audio = inventory.where(F.col("media_type") == "audio")
+    return _per_row(audio, "media_ref", BLOB_SCHEMA, _blob)
 
 
 def decode_audio_bytes(blobs: DataFrame) -> DataFrame:
     """LIVE audio decode over a binary column: stdlib RIFF/PCM parse
     (kgx.sources.miniwav.decode_wav) → exact-integer features (channels,
     rate, frames, duration, peak, mean |sample|).  Real bytes in, parsed
-    features out, one Arrow crossing, no fake path — corrupt blobs raise."""
+    features out, one Arrow crossing — corrupt blobs raise."""
     from kgx.sources import miniwav
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: [] for k in (
-                    "channels", "sample_rate", "n_frames",
-                    "duration_ms", "peak", "mean_abs",
-                )
-            }
-            for blob in pdf["content"].tolist():
-                feats = miniwav.decode_wav(bytes(blob))
-                for k in cols:
-                    cols[k].append(feats[k])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    **cols,
-                }
-            )
+    keys = ("channels", "sample_rate", "n_frames", "duration_ms", "peak", "mean_abs")
 
-    return blobs.mapInPandas(_decode, schema=AUDIO_DECODED_SCHEMA)
+    def _decode(blob: bytes) -> list[tuple]:
+        feats = miniwav.decode_wav(bytes(blob))
+        return [tuple(feats[k] for k in keys)]
+
+    return _per_row(blobs, "content", AUDIO_DECODED_SCHEMA, _decode)
 
 
 VIDEO_DECODED_SCHEMA = (
@@ -300,37 +218,22 @@ def synthesize_video_blobs(inventory: DataFrame) -> DataFrame:
     oracle-exact gate shape."""
     from kgx.sources import miniavi
 
-    def _blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for ref in pdf["media_ref"].tolist():
-                h = _md5_60(ref)
-                w = 1 + h % 15
-                ht = 1 + (h // 31) % 11
-                fps = VIDEO_FPS_CHOICES[h % 6]
-                n = 2 + (h // 7) % 9
-                frames = []
-                for i in range(n):
-                    color = (
-                        (h + 37 * i) % 256,
-                        (h // 256 + 53 * i) % 256,
-                        (h // 65536 + 71 * i) % 256,
-                    )
-                    frames.append([[color] * w for _ in range(ht)])
-                blobs.append(miniavi.encode_avi(frames, fps))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype(str),
-                    "media_ref": pdf["media_ref"],
-                    "content": blobs,
-                }
+    def _blob(ref: str) -> list[tuple]:
+        h = _md5_60(ref)
+        w = 1 + h % 15
+        ht = 1 + (h // 31) % 11
+        frames = []
+        for i in range(2 + (h // 7) % 9):
+            color = (
+                (h + 37 * i) % 256,
+                (h // 256 + 53 * i) % 256,
+                (h // 65536 + 71 * i) % 256,
             )
+            frames.append([[color] * w for _ in range(ht)])
+        return [(miniavi.encode_avi(frames, VIDEO_FPS_CHOICES[h % 6]),)]
 
-    return (
-        inventory.where(F.col("media_type") == "video")
-        .select("doc_id", "media_ref")
-        .mapInPandas(_blobs, schema=BLOB_SCHEMA)
-    )
+    video = inventory.where(F.col("media_type") == "video")
+    return _per_row(video, "media_ref", BLOB_SCHEMA, _blob)
 
 
 def decode_video_bytes(blobs: DataFrame) -> DataFrame:
@@ -340,147 +243,48 @@ def decode_video_bytes(blobs: DataFrame) -> DataFrame:
     of every frame).  ``fps`` is rate DIV scale and ``duration_ms`` is
     ``n * 1000 * scale DIV rate`` — exact for integer-fps files (all ours)
     and still well-defined for NTSC-style rationals.  Real bytes in,
-    parsed features out, one Arrow crossing, no fake path — corrupt blobs
-    raise (same contract as the document/image/audio codecs)."""
+    parsed features out, one Arrow crossing — corrupt blobs raise (same
+    contract as the document/image/audio codecs)."""
     from kgx.sources import miniavi
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: [] for k in (
-                    "format", "width", "height", "fps", "n_frames",
-                    "duration_ms", "mean_r", "mean_g", "mean_b",
-                )
-            }
-            for blob in pdf["content"].tolist():
-                v = miniavi.decode_avi(bytes(blob))
-                n = len(v["frames"])
-                npx = n * v["width"] * v["height"]
-                sr = sg = sb = 0
-                for frame in v["frames"]:
-                    for row in frame:
-                        for r, g, b in row:
-                            sr += r
-                            sg += g
-                            sb += b
-                cols["format"].append("avi")
-                cols["width"].append(v["width"])
-                cols["height"].append(v["height"])
-                cols["fps"].append(v["rate"] // v["scale"])
-                cols["n_frames"].append(n)
-                cols["duration_ms"].append(n * 1000 * v["scale"] // v["rate"])
-                cols["mean_r"].append(sr // npx)
-                cols["mean_g"].append(sg // npx)
-                cols["mean_b"].append(sb // npx)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    **cols,
-                }
-            )
+    def _decode(blob: bytes) -> list[tuple]:
+        v = miniavi.decode_avi(bytes(blob))
+        n = len(v["frames"])
+        npx = n * v["width"] * v["height"]
+        sr = sg = sb = 0
+        for frame in v["frames"]:
+            for row in frame:
+                for r, g, b in row:
+                    sr += r
+                    sg += g
+                    sb += b
+        return [(
+            "avi", v["width"], v["height"], v["rate"] // v["scale"], n,
+            n * 1000 * v["scale"] // v["rate"], sr // npx, sg // npx, sb // npx,
+        )]
 
-    return blobs.mapInPandas(_decode, schema=VIDEO_DECODED_SCHEMA)
+    return _per_row(blobs, "content", VIDEO_DECODED_SCHEMA, _decode)
 
 
 def video_frame_means(blobs: DataFrame) -> DataFrame:
     """LIVE 1→N frame explode over real video bytes: each AVI row yields
     one output row per frame with its timestamp and exact per-frame
-    integer channel means — the real-codec counterpart of
-    :func:`frame_sample`'s fake path, and the same worker-memory shape a
-    production sampler has (frames stream out through Arrow batches).
+    integer channel means — the same worker-memory shape a production
+    sampler has (frames stream out through Arrow batches).
     ``ts_ms = frame_idx * 1000 * scale DIV rate`` in exact integer
     arithmetic."""
     from kgx.sources import miniavi
     from kgx.sources.miniimage import channel_means
 
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "media_ref", "frame_idx", "ts_ms",
-                    "mean_r", "mean_g", "mean_b",
-                )
-            }
-            for doc, ref, blob in zip(
-                pdf["doc_id"].tolist(),
-                pdf["media_ref"].tolist(),
-                pdf["content"].tolist(),
-            ):
-                v = miniavi.decode_avi(bytes(blob))
-                for i, frame in enumerate(v["frames"]):
-                    r, g, b = channel_means(frame)
-                    out["doc_id"].append(doc)
-                    out["media_ref"].append(ref)
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(i * 1000 * v["scale"] // v["rate"])
-                    out["mean_r"].append(r)
-                    out["mean_g"].append(g)
-                    out["mean_b"].append(b)
-            yield pd.DataFrame(out)
+    def _explode(blob: bytes) -> list[tuple]:
+        v = miniavi.decode_avi(bytes(blob))
+        return [
+            (i, i * 1000 * v["scale"] // v["rate"], *channel_means(frame))
+            for i, frame in enumerate(v["frames"])
+        ]
 
-    return blobs.mapInPandas(_explode, schema=FRAME_REAL_SCHEMA)
+    return _per_row(blobs, "content", FRAME_REAL_SCHEMA, _explode)
 
-
-FRAME_SCHEMA = (
-    "doc_id string, media_ref string, frame_idx int, ts_ms bigint, frame binary"
-)
-
-
-def frame_sample(
-    inventory: DataFrame, fps: int = 4, fake: bool = False
-) -> DataFrame:
-    """Video spans → sampled frames, the 1→N Arrow explode stage.
-
-    Each video row yields its sampled frames as separate output rows —
-    exactly the shape a real decoder uses (ffmpeg seek per timestamp inside
-    the Python worker, rows stream out through Arrow batches, worker memory
-    stays flat per ``maxRecordsPerBatch``).  ``fake=True`` derives the frame
-    count with the same md5-byte-5 formula as ``decode_media``'s ``frames``
-    column (the two stages agree row-for-row) and frame bytes as md5 of
-    ``ref#idx`` — deterministic, so the DuckDB oracle reproduces every row;
-    ``fake=False`` is the production signature and raises here (no codecs in
-    this sandbox).  ``ts_ms`` = frame_idx * 1000 / fps in exact integer
-    arithmetic (fps must divide 1000).
-    """
-    assert 1000 % fps == 0, "fps must divide 1000 for exact integer ts_ms"
-    step = 1000 // fps
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "video codecs unavailable in this environment; "
-                    "use fake=True or plug a real frame sampler here"
-                )
-            out = {k: [] for k in
-                   ("doc_id", "media_ref", "frame_idx", "ts_ms", "frame")}
-            for doc, ref in zip(pdf["doc_id"].tolist(),
-                                pdf["media_ref"].tolist()):
-                n = 1 + hashlib.md5(ref.encode()).digest()[4] % 8
-                for i in range(n):
-                    out["doc_id"].append(doc)
-                    out["media_ref"].append(ref)
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(i * step)
-                    out["frame"].append(
-                        hashlib.md5(f"{ref}#{i}".encode()).digest()
-                    )
-            yield pd.DataFrame(out)
-
-    return (
-        inventory.where(F.col("media_type") == "video")
-        .select("doc_id", "media_ref")
-        .mapInPandas(_sample, schema=FRAME_SCHEMA)
-    )
-
-
-RESIZED_SCHEMA = (
-    "doc_id string, media_ref string, width int, height int, "
-    "out_width int, out_height int, thumb binary"
-)
 
 RESIZED_REAL_SCHEMA = (
     "doc_id string, media_ref string, format string, width int, height int, "
@@ -490,8 +294,8 @@ RESIZED_REAL_SCHEMA = (
 
 def _aspect_fit(w: int, h: int, max_w: int, max_h: int) -> tuple[int, int]:
     """Aspect-fit target dims, never upscaled — exact integer arithmetic
-    (floor-divide, min 1 px) shared by the fake and real resize paths so
-    their dimension contracts can't drift."""
+    (floor-divide, min 1 px) that the DuckDB oracle replays bit-for-bit:
+    wide images clamp to ``max_w``, tall ones to ``max_h``."""
     if w <= max_w and h <= max_h:
         return w, h
     if w * max_h >= h * max_w:
@@ -512,94 +316,20 @@ def resize_media_real(
     DuckDB oracle exact on the gate corpus."""
     from kgx.sources import miniimage
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: [] for k in (
-                    "format", "width", "height", "out_width", "out_height",
-                    "mean_r", "mean_g", "mean_b",
-                )
-            }
-            for blob in pdf["content"].tolist():
-                fmt, pixels = miniimage.sniff_decode(bytes(blob))
-                h = len(pixels)
-                w = len(pixels[0])
-                ow, oh = _aspect_fit(w, h, max_w, max_h)
-                enc = (
-                    miniimage.encode_bmp if fmt == "bmp"
-                    else miniimage.encode_ppm
-                )
-                _, thumb = miniimage.sniff_decode(
-                    enc(miniimage.nearest_resize(pixels, ow, oh))
-                )
-                r, g, b = miniimage.channel_means(thumb)
-                cols["format"].append(fmt)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["out_width"].append(len(thumb[0]))
-                cols["out_height"].append(len(thumb))
-                cols["mean_r"].append(r)
-                cols["mean_g"].append(g)
-                cols["mean_b"].append(b)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    **cols,
-                }
-            )
+    def _resize(blob: bytes) -> list[tuple]:
+        fmt, pixels = miniimage.sniff_decode(bytes(blob))
+        h = len(pixels)
+        w = len(pixels[0])
+        ow, oh = _aspect_fit(w, h, max_w, max_h)
+        enc = miniimage.encode_bmp if fmt == "bmp" else miniimage.encode_ppm
+        _, thumb = miniimage.sniff_decode(
+            enc(miniimage.nearest_resize(pixels, ow, oh))
+        )
+        return [
+            (fmt, w, h, len(thumb[0]), len(thumb), *miniimage.channel_means(thumb))
+        ]
 
-    return blobs.mapInPandas(_resize, schema=RESIZED_REAL_SCHEMA)
-
-
-def resize_media(
-    inventory: DataFrame, max_w: int = 64, max_h: int = 64, fake: bool = False
-) -> DataFrame:
-    """Image spans → aspect-fit thumbnails (never upscaled).
-
-    Target dims use exact integer arithmetic (floor-divide, min 1 px) so the
-    DuckDB oracle reproduces them bit-for-bit: wide images clamp to
-    ``max_w``, tall ones to ``max_h``.  ``fake=True`` synthesizes thumb bytes
-    as md5 of ``ref|WxH``; ``fake=False`` is the production signature
-    (raises here — no image codecs in this sandbox, the Arrow plumbing is
-    the deliverable)."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "image codecs unavailable in this environment; "
-                    "use fake=True or plug a real resizer here"
-                )
-            ows, ohs, thumbs = [], [], []
-            for ref, w, h in zip(pdf["media_ref"].tolist(),
-                                 pdf["width"].tolist(),
-                                 pdf["height"].tolist()):
-                ow, oh = _aspect_fit(int(w), int(h), max_w, max_h)
-                ows.append(ow)
-                ohs.append(oh)
-                thumbs.append(
-                    hashlib.md5(f"{ref}|{ow}x{oh}".encode()).digest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "out_width": ows,
-                    "out_height": ohs,
-                    "thumb": thumbs,
-                }
-            )
-
-    return (
-        inventory.where(F.col("media_type") == "image")
-        .select("doc_id", "media_ref", "width", "height")
-        .mapInPandas(_resize, schema=RESIZED_SCHEMA)
-    )
+    return _per_row(blobs, "content", RESIZED_REAL_SCHEMA, _resize)
 
 
 def media_caption_pairs(spans_flat: DataFrame) -> DataFrame:

@@ -131,6 +131,37 @@ def assign_cells(
     )
 
 
+def _ivf_probes(
+    embeddings: DataFrame, n_queries: int, n_centroids: int, nprobe: int
+) -> DataFrame:
+    """IVF probe set: each query (vec_id < ``n_queries``) against the
+    broadcast centroids (the first ``n_centroids`` vectors), keeping its
+    ``nprobe`` best cells by max quantized dot, ties → min cell.  Output:
+    (query_id, qq, qnrm, cell) — the query's own quantized vector and norm
+    ride along for an exact rerank; callers that rank otherwise select
+    ``(query_id, cell)``."""
+    from pyspark.sql.window import Window
+
+    base = quantized(embeddings).where(F.col("nrm") > 0)
+    cents = base.where(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cell"),
+        F.col("q").alias("cq"),
+    )
+    qs = base.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("q").alias("qq"),
+        F.col("nrm").alias("qnrm"),
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.desc("cdot"), F.asc("cell"))
+    return (
+        qs.crossJoin(F.broadcast(cents))
+        .select("query_id", "qq", "qnrm", "cell", F.expr(_dot("qq", "cq")).alias("cdot"))
+        .withColumn("rn", F.row_number().over(wq))
+        .where(F.col("rn") <= nprobe)
+        .select("query_id", "qq", "qnrm", "cell")
+    )
+
+
 def ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 8,
@@ -148,24 +179,7 @@ def ivf_topk(
     if target_cell_size is not None:
         n_centroids = auto_centroids(embeddings, target_cell_size)
     cells = assign_cells(embeddings, n_centroids)
-    base = quantized(embeddings).where(F.col("nrm") > 0)
-    cents = base.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("q").alias("cq"),
-    )
-    qs = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm").alias("qnrm"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cdot"), F.asc("cell"))
-    probes = (
-        qs.crossJoin(F.broadcast(cents))
-        .select("query_id", "qq", "qnrm", "cell", F.expr(_dot("qq", "cq")).alias("cdot"))
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qq", "qnrm", "cell")
-    )
+    probes = _ivf_probes(embeddings, n_queries, n_centroids, nprobe)
     scored = (
         probes.join(cells, "cell")
         .where(F.col("vec_id") != F.col("query_id"))

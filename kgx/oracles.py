@@ -1186,29 +1186,6 @@ SELECT DISTINCT doc_id, subj, pred, obj FROM resolved
 """.strip()
 
 
-def media_decode_sql() -> str:
-    """Oracle for the fake media decoder: features are the first 4 md5 bytes
-    of the media_ref scaled by /255 then re-quantized, frames = 1 + byte5 %
-    8 — recomputed from the hex digest in SQL."""
-    inv = media_inventory_sql()
-
-    def byte(i: int) -> str:  # 1-indexed md5 byte from the hex digest
-        return f"(('0x' || substr(md5(media_ref), {2 * i - 1}, 2))::BIGINT)"
-
-    feat = " || ',' || ".join(
-        f"CAST({byte(i)} AS VARCHAR)" for i in range(1, 5)
-    )
-    return f"""
-WITH inv AS (
-{inv}
-)
-SELECT doc_id, media_ref,
-       CAST(1 + {byte(5)} % 8 AS INT) AS frames,
-       {feat} AS feat_q
-FROM inv
-""".strip()
-
-
 def media_decode_real_sql() -> str:
     """Oracle for the LIVE BMP/PPM decode: blob synthesis derives every
     property (dims, solid fill color, container format) from the shared
@@ -1376,59 +1353,6 @@ SELECT doc_id, media_ref,
        CAST((h // 256 + 53 * i) % 256 AS INT) AS mean_g,
        CAST((h // 65536 + 71 * i) % 256 AS INT) AS mean_b
 FROM f
-""".strip()
-
-
-def media_frames_sql(fps: int = 4) -> str:
-    """Oracle for the fake frame sampler: per-video frame count is the same
-    md5-byte-5 formula as media_decode_sql's ``frames``, frame bytes are
-    md5 of ``ref#idx`` (compared as uppercase hex)."""
-    inv = media_inventory_sql()
-    byte5 = "(('0x' || substr(md5(media_ref), 9, 2))::BIGINT)"
-    step = 1000 // fps
-    return f"""
-WITH inv AS (
-{inv}
-),
-v AS (
-    SELECT doc_id, media_ref, CAST(1 + {byte5} % 8 AS INT) AS n
-    FROM inv WHERE media_type = 'video'
-),
-f AS (SELECT doc_id, media_ref, UNNEST(range(n)) AS fi FROM v)
-SELECT doc_id, media_ref, CAST(fi AS INT) AS frame_idx,
-       CAST(fi * {step} AS BIGINT) AS ts_ms,
-       upper(md5(media_ref || '#' || CAST(fi AS VARCHAR))) AS frame_hex
-FROM f
-""".strip()
-
-
-def media_resize_sql(max_w: int = 64, max_h: int = 64) -> str:
-    """Oracle for the fake aspect-fit resizer: exact integer floor-divide
-    target dims, thumb bytes = md5 of ``ref|WxH`` (compared as hex)."""
-    inv = media_inventory_sql()
-    return f"""
-WITH inv AS (
-{inv}
-),
-img AS (
-    SELECT doc_id, media_ref, width, height FROM inv WHERE media_type = 'image'
-),
-r AS (
-    SELECT doc_id, media_ref, width, height,
-           CASE WHEN width <= {max_w} AND height <= {max_h} THEN width
-                WHEN width * {max_h} >= height * {max_w} THEN {max_w}
-                ELSE greatest(1, (width * {max_h}) // height) END AS ow,
-           CASE WHEN width <= {max_w} AND height <= {max_h} THEN height
-                WHEN width * {max_h} >= height * {max_w}
-                     THEN greatest(1, (height * {max_w}) // width)
-                ELSE {max_h} END AS oh
-    FROM img
-)
-SELECT doc_id, media_ref, width, height,
-       CAST(ow AS INT) AS out_width, CAST(oh AS INT) AS out_height,
-       upper(md5(media_ref || '|' || CAST(ow AS VARCHAR) || 'x'
-                 || CAST(oh AS VARCHAR))) AS thumb_hex
-FROM r
 """.strip()
 
 

@@ -9,8 +9,10 @@ invariants that the hash comparison cannot localize when it fails.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
 from kgx.operators import rules
 
 
@@ -134,3 +136,34 @@ def test_fn_scalar_suite_shapes(spark, sf_dir):
         assert r.md5_hex == hashlib.md5(text.encode()).hexdigest()
         assert r.prompt_chars == min(len(text), 2000)
         assert r.updated_chars == len(text) + 1 + len("appended update text")
+
+
+def test_clear_graph_cache_raises_when_an_unpersist_fails():
+    """The clear swallows nothing: a cached entry that cannot be unpersisted
+    surfaces instead of leaving executor memory silently pinned."""
+
+    class _Stuck:
+        def unpersist(self):
+            raise RuntimeError("unpersist failed")
+
+    entrymod._GRAPH_CACHE[("stuck",)] = _Stuck()
+    try:
+        with pytest.raises(RuntimeError, match="unpersist failed"):
+            entrymod.clear_graph_cache()
+    finally:
+        entrymod._GRAPH_CACHE.pop(("stuck",), None)
+
+
+def test_graph_cache_eviction_keeps_live_funnel_checkpoints(spark, sf_dir):
+    """A new extraction-cache entry evicts only the previous graphs: a
+    curation-funnel frame built before it still reads its checkpoint
+    blocks afterwards."""
+    funnel = entrymod.q_curation_funnel(spark, sf_dir)
+    n = funnel.count()
+    # a key no earlier test cached (same data, spelled differently); the
+    # persist is lazy, so this inserts an entry without running extraction
+    entrymod._graphs(spark, sf_dir.rstrip("/") + "/")
+    try:
+        assert funnel.count() == n
+    finally:
+        entrymod.clear_graph_cache()

@@ -37,10 +37,6 @@ SECTIONS = [
     ("fn_scalar_suite",
      "Whole scalar family in one projection over a 2-column pruned scan — "
      "zero exchanges."),
-    ("media_frames",
-     "1→N frame explode inside one MapInPandas over a kind-filtered "
-     "2-column projection — no exchange, output rows stream through Arrow "
-     "batches."),
     ("token_counts",
      "Dual tokenizer counts (whitespace + BPE-ish regex) in one zero-"
      "exchange projection; regex runs JVM-side inside codegen."),
