@@ -773,8 +773,7 @@ def q_curation_funnel(spark, sf_dir):
     from kgx.sources import corpus
 
     cfg = CurationConfig(
-        out_dir="", write=False, min_tokens=20,
-        quality_kwargs={"max_symbol_ratio": 0.2},
+        out_dir="", min_tokens=20, quality_kwargs={"max_symbol_ratio": 0.2}
     )
     return funnel_final(
         corpus.narrative_documents(_documents(spark, sf_dir)), cfg
@@ -795,8 +794,7 @@ def q_funnel_export(spark, sf_dir):
     from kgx.sources import corpus
 
     cfg = CurationConfig(
-        out_dir="", write=False, min_tokens=20,
-        quality_kwargs={"max_symbol_ratio": 0.2},
+        out_dir="", min_tokens=20, quality_kwargs={"max_symbol_ratio": 0.2}
     )
     curated = funnel_final(
         corpus.narrative_documents(_documents(spark, sf_dir)), cfg

@@ -50,10 +50,13 @@ def main(argv=None) -> int:
         "are pre-partitioned before span synthesis.",
     )
     args = p.parse_args(argv)
+    for flag in ("--buckets", "--salt-factor"):
+        value = getattr(args, flag[2:].replace("-", "_"))
+        if value < 1:
+            p.error(f"{flag} must be >= 1, got {value}")
 
     from kgx.plans import pipeline
 
-    # built before the session so a bad --buckets/--salt-factor fails first
     cfg = pipeline.PipelineConfig(
         out_dir=args.out,
         n_buckets=args.buckets,

@@ -17,13 +17,16 @@ the survivors, text rewrites last —
    (:func:`kgx.operators.curation.sentence_prune`); documents whose every
    sentence was seen elsewhere drop out.
 
-Each stage materializes its survivor set once (an eager local checkpoint
-of (doc_id, text) — never wider, see :func:`kgx.functions.plan.materialize`),
-so the funnel metrics cost no recomputation, downstream stages reuse the
-stored survivors, and each stage's plan starts from a short leaf scan
-instead of every upstream stage's plan.  Output: ``curated/`` parquet
-(doc_id, text) plus a one-row ``funnel`` table recording per-stage document counts —
-the number a 100 TB curation run reports to its operators.
+Stages 1–4 are one ordered table (:func:`_stages`) and stage 5 is
+:func:`_final`.  :func:`run` (the counted, written job) and
+:func:`funnel_final` (the lazy gate-query view) both walk them, pinning the
+input and every stage boundary with an eager local checkpoint
+(:func:`kgx.functions.plan.materialize`) of (doc_id, text), plus the pii
+stage's redaction count.  So the funnel metrics cost no recomputation and
+each stage's plan starts from a short leaf scan.  Output: ``curated/``
+parquet (doc_id, text) plus a one-row ``funnel`` table of per-stage
+document counts — the number a 100 TB curation run reports to its
+operators.
 
 The reference has no corpus curation (one trusted document per request,
 reference main.py:69-117); this job is the batch front door its extractor
@@ -34,13 +37,15 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgx.functions.plan import materialize, release
 from kgx.operators import curation, dedup, textstats
-from kgx.plans.lineage import read_or_empty
+from kgx.plans import lineage
 
 
 @dataclass
@@ -50,9 +55,8 @@ class CurationConfig:
     near_dup_threshold: float = 0.5
     scrub_pii: bool = True
     prune_sentences: bool = True
-    write: bool = True
     #: commit per-stage survivor snapshots + funnel-lineage rows, and on
-    #: restart skip every committed stage (requires ``write``)
+    #: restart skip every committed stage
     resume: bool = False
     #: extra keyword overrides for the quality gate (max_symbol_ratio etc.) —
     #: prose corpora with short sentences need a looser symbol cap than the
@@ -60,52 +64,49 @@ class CurationConfig:
     quality_kwargs: dict = field(default_factory=dict)
 
 
-# Shared stage builders — run() (count-instrumented, checkpointed) and
-# funnel_final() (the lazy gate-query/oracle view) compose the SAME stages,
-# so the metrics job and the correctness oracle can never drift.
-
-def _stage_quality(documents: DataFrame, cfg: CurationConfig) -> DataFrame:
-    passing = textstats.quality_filter(
-        documents, min_tokens=cfg.min_tokens, **cfg.quality_kwargs
-    ).where("passes").select("doc_id")
-    return documents.join(passing, "doc_id", "left_semi")
+def _keep(docs: DataFrame, survivors: DataFrame) -> DataFrame:
+    return docs.join(survivors.select("doc_id"), "doc_id", "left_semi")
 
 
-def _stage_exact(docs: DataFrame) -> DataFrame:
-    keep_exact = (
-        dedup.exact_groups(docs)
-        .where("doc_id = canonical_doc_id")
-        .select("doc_id")
-    )
-    return docs.join(keep_exact, "doc_id", "left_semi")
+def _stages(cfg: CurationConfig) -> list[tuple[str, str, Callable[[DataFrame], DataFrame]]]:
+    """(stage, metric, build) in funnel order — the only place the order is
+    written.  ``build`` maps the previous boundary (doc_id, text) to the
+    stage's survivors; pii's survivors also carry ``n_pii``, the per-doc
+    redaction count."""
+    stages = [
+        ("quality", "after_quality", lambda d: _keep(d, textstats.quality_filter(
+            d, min_tokens=cfg.min_tokens, **cfg.quality_kwargs
+        ).where("passes"))),
+        ("exact_dedup", "after_exact_dedup", lambda d: _keep(
+            d, dedup.exact_groups(d).where("doc_id = canonical_doc_id")
+        )),
+        ("near_dup", "after_near_dup", lambda d: _keep(
+            d, dedup.near_dup_clusters(d, threshold=cfg.near_dup_threshold)
+            .where("NOT is_duplicate")
+        )),
+    ]
+    if cfg.scrub_pii:
+        stages.append(("pii", "after_pii", lambda d: curation.pii_scrub(d).select(
+            "doc_id", "n_pii", F.col("clean_text").alias("text")
+        )))
+    return stages
 
 
-def _stage_near_dup(docs: DataFrame, cfg: CurationConfig) -> DataFrame:
-    keep_near = (
-        dedup.near_dup_clusters(docs, threshold=cfg.near_dup_threshold)
-        .where("NOT is_duplicate")
-        .select("doc_id")
-    )
-    return docs.join(keep_near, "doc_id", "left_semi")
-
-
-def _stage_pii(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_pii, text) — scrubbed text plus the per-doc redaction count."""
-    return curation.pii_scrub(docs).select(
-        "doc_id", "n_pii", F.col("clean_text").alias("text")
-    )
-
-
-def _stage_prune(docs_txt: DataFrame) -> DataFrame:
+def _final(docs: DataFrame, cfg: CurationConfig) -> DataFrame:
+    """The curated (doc_id, text): corpus-wide keep-first sentence prune
+    (fully-pruned docs drop out), or the last boundary as is."""
+    if not cfg.prune_sentences:
+        return docs
     return (
-        curation.sentence_prune(docs_txt)
+        curation.sentence_prune(docs)
         .where("n_kept > 0")
         .select("doc_id", F.col("pruned_text").alias("text"))
     )
 
 
-#: survivor tables checkpointed by funnel_final — bounded ((doc_id, text),
-#: never wider than the corpus); clear with clear_funnel_cache()
+#: survivor tables checkpointed by funnel_final — bounded ((doc_id, text)
+#: plus pii's count, never wider than the corpus); clear with
+#: clear_funnel_cache()
 _FUNNEL_CACHE: list[DataFrame] = []
 
 
@@ -115,50 +116,31 @@ def clear_funnel_cache() -> None:
 
 
 def funnel_final(documents: DataFrame, cfg: CurationConfig) -> DataFrame:
-    """The curated corpus as ONE DataFrame (doc_id, text): quality gate →
-    exact dedup → near-dup keep-one → PII scrub → sentence prune.  This is
-    the gate-query view of :func:`run` — the DuckDB oracle
-    (kgx.oracles.curation_funnel_sql) replays the identical five-stage
-    composition as CTEs.
+    """The curated corpus as ONE DataFrame (doc_id, text): the gate-query
+    view of :func:`run`, pinned in the same places.  The DuckDB oracle
+    (kgx.oracles.curation_funnel_sql) replays the same five stages as CTEs.
+    Call :func:`clear_funnel_cache` when done (mirrors __spark_entry__'s
+    bounded extraction cache).
 
-    The survivor-set boundaries that the downstream plan references many
-    times are pinned — near-dup clustering reads its input ~6× (shingles,
-    sizes, signature verify, corpus map-back) and sentence prune reads its
-    input 3× (instances, keep-key join, text rejoin), so a fully lazy
-    composition re-evaluates the quality+dedup chain multiplicatively
-    (measured: minutes instead of seconds at sf0.1).  Boundaries are
-    (doc_id, text) only; call :func:`clear_funnel_cache` when done (mirrors
-    __spark_entry__'s bounded extraction cache).
-
-    Each boundary is an eager local checkpoint
-    (:func:`kgx.functions.plan.materialize`), not a lazy cache: inside one
-    fully-lazy job the near-dup plan references its input from several
-    concurrent shuffle-map branches (signatures, two verification sides,
-    the keep semi-join), and branches racing a COLD cache each recompute
-    the whole upstream chain — measured ~2× the stage-sequential cost at
-    sf0.1.  The returned plan reads every boundary through a short
-    ``Scan ExistingRDD`` leaf, so it no longer embeds the upstream stages'
-    plans (a persisted boundary's plan text grew to MBs by the prune)."""
+    Why every boundary is pinned: near-dup clustering reads its input ~6×
+    and sentence prune 3×, so a lazy composition re-evaluates the
+    quality+dedup chain multiplicatively (minutes instead of seconds at
+    sf0.1); the quality gate's collapsed projection re-evaluates a computed
+    input once per derived stat column (~25x at sf0.1 on the narrative
+    corpus); and concurrent near-dup branches racing a cold lazy cache each
+    recompute the whole upstream chain (~2× the stage-sequential cost at
+    sf0.1).  The returned plan reads every boundary through a short
+    ``Scan ExistingRDD`` leaf instead of embedding the upstream plans."""
 
     def _mark(df: DataFrame) -> DataFrame:
         df = materialize(df)
         _FUNNEL_CACHE.append(df)
         return df
 
-    # the INPUT is pinned too: the quality gate derives ~10 stat columns
-    # from text, and Catalyst's collapsed projection re-evaluates the input
-    # plan once per derived column — multiplicative when the input is a
-    # computed view (a rendered fixture, a decoded/normalized upstream)
-    # rather than a bare parquet scan (measured ~25x at sf0.1 on the
-    # narrative corpus).  Same bounded (doc_id, text) shape as the survivor
-    # boundaries.
-    docs_in = _mark(documents)
-    exact = _mark(_stage_exact(_stage_quality(docs_in, cfg)))
-    docs = _mark(_stage_near_dup(exact, cfg))
-    docs_txt = _stage_pii(docs).select("doc_id", "text") if cfg.scrub_pii else docs
-    if not cfg.prune_sentences:
-        return docs_txt
-    return _stage_prune(_mark(docs_txt) if cfg.scrub_pii else docs_txt)
+    docs = _mark(documents)
+    for _, _, build in _stages(cfg):
+        docs = _mark(build(docs)).select("doc_id", "text")
+    return _final(docs, cfg)
 
 
 # ---------------------------------------------------------------------------
@@ -167,10 +149,12 @@ def funnel_final(documents: DataFrame, cfg: CurationConfig) -> DataFrame:
 
 #: stage-lineage row written AFTER a stage's snapshot commits — the same
 #: write-output-then-commit-lineage ordering as kgx/plans/pipeline.py, so a
-#: job killed mid-write never records a partial snapshot as done.
+#: job killed mid-write never records a partial snapshot as done.  n_pii is
+#: the stage's redaction count (0 for stages that redact nothing).
 CURATION_LINEAGE_SCHEMA = (
     "stage string, metric string, n_docs long, n_pii long, finished_at timestamp"
 )
+_STAGE_LINEAGE_DIR = "funnel_lineage"
 
 
 def _stage_snapshot_path(out_dir: str, stage: str) -> str:
@@ -178,7 +162,7 @@ def _stage_snapshot_path(out_dir: str, stage: str) -> str:
 
 
 def _stage_lineage_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "funnel_lineage")
+    return os.path.join(out_dir, _STAGE_LINEAGE_DIR)
 
 
 def read_stage_lineage(spark: SparkSession, out_dir: str) -> dict[str, dict]:
@@ -186,48 +170,33 @@ def read_stage_lineage(spark: SparkSession, out_dir: str) -> dict[str, dict]:
     stages; empty on a fresh out_dir.  A lineage table that exists but
     cannot be read raises: treating it as empty would silently redo every
     committed stage."""
-    lineage = read_or_empty(
+    table = lineage.read_or_empty(
         spark, _stage_lineage_path(out_dir), CURATION_LINEAGE_SCHEMA
     )
-    return {r["stage"]: r.asDict() for r in lineage.collect()}
+    return {r["stage"]: r.asDict() for r in table.collect()}
 
 
 def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
-    """Run the funnel over ``documents`` (doc_id, text); returns metrics.
+    """Run the funnel over ``documents`` (doc_id, text); writes ``curated/``
+    and ``funnel/`` under ``cfg.out_dir`` and returns the metrics.
 
-    With ``cfg.resume`` (requires ``cfg.write``), every stage commits its
-    survivor snapshot (``stages/<name>`` parquet, (doc_id, text) only) and
-    then appends a funnel-lineage row; a restarted run loads the snapshot of
-    the longest committed stage prefix and recomputes NOTHING before it —
-    the funnel's per-stage analogue of the KG pipeline's per-bucket lineage
-    (north rule: resume from checkpoint without recomputing completed
-    work).  Snapshot-then-lineage ordering makes a mid-write crash replay
-    the interrupted stage instead of trusting partial output."""
-    from datetime import datetime, timezone
+    Walks the same :func:`_stages` table as :func:`funnel_final`, pinning
+    the input and every stage boundary, then counts each.  With
+    ``cfg.resume``, every stage commits its survivor snapshot
+    (``stages/<name>`` parquet, (doc_id, text) only) and then appends a
+    funnel-lineage row; a restarted run loads the snapshot of the longest
+    committed stage prefix and recomputes NOTHING before it — the funnel's
+    per-stage analogue of the KG pipeline's per-bucket lineage (north rule:
+    resume from checkpoint without recomputing completed work).
+    Snapshot-then-lineage ordering makes a mid-write crash replay the
+    interrupted stage instead of trusting partial output."""
+    stages = _stages(cfg)
+    done = read_stage_lineage(spark, cfg.out_dir) if cfg.resume else {}
+    # longest committed prefix of THIS config's stage table
+    n_done = 0
+    while n_done < len(stages) and stages[n_done][0] in done:
+        n_done += 1
 
-    # (stage name, metric key, builder) in funnel order; pii is the one
-    # stage that contributes an extra metric (redaction count)
-    stage_defs: list[tuple[str, str]] = [
-        ("quality", "after_quality"),
-        ("exact_dedup", "after_exact_dedup"),
-        ("near_dup", "after_near_dup"),
-    ]
-    if cfg.scrub_pii:
-        stage_defs.append(("pii", "after_pii"))
-
-    resume = cfg.resume and cfg.write
-    done = read_stage_lineage(spark, cfg.out_dir) if resume else {}
-    # longest committed prefix of THIS config's stage list
-    start_idx = 0
-    for name, _ in stage_defs:
-        if name in done:
-            start_idx += 1
-        else:
-            break
-
-    # every stage boundary is pinned (see funnel_final) and released on
-    # return; the input too, because the quality stage's collapsed
-    # projection re-evaluates the input plan per derived stat column
     pinned: list[DataFrame] = []
     funnel: dict[str, int] = {}
 
@@ -236,65 +205,44 @@ def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
         pinned.append(df)
         return df
 
-    def _commit(stage: str, metric: str, df: DataFrame, n_pii: int = 0) -> DataFrame:
-        df = _pin(df)
-        funnel[metric] = df.count()
-        if resume:
-            df.write.mode("overwrite").parquet(
-                _stage_snapshot_path(cfg.out_dir, stage)
-            )
-            spark.createDataFrame(
-                [(stage, metric, funnel[metric], n_pii,
-                  datetime.now(timezone.utc))],
-                CURATION_LINEAGE_SCHEMA,
-            ).write.mode("append").parquet(_stage_lineage_path(cfg.out_dir))
-        return df
-
     try:
-        documents = _pin(documents)
-        funnel["input"] = documents.count()
+        docs = _pin(documents)
+        funnel["input"] = docs.count()
+        funnel["pii_redactions"] = 0
+        for stage, metric, _ in stages[:n_done]:
+            funnel[metric] = int(done[stage]["n_docs"])
+            funnel["pii_redactions"] += int(done[stage]["n_pii"])
+        if n_done:
+            docs = _pin(spark.read.parquet(
+                _stage_snapshot_path(cfg.out_dir, stages[n_done - 1][0])
+            ))
 
-        if start_idx > 0:
-            last_stage, _ = stage_defs[start_idx - 1]
-            docs = _pin(
-                spark.read.parquet(_stage_snapshot_path(cfg.out_dir, last_stage))
-            )
-            for name, metric in stage_defs[:start_idx]:
-                funnel[metric] = int(done[name]["n_docs"])
-                if name == "pii":
-                    funnel["pii_redactions"] = int(done[name]["n_pii"])
-            if last_stage == "pii":
-                docs = docs.select("doc_id", "text")
-        else:
-            docs = documents
-
-        for name, metric in stage_defs[start_idx:]:
-            if name == "quality":
-                docs = _commit(name, metric, _stage_quality(docs, cfg))
-            elif name == "exact_dedup":
-                # pinned: the near-dup stage reads its input ~6x — shingles,
-                # sizes, verify, corpus map-back
-                docs = _commit(name, metric, _stage_exact(docs))
-            elif name == "near_dup":
-                docs = _commit(name, metric, _stage_near_dup(docs, cfg))
-            elif name == "pii":
-                scrubbed = _pin(_stage_pii(docs))
-                n_pii = int(
-                    scrubbed.agg(F.coalesce(F.sum("n_pii"), F.lit(0))).collect()[0][0]
+        for stage, metric, build in stages[n_done:]:
+            survivors = _pin(build(docs))
+            funnel[metric] = survivors.count()
+            n_pii = 0
+            if "n_pii" in survivors.columns:
+                n_pii = int(survivors.agg(
+                    F.coalesce(F.sum("n_pii"), F.lit(0))
+                ).collect()[0][0])
+            funnel["pii_redactions"] += n_pii
+            docs = survivors.select("doc_id", "text")
+            if cfg.resume:
+                docs.write.mode("overwrite").parquet(
+                    _stage_snapshot_path(cfg.out_dir, stage)
                 )
-                funnel["pii_redactions"] = n_pii
-                docs = _commit(name, metric, scrubbed.select("doc_id", "text"), n_pii)
+                lineage.append_rows(
+                    cfg.out_dir, _STAGE_LINEAGE_DIR, CURATION_LINEAGE_SCHEMA,
+                    [{"stage": stage, "metric": metric, "n_docs": funnel[metric],
+                      "n_pii": n_pii, "finished_at": datetime.now(timezone.utc)}],
+                )
 
-        # final: corpus-wide sentence prune (keep-first; fully-pruned docs
-        # drop out) — its output IS the curated table, so no separate snapshot
-        final = _pin(_stage_prune(docs) if cfg.prune_sentences else docs)
+        final = _pin(_final(docs, cfg))
         funnel["final_docs"] = final.count()
-
-        if cfg.write:
-            final.write.mode("overwrite").parquet(os.path.join(cfg.out_dir, "curated"))
-            spark.createDataFrame([funnel]).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(cfg.out_dir, "funnel")
-            )
+        final.write.mode("overwrite").parquet(os.path.join(cfg.out_dir, "curated"))
+        spark.createDataFrame([funnel]).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(cfg.out_dir, "funnel")
+        )
     finally:
         for df in pinned:
             release(df)

@@ -96,27 +96,40 @@ def append_lineage(
     started_at: datetime,
 ) -> None:
     """``per_bucket``: (bucket, docs, nodes, edges, triples) — a collected
-    row list, or a (small) DataFrame for convenience.
+    row list, or a (small) DataFrame for convenience.  Appends one 'done'
+    row per bucket with :func:`append_rows`."""
+    if isinstance(per_bucket, DataFrame):
+        per_bucket = per_bucket.collect()
+    finished = datetime.now(timezone.utc)
+    counts = ("docs", "nodes", "edges", "triples")
+    append_rows(out_dir, "lineage", LINEAGE_SCHEMA, [
+        {"run_id": run_id, "bucket": int(r["bucket"]), "status": "done",
+         **{c: int(r[c]) for c in counts},
+         "started_at": started_at, "finished_at": finished}
+        for r in per_bucket
+    ])
 
-    The lineage table is driver-side metadata (one row per bucket, already
-    collected for the job summary), so the append is a direct pyarrow
-    parquet write + atomic rename — NOT a Spark job.  The round-2 stage
-    profile showed the Spark-job version costing up to 13.7 s of pure
-    serial tail at local[32] ×320 (scheduler + createDataFrame + task
-    round-trip for a sub-KB table), an Amdahl term that only grows with
-    cluster size.  The dot-prefixed temp file is invisible to concurrent
-    Spark readers until the rename, preserving atomic per-commit
-    visibility (the parquet-directory stand-in for Iceberg's atomic
-    append).
+
+def append_rows(out_dir: str, subdir: str, schema: str, rows: list[dict]) -> None:
+    """Commit ``rows`` (dicts keyed by the columns of the DDL ``schema``, the
+    same string the readers pass to :func:`read_or_empty`) as one parquet
+    file under ``out_dir/subdir`` — the one commit protocol for lineage
+    tables.  Needs an active Spark session to parse ``schema``.
+
+    Lineage tables are driver-side metadata, so the append is a direct
+    pyarrow parquet write — NOT a Spark job.  The round-2 stage profile
+    showed the Spark-job version costing up to 13.7 s of pure serial tail
+    at local[32] ×320 (scheduler + createDataFrame + task round-trip for a
+    sub-KB table), an Amdahl term that only grows with cluster size.
 
     ``out_dir`` may be any pyarrow-supported filesystem URI (s3://,
     hdfs://, gcs://, file://, or a bare local path).  The write protocol
-    is scheme-dependent because atomic visibility is: on HDFS-family
-    filesystems (_RENAME_FILESYSTEMS) an in-progress file IS visible with
-    growing length, so a direct write races concurrent ``read_lineage``
-    calls with a torn parquet footer — those get the dot-temp +
-    atomic-rename protocol (``pyarrow.fs.move``; HDFS rename is atomic),
-    same as local paths.  Every other scheme — object stores and unknown
+    is scheme-dependent because atomic visibility is.  Local paths and
+    HDFS-family filesystems (_RENAME_FILESYSTEMS), where an in-progress
+    file IS visible with growing length, write a dot-prefixed temp file
+    (invisible to Spark readers) and atomically rename it into place
+    (``os.replace`` / ``pyarrow.fs.move``), so a concurrent read never sees
+    a torn parquet footer.  Every other scheme — object stores and unknown
     filesystems — gets a direct single-object PUT, which is already
     atomically visible there (a half-written object never becomes
     readable) and avoids emulated or unavailable renames (e.g. S3
@@ -125,36 +138,23 @@ def append_lineage(
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    if isinstance(per_bucket, DataFrame):
-        per_bucket = per_bucket.collect()
-    finished = datetime.now(timezone.utc)
-    n = len(per_bucket)
-    ts = pa.timestamp("us", tz="UTC")
-    tbl = pa.table(
-        {
-            "run_id": pa.array([run_id] * n, pa.string()),
-            "bucket": pa.array([int(r["bucket"]) for r in per_bucket], pa.int32()),
-            "status": pa.array(["done"] * n, pa.string()),
-            "docs": pa.array([int(r["docs"]) for r in per_bucket], pa.int64()),
-            "nodes": pa.array([int(r["nodes"]) for r in per_bucket], pa.int64()),
-            "edges": pa.array([int(r["edges"]) for r in per_bucket], pa.int64()),
-            "triples": pa.array([int(r["triples"]) for r in per_bucket], pa.int64()),
-            "started_at": pa.array([started_at] * n, ts),
-            "finished_at": pa.array([finished] * n, ts),
-        }
+    tbl = pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(StructType.fromDDL(schema))
     )
-    fname = f"part-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
+    fname = f"part-{uuid.uuid4().hex}.parquet"
     scheme = out_dir.split("://", 1)[0] if "://" in out_dir else ""
     if scheme in ("", "file"):
-        path = lineage_path(out_dir[len("file://"):] if scheme else out_dir)
+        path = os.path.join(out_dir[len("file://"):] if scheme else out_dir, subdir)
         os.makedirs(path, exist_ok=True)
         tmp = os.path.join(path, f".{fname}.tmp")
         pq.write_table(tbl, tmp)
         os.replace(tmp, os.path.join(path, fname))
     else:
         fs, base = _fs_from_uri(out_dir)
-        path = f"{base.rstrip('/')}/lineage"
+        path = f"{base.rstrip('/')}/{subdir}"
         try:
             fs.create_dir(path, recursive=True)
         except NotImplementedError:  # flat object stores have no dirs

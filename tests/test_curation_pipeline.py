@@ -94,7 +94,7 @@ def test_curated_output_round_trip(funnel_result):
     assert funnel == m
 
 
-def test_sentence_prune_drops_fully_duplicated_doc(spark):
+def test_sentence_prune_drops_fully_duplicated_doc(spark, tmp_path):
     # doc 2 consists entirely of doc 1's sentences; threshold 0.9 keeps the
     # near-dup stage out of the way so the prune stage is what removes it
     rows = [(1, GOOD), (2, ". ".join(GOOD.split(". ")[:3]) + ".")]
@@ -103,11 +103,10 @@ def test_sentence_prune_drops_fully_duplicated_doc(spark):
         spark,
         documents,
         CurationConfig(
-            out_dir="/tmp/unused_kgx_curation",
+            out_dir=str(tmp_path),
             min_tokens=5,
             near_dup_threshold=0.9,
             scrub_pii=False,
-            write=False,
             quality_kwargs={"max_symbol_ratio": 0.2, "min_stop_hits": 0},
         ),
     )
@@ -115,24 +114,38 @@ def test_sentence_prune_drops_fully_duplicated_doc(spark):
     assert m["final_docs"] == 1
 
 
-def test_funnel_final_matches_run_survivors(spark):
-    # the lazy gate view and the counting job agree doc-for-doc
+@pytest.mark.parametrize(
+    "scrub_pii,prune_sentences",
+    [(True, True), (True, False), (False, True), (False, False)],
+    ids=["pii-prune", "pii-noprune", "nopii-prune", "nopii-noprune"],
+)
+def test_funnel_final_matches_run_survivors(spark, tmp_path, scrub_pii, prune_sentences):
+    # the lazy gate view and the counting job agree row-for-row, text
+    # included, on every stage mix
+    from kgx.plans.curation_pipeline import clear_funnel_cache, funnel_final
+
     near_dup = GOOD.replace("quarter", "month")
     rows = [(1, GOOD), (2, GOOD), (3, near_dup), (4, GOOD2), (5, PII_DOC), (6, "too short")]
     documents = spark.createDataFrame(rows, "doc_id long, text string")
-    from kgx.plans.curation_pipeline import funnel_final
-
     cfg = CurationConfig(
-        out_dir="/tmp/unused_kgx_funnel",
+        out_dir=str(tmp_path),
         min_tokens=20,
         near_dup_threshold=0.5,
-        write=False,
+        scrub_pii=scrub_pii,
+        prune_sentences=prune_sentences,
         quality_kwargs={"max_symbol_ratio": 0.2},
     )
-    lazy = {(r.doc_id, r.text) for r in funnel_final(documents, cfg).collect()}
+    try:
+        lazy = {(r.doc_id, r.text) for r in funnel_final(documents, cfg).collect()}
+    finally:
+        clear_funnel_cache()
     m = run(spark, documents, cfg)
+    written = spark.read.parquet(str(tmp_path / "curated")).collect()
+    curated = {(r.doc_id, r.text) for r in written}
+    assert lazy == curated
     assert m["final_docs"] == len(lazy)
     assert {d for d, _ in lazy} == {1, 4, 5}
+    assert any("415-555-2671" in t for _, t in lazy) != scrub_pii
 
 
 @pytest.fixture(scope="module")
@@ -142,7 +155,7 @@ def funnel_plan(spark):
     rows = [(i, GOOD.replace("research", f"research{i}")) for i in range(8)]
     documents = spark.createDataFrame(rows, "doc_id long, text string")
     cfg = CurationConfig(
-        out_dir="", write=False, min_tokens=5,
+        out_dir="", min_tokens=5,
         quality_kwargs={"max_symbol_ratio": 0.2},
     )
     try:

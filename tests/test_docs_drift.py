@@ -1,7 +1,8 @@
 """The hand-written registry facts in the docs stay in step with ``QUERIES``:
 the rotation table of docs/COVERAGE.md names every row past the driver
 gate, and the registered / gate / remainder counts quoted in COVERAGE and
-the README's driver-gate paragraph are the registry's own."""
+the README's driver-gate paragraph are the registry's own.  The generated
+docs/PLANS.md carries no run-specific expression ids."""
 
 import os
 import re
@@ -45,3 +46,10 @@ def test_quoted_registry_counts_match_queries():
         assert quoted and others, where
         assert set(quoted) == {(str(GATE), str(n))}, (where, quoted)
         assert set(others) == {str(n - GATE)}, (where, others)
+
+
+def test_plans_doc_has_no_expression_ids():
+    # tools/plan_audit.py writes name#N, so regenerating rewrites only the
+    # plans that changed
+    ids = re.findall(r"\w+#\d+", _read("docs/PLANS.md"))
+    assert not ids, ids[:5]

@@ -32,6 +32,8 @@ CASES = [
     ("run_embedding_prep", "--graph", "--negatives-k", "-1"),
     ("run_curation", "--input", "--min-tokens", "-1"),
     ("run_curation", "--input", "--near-dup-threshold", "0"),
+    ("run_pipeline", "--input", "--buckets", "0"),
+    ("run_pipeline", "--input", "--salt-factor", "0"),
 ]
 
 

@@ -8,7 +8,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from jobs import run_pipeline
 from kgx.plans import lineage as lin
 from kgx.plans import pipeline
 from kgx.sources import corpus, docs as docs_src
@@ -324,9 +323,6 @@ def test_unreadable_lineage_raises(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-_CLI = ["--input", "/nonexistent/in", "--out", "/nonexistent/out"]
-
-
 @pytest.mark.parametrize(
     "start",
     [
@@ -334,14 +330,11 @@ _CLI = ["--input", "/nonexistent/in", "--out", "/nonexistent/out"]
         lambda spark: pipeline.PipelineConfig(out_dir="unused", salt_factor=-2),
         lambda spark: pipeline.prepartition_raw(spark.range(4), -1),
         lambda spark: pipeline.prepartition_raw(spark.range(4), 8, salt_factor=0),
-        lambda spark: run_pipeline.main(_CLI + ["--buckets", "0"]),
-        lambda spark: run_pipeline.main(_CLI + ["--salt-factor", "0"]),
     ],
-    ids=["cfg_buckets", "cfg_salt", "raw_buckets", "raw_salt", "cli_buckets", "cli_salt"],
+    ids=["cfg_buckets", "cfg_salt", "raw_buckets", "raw_salt"],
 )
 def test_bad_partition_shape_fails_before_any_spark_job(spark, start):
     """A non-positive bucket count or salt factor is refused up front, naming
-    the field.  The CLI refuses it before reading ``--input`` (a missing
-    path here), so no Spark error can come first."""
+    the field (the CLI's flag check is in test_job_flags)."""
     with pytest.raises(ValueError, match=r"^(n_buckets|salt_factor) must be >= 1, got -?\d+$"):
         start(spark)

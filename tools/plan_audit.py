@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -192,6 +193,8 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
+        # expression ids (name#123) change with every run; keep the names
+        plan = re.sub(r"#\d+", "#N", plan)
         lines = [l.rstrip()[:160] for l in plan.splitlines() if any(k in l for k in KEEP)]
         return "\n".join(lines[:40])
 
