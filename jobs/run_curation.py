@@ -40,11 +40,7 @@ def main(argv=None) -> int:
     from kgx.plans.curation_pipeline import CurationConfig, run
     from kgx.session import get_spark
 
-    spark = (
-        get_spark("kgx-curation", master=args.master)
-        if args.master
-        else get_spark("kgx-curation")
-    )
+    spark = get_spark("kgx-curation", master=args.master)
     documents = spark.read.parquet(args.input).select("doc_id", "text")
     metrics = run(
         spark,

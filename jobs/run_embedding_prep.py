@@ -78,11 +78,7 @@ def main(argv=None) -> int:
     from kgx.plans import pipeline
     from kgx.session import get_spark
 
-    spark = (
-        get_spark("kgx-embedding-prep", master=args.master)
-        if args.master
-        else get_spark("kgx-embedding-prep")
-    )
+    spark = get_spark("kgx-embedding-prep", master=args.master)
     triples = pipeline.read_output(spark, args.graph, "triples")
     # the walk corpus feeds BOTH its own write and the skip-gram pass —
     # persist the bounded (labels + short array) table once

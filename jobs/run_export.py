@@ -46,11 +46,7 @@ def main(argv=None) -> int:
     from kgx.operators import packing
     from kgx.session import get_spark
 
-    spark = (
-        get_spark("kgx-export", master=args.master)
-        if args.master
-        else get_spark("kgx-export")
-    )
+    spark = get_spark("kgx-export", master=args.master)
     try:
         docs = spark.read.parquet(args.input)
 

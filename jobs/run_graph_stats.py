@@ -53,11 +53,7 @@ def main(argv=None) -> int:
     from kgx.plans import pipeline
     from kgx.session import get_spark
 
-    spark = (
-        get_spark("kgx-graph-stats", master=args.master)
-        if args.master
-        else get_spark("kgx-graph-stats")
-    )
+    spark = get_spark("kgx-graph-stats", master=args.master)
     triples = pipeline.read_output(spark, args.graph, "triples")
     # one cached canonical edge list feeds all three analytics
     edges = graphstats.edge_list(triples).persist(StorageLevel.MEMORY_AND_DISK)

@@ -71,11 +71,15 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from kgx.session import ANSWER_CONF, get_spark
+
     spark = SparkSession.getActiveSession()
     if spark is None:
-        from kgx.session import get_spark
-
         spark = get_spark("kgx-pipeline")
+    # a session spark-submit built keeps the cluster's shuffle and memory
+    # settings, but not a cluster default that changes answers
+    for key, value in ANSWER_CONF.items():
+        spark.conf.set(key, value)
 
     from kgx.sources import corpus, docs as docs_src
 

@@ -244,7 +244,7 @@ jpairs AS (
 """.strip()
 
 
-def dedup_jaccard_sql(threshold: float = 0.5, max_shingle_df: int = 50) -> str:
+def dedup_jaccard_sql(threshold: float, max_shingle_df: int) -> str:
     """Oracle for the Jaccard similarity join with the hot-shingle guard:
     shingles in more than ``max_shingle_df`` docs are removed BEFORE the
     self-join and the per-doc sizes (mirror of
@@ -278,7 +278,7 @@ SELECT doc_a, doc_b, jaccard FROM jpairs WHERE jaccard >= {threshold}
 
 
 def dedup_minhash_sql(
-    num_hashes: int = 16, bands: int = 8, threshold: float = 0.5, max_bucket: int = 200
+    num_hashes: int, bands: int, threshold: float, max_bucket: int
 ) -> str:
     from kgx.functions.hashing import minhash_derived
 
@@ -326,7 +326,7 @@ WHERE jaccard >= {threshold}
 
 
 def dedup_clusters_sql(
-    num_hashes: int = 16, bands: int = 8, threshold: float = 0.5, max_bucket: int = 200
+    num_hashes: int, bands: int, threshold: float, max_bucket: int
 ) -> str:
     """Oracle for corpus near-dup clustering: the MinHash-LSH pair query as a
     CTE, then connected components via a recursive reachability CTE (min
@@ -439,7 +439,7 @@ mh_pairs AS (
 """.strip()
 
 
-def link_minhash_sql(min_jaccard: float = 0.7) -> str:
+def link_minhash_sql(min_jaccard: float) -> str:
     """Oracle for MinHash-LSH label-similarity candidates (SURVEY JN5) —
     char-shingle MinHash over the distinct extracted labels, verified with
     exact char-shingle Jaccard.  Same machinery as dedup_minhash, different
@@ -455,7 +455,7 @@ FROM mh_pairs WHERE jaccard >= {min_jaccard}
 """.strip()
 
 
-def dedup_simhash_sql(max_hamming: int = 3, max_bucket: int = 200) -> str:
+def dedup_simhash_sql(max_hamming: int, max_bucket: int) -> str:
     """``max_bucket`` mirrors the engine's LSH skew guard
     (kgx.operators.dedup.simhash_pairs): band buckets holding more than
     ``max_bucket`` docs are dropped before pair enumeration."""
@@ -522,7 +522,7 @@ _DUCK_COS = (
 )
 
 
-def ann_topk_sql(n_queries: int = 8, k: int = 5) -> str:
+def ann_topk_sql(n_queries: int, k: int) -> str:
     dot = _DUCK_DOT.format(a="qs.q", b="base.q")
     return f"""
 WITH {_QUANT_CTES},
@@ -544,11 +544,11 @@ FROM ranked WHERE rank <= {k}
 
 
 def ann_ivf_sql(
-    n_queries: int = 8,
-    k: int = 5,
-    n_centroids: int | str = 16,
-    nprobe: int = 4,
-    target_cell_size: int | None = None,
+    n_queries: int,
+    k: int,
+    n_centroids: int | str,
+    nprobe: int,
+    target_cell_size: int | None,
 ) -> str:
     if target_cell_size:
         n_centroids = _auto_k_expr(target_cell_size)
@@ -590,10 +590,10 @@ FROM ranked WHERE rank <= {k}
 
 
 def emb_near_dup_sql(
-    min_cosine: float = 0.2,
-    n_centroids: int | str = 16,
-    n_assign: int = 2,
-    target_cell_size: int | None = None,
+    min_cosine: float,
+    n_centroids: int | str,
+    n_assign: int,
+    target_cell_size: int | None,
 ) -> str:
     """Oracle for cell-bucketed embedding near-dup pairs: each vector indexed
     into its top-``n_assign`` IVF cells, candidates = cell-cohabiting pairs,
@@ -629,7 +629,7 @@ FROM pairs WHERE {_DUCK_COS} >= {min_cosine}
 """.strip()
 
 
-def binary_ingest_sql(max_doc_id: int = 400) -> str:
+def binary_ingest_sql(max_doc_id: int) -> str:
     """Oracle for the S2/S3 binary ingest round-trip: the extracted text must
     equal the source document text modulo the reference's ``.strip()``
     (services.py:35-53) — for ALL FOUR real parser paths (kgxb container,
@@ -673,7 +673,7 @@ FROM t2
 """.strip()
 
 
-def repetition_sql(top_n: int = 2, dup_n: int = 3) -> str:
+def repetition_sql(top_n: int, dup_n: int) -> str:
     """Oracle for the Gopher repetition signals (mirror of
     kgx.operators.textstats.repetition_stats): NON-distinct word n-gram
     occurrence counts, top-gram tie broken by (count DESC, hash ASC),
@@ -745,7 +745,7 @@ FROM t WHERE bpe_tokens > 0
 """.strip()
 
 
-def winnowed_fingerprints_sql(k: int = 8, window: int = 4) -> str:
+def winnowed_fingerprints_sql(k: int, window: int) -> str:
     gram = _duck_md5_60(f"substr(norm, i, {k})")
     return f"""
 WITH t AS (
@@ -772,14 +772,14 @@ SELECT DISTINCT doc_id, fingerprint FROM exploded
 
 
 def quality_filter_sql(
-    min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_unique_ratio: float = 0.3,
-    min_stop_hits: int = 2,
-    src: str = "documents",
+    min_tokens: int,
+    max_tokens: int,
+    min_mean_word_len: float,
+    max_mean_word_len: float,
+    max_symbol_ratio: float,
+    min_unique_ratio: float,
+    min_stop_hits: int,
+    src: str,
 ) -> str:
     """Oracle for the Gopher/C4 composite quality gate — same rule order
     (QUALITY_RULES), same rational arithmetic, CASE-composed reasons."""
@@ -1025,7 +1025,7 @@ LEFT JOIN edge_stats es USING (doc_id)
 """.strip()
 
 
-def csv_prose_sql(rows_per_doc: int = 50) -> str:
+def csv_prose_sql(rows_per_doc: int) -> str:
     return f"""
 WITH lines AS (
     SELECT c_custkey // {rows_per_doc} AS prose_doc_id, c_custkey,
@@ -1055,7 +1055,7 @@ FROM (
 """.strip()
 
 
-def retention_tail_sql(keep: int = 3) -> str:
+def retention_tail_sql(keep: int) -> str:
     return f"""
 SELECT user_id, event_id
 FROM (
@@ -1239,7 +1239,7 @@ FROM a
 """.strip()
 
 
-def media_resize_real_sql(max_w: int = 8, max_h: int = 8) -> str:
+def media_resize_real_sql(max_w: int, max_h: int) -> str:
     """Oracle for the LIVE thumbnail loop: target dims replay the shared
     aspect-fit integer formula (kgx.operators.media._aspect_fit) over the
     synthesized dims ``1 + h % 31`` × ``1 + (h DIV 31) % 23``; thumb
@@ -1529,7 +1529,7 @@ GROUP BY doc_id
 """.strip()
 
 
-def contamination_sql(bench_mod: int = 19, n: int = 5) -> str:
+def contamination_sql(bench_mod: int, n: int) -> str:
     """Oracle for the n-gram decontamination screen (mirror of
     kgx.operators.curation.contamination_screen: benchmark slice
     doc_id % bench_mod = 0, distinct word n-gram hashes, overlap fraction)."""
@@ -1676,7 +1676,7 @@ FROM purchases p JOIN clicks c
 """.strip()
 
 
-def vocab_topk_sql(k: int = 200) -> str:
+def vocab_topk_sql(k: int) -> str:
     """Oracle for the vocabulary top-k (mirror of
     kgx.operators.textstats.vocab_topk: whitespace tokens, count-desc /
     token-asc deterministic order)."""
@@ -1699,7 +1699,7 @@ FROM counts
 """.strip()
 
 
-def sessions_sql(gap_sec: int = 1800) -> str:
+def sessions_sql(gap_sec: int) -> str:
     """Oracle for gap-based sessionization via the classic gaps-and-islands
     cascade (independent of Spark's native session_window merge): new
     session when the gap from the previous event is STRICTLY greater than
@@ -1787,7 +1787,9 @@ def curation_funnel_sql(
     from kgx.operators.curation import PII_PATTERNS
 
     quality = quality_filter_sql(
-        min_tokens=min_tokens, max_symbol_ratio=max_symbol_ratio, src="narrative"
+        min_tokens=min_tokens, max_tokens=100_000, min_mean_word_len=3.0,
+        max_mean_word_len=10.0, max_symbol_ratio=max_symbol_ratio,
+        min_unique_ratio=0.3, min_stop_hits=2, src="narrative",
     )
     mh = _minhash_pairs_ctes("e", "doc_id", _duck_shingles(3), num_hashes, bands, max_bucket)
     clean = "text"
@@ -1874,9 +1876,7 @@ FROM outd FULL OUTER JOIN ind ON outd.label = ind.label
 """.strip()
 
 
-def graph_pagerank_sql(
-    iters: int = 5, scale: int = 10**9, damping_bp: int = 8500
-) -> str:
+def graph_pagerank_sql(iters: int, scale: int, damping_bp: int) -> str:
     """Oracle for integer-arithmetic PageRank (mirror of
     kgx.operators.graphstats.pagerank).  The iteration is UNROLLED into
     chained CTEs pr0..pr{iters} — generated SQL, no recursive aggregation
@@ -1914,7 +1914,7 @@ SELECT label, rank FROM pr{iters}
 """.strip()
 
 
-def entity_pmi_sql(min_co: int = 2) -> str:
+def entity_pmi_sql(min_co: int) -> str:
     """Oracle for document-level entity co-occurrence lift (mirror of
     kgx.operators.graphstats.entity_cooccurrence): distinct (doc, label)
     pairs self-joined within doc (a < b), margins and the corpus doc count
@@ -1947,7 +1947,7 @@ CROSS JOIN nn
 """.strip()
 
 
-def graph_label_prop_sql(iters: int = 3) -> str:
+def graph_label_prop_sql(iters: int) -> str:
     """Oracle for deterministic frequency-vote label propagation (mirror
     of kgx.operators.graphstats.label_propagation): undirected distinct
     edges, per round a neighbor-community count with a (votes DESC,
@@ -1983,7 +1983,7 @@ SELECT node AS label, community FROM lp{iters}
 """.strip()
 
 
-def graph_kcore_sql(k: int = 2, iters: int = 4) -> str:
+def graph_kcore_sql(k: int, iters: int) -> str:
     """Oracle for the synchronous k-core peel (mirror of
     kgx.operators.graphstats.kcore): undirected distinct edges, each round
     keeps only nodes with current degree >= k and the edges between
@@ -2042,9 +2042,7 @@ bl_regs AS MATERIALIZED (
 """.strip()
 
 
-def bloom_registers_sql(
-    bench_mod: int = 19, n: int = 5, m_bits: int = 65536, k: int = 4
-) -> str:
+def bloom_registers_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
     """Oracle for the benchmark-slice Bloom filter register table."""
     return f"""
 WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)}
@@ -2052,9 +2050,7 @@ SELECT word, bits FROM bl_regs
 """.strip()
 
 
-def bloom_contamination_sql(
-    bench_mod: int = 19, n: int = 5, m_bits: int = 65536, k: int = 4
-) -> str:
+def bloom_contamination_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
     """Oracle for the Bloom-filter decontamination probe (mirror of
     kgx.operators.sketches.bloom_probe over the train slice): per shingle
     all k probe bits must be set; per doc count shingles and flagged
@@ -2181,9 +2177,7 @@ w{i} AS (
     return ",\n".join(ctes), f"w{length - 1}"
 
 
-def graph_random_walks_sql(
-    length: int = 4, walks_per_node: int = 2, seed: int = 0
-) -> str:
+def graph_random_walks_sql(length: int, walks_per_node: int, seed: int) -> str:
     """Oracle for the DeepWalk-style walk corpus (mirror of
     kgx.operators.graphstats.random_walks): the step hash
     md5_60(cur|walk_id|i|seed) mod out-degree indexes the SAME
@@ -2200,10 +2194,10 @@ FROM {final}
 
 
 def walk_skipgram_pairs_sql(
-    length: int = 4,
-    walks_per_node: int = 2,
-    seed: int = 0,
-    window: int = 2,
+    length: int,
+    walks_per_node: int,
+    seed: int,
+    window: int,
 ) -> str:
     """Oracle for windowed skip-gram pair counts over the walk corpus
     (mirror of kgx.operators.graphstats.walk_skipgram_pairs): identical
@@ -2230,7 +2224,7 @@ FROM pairs GROUP BY 1, 2
 """.strip()
 
 
-def kg_negative_samples_sql(k: int = 2, buckets: int = 64) -> str:
+def kg_negative_samples_sql(k: int, buckets: int) -> str:
     """Oracle for hash-bucketed negative sampling (mirror of
     kgx.operators.graphstats.negative_samples): md5-60 of
     subj|pred|obj|j picks bucket and in-bucket rank over the
@@ -2266,10 +2260,7 @@ WHERE n.label <> p.obj
 """.strip()
 
 
-def hist_registers_sql(
-    col_expr: str = "CAST(floor(value * 100) AS BIGINT)",
-    table: str = "events",
-) -> str:
+def hist_registers_sql(col_expr: str) -> str:
     """Oracle for the log2 histogram sketch (mirror of
     kgx.operators.sketches.hist_registers: bin 0 for x <= 0, else
     length(bin(x)) — the HLL rho's bit-length arithmetic)."""
@@ -2277,11 +2268,11 @@ def hist_registers_sql(
 SELECT CAST(CASE WHEN ({col_expr}) <= 0 THEN 0
             ELSE length(bin({col_expr})) END AS BIGINT) AS bin,
        CAST(count(*) AS BIGINT) AS cnt
-FROM {table} GROUP BY 1
+FROM events GROUP BY 1
 """.strip()
 
 
-def graph_link_candidates_sql(max_degree: int = 64, min_common: int = 2) -> str:
+def graph_link_candidates_sql(max_degree: int, min_common: int) -> str:
     """Oracle for common-neighbor link-prediction candidates (mirror of
     kgx.operators.graphstats.common_neighbor_candidates): undirected
     distinct edges, wedges from centers with degree <= max_degree only
@@ -2323,13 +2314,7 @@ LEFT JOIN lc_canon e ON e.label_a = c.label_a AND e.label_b = c.label_b
 """.strip()
 
 
-def cm_heavy_hitters_sql(
-    col_expr: str = "cast(user_id as varchar)",
-    threshold: int = 75,
-    depth: int = 4,
-    width: int = 256,
-    table: str = "events",
-) -> str:
+def cm_heavy_hitters_sql(col_expr: str, threshold: int, depth: int, width: int) -> str:
     """Oracle for count-min heavy-hitter consumption (mirror of
     kgx.operators.sketches.cm_heavy_hitters): registers replayed, per-key
     cells derived with the same universal-hash chain, estimate = min over
@@ -2352,7 +2337,7 @@ def cm_heavy_hitters_sql(
     )
     return f"""
 WITH hh_hashed AS (
-    SELECT CAST({h} AS BIGINT) AS h0 FROM {table}
+    SELECT CAST({h} AS BIGINT) AS h0 FROM events
 ),
 hh_cells AS (
     {reg_branches}
@@ -2364,7 +2349,7 @@ hh_keys AS (
     SELECT key, exact_count, CAST({kh} AS BIGINT) AS h0
     FROM (
         SELECT {col_expr} AS key, CAST(count(*) AS BIGINT) AS exact_count
-        FROM {table} GROUP BY 1
+        FROM events GROUP BY 1
     )
 ),
 hh_kcells AS (
@@ -2380,12 +2365,7 @@ FROM hh_est WHERE est_count >= {threshold}
 """.strip()
 
 
-def hll_grouped_sql(
-    group_col: str = "event_type",
-    col_expr: str = "cast(user_id as varchar)",
-    m: int = 64,
-    table: str = "events",
-) -> str:
+def hll_grouped_sql(group_col: str, col_expr: str, m: int) -> str:
     """Oracle for the per-group HLL register sketch (mirror of
     kgx.operators.sketches.hll_registers_grouped)."""
     b = m.bit_length() - 1
@@ -2396,7 +2376,7 @@ WITH hashed AS (
     SELECT {group_col} AS grp,
            CAST({h} % {m} AS BIGINT) AS bucket,
            CAST({h} // {m} AS BIGINT) AS rest
-    FROM {table}
+    FROM events
 ),
 rhod AS (
     SELECT grp, bucket,
@@ -2409,7 +2389,7 @@ FROM rhod GROUP BY 1, 2
 """.strip()
 
 
-def kg_training_pairs_sql(k: int = 2, buckets: int = 64) -> str:
+def kg_training_pairs_sql(k: int, buckets: int) -> str:
     """Oracle for the composed KG-embedding training set (mirror of
     kgx.operators.graphstats.training_pairs): distinct positives UNION
     ALL the replayed negative samples with is_positive labels, negatives
@@ -2538,9 +2518,7 @@ fin AS (
     return ",\n".join(ctes)
 
 
-def emb_kmeans_sql(
-    k: int = 8, rounds: int = 2, target_cluster_size: int | None = None
-) -> str:
+def emb_kmeans_sql(k: int, rounds: int, target_cluster_size: int | None) -> str:
     """Oracle for integer-arithmetic Lloyd's k-means (mirror of
     kgx.operators.clustering.kmeans_assign).  Rounds are UNROLLED into
     chained CTEs (the graph_pagerank_sql stance); centroid means use
@@ -2557,10 +2535,10 @@ SELECT vec_id, cluster, {_DUCK_COS} AS cosine FROM fin WHERE rn = 1
 
 
 def semdedup_sql(
-    k: int = 8,
-    rounds: int = 2,
-    min_cosine: float = 0.5,
-    target_cluster_size: int | None = None,
+    k: int,
+    rounds: int,
+    min_cosine: float,
+    target_cluster_size: int | None,
 ) -> str:
     """Oracle for SemDeDup-style within-cluster semantic dedup (mirror of
     kgx.operators.clustering.semdedup): k-means buckets, within-cluster
@@ -2611,7 +2589,7 @@ sh AS MATERIALIZED (
 """.strip()
 
 
-def seq_pack_sql(capacity: int = 128, n_shards: int = 8) -> str:
+def seq_pack_sql(capacity: int, n_shards: int) -> str:
     """Oracle for concat-then-chunk sequence packing (mirror of
     kgx.operators.packing.seq_pack): per-shard running token sum in
     (shard, doc_id) order, chunk ids by toward-zero integer division."""
@@ -2632,7 +2610,7 @@ FROM cum
 """.strip()
 
 
-def shard_manifest_sql(n_shards: int = 8) -> str:
+def shard_manifest_sql(n_shards: int) -> str:
     """Oracle for per-shard export manifests (mirror of
     kgx.operators.packing.shard_manifest)."""
     from kgx.operators.packing import CHECKSUM_MOD
@@ -2695,9 +2673,7 @@ FROM rates r LEFT JOIN picked p USING (source)
 """.strip()
 
 
-def funnel_export_sql(
-    n_shards: int = 8, capacity: int = 128, **funnel_kwargs
-) -> str:
+def funnel_export_sql(n_shards: int, capacity: int, **funnel_kwargs) -> str:
     """Oracle for the composed curation→export story (mirror of
     __spark_entry__.q_funnel_export): the five-stage funnel's survivors
     (curation_funnel_sql, nested as a materialized CTE) flow into the
@@ -2764,7 +2740,7 @@ toks AS MATERIALIZED (
 """.strip()
 
 
-def inverted_postings_sql(min_df: int = 1, max_df: int | None = None) -> str:
+def inverted_postings_sql(min_df: int, max_df: int | None) -> str:
     """Oracle for the inverted token index (mirror of
     kgx.operators.indexing.inverted_postings)."""
     max_clause = f"AND df <= {max_df}" if max_df is not None else ""
@@ -2779,7 +2755,7 @@ FROM tf JOIN dft USING (token)
 """.strip()
 
 
-def lm_ngram_counts_sql(n: int = 3, min_count: int = 2) -> str:
+def lm_ngram_counts_sql(n: int, min_count: int) -> str:
     """Oracle for the n-gram LM count table with KN continuation counts
     (mirror of kgx.operators.indexing.lm_ngram_counts)."""
     t = "list_filter(str_split(text, ' '), t -> t <> '')"
@@ -2808,12 +2784,7 @@ JOIN cont ct ON ct.suffix = substring(c.gram, length(split_part(c.gram, ' ', 1))
 """.strip()
 
 
-def bm25_topk_sql(
-    query_terms: list[str],
-    k: int = 10,
-    k1_centi: int = 120,
-    b_centi: int = 75,
-) -> str:
+def bm25_topk_sql(query_terms: list[str], k: int, k1_centi: int, b_centi: int) -> str:
     """Oracle for fixed-point BM25 top-k retrieval (mirror of
     kgx.operators.indexing.bm25_topk): identical bigint formula — DuckDB
     ``//`` replays Spark ``div`` (both floor on non-negative operands),
@@ -2902,7 +2873,7 @@ FROM enr WHERE kind = 'media'
 
 
 def seq_pack_interleaved_sql(
-    capacity: int = 4096, n_shards: int = 8, media_token_cost: int = 576
+    capacity: int, n_shards: int, media_token_cost: int
 ) -> str:
     """Oracle for multimodal sequence packing (mirror of
     kgx.operators.packing.seq_pack_interleaved): per-doc cost = text tokens
@@ -2941,12 +2912,7 @@ FROM cum
 """.strip()
 
 
-def cm_registers_sql(
-    col_expr: str = "cast(event_id as varchar)",
-    depth: int = 4,
-    width: int = 256,
-    table: str = "events",
-) -> str:
+def cm_registers_sql(col_expr: str, depth: int, width: int) -> str:
     """Oracle for the count-min counter table (mirror of
     kgx.operators.sketches.cm_registers): same md5-60 base hash, same
     per-row universal-hash derivation unrolled as UNION ALL branches —
@@ -2962,7 +2928,7 @@ def cm_registers_sql(
     )
     return f"""
 WITH hashed AS (
-    SELECT CAST({h} AS BIGINT) AS h0 FROM {table}
+    SELECT CAST({h} AS BIGINT) AS h0 FROM events
 ),
 cells AS (
     {branches}
@@ -2972,8 +2938,7 @@ FROM cells GROUP BY 1, 2
 """.strip()
 
 
-def hll_registers_sql(col_expr: str = "cast(event_id as varchar)", m: int = 64,
-                      table: str = "events") -> str:
+def hll_registers_sql(col_expr: str, m: int) -> str:
     """Oracle for the HLL register sketch (mirror of
     kgx.operators.sketches.hll_registers): same md5-60 hash, same
     length(bin(x)) leading-zero rank — registers match bit-for-bit."""
@@ -2984,7 +2949,7 @@ def hll_registers_sql(col_expr: str = "cast(event_id as varchar)", m: int = 64,
 WITH hashed AS (
     SELECT CAST({h} % {m} AS BIGINT) AS bucket,
            CAST({h} // {m} AS BIGINT) AS rest
-    FROM {table}
+    FROM events
 ),
 rhod AS (
     SELECT bucket,
@@ -2997,9 +2962,7 @@ FROM rhod GROUP BY bucket
 """.strip()
 
 
-def kg_transe_margin_sql(
-    dim: int = 8, modulus: int = 1024, k: int = 2, buckets: int = 64
-) -> str:
+def kg_transe_margin_sql(dim: int, modulus: int, k: int, buckets: int) -> str:
     """Oracle for the per-predicate TransE energy audit (mirror of
     kgx.operators.graphstats.transe_margin): the full training-pair oracle
     nested as a CTE, the same md5-60 + universal-hash integer embedding
@@ -3122,7 +3085,7 @@ pq_fin AS (
     return ",\n".join(ctes)
 
 
-def pq_codes_sql(m: int = 8, k: int = 16, rounds: int = 2) -> str:
+def pq_codes_sql(m: int, k: int, rounds: int) -> str:
     """Oracle for product-quantization codes (mirror of
     kgx.operators.clustering.pq_codes): same 1e-4 quantization, same
     subvector slicing, per-subspace Lloyd rounds UNROLLED into chained
@@ -3135,13 +3098,7 @@ SELECT vec_id, subspace, code, sq_dist FROM pq_fin WHERE rn = 1
 """.strip()
 
 
-def pq_topk_sql(
-    n_queries: int = 8,
-    k: int = 5,
-    m: int = 8,
-    k_codes: int = 16,
-    rounds: int = 2,
-) -> str:
+def pq_topk_sql(n_queries: int, k: int, m: int, k_codes: int, rounds: int) -> str:
     """Oracle for PQ asymmetric-distance top-k (mirror of
     kgx.operators.clustering.pq_topk): the shared PQ chain, the same
     query-subvector × codebook LUT of exact subspace L2 distances, score
@@ -3178,13 +3135,13 @@ FROM pqt_ranked WHERE rank <= {k}
 
 
 def ann_ivfpq_sql(
-    n_queries: int = 8,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    rounds: int = 2,
+    n_queries: int,
+    k: int,
+    n_centroids: int,
+    nprobe: int,
+    m: int,
+    k_codes: int,
+    rounds: int,
 ) -> str:
     """Oracle for composed IVF-PQ search (mirror of
     kgx.operators.clustering.ivf_pq_topk): the ann_ivf_sql coarse
@@ -3246,12 +3203,7 @@ FROM ivfpq_ranked WHERE rank <= {k}
 """.strip()
 
 
-def ann_recall_sql(
-    n_queries: int = 8,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-) -> str:
+def ann_recall_sql(n_queries: int, k: int, n_centroids: int, nprobe: int) -> str:
     """Oracle for the IVF recall@k audit (mirror of
     kgx.operators.similarity.ivf_recall): the exact and IVF top-k
     oracles nested verbatim as CTEs, joined on (query_id, vec_id),
@@ -3261,7 +3213,8 @@ WITH ar_exact AS MATERIALIZED (
     {ann_topk_sql(n_queries=n_queries, k=k)}
 ),
 ar_approx AS MATERIALIZED (
-    {ann_ivf_sql(n_queries=n_queries, k=k, n_centroids=n_centroids, nprobe=nprobe)}
+    {ann_ivf_sql(n_queries=n_queries, k=k, n_centroids=n_centroids, nprobe=nprobe,
+                 target_cell_size=None)}
 ),
 ar_n AS (
     SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
@@ -3279,7 +3232,7 @@ FROM ar_n n LEFT JOIN ar_h h USING (query_id)
 """.strip()
 
 
-def graph_two_hop_sql(max_degree: int = 64) -> str:
+def graph_two_hop_sql(max_degree: int) -> str:
     """Oracle for per-node two-hop neighborhood size (mirror of
     kgx.operators.graphstats.two_hop_stats): undirected distinct edges,
     ordered 2-hop pairs through centers with degree <= max_degree only,
@@ -3316,12 +3269,12 @@ FROM th_deg d LEFT JOIN th_two t ON t.label = d.subj
 
 
 def node2vec_walks_sql(
-    length: int = 4,
-    walks_per_node: int = 2,
-    seed: int = 0,
-    w_return: int = 1,
-    w_near: int = 4,
-    w_far: int = 2,
+    length: int,
+    walks_per_node: int,
+    seed: int,
+    w_return: int,
+    w_near: int,
+    w_far: int,
 ) -> str:
     """Oracle for node2vec second-order biased walks (mirror of
     kgx.operators.graphstats.node2vec_walks): the engine's in-row
@@ -3390,11 +3343,11 @@ FROM nv_w{length - 1}
 
 
 def lsh_recall_sql(
-    threshold: float = 0.5,
-    max_shingle_df: int = 50,
-    num_hashes: int = 16,
-    bands: int = 8,
-    max_bucket: int = 200,
+    threshold: float,
+    max_shingle_df: int,
+    num_hashes: int,
+    bands: int,
+    max_bucket: int,
 ) -> str:
     """Oracle for the LSH blocking-recall audit (mirror of
     kgx.operators.dedup.lsh_blocking_recall): the exact and LSH pair
@@ -3424,10 +3377,7 @@ FROM lr_e, lr_l
 """.strip()
 
 
-def dataset_split_sql(
-    val_bp: int = 500, test_bp: int = 500,
-    strat_col: str = "source", seed: str = "split",
-) -> str:
+def dataset_split_sql(val_bp: int, test_bp: int, strat_col: str, seed: str) -> str:
     """Oracle for the deterministic split audit (mirror of
     kgx.operators.curation.dataset_split): same seeded md5-60 threshold
     assignment (kgx.functions.hashing.seeded, duckdb dialect), same

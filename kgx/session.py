@@ -11,10 +11,11 @@ is what we'd ship in ``spark-defaults.conf`` for a 1000-executor job:
 - Shuffle partitions default to 2x cores locally; on a real cluster AQE
   coalesces from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
   downward, so oversizing is safe and undersizing is not.
-- ANSI mode pinned on, not inherited from a cluster's ``spark-defaults``:
-  every fixed-point operator (PageRank, k-means, PQ/ADC, BM25, node2vec
-  weights, token_mix rates) relies on bigint overflow raising
-  ARITHMETIC_OVERFLOW; with ANSI off it would wrap around silently.
+- ANSI mode and the UTC session time zone pinned (:data:`ANSWER_CONF`),
+  not inherited from a cluster's ``spark-defaults``: every fixed-point
+  operator (PageRank, k-means, PQ/ADC, BM25, node2vec weights, token_mix
+  rates) relies on bigint overflow raising ARITHMETIC_OVERFLOW; with ANSI
+  off it would wrap around silently.
 """
 
 from __future__ import annotations
@@ -22,6 +23,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: The settings answers depend on.  ``get_spark`` builds with them, and a job
+#: that runs on a session it did not build sets them on that session.
+ANSWER_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "true",
+}
 
 
 def default_parallelism() -> int:
@@ -59,8 +68,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
+        .config(map=ANSWER_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -70,16 +78,4 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KGX_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )
-    if os.environ.get("KGX_COMMITTER_V2") == "1":
-        # OPT-IN ONLY: v2 task commit moves output files as tasks finish, so
-        # job commit is O(partition dirs) instead of serial driver renames —
-        # but task commit is NOT atomic (deprecated in Hadoop 3.x,
-        # MAPREDUCE-7282): a task retried mid-commit can leave duplicate or
-        # partial files, and the lineage-based resume in kgx.plans.pipeline
-        # would then treat a partially-written bucket dir as complete.  The
-        # default stays the atomic v1 committer; on object stores use a
-        # cloud-native committer (magic/S3A, GCS flush) instead of v2.
-        builder = builder.config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
-        )
     return builder.getOrCreate()

@@ -305,7 +305,7 @@ def test_winnowed_fingerprints_overlap_guarantee(spark):
         "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
     want = {}
-    for doc, h in con.execute(oracles.winnowed_fingerprints_sql()).fetchall():
+    for doc, h in con.execute(oracles.winnowed_fingerprints_sql(k=8, window=4)).fetchall():
         want.setdefault(doc, set()).add(h)
     assert want == by_doc
 

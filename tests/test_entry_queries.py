@@ -158,7 +158,7 @@ def test_graph_cache_eviction_keeps_live_funnel_checkpoints(spark, sf_dir):
     """A new extraction-cache entry evicts only the previous graphs: a
     curation-funnel frame built before it still reads its checkpoint
     blocks afterwards."""
-    funnel = entrymod.q_curation_funnel(spark, sf_dir)
+    funnel = entrymod.queries()["curation_funnel"](spark, sf_dir)
     n = funnel.count()
     # a key no earlier test cached (same data, spelled differently); the
     # persist is lazy, so this inserts an entry without running extraction

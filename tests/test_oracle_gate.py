@@ -2,12 +2,14 @@
 DuckDB oracle at the test sf, on row count, sorted schema and value hash —
 the comparison ``tools/compare_oracle.py`` runs from the command line."""
 
+import inspect
+
 import pytest
 
 import __spark_entry__ as entrymod
 from tools import compare_oracle
 
-NAMES = [name for name, _, _ in entrymod.QUERIES]
+NAMES = [row[0] for row in entrymod.QUERIES]
 
 
 def teardown_module():
@@ -24,6 +26,20 @@ def con(sf_dir):
 
 def test_registry_names_are_unique():
     assert len(set(NAMES)) == len(NAMES)
+
+
+def test_row_params_bind_to_op_and_oracle():
+    """Each row's params fit both its engine op (after the input frame) and
+    its oracle, so a misspelt or missing parameter fails here, before any
+    Spark run."""
+    unbound = []
+    for name, _, op, params, oracle in entrymod.QUERIES:
+        for fn, args in ((op, (object(),)), (oracle, ())):
+            try:
+                inspect.signature(fn).bind(*args, **params)
+            except TypeError as e:
+                unbound.append((name, str(e)))
+    assert unbound == []
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -241,11 +241,11 @@ def test_bloom_screen_is_superset_of_exact_screen(spark, sf_dir):
 
     exact = {
         r.doc_id: (r.n_shingles, r.n_contaminated)
-        for r in entry.q_contamination(spark, sf_dir).collect()
+        for r in entry.queries()["contamination"](spark, sf_dir).collect()
     }
     bloom = {
         r.doc_id: (r.n_keys, r.n_flagged)
-        for r in entry.q_bloom_contamination(spark, sf_dir).collect()
+        for r in entry.queries()["bloom_contamination"](spark, sf_dir).collect()
     }
     assert set(exact) == set(bloom)
     for d, (n_sh, n_cont) in exact.items():

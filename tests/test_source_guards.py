@@ -1,5 +1,5 @@
-"""Source-level guards: one pin policy, no def that only tests reach, and a
-packaged zip that matches kgx/."""
+"""Source-level guards: one pin policy, no def that only tests reach, oracle
+builders without defaults, and a packaged zip that matches kgx/."""
 
 import ast
 import collections
@@ -89,6 +89,26 @@ def test_every_def_has_a_non_test_caller():
                     unreached.append(node.name)
     stray = sorted(set(unreached) - allowed)
     assert stray == [], f"defs that only tests reach: {stray}"
+
+
+def test_oracle_builders_take_no_defaults():
+    """A ``QUERIES`` row states every parameter of its oracle builder, so a
+    parameter the row misses raises instead of silently taking a default
+    that may differ from the engine operator's.  The one exception,
+    ``curation_funnel_sql``, keeps its defaults because perfbench's
+    curation workload calls it with two of its six parameters."""
+    allowed = {"curation_funnel_sql"}
+    tree = ast.parse((ROOT / "kgx" / "oracles.py").read_text())
+    defaulted = []
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+            a = node.args
+            named = a.posonlyargs + a.args
+            with_default = named[len(named) - len(a.defaults):] + [
+                arg for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            defaulted += [(node.name, arg.arg) for arg in with_default]
+    assert [d for d in defaulted if d[0] not in allowed] == []
 
 
 def test_dist_zip_matches_kgx_sources():

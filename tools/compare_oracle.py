@@ -52,11 +52,10 @@ def compare(spark, con, sf_dir: str, name: str) -> dict:
     holds the two seconds and ``frames`` the two pandas frames."""
     import __spark_entry__ as entrymod
 
-    _, fn, oracle = next(row for row in entrymod.QUERIES if row[0] == name)
     t0 = time.time()
-    s = fn(spark, sf_dir).toPandas()
+    s = entrymod.queries()[name](spark, sf_dir).toPandas()
     t1 = time.time()
-    d = con.sql(oracle()).df()
+    d = con.sql(entrymod.oracle_sql()[name]).df()
     t2 = time.time()
     return {
         "rows": (len(s), len(d)),
@@ -78,7 +77,7 @@ def main() -> int:
     con = connect(sf_dir)
     failed = []
     t_sweep = time.time()
-    for name, _, _ in entrymod.QUERIES:
+    for name in entrymod.queries():
         if only and name not in only:
             continue
         r = compare(spark, con, sf_dir, name)
