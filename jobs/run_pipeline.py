@@ -86,15 +86,11 @@ def main(argv=None) -> int:
     if args.derive_corpus:
         raw = spark.read.parquet(args.input)
         if args.presplit:
-            from pyspark.sql import functions as F
-
             raw = pipeline.prepartition_raw(
                 raw,
                 args.buckets,
                 salt_factor=args.salt_factor,
-                final_doc_id=F.concat(
-                    F.lit("doc-"), F.col("doc_id").cast("string")
-                ),
+                final_doc_id=docs_src.span_doc_id(),
             )
         docs = docs_src.spans_table(corpus.narrative_documents(raw))
     else:

@@ -104,11 +104,19 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
 # sentence-level duplication
 # ---------------------------------------------------------------------------
 
-#: sentence splitter shared with the oracle: literal '.' split (the
-#: narrative corpus terminates every sentence with '.'), trim, drop empties,
-#: lowercase for the identity hash.  Spark regex '[.]' == DuckDB literal '.'.
+#: a sentence ends at a run of '.' followed by whitespace or the end of the
+#: text, so a '.' inside a token ('10.0.0.12', 'alice@example.com', '3.5')
+#: does not end one.  Both engines read this pattern the same way: Java's
+#: ``\s`` also matches \x0B and its ``$`` also matches before a final line
+#: terminator, while RE2 (the DuckDB oracle) does neither, so the whitespace
+#: class and the end anchor ``\z`` are spelled out
+SENT_SPLIT_RX = r"[.]+([\t\n\x0B\f\r ]+|\z)"
+#: the sentences of ``text``: split, trim, drop empties (the identity hash
+#: lowercases them).  Spark SQL unescapes string literals, so every '\'
+#: of the pattern is doubled; ``oracles._DUCK_SENTS`` is the DuckDB twin
 _SENT_EXPR = (
-    "filter(transform(split(text, '[.]'), s -> trim(s)), s -> s != '')"
+    "filter(transform(split(text, '" + SENT_SPLIT_RX.replace("\\", "\\\\") + "'), "
+    "s -> trim(s)), s -> s != '')"
 )
 
 

@@ -109,40 +109,26 @@ def minhash_edges(
     )
 
 
-#: Default driver-side union-find cutoff (edges).  500 k edges ≈ 50 MB of
-#: collected label strings at ~100 B/edge — comfortably inside any driver
-#: heap we configure (kgx.session floors at 8 g) while still routing every
-#: web-scale candidate set to the distributed path.  Override per-deployment
-#: with KGX_CC_DRIVER_EDGES (0 disables the driver path entirely).
-_CC_DRIVER_EDGES_DEFAULT = 500_000
-
-
-def _cc_driver_threshold() -> int:
-    import os
-
-    return int(os.environ.get("KGX_CC_DRIVER_EDGES", _CC_DRIVER_EDGES_DEFAULT))
-
-
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, driver_threshold: int | None = None
+    edges: DataFrame, max_iter: int = 25, driver_threshold: int = 500_000
 ) -> DataFrame:
     """(src_label, dst_label) undirected edges → (label, component) where
     ``component`` is the lexicographic minimum label of the component.
 
     Adaptive strategy (both paths produce identical output):
 
-    - ``|edges| <= driver_threshold`` (default 500 k, env
-      ``KGX_CC_DRIVER_EDGES``): collect + union-find on the driver.  A
-      candidate edge list that fits comfortably in driver memory gains
-      nothing from 6 distributed stages per round — this is the same call
-      most production CC implementations make.
+    - ``|edges| <= driver_threshold``: collect + union-find on the driver.
+      500 k edges is about 50 MB of collected label strings at ~100 B/edge,
+      comfortably inside any driver heap we configure (kgx.session floors
+      at 8 g), while every web-scale candidate set still takes the
+      distributed path.  A candidate edge list that fits in driver memory
+      gains nothing from 6 distributed stages per round — this is the same
+      call most production CC implementations make.  ``0`` skips it.
     - otherwise: large-star/small-star alternation (Kiveris et al.) — two
       shuffles per round, edge set monotonically contracts toward stars,
       a per-round pin truncates lineage.  O(log n) rounds, no driver
       materialization, no GraphFrames dependency.
     """
-    if driver_threshold is None:
-        driver_threshold = _cc_driver_threshold()
     e = (
         edges.select(
             F.least("src_label", "dst_label").alias("u"),

@@ -15,7 +15,7 @@ empirically by tools/compare_oracle.py at sf0.01.
 
 from __future__ import annotations
 
-from kgx.operators import rules
+from kgx.operators import curation, rules
 from kgx.sources.corpus import NARRATIVE_CTE
 
 # ---------------------------------------------------------------------------
@@ -1503,19 +1503,25 @@ FROM scrubbed
 """.strip()
 
 
+#: twin of kgx.operators.curation._SENT_EXPR (DuckDB literals are not
+#: unescaped, so the pattern goes in as written)
+_DUCK_SENTS = (
+    "list_filter(list_transform(string_split_regex(text, "
+    f"'{curation.SENT_SPLIT_RX}'), s -> trim(s)), s -> s <> '')"
+)
+
+
 def sentence_dedup_sql() -> str:
     """Oracle for the cross-document duplicate-sentence stats over the
     narrative corpus (mirror of kgx.operators.curation.sentence_dedup_stats:
-    literal-'.' split, trim, drop empties, lowercase 60-bit hash)."""
+    sentence-boundary split, trim, drop empties, lowercase 60-bit hash)."""
     return f"""
 WITH {NARRATIVE_CTE},
 sents AS (
     SELECT doc_id, {_duck_md5_60('lower(s)')} AS h
     FROM (
         SELECT doc_id,
-               unnest(list_filter(list_transform(str_split(text, '.'),
-                                                 s -> trim(s)),
-                                  s -> s <> '')) AS s
+               unnest({_DUCK_SENTS}) AS s
         FROM narrative
     )
 ),
@@ -1560,8 +1566,7 @@ def sentence_prune_sql() -> str:
 WITH {NARRATIVE_CTE},
 sd AS (
     SELECT doc_id,
-           list_filter(list_transform(str_split(text, '.'), s -> trim(s)),
-                       s -> s <> '') AS sents
+           {_DUCK_SENTS} AS sents
     FROM narrative
 ),
 inst AS (
@@ -1819,8 +1824,7 @@ nd AS (SELECT e.doc_id, e.text FROM e JOIN comp USING (doc_id) WHERE doc_id = ca
 pii AS (SELECT doc_id, {clean} AS text FROM nd),
 sp_sd AS (
     SELECT doc_id,
-           list_filter(list_transform(str_split(text, '.'), s -> trim(s)),
-                       s -> s <> '') AS sents
+           {_DUCK_SENTS} AS sents
     FROM pii
 ),
 sp_inst AS (

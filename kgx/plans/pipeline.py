@@ -37,7 +37,6 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,11 +55,6 @@ class PipelineConfig:
                                   # (production: Iceberg bucket(doc_id) table
                                   # layout makes the scan arrive aligned)
     run_id: str | None = None
-    table_format: str = "parquet" # "iceberg" needs the iceberg-spark-runtime
-                                  # jar on the classpath (see iceberg_available
-                                  # / test_iceberg_boundary.py — not
-                                  # installable in this offline sandbox, so
-                                  # requesting it raises with instructions)
     validate: bool = False        # P7-P9 sanity gate between extract & write
     canonicalize: bool = False    # north star: alias/CC canonical map +
                                   # deduplicated canonical triple table
@@ -78,23 +72,6 @@ def _check_shape(n_buckets: int, salt_factor: int) -> None:
     for field, value in (("n_buckets", n_buckets), ("salt_factor", salt_factor)):
         if value < 1:
             raise ValueError(f"{field} must be >= 1, got {value}")
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg Spark runtime is on the JVM classpath.  The
-    sandbox has no network and ships no iceberg jar (verified:
-    tests/test_iceberg_boundary.py), so all persisted tables here are plain
-    parquet directory tables with dynamic partition overwrite standing in
-    for Iceberg's atomic partition-level snapshot commit.  Only the JVM's
-    ``ClassNotFoundException`` means "absent"; any other failure (a dead
-    gateway, a broken classpath) is raised, not read as a missing jar."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Py4JJavaError as e:
-        if e.java_exception.getClass().getName() != "java.lang.ClassNotFoundException":
-            raise
-        return False
 
 
 def _bucket(doc_id: str | Column, n_buckets: int) -> Column:
@@ -123,9 +100,9 @@ def prepartition_raw(
     free from an Iceberg ``bucket(N, doc_id)`` table layout.
 
     ``final_doc_id`` must be the expression producing the doc_id the
-    pipeline will see (e.g. ``concat('doc-', cast(doc_id as string))`` for
-    the sandbox spans synthesis), else bucket alignment silently breaks and
-    the partitioned write degrades to tasks×buckets files.
+    pipeline will see (``kgx.sources.docs.span_doc_id()`` for spans
+    synthesized by ``docs.spans_table``), else bucket alignment silently
+    breaks and the partitioned write degrades to tasks×buckets files.
     """
     _check_shape(n_buckets, salt_factor)
     fid = final_doc_id if final_doc_id is not None else F.col("doc_id")
@@ -141,18 +118,6 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
     started = datetime.now(timezone.utc)
     t0 = time.time()
     run_id = cfg.run_id or uuid.uuid4().hex[:12]
-
-    if cfg.table_format == "iceberg" and not iceberg_available(spark):
-        raise RuntimeError(
-            "table_format='iceberg' requested but the Iceberg Spark runtime is"
-            " not on the classpath. Add e.g. --packages"
-            " org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<version> and a"
-            " catalog config; this offline sandbox cannot (no network, no"
-            " vendored jar), so the parquet + dynamic-partition-overwrite"
-            " fallback below is the tested path."
-        )
-    if cfg.table_format not in ("parquet", "iceberg"):
-        raise ValueError(f"unknown table_format: {cfg.table_format}")
 
     bucketed = _bucketed(docs, cfg.n_buckets)
 

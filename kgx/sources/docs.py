@@ -30,7 +30,7 @@ parallel):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Matches kgx.operators.rules.SENTENCE_SPLIT_RX delimiters; keeps punctuation
@@ -47,6 +47,13 @@ def _chunks_expr(text_col: str = "text"):
     )
 
 
+def span_doc_id() -> Column:
+    """The string ``doc_id`` :func:`spans_table` gives a raw row,
+    ``concat('doc-', cast(doc_id as string))``.  ``pipeline.prepartition_raw``
+    buckets raw rows by it, so they land where their spans will."""
+    return F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
+
+
 def spans_table(documents: DataFrame) -> DataFrame:
     """(doc_id bigint, text string, ...) → (doc_id string, spans array<struct>).
 
@@ -55,7 +62,7 @@ def spans_table(documents: DataFrame) -> DataFrame:
     """
     with_chunks = documents.select(
         F.col("doc_id").alias("raw_id"),
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("doc_id"),
+        span_doc_id().alias("doc_id"),
         _chunks_expr().alias("chunks"),
     )
     interleaved = with_chunks.select(

@@ -128,6 +128,40 @@ def test_sentence_prune_keeps_first_occurrence(spark):
     assert out[3]["n_sentences"] == 1
 
 
+def test_sentence_split_matches_oracle_split(spark):
+    """Spark's ``_SENT_EXPR`` and the oracle's ``_DUCK_SENTS`` cut the same
+    pieces, including dots inside tokens, dot runs, line breaks and the
+    characters where Java's and RE2's ``\\s`` and ``$`` differ."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from kgx import oracles
+
+    texts = [
+        "Host 10.0.0.12 is up. Mail alice@example.com now.",
+        "Pi is 3.14.  Next one...\nLast line.",
+        "Tab.\tthen vertical tab.\x0bthen feed.\x0cend.",
+        "Line separator.\u2028is no break, nor at the end.\u2028",
+        "no terminal period",
+        "trailing dots...",
+        ". . .",
+        "",
+    ]
+    pdf = pd.DataFrame({"i": range(len(texts)), "text": texts})
+    got = {
+        r["i"]: list(r["s"])
+        for r in spark.createDataFrame(pdf)
+        .select("i", F.expr(curation._SENT_EXPR).alias("s"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register("t", pdf)
+    want = {i: list(s) for i, s in con.sql(f"SELECT i, {oracles._DUCK_SENTS} FROM t").fetchall()}
+    assert got == want
+    assert got[0] == ["Host 10.0.0.12 is up", "Mail alice@example.com now"]
+    assert got[1] == ["Pi is 3.14", "Next one", "Last line"]
+
+
 @pytest.mark.usefixtures("spark")
 def test_sentence_prune_no_sentence_text_in_exchanges(spark, sf_dir):
     """The exploded per-sentence rows must shed the sentence string before

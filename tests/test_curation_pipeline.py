@@ -114,6 +114,27 @@ def test_sentence_prune_drops_fully_duplicated_doc(spark, tmp_path):
     assert m["final_docs"] == 1
 
 
+def test_sentence_prune_keeps_dotted_tokens_whole(spark, tmp_path):
+    # a '.' inside an email or an IP address does not end a sentence: with
+    # the scrubber off, the prune stage must hand doc 5's text back whole
+    # (it re-joins with '. ', so only the final period is not restored)
+    documents = spark.createDataFrame([(1, GOOD), (5, PII_DOC)], "doc_id long, text string")
+    run(
+        spark,
+        documents,
+        CurationConfig(
+            out_dir=str(tmp_path),
+            min_tokens=20,
+            scrub_pii=False,
+            quality_kwargs={"max_symbol_ratio": 0.2},
+        ),
+    )
+    d5 = spark.read.parquet(str(tmp_path / "curated")).where("doc_id = 5").collect()[0].text
+    assert "alice@example.com" in d5
+    assert "10.0.0.12" in d5
+    assert d5 == PII_DOC.removesuffix(".")
+
+
 @pytest.mark.parametrize(
     "scrub_pii,prune_sentences",
     [(True, True), (True, False), (False, True), (False, False)],
