@@ -204,9 +204,10 @@ def q_funnel_export(
 def q_walk_skipgram_pairs(
     triples: DataFrame, length: int, walks_per_node: int, seed: int, window: int
 ) -> DataFrame:
-    """Skip-gram (center, context) pair counts over the walk corpus."""
-    walks = graphstats.random_walks(
-        triples, length=length, walks_per_node=walks_per_node, seed=seed
+    """Skip-gram (center, context) pair counts over the uniform walk corpus."""
+    walks = graphstats.node2vec_walks(
+        triples, length=length, walks_per_node=walks_per_node, seed=seed,
+        w_return=1, w_near=1, w_far=1,
     )
     return graphstats.walk_skipgram_pairs(walks, window=window)
 
@@ -669,12 +670,12 @@ QUERIES = (
      dict(max_hamming=3, max_bucket=200), O.dedup_simhash_sql),
     ("ann_topk", _spread_embeddings, similarity.cosine_topk,
      dict(n_queries=8, k=5), O.ann_topk_sql),
-    # target_cell_size sizes the cell count, so n_centroids is unused
+    # target_cell_size sizes the cell count
     ("ann_ivf_topk", _spread_embeddings, similarity.ivf_topk,
-     dict(n_queries=8, k=5, n_centroids=16, nprobe=4, target_cell_size=32),
+     dict(n_queries=8, k=5, n_centroids=None, nprobe=4, target_cell_size=32),
      O.ann_ivf_sql),
     ("emb_near_dup_pairs", _spread_embeddings, similarity.embedding_near_dup_pairs,
-     dict(min_cosine=0.2, n_centroids=16, n_assign=2, target_cell_size=32),
+     dict(min_cosine=0.2, n_centroids=None, n_assign=2, target_cell_size=32),
      O.emb_near_dup_sql),
     ("text_stats", _documents, textstats.text_stats, {}, O.text_stats_sql),
     ("quality_filter", _documents, textstats.quality_filter,
@@ -824,7 +825,9 @@ QUERIES = (
      O.bm25_topk_sql),
     ("unigram_surprisal", _documents, indexing.unigram_surprisal, {},
      O.unigram_surprisal_sql),
-    ("graph_random_walks", _triples, graphstats.random_walks,
+    # equal weights: uniform DeepWalk steps
+    ("graph_random_walks", _triples,
+     partial(graphstats.node2vec_walks, w_return=1, w_near=1, w_far=1),
      dict(length=4, walks_per_node=2, seed=0), O.graph_random_walks_sql),
     ("walk_skipgram_pairs", _triples, q_walk_skipgram_pairs,
      dict(length=4, walks_per_node=2, seed=0, window=2), O.walk_skipgram_pairs_sql),

@@ -19,12 +19,14 @@ import argparse
 import json
 import sys
 
+from kgx.session import at_least
+
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="documents parquet (doc_id, text)")
     p.add_argument("--out", required=True, help="output root directory")
-    p.add_argument("--min-tokens", type=int, default=20)
+    p.add_argument("--min-tokens", type=at_least(0), default=20)
     p.add_argument("--near-dup-threshold", type=float, default=0.5)
     p.add_argument("--no-pii-scrub", action="store_true")
     p.add_argument("--no-sentence-prune", action="store_true")
@@ -32,8 +34,6 @@ def main(argv=None) -> int:
                    help="commit per-stage snapshots; skip stages already committed in --out")
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
-    if args.min_tokens < 0:
-        p.error(f"--min-tokens must be >= 0, got {args.min_tokens}")
     if not 0 < args.near_dup_threshold <= 1:
         p.error(f"--near-dup-threshold must be in (0, 1], got {args.near_dup_threshold}")
 

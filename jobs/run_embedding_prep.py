@@ -11,7 +11,8 @@ consumes::
 
 Outputs: ``<out>/walks`` (start_label, walk_id, walk, walk_len — the
 deterministic walk corpus, reproducible by (seed, walk_id); uniform
-DeepWalk sampling by default, node2vec second-order bias with
+DeepWalk sampling by default (``node2vec_walks`` with weights 1/1/1),
+node2vec second-order bias with
 ``--biased --w-return/--w-near/--w-far``),
 ``<out>/skipgram_pairs`` (center, context, n_pairs — windowed pair
 counts, the node2vec co-occurrence table), ``<out>/training_pairs``
@@ -27,23 +28,25 @@ import argparse
 import json
 import sys
 
+from kgx.session import at_least
+
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--graph", required=True,
                    help="pipeline --out dir (reads <graph>/triples)")
     p.add_argument("--out", required=True, help="training-data output root")
-    p.add_argument("--walk-length", type=int, default=8)
-    p.add_argument("--walks-per-node", type=int, default=4)
-    p.add_argument("--window", type=int, default=2)
+    p.add_argument("--walk-length", type=at_least(1), default=8)
+    p.add_argument("--walks-per-node", type=at_least(1), default=4)
+    p.add_argument("--window", type=at_least(1), default=2)
     p.add_argument("--seed", type=int, default=0)
-    p.add_argument("--negatives-k", type=int, default=2,
+    p.add_argument("--negatives-k", type=at_least(0), default=2,
                    help="negatives per distinct triple (0 = skip the "
                         "training_pairs table)")
-    p.add_argument("--negatives-buckets", type=int, default=64)
-    p.add_argument("--embedding-dim", type=int, default=8,
+    p.add_argument("--negatives-buckets", type=at_least(1), default=64)
+    p.add_argument("--embedding-dim", type=at_least(1), default=8,
                    help="hash-embedding dims for the transe_margin audit")
-    p.add_argument("--embedding-modulus", type=int, default=1024)
+    p.add_argument("--embedding-modulus", type=at_least(1), default=1024)
     p.add_argument("--biased", action="store_true",
                    help="node2vec second-order biased walks instead of "
                         "the uniform DeepWalk sampler")
@@ -59,17 +62,10 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
     if not args.biased and any(getattr(args, k) is not None for k in weights):
         p.error("--w-return/--w-near/--w-far apply only to --biased walks")
-    for k, default in weights.items():
+    # equal weights are the uniform DeepWalk sampler
+    for k, default in (weights if args.biased else dict.fromkeys(weights, 1)).items():
         if getattr(args, k) is None:
             setattr(args, k, default)
-    for flag, low in (
-        ("--walk-length", 1), ("--walks-per-node", 1), ("--window", 1),
-        ("--negatives-buckets", 1), ("--embedding-dim", 1),
-        ("--embedding-modulus", 1), ("--negatives-k", 0),
-    ):
-        value = getattr(args, flag[2:].replace("-", "_"))
-        if value < low:
-            p.error(f"{flag} must be >= {low}, got {value}")
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
@@ -82,24 +78,15 @@ def main(argv=None) -> int:
     triples = pipeline.read_output(spark, args.graph, "triples")
     # the walk corpus feeds BOTH its own write and the skip-gram pass —
     # persist the bounded (labels + short array) table once
-    if args.biased:
-        walks = graphstats.node2vec_walks(
-            triples,
-            length=args.walk_length,
-            walks_per_node=args.walks_per_node,
-            seed=args.seed,
-            w_return=args.w_return,
-            w_near=args.w_near,
-            w_far=args.w_far,
-        )
-    else:
-        walks = graphstats.random_walks(
-            triples,
-            length=args.walk_length,
-            walks_per_node=args.walks_per_node,
-            seed=args.seed,
-        )
-    walks = walks.persist(StorageLevel.MEMORY_AND_DISK)
+    walks = graphstats.node2vec_walks(
+        triples,
+        length=args.walk_length,
+        walks_per_node=args.walks_per_node,
+        seed=args.seed,
+        w_return=args.w_return,
+        w_near=args.w_near,
+        w_far=args.w_far,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     walks.write.mode("overwrite").parquet(args.out + "/walks")
     pairs = graphstats.walk_skipgram_pairs(walks, window=args.window)

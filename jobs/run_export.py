@@ -28,20 +28,18 @@ import argparse
 import json
 import sys
 
+from kgx.session import at_least
+
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="curated parquet (doc_id, text[, source])")
     p.add_argument("--out", required=True, help="output root directory")
-    p.add_argument("--n-shards", type=int, default=8)
-    p.add_argument("--capacity", type=int, default=2048,
+    p.add_argument("--n-shards", type=at_least(1), default=8)
+    p.add_argument("--capacity", type=at_least(1), default=2048,
                    help="tokens per packed training sequence")
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
-    for flag, low in (("--n-shards", 1), ("--capacity", 1)):
-        value = getattr(args, flag[2:].replace("-", "_"))
-        if value < low:
-            p.error(f"{flag} must be >= {low}, got {value}")
 
     from kgx.operators import packing
     from kgx.session import get_spark

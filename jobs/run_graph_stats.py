@@ -23,28 +23,23 @@ import argparse
 import json
 import sys
 
+from kgx.session import at_least
+
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--graph", required=True, help="pipeline --out dir (reads <graph>/triples)")
     p.add_argument("--out", required=True, help="analytics output root")
-    p.add_argument("--pagerank-iters", type=int, default=5)
-    p.add_argument("--checkpoint-every", type=int, default=0,
+    p.add_argument("--pagerank-iters", type=at_least(0), default=5)
+    p.add_argument("--checkpoint-every", type=at_least(0), default=0,
                    help="checkpoint cadence for deep pagerank runs (0 = off)")
-    p.add_argument("--lpa-iters", type=int, default=3)
-    p.add_argument("--kcore-k", type=int, default=2)
-    p.add_argument("--negatives-k", type=int, default=2,
+    p.add_argument("--lpa-iters", type=at_least(0), default=3)
+    p.add_argument("--kcore-k", type=at_least(1), default=2)
+    p.add_argument("--negatives-k", type=at_least(0), default=2,
                    help="negative samples per distinct triple (0 = skip)")
-    p.add_argument("--negatives-buckets", type=int, default=64)
+    p.add_argument("--negatives-buckets", type=at_least(1), default=64)
     p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
-    for flag, low in (
-        ("--kcore-k", 1), ("--negatives-buckets", 1), ("--pagerank-iters", 0),
-        ("--lpa-iters", 0), ("--checkpoint-every", 0), ("--negatives-k", 0),
-    ):
-        value = getattr(args, flag[2:].replace("-", "_"))
-        if value < low:
-            p.error(f"{flag} must be >= {low}, got {value}")
 
     from pyspark import StorageLevel
     from pyspark.sql import functions as F

@@ -24,13 +24,15 @@ import argparse
 import json
 import sys
 
+from kgx.session import at_least
+
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True, help="spans parquet/Iceberg path")
     p.add_argument("--out", required=True, help="output root directory")
-    p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--salt-factor", type=int, default=4)
+    p.add_argument("--buckets", type=at_least(1), default=64)
+    p.add_argument("--salt-factor", type=at_least(1), default=4)
     p.add_argument("--run-id", default=None)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--validate", action="store_true")
@@ -50,10 +52,6 @@ def main(argv=None) -> int:
         "are pre-partitioned before span synthesis.",
     )
     args = p.parse_args(argv)
-    for flag in ("--buckets", "--salt-factor"):
-        value = getattr(args, flag[2:].replace("-", "_"))
-        if value < 1:
-            p.error(f"{flag} must be >= 1, got {value}")
 
     from kgx.plans import pipeline
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from kgx.functions import hashing
 from kgx.functions import plan as plan_fn
+from kgx.functions.arrays import unordered_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -277,11 +278,7 @@ def minhash_lsh_pairs(
     cands = (
         buckets.select(
             F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), y -> "
-                    "named_struct('doc_a', x, 'doc_b', y))))"
-                )
+                F.expr(unordered_pairs("ids", "named_struct('doc_a', x, 'doc_b', y)"))
             ).alias("p")
         )
         .select("p.doc_a", "p.doc_b")
@@ -467,10 +464,11 @@ def simhash_pairs(
         buckets.select(
             F.explode(
                 F.expr(
-                    "flatten(transform(ds, (x, i) -> "
-                    "transform(slice(ds, i + 2, size(ds)), y -> "
-                    "named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
-                    "'hamming', cast(bit_count(x.simhash ^ y.simhash) as int)))))"
+                    unordered_pairs(
+                        "ds",
+                        "named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
+                        "'hamming', cast(bit_count(x.simhash ^ y.simhash) as int))",
+                    )
                 )
             ).alias("p")
         )

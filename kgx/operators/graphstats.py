@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgx.functions.arrays import unordered_pairs
 from kgx.functions.plan import materialize
 
 
@@ -32,6 +33,15 @@ def edge_list(triples: DataFrame) -> DataFrame:
     """Distinct global (subj, obj) label edges from doc-level triples.
     Self-loops were already excluded at extraction (SURVEY P5)."""
     return triples.select("subj", "obj").distinct()
+
+
+def _node_labels(e: DataFrame) -> DataFrame:
+    """(label): the distinct labels of ``e``'s subj and obj columns."""
+    return (
+        e.select(F.col("subj").alias("label"))
+        .union(e.select(F.col("obj").alias("label")))
+        .distinct()
+    )
 
 
 def _undirected_edges(triples: DataFrame) -> DataFrame:
@@ -95,11 +105,7 @@ def pagerank(
     (5 rounds of joins plan fine).
     """
     e = edge_list(triples)
-    nodes = (
-        e.select(F.col("subj").alias("label"))
-        .union(e.select(F.col("obj").alias("label")))
-        .distinct()
-    )
+    nodes = _node_labels(e)
     outdeg = e.groupBy(F.col("subj").alias("label")).agg(
         F.count("*").cast("long").alias("od")
     )
@@ -160,11 +166,7 @@ def entity_cooccurrence(nodes: DataFrame, min_co: int = 2) -> DataFrame:
     )
     pairs = per_doc.select(
         F.explode(
-            F.expr(
-                "flatten(transform(ls, (x, i) -> "
-                "transform(slice(ls, i + 2, size(ls)), y -> "
-                "named_struct('label_a', x, 'label_b', y))))"
-            )
+            F.expr(unordered_pairs("ls", "named_struct('label_a', x, 'label_b', y)"))
         ).alias("p")
     ).select("p.label_a", "p.label_b")
     co = (
@@ -388,11 +390,8 @@ def _negative_samples(t: DataFrame, k: int, buckets: int) -> DataFrame:
 
     if k < 1 or buckets < 1:
         raise ValueError(f"bad sampling shape k={k} buckets={buckets}")
-    nodes = (
-        t.select(F.col("subj").alias("label"))
-        .union(t.select(F.col("obj").alias("label")))
-        .distinct()
-        .selectExpr("label", f"{spark_md5_60('label')} % {buckets} AS bucket")
+    nodes = _node_labels(t).selectExpr(
+        "label", f"{spark_md5_60('label')} % {buckets} AS bucket"
     )
     numbered = nodes.withColumn(
         "idx",
@@ -491,11 +490,7 @@ def common_neighbor_candidates(
         nbrs.where(F.size("ns") <= max_degree)
         .select(
             F.explode(
-                F.expr(
-                    "flatten(transform(ns, (x, i) -> "
-                    "transform(slice(ns, i + 2, size(ns)), y -> "
-                    "named_struct('label_a', x, 'label_b', y))))"
-                )
+                F.expr(unordered_pairs("ns", "named_struct('label_a', x, 'label_b', y)"))
             ).alias("p")
         )
         .select("p.label_a", "p.label_b")
@@ -573,122 +568,10 @@ def training_pairs(
     return pos.unionByName(neg)
 
 
-def _walk_scaffold(
-    triples: DataFrame, walks_per_node: int, with_prev: bool
-) -> tuple[DataFrame, DataFrame]:
-    """Shared scaffolding of the walk samplers (random_walks /
-    node2vec_walks): pinned distinct edge list → sorted adjacency table
-    + the step-0 walk frontier.  ``with_prev`` adds the NULL-initialized
-    predecessor column second-order samplers track.  One definition so a
-    future change to the pin stance or adjacency semantics cannot drift
-    between samplers."""
-    # pinned: the adjacency aggregate and both node-union halves read it
-    e = materialize(edge_list(triples))
-    adj = e.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("nbrs"))
-    nodes = (
-        e.select(F.col("subj").alias("label"))
-        .union(e.select(F.col("obj").alias("label")))
-        .distinct()
-    )
-    cols = [
-        "label AS start_label",
-        f"explode(sequence(0, {walks_per_node - 1})) AS w",
-        "label AS cur",
-    ]
-    out = ["start_label", "cast(w as bigint) AS walk_id", "cur"]
-    if with_prev:
-        cols.append("cast(null as string) AS prev")
-        out.append("prev")
-    cols.append("array(label) AS walk")
-    out.append("walk")
-    return adj, nodes.selectExpr(*cols).selectExpr(*out)
-
-
-def _walk_output(cur: DataFrame) -> DataFrame:
-    """Final (start_label, walk_id, walk, walk_len) projection shared by
-    every walk sampler."""
-    return cur.select(
-        "start_label",
-        "walk_id",
-        "walk",
-        F.expr("cast(size(walk) as bigint)").alias("walk_len"),
-    )
-
-
-def random_walks(
-    triples: DataFrame,
-    length: int = 4,
-    walks_per_node: int = 2,
-    seed: int = 0,
-) -> DataFrame:
-    """DeepWalk-style deterministic random-walk corpus over the directed
-    KG edge list — the graph→sequence export a skip-gram / node2vec
-    trainer consumes (Perozzi et al. 2014), closing the loop from
-    extracted graph back to training data next to
-    :func:`training_pairs`.
-
-    Walk rule: from node u at step i of walk w, the next node is
-    ``sorted_out_neighbors(u)[ md5_60(u|w|i|seed) % out_degree(u) ]`` —
-    pure md5-60 arithmetic (kgx.functions.hashing), so the DuckDB oracle
-    replays every step bit-for-bit and re-runs are reproducible by
-    (seed, walk_id).  Walks stop early at sinks (no out-edges): the
-    walk row keeps its prefix, giving skip-gram windows exactly the
-    context that exists.
-
-    Scale shape: each of the ``length − 1`` steps is ONE label
-    equi-join of the walk frontier against the adjacency table
-    (AQE-decided build side), and frontier rows carry only (labels,
-    ≤ length-string array), never text.  The distinct EDGE list is
-    pinned (:func:`_walk_scaffold`).  The adjacency table deliberately
-    stays LAZY: the split A/B (200k-edge synthetic, alternating
-    3-round, warmed) read edge-pin-only 0.84/0.80/0.75 s vs +adj-pin
-    1.56/1.06/1.08 s — every step's join probes one identical exchange
-    Spark already reuses, while the pin serializes corpus-scale
-    neighbor arrays.  Hub adjacency arrays are bounded by out-degree;
-    for open-web graphs compose with a degree cap upstream (the
-    common_neighbor_candidates hub stance).
-
-    Output: (start_label, walk_id, walk array<string>, walk_len) —
-    ``walks_per_node`` rows per graph node.
-    """
-    from kgx.functions.hashing import spark_md5_60
-
-    if length < 1 or walks_per_node < 1:
-        raise ValueError(
-            f"bad walk shape length={length} walks_per_node={walks_per_node}"
-        )
-    adj, cur = _walk_scaffold(triples, walks_per_node, with_prev=False)
-    for i in range(1, length):
-        h = spark_md5_60(
-            f"concat_ws('|', cur, cast(walk_id as string), '{i}', '{seed}')"
-        )
-        stepped = cur.join(adj, F.col("cur") == F.col("subj"), "left").select(
-            "start_label",
-            "walk_id",
-            "cur",
-            "walk",
-            F.expr(
-                f"CASE WHEN nbrs IS NULL THEN NULL "
-                f"ELSE element_at(nbrs, cast(({h}) % size(nbrs) AS int) + 1) "
-                f"END"
-            ).alias("nxt"),
-        )
-        cur = stepped.select(
-            "start_label",
-            "walk_id",
-            F.expr("coalesce(nxt, cur)").alias("cur"),
-            F.expr(
-                "CASE WHEN nxt IS NULL THEN walk "
-                "ELSE array_append(walk, nxt) END"
-            ).alias("walk"),
-        )
-    return _walk_output(cur)
-
-
 def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     """Windowed skip-gram co-occurrence counts over a walk corpus — the
     (center, context) training-pair table a word2vec/node2vec trainer
-    consumes, composing directly over :func:`random_walks` output.
+    consumes, composing directly over :func:`node2vec_walks` output.
 
     Pair enumeration is IN-ROW over each walk array (nested array HOFs +
     one Generate — the entity_cooccurrence stance: no self-join, work per
@@ -866,6 +749,24 @@ def two_hop_stats(triples: DataFrame, max_degree: int = 64) -> DataFrame:
     )
 
 
+def _walk_scaffold(
+    triples: DataFrame, walks_per_node: int
+) -> tuple[DataFrame, DataFrame]:
+    """Scaffolding of :func:`node2vec_walks`: pinned distinct edge list →
+    sorted adjacency table + the step-0 walk frontier (start_label,
+    walk_id, cur, prev, walk) with a NULL predecessor."""
+    # pinned: the adjacency aggregate and both node-union halves read it
+    e = materialize(edge_list(triples))
+    adj = e.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("nbrs"))
+    return adj, _node_labels(e).selectExpr(
+        "label AS start_label",
+        f"explode(sequence(0, {walks_per_node - 1})) AS w",
+        "label AS cur",
+        "cast(null as string) AS prev",
+        "array(label) AS walk",
+    ).selectExpr("start_label", "cast(w as bigint) AS walk_id", "cur", "prev", "walk")
+
+
 def node2vec_walks(
     triples: DataFrame,
     length: int = 4,
@@ -875,41 +776,51 @@ def node2vec_walks(
     w_near: int = 4,
     w_far: int = 2,
 ) -> DataFrame:
-    """node2vec second-order biased walk corpus (Grover & Leskovec 2016)
-    over the directed KG edge list — :func:`random_walks`' DeepWalk
-    sampler upgraded with the return/in-out bias that lets one corpus
-    interpolate between BFS-like (structural) and DFS-like (homophilous)
-    neighborhoods.  Integer weights replace the paper's 1/p / 1 / 1/q
-    rationals: from node v arrived-from t, candidate x weighs
-    ``w_return`` if x == t, ``w_near`` if x is ALSO a neighbor of t
-    (distance 1 from t), else ``w_far`` (distance 2) — all >= 1,
-    enforced loudly, so the total weight is always positive.
+    """Deterministic random-walk corpus over the directed KG edge list —
+    the graph→sequence export a skip-gram trainer consumes, closing the
+    loop from extracted graph back to training data next to
+    :func:`training_pairs`.  node2vec's second-order bias (Grover &
+    Leskovec 2016) with integer weights in place of the paper's
+    1/p / 1 / 1/q rationals: from node v arrived-from t, candidate x
+    weighs ``w_return`` if x == t, ``w_near`` if x is ALSO a neighbor of
+    t (distance 1 from t), else ``w_far`` (distance 2) — all >= 1,
+    enforced loudly, so the total weight is always positive.  Equal
+    weights are uniform DeepWalk sampling (Perozzi et al. 2014).
 
     Step rule: candidates are v's SORTED out-neighbors; the pick is the
     unique candidate whose cumulative-weight window contains
     ``md5_60(cur|walk_id|i|seed) % total_weight`` — an in-row integer
     fold (one ``aggregate`` lambda over the zipped (candidate, weight)
     array), replayed relationally by the DuckDB oracle as a window
-    prefix-sum, bit-for-bit.  Step 1 has no predecessor: every
-    candidate weighs ``w_far`` (uniform, like DeepWalk's first hop).
-    Sinks stop early and keep their prefix (the random_walks contract).
+    prefix-sum, bit-for-bit, and reproducible by (seed, walk_id).  When
+    every candidate weighs the same w — step 1, which has no predecessor
+    (all weigh ``w_far``), and every step of a uniform walk — the fold
+    reduces to the modular index ``(h % (deg·w)) div w``.  Walks stop
+    early at sinks (no out-edges): the walk row keeps its prefix, giving
+    skip-gram windows exactly the context that exists.
 
-    Scale shape: steps >= 2 do TWO label equi-joins of the walk frontier
-    against the adjacency table (cur's neighbors for candidates, prev's
-    for the near test — the second join is the price of second-order
-    bias; both AQE-decided, probing the same reused exchange) plus a
-    per-row O(deg_cur · deg_prev) membership fold bounded by hub degree
-    (``array_contains`` is a linear scan); the weight array is computed
-    ONCE per row as its own projected column — referenced twice
-    downstream, which keeps CollapseProject from inlining the fold into
-    both consumers (SPARK-36718, the transe_margin stance).  Step 1 has
-    no predecessor, so it skips the prev join entirely and picks
-    uniformly (index ``(h % (deg·w_far)) div w_far`` — identical to the
-    fold with constant weights).  The distinct edge list is pinned once
-    (the random_walks stance, via the shared :func:`_walk_scaffold`);
-    the adjacency table stays lazy for the same measured reason.
+    Scale shape: each uniform step is ONE label equi-join of the walk
+    frontier against the adjacency table; a biased step after the first
+    does TWO (cur's neighbors for candidates, prev's for the near test —
+    the price of second-order bias), all AQE-decided, probing the same
+    reused exchange, plus a per-row O(deg_cur · deg_prev) membership fold
+    bounded by hub degree (``array_contains`` is a linear scan).  The
+    weight array is computed ONCE per row as its own projected column —
+    referenced twice downstream, which keeps CollapseProject from
+    inlining the fold into both consumers (SPARK-36718, the transe_margin
+    stance).  Frontier rows carry only labels and a ≤ length-string
+    array, never text.  The distinct EDGE list is pinned
+    (:func:`_walk_scaffold`).  The adjacency table deliberately stays
+    LAZY: the split A/B (200k-edge synthetic, alternating 3-round,
+    warmed) read edge-pin-only 0.84/0.80/0.75 s vs +adj-pin
+    1.56/1.06/1.08 s — every step's join probes one identical exchange
+    Spark already reuses, while the pin serializes corpus-scale neighbor
+    arrays.  Hub adjacency arrays are bounded by out-degree; for open-web
+    graphs compose with a degree cap upstream (the
+    common_neighbor_candidates hub stance).
 
-    Output: (start_label, walk_id, walk array<string>, walk_len).
+    Output: (start_label, walk_id, walk array<string>, walk_len) —
+    ``walks_per_node`` rows per graph node.
     """
     from kgx.functions.hashing import spark_md5_60
 
@@ -922,7 +833,8 @@ def node2vec_walks(
             f"node2vec weights must be >= 1 (zero-total draws would stall "
             f"walkers): w_return={w_return} w_near={w_near} w_far={w_far}"
         )
-    adj, cur = _walk_scaffold(triples, walks_per_node, with_prev=True)
+    uniform = w_return == w_near == w_far
+    adj, cur = _walk_scaffold(triples, walks_per_node)
     padj = adj.select(
         F.col("subj").alias("psubj"), F.col("nbrs").alias("pnbrs")
     )
@@ -930,25 +842,13 @@ def node2vec_walks(
         h = spark_md5_60(
             f"concat_ws('|', cur, cast(walk_id as string), '{i}', '{seed}')"
         )
-        if i == 1:
-            # no predecessor: every candidate weighs w_far — the fold
-            # with constant weights reduces to one modular index pick,
-            # and the prev-adjacency join would match nothing
+        stepped = cur.join(adj, F.col("cur") == F.col("subj"), "left")
+        if uniform or i == 1:
+            # every candidate weighs w_far: the fold with constant weights
+            # reduces to one modular index pick, and needs no prev adjacency
             pick = (
                 f"element_at(nbrs, cast((({h}) % "
                 f"(size(nbrs) * {w_far})) div {w_far} as int) + 1)"
-            )
-            stepped = cur.join(
-                adj, F.col("cur") == F.col("subj"), "left"
-            ).select(
-                "start_label",
-                "walk_id",
-                "cur",
-                "prev",
-                "walk",
-                F.expr(
-                    f"CASE WHEN nbrs IS NULL THEN NULL ELSE {pick} END"
-                ).alias("nxt"),
             )
         else:
             weight = (
@@ -957,18 +857,16 @@ def node2vec_walks(
                 f"THEN cast({w_near} as bigint) "
                 f"ELSE cast({w_far} as bigint) END"
             )
-            weighted = (
-                cur.join(adj, F.col("cur") == F.col("subj"), "left")
-                .join(padj, F.col("prev") == F.col("psubj"), "left")
-                .select(
-                    "start_label",
-                    "walk_id",
-                    "cur",
-                    "prev",
-                    "walk",
-                    "nbrs",
-                    F.expr(f"transform(nbrs, x -> {weight})").alias("ws"),
-                )
+            stepped = stepped.join(
+                padj, F.col("prev") == F.col("psubj"), "left"
+            ).select(
+                "start_label",
+                "walk_id",
+                "cur",
+                "prev",
+                "walk",
+                "nbrs",
+                F.expr(f"transform(nbrs, x -> {weight})").alias("ws"),
             )
             pick = (
                 f"aggregate("
@@ -983,17 +881,14 @@ def node2vec_walks(
                 f"    ELSE named_struct('rem', acc.rem - e.w, 'pick', acc.pick) END,"
                 f"  acc -> acc.pick)"
             )
-            stepped = weighted.select(
-                "start_label",
-                "walk_id",
-                "cur",
-                "prev",
-                "walk",
-                F.expr(
-                    f"CASE WHEN nbrs IS NULL THEN NULL ELSE {pick} END"
-                ).alias("nxt"),
-            )
         cur = stepped.select(
+            "start_label",
+            "walk_id",
+            "cur",
+            "prev",
+            "walk",
+            F.expr(f"CASE WHEN nbrs IS NULL THEN NULL ELSE {pick} END").alias("nxt"),
+        ).select(
             "start_label",
             "walk_id",
             F.expr("coalesce(nxt, cur)").alias("cur"),
@@ -1003,4 +898,9 @@ def node2vec_walks(
                 "ELSE array_append(walk, nxt) END"
             ).alias("walk"),
         )
-    return _walk_output(cur)
+    return cur.select(
+        "start_label",
+        "walk_id",
+        "walk",
+        F.expr("cast(size(walk) as bigint)").alias("walk_len"),
+    )

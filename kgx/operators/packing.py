@@ -81,22 +81,32 @@ def seq_pack(docs: DataFrame, capacity: int = 128, n_shards: int = 8) -> DataFra
     One shuffle (hash by shard), then a per-shard window — the global-sort
     trap is avoided by construction.
     """
+    t = with_shard(docs, n_shards)
+    return _pack_window(t, ["doc_id", "shard", "n_tokens"], "n_tokens", capacity)
+
+
+def _pack_window(
+    t: DataFrame, keep: list[str], cost: str, capacity: int
+) -> DataFrame:
+    """The per-shard packing window over (doc_id, shard, ..., ``cost``)
+    rows: a running sum of ``cost`` in doc_id order within each shard
+    places every doc at ``start_tok`` and spans it over sequences
+    ``first_seq..last_seq`` (``n_seqs`` of them) of ``capacity`` tokens.
+    Output: the ``keep`` columns plus (start_tok, first_seq, last_seq,
+    n_seqs)."""
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    t = with_shard(docs, n_shards).withColumn("cum", F.sum("n_tokens").over(w))
-    return t.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        (F.col("cum") - F.col("n_tokens")).alias("start_tok"),
-        F.expr(f"(cum - n_tokens) DIV {capacity}").alias("first_seq"),
+    return t.withColumn("cum", F.sum(cost).over(w)).select(
+        *keep,
+        (F.col("cum") - F.col(cost)).alias("start_tok"),
+        F.expr(f"(cum - {cost}) DIV {capacity}").alias("first_seq"),
         F.expr(f"(cum - 1) DIV {capacity}").alias("last_seq"),
         (
             F.expr(f"(cum - 1) DIV {capacity}")
-            - F.expr(f"(cum - n_tokens) DIV {capacity}")
+            - F.expr(f"(cum - {cost}) DIV {capacity}")
             + F.lit(1)
         ).cast("long").alias("n_seqs"),
     )
@@ -224,24 +234,4 @@ def seq_pack_interleaved(
         "media_spans",
         f"text_tokens + {media_token_cost} * media_spans AS cost",
     ).where(F.col("cost") > 0)
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    t = costed.withColumn("cum", F.sum("cost").over(w))
-    return t.select(
-        "doc_id",
-        "shard",
-        "text_tokens",
-        "media_spans",
-        "cost",
-        (F.col("cum") - F.col("cost")).alias("start_tok"),
-        F.expr(f"(cum - cost) DIV {capacity}").alias("first_seq"),
-        F.expr(f"(cum - 1) DIV {capacity}").alias("last_seq"),
-        (
-            F.expr(f"(cum - 1) DIV {capacity}")
-            - F.expr(f"(cum - cost) DIV {capacity}")
-            + F.lit(1)
-        ).cast("long").alias("n_seqs"),
-    )
+    return _pack_window(costed, costed.columns, "cost", capacity)

@@ -52,26 +52,31 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataFr
     """Exact top-k by quantized cosine.  Queries = vec_id < n_queries
     (deterministic, oracle-reproducible).  Output:
     (query_id, rank, vec_id, cosine) — ties broken by vec_id."""
-    from pyspark.sql.window import Window
-
     base = quantized(embeddings).where(F.col("nrm") > 0)
     qs = base.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("q").alias("qq"),
         F.col("nrm").alias("qnrm"),
     )
-    scored = (
-        base.crossJoin(F.broadcast(qs))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.expr(_dot("qq", "q")).alias("dot"),
-            "qnrm",
-            F.col("nrm").alias("vnrm"),
-        )
-        .withColumn("cosine", F.expr(_COSINE))
+    return _cosine_rank(
+        base.crossJoin(F.broadcast(qs)).where(F.col("vec_id") != F.col("query_id")),
+        k,
     )
+
+
+def _cosine_rank(cands: DataFrame, k: int) -> DataFrame:
+    """Rank (query_id, qq, qnrm, vec_id, q, nrm) candidate rows by exact
+    quantized cosine per query and keep the top ``k``, ties → min vec_id.
+    Output: (query_id, rank, vec_id, cosine)."""
+    from pyspark.sql.window import Window
+
+    scored = cands.select(
+        "query_id",
+        "vec_id",
+        F.expr(_dot("qq", "q")).alias("dot"),
+        "qnrm",
+        F.col("nrm").alias("vnrm"),
+    ).withColumn("cosine", F.expr(_COSINE))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -96,24 +101,38 @@ def auto_centroids(embeddings: DataFrame, target_cell_size: int) -> int:
     return max(1, (n + target_cell_size - 1) // target_cell_size)
 
 
+def _cell_count(
+    embeddings: DataFrame, n_centroids: int | None, target_cell_size: int | None
+) -> int:
+    """The IVF cell count: ``n_centroids`` as given (16 when neither is
+    set), or :func:`auto_centroids` of ``target_cell_size``.  The two are
+    alternatives — setting both raises instead of silently ignoring one."""
+    if target_cell_size is None:
+        return 16 if n_centroids is None else n_centroids
+    if n_centroids is not None:
+        raise ValueError(
+            f"set n_centroids ({n_centroids}) or target_cell_size "
+            f"({target_cell_size}), not both"
+        )
+    return auto_centroids(embeddings, target_cell_size)
+
+
 def assign_cells(
     embeddings: DataFrame,
-    n_centroids: int = 16,
+    n_centroids: int | None = None,
     n_assign: int = 1,
     target_cell_size: int | None = None,
 ) -> DataFrame:
     """IVF cell assignment: centroid = argmax integer dot (ties → min id).
-    Centroids are the first ``n_centroids`` vectors — deterministic without
-    an iterative k-means (at 100 TB you'd train centroids offline and
-    broadcast them the same way).  ``n_assign > 1`` indexes each vector into
-    its top-N cells (multi-probe indexing for the near-dup candidate join).
-    ``target_cell_size`` overrides ``n_centroids`` with the auto-sized
-    ``ceil(N / target)`` (:func:`auto_centroids`) so cells stay bounded as
-    the corpus grows."""
-    if target_cell_size is not None:
-        n_centroids = auto_centroids(embeddings, target_cell_size)
+    Centroids are the first n vectors (n from :func:`_cell_count`) —
+    deterministic without an iterative k-means (at 100 TB you'd train
+    centroids offline and broadcast them the same way).  ``n_assign > 1``
+    indexes each vector into its top-N cells (multi-probe indexing for the
+    near-dup candidate join).  ``target_cell_size`` auto-sizes n to
+    ``ceil(N / target)`` so cells stay bounded as the corpus grows."""
     from pyspark.sql.window import Window
 
+    n_centroids = _cell_count(embeddings, n_centroids, target_cell_size)
     base = quantized(embeddings).where(F.col("nrm") > 0)
     cents = base.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cell"),
@@ -166,44 +185,26 @@ def ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 8,
     k: int = 5,
-    n_centroids: int = 16,
+    n_centroids: int | None = None,
     nprobe: int = 4,
     target_cell_size: int | None = None,
 ) -> DataFrame:
     """IVF search: each query probes its ``nprobe`` best cells, exact rerank
-    inside.  Output schema identical to :func:`cosine_topk`.
-    ``target_cell_size`` auto-sizes the cell count (:func:`auto_centroids`)
-    so per-probe rerank work stays bounded as the corpus grows."""
-    from pyspark.sql.window import Window
-
-    if target_cell_size is not None:
-        n_centroids = auto_centroids(embeddings, target_cell_size)
+    inside.  Output schema identical to :func:`cosine_topk`.  The cell
+    count comes from :func:`_cell_count` — ``target_cell_size`` keeps
+    per-probe rerank work bounded as the corpus grows."""
+    n_centroids = _cell_count(embeddings, n_centroids, target_cell_size)
     cells = assign_cells(embeddings, n_centroids)
     probes = _ivf_probes(embeddings, n_queries, n_centroids, nprobe)
-    scored = (
-        probes.join(cells, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.expr(_dot("qq", "q")).alias("dot"),
-            "qnrm",
-            F.col("nrm").alias("vnrm"),
-        )
-        .withColumn("cosine", F.expr(_COSINE))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int"), "vec_id", "cosine")
+    return _cosine_rank(
+        probes.join(cells, "cell").where(F.col("vec_id") != F.col("query_id")), k
     )
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     min_cosine: float = 0.2,
-    n_centroids: int = 16,
+    n_centroids: int | None = None,
     n_assign: int = 2,
     target_cell_size: int | None = None,
 ) -> DataFrame:
@@ -224,37 +225,22 @@ def embedding_near_dup_pairs(
     survives as :func:`embedding_near_dup_pairs_exact` — the recall oracle in
     tests, not a scale path.
 
-    ``target_cell_size`` auto-sizes ``n_centroids`` (:func:`auto_centroids`)
+    ``target_cell_size`` auto-sizes the cell count (:func:`_cell_count`)
     — the k ∝ N sizing the docstring above REQUIRES is then computed, not
     left to the caller; candidate-pair count stays ~linear in corpus size
     (asserted across two corpus sizes in tests/test_similarity_media.py).
     """
-    if target_cell_size is not None:
-        n_centroids = auto_centroids(embeddings, target_cell_size)
-    idx = assign_cells(embeddings, n_centroids, n_assign).select("vec_id", "cell")
+    idx = assign_cells(embeddings, n_centroids, n_assign, target_cell_size).select(
+        "vec_id", "cell"
+    )
     x, y = idx.alias("x"), idx.alias("y")
     cands = (
         x.join(y, (F.col("x.cell") == F.col("y.cell")) & (F.col("x.vec_id") < F.col("y.vec_id")))
         .select(F.col("x.vec_id").alias("vec_a"), F.col("y.vec_id").alias("vec_b"))
         .distinct()
     )
-    base = quantized(embeddings).where(F.col("nrm") > 0)
-    a = base.select(
-        F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nrm").alias("qnrm")
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nrm").alias("vnrm")
-    )
-    return (
-        cands.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a", "vec_b", F.expr(_dot("qa", "qb")).alias("dot"), "qnrm", "vnrm"
-        )
-        .withColumn("cosine", F.expr(_COSINE))
-        .where(F.col("cosine") >= min_cosine)
-        .select("vec_a", "vec_b", "cosine")
-    )
+    a, b = _pair_sides(embeddings)
+    return _cosine_verify(cands.join(a, "vec_a").join(b, "vec_b"), min_cosine)
 
 
 def embedding_near_dup_pairs_exact(
@@ -263,6 +249,15 @@ def embedding_near_dup_pairs_exact(
     """Exact all-pairs near-duplicates — O(N²), the correctness/recall
     baseline for :func:`embedding_near_dup_pairs`.  Never run this at corpus
     scale; it exists so tests can measure the bucketed variant's recall."""
+    a, b = _pair_sides(embeddings)
+    return _cosine_verify(
+        a.crossJoin(b).where(F.col("vec_a") < F.col("vec_b")), min_cosine
+    )
+
+
+def _pair_sides(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a pair verify: (vec_a, qa, qnrm) and
+    (vec_b, qb, vnrm) over the non-zero quantized vectors."""
     base = quantized(embeddings).where(F.col("nrm") > 0)
     a = base.select(
         F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("nrm").alias("qnrm")
@@ -270,10 +265,14 @@ def embedding_near_dup_pairs_exact(
     b = base.select(
         F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("nrm").alias("vnrm")
     )
+    return a, b
+
+
+def _cosine_verify(pairs: DataFrame, min_cosine: float) -> DataFrame:
+    """(vec_a, vec_b, qa, qb, qnrm, vnrm) candidate pairs → (vec_a, vec_b,
+    cosine) with exact quantized cosine >= ``min_cosine``."""
     return (
-        a.crossJoin(b)
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select(
+        pairs.select(
             "vec_a", "vec_b", F.expr(_dot("qa", "qb")).alias("dot"), "qnrm", "vnrm"
         )
         .withColumn("cosine", F.expr(_COSINE))

@@ -42,22 +42,36 @@ def hll_registers(df: DataFrame, col_expr: str, m: int = 64) -> DataFrame:
     output is m tiny rows an incremental job can merge with element-wise
     ``max`` (see tests/test_sketches.py merge law).
     """
+    return _hll(df, col_expr, m, group_col=None)
+
+
+def _hll(
+    df: DataFrame, col_expr: str, m: int, group_col: str | None
+) -> DataFrame:
+    """The m-register HLL body: (bucket, max_rho), or (grp, bucket,
+    max_rho) per ``group_col`` value.  A register's rank rho is the
+    1-based position of the first set bit of the hash bits left after the
+    bucket bits."""
     if m & (m - 1) or m < 2:
         raise ValueError("m must be a power of two >= 2")
     b = m.bit_length() - 1
     w = HASH_BITS - b
     h = spark_md5_60(col_expr)
+    grp = [] if group_col is None else [f"{group_col} AS grp"]
+    keys = [] if group_col is None else ["grp"]
     return (
         df.selectExpr(
+            *grp,
             f"cast({h} % {m} as bigint) AS bucket",
             f"cast({h} DIV {m} as bigint) AS rest",
         )
         .selectExpr(
+            *keys,
             "bucket",
             f"cast(CASE WHEN rest = 0 THEN {w + 1} "
             f"ELSE {w} - length(bin(rest)) + 1 END as bigint) AS rho",
         )
-        .groupBy("bucket")
+        .groupBy(*keys, "bucket")
         .agg(F.max("rho").alias("max_rho"))
     )
 
@@ -375,23 +389,4 @@ def hll_registers_grouped(
     element-wise max (and across groups by merging their register sets —
     the union's sketch, tested in test_sketches).
     """
-    if m & (m - 1) or m < 2:
-        raise ValueError("m must be a power of two >= 2")
-    b = m.bit_length() - 1
-    w = HASH_BITS - b
-    h = spark_md5_60(col_expr)
-    return (
-        df.selectExpr(
-            f"{group_col} AS grp",
-            f"cast({h} % {m} as bigint) AS bucket",
-            f"cast({h} DIV {m} as bigint) AS rest",
-        )
-        .selectExpr(
-            "grp",
-            "bucket",
-            f"cast(CASE WHEN rest = 0 THEN {w + 1} "
-            f"ELSE {w} - length(bin(rest)) + 1 END as bigint) AS rho",
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("max_rho"))
-    )
+    return _hll(df, col_expr, m, group_col)

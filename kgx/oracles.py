@@ -546,7 +546,7 @@ FROM ranked WHERE rank <= {k}
 def ann_ivf_sql(
     n_queries: int,
     k: int,
-    n_centroids: int | str,
+    n_centroids: int | None,
     nprobe: int,
     target_cell_size: int | None,
 ) -> str:
@@ -591,7 +591,7 @@ FROM ranked WHERE rank <= {k}
 
 def emb_near_dup_sql(
     min_cosine: float,
-    n_centroids: int | str,
+    n_centroids: int | None,
     n_assign: int,
     target_cell_size: int | None,
 ) -> str:
@@ -2157,9 +2157,11 @@ def _walk_base_ctes(
 def _random_walks_ctes(
     length: int = 4, walks_per_node: int = 2, seed: int = 0
 ) -> tuple[str, str]:
-    """CTE chain replaying kgx.operators.graphstats.random_walks on top of
-    ``gr_edges``; returns (chain, final_cte_name) so the walk corpus and
-    the skip-gram pair oracle share one generator."""
+    """CTE chain replaying kgx.operators.graphstats.node2vec_walks with
+    equal weights (uniform DeepWalk steps) on top of ``gr_edges``, written
+    independently of the weighted node2vec oracle; returns (chain,
+    final_cte_name) so the walk corpus and the skip-gram pair oracle share
+    one generator."""
     from kgx.functions.hashing import duckdb_md5_60
 
     ctes = _walk_base_ctes(walks_per_node, w0_name="w0", with_prev=False)
@@ -2183,8 +2185,8 @@ w{i} AS (
 
 def graph_random_walks_sql(length: int, walks_per_node: int, seed: int) -> str:
     """Oracle for the DeepWalk-style walk corpus (mirror of
-    kgx.operators.graphstats.random_walks): the step hash
-    md5_60(cur|walk_id|i|seed) mod out-degree indexes the SAME
+    kgx.operators.graphstats.node2vec_walks with weights 1/1/1): the step
+    hash md5_60(cur|walk_id|i|seed) mod out-degree indexes the SAME
     list_sort'ed adjacency array (binary string order in both engines),
     one unrolled CTE per step, so every walk matches element-for-element."""
     chain, final = _random_walks_ctes(length, walks_per_node, seed)

@@ -20,7 +20,9 @@ is what we'd ship in ``spark-defaults.conf`` for a 1000-executor job:
 
 from __future__ import annotations
 
+import argparse
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +33,20 @@ ANSWER_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "true",
 }
+
+
+def at_least(low: int) -> Callable[[str], int]:
+    """argparse ``type=`` for a job's int flag bounded below by ``low``: a
+    smaller value is a usage error (exit 2, naming the flag and the value)
+    raised while parsing, before any Spark session starts."""
+
+    def bounded_int(text: str) -> int:
+        value = int(text)
+        if value < low:
+            raise argparse.ArgumentTypeError(f"must be >= {low}, got {value}")
+        return value
+
+    return bounded_int
 
 
 def default_parallelism() -> int:

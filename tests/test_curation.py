@@ -128,6 +128,16 @@ def test_sentence_prune_keeps_first_occurrence(spark):
     assert out[3]["n_sentences"] == 1
 
 
+def test_sentence_prune_rejects_a_document_over_the_key_bound(spark):
+    """The order key is doc_id * 2^20 + idx: sentence 2^20 of doc 1 would
+    take doc 2's first key, so a document that long raises instead."""
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["a. " * ((1 << 20) + 1), "b."]})
+    )
+    with pytest.raises(Exception, match=r"2\^20 sentences or more"):
+        curation.sentence_prune(docs).collect()
+
+
 def test_sentence_split_matches_oracle_split(spark):
     """Spark's ``_SENT_EXPR`` and the oracle's ``_DUCK_SENTS`` cut the same
     pieces, including dots inside tokens, dot runs, line breaks and the

@@ -578,8 +578,10 @@ def test_training_pairs_filters_cross_triple_collisions(spark):
 
 
 # ---------------------------------------------------------------------------
-# random_walks — DeepWalk-style deterministic walk corpus
+# random walks — node2vec_walks with equal weights is the DeepWalk corpus
 # ---------------------------------------------------------------------------
+
+UNIFORM = dict(w_return=1, w_near=1, w_far=1)
 
 
 def _py_random_walks(edges, length=4, walks_per_node=2, seed=0):
@@ -615,16 +617,16 @@ def test_random_walks_match_reference_on_random_graph(spark, seed):
     edges = [(u, v) for u, v in {(rng.choice(labels), rng.choice(labels))
                                  for _ in range(80)} if u != v]
     got = {(r.start_label, r.walk_id): list(r.walk)
-           for r in graphstats.random_walks(
+           for r in graphstats.node2vec_walks(
                _triples_df(spark, edges), length=5, walks_per_node=3,
-               seed=seed).collect()}
+               seed=seed, **UNIFORM).collect()}
     assert got == _py_random_walks(edges, length=5, walks_per_node=3, seed=seed)
 
 
 def test_random_walks_laws(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("c", "d")]
-    rows = graphstats.random_walks(
-        _triples_df(spark, edges), length=6, walks_per_node=2
+    rows = graphstats.node2vec_walks(
+        _triples_df(spark, edges), length=6, walks_per_node=2, **UNIFORM
     ).collect()
     eset = set(edges)
     nodes = {u for u, _ in edges} | {v for _, v in edges}
@@ -644,10 +646,11 @@ def test_random_walks_laws(spark):
 
 def test_random_walks_validates(spark):
     with pytest.raises(ValueError):
-        graphstats.random_walks(_triples_df(spark, [("a", "b")]), length=0)
+        graphstats.node2vec_walks(
+            _triples_df(spark, [("a", "b")]), length=0, **UNIFORM)
     with pytest.raises(ValueError):
-        graphstats.random_walks(
-            _triples_df(spark, [("a", "b")]), walks_per_node=0)
+        graphstats.node2vec_walks(
+            _triples_df(spark, [("a", "b")]), walks_per_node=0, **UNIFORM)
 
 
 def _py_skipgram(walks, window=2):
@@ -668,8 +671,9 @@ def test_walk_skipgram_matches_reference(spark, seed):
     labels = [f"n{i}" for i in range(20)]
     edges = [(u, v) for u, v in {(rng.choice(labels), rng.choice(labels))
                                  for _ in range(60)} if u != v]
-    walks_df = graphstats.random_walks(
-        _triples_df(spark, edges), length=5, walks_per_node=2, seed=seed)
+    walks_df = graphstats.node2vec_walks(
+        _triples_df(spark, edges), length=5, walks_per_node=2, seed=seed,
+        **UNIFORM)
     got = {(r.center, r.context): r.n_pairs
            for r in graphstats.walk_skipgram_pairs(walks_df, window=2).collect()}
     ref = _py_skipgram(
@@ -736,8 +740,9 @@ def test_run_embedding_prep_job_over_pipeline_output(spark, prep_graph, tmp_path
 
     triples = pipeline.read_output(spark, graph_out, "triples")
     direct_walks = {(r.start_label, r.walk_id): list(r.walk)
-                    for r in graphstats.random_walks(
-                        triples, length=4, walks_per_node=2).collect()}
+                    for r in graphstats.node2vec_walks(
+                        triples, length=4, walks_per_node=2,
+                        **UNIFORM).collect()}
     materialized = {(r.start_label, r.walk_id): list(r.walk)
                     for r in spark.read.parquet(prep_out + "/walks").collect()}
     assert materialized == direct_walks
@@ -957,6 +962,32 @@ def test_node2vec_matches_reference(spark, seed):
                _triples_df(spark, edges), length=5, walks_per_node=2,
                seed=seed, w_return=1, w_near=4, w_far=2).collect()}
     assert got == _py_node2vec(edges, length=5, walks_per_node=2, seed=seed)
+    # equal weights above 1: the uniform pick (h % (deg·w)) div w, which
+    # is not h % deg
+    got = {(r.start_label, r.walk_id): list(r.walk)
+           for r in graphstats.node2vec_walks(
+               _triples_df(spark, edges), length=5, walks_per_node=2,
+               seed=seed, w_return=3, w_near=3, w_far=3).collect()}
+    assert got == _py_node2vec(edges, length=5, walks_per_node=2, seed=seed,
+                               w_return=3, w_near=3, w_far=3)
+    assert got != _py_random_walks(edges, length=5, walks_per_node=2, seed=seed)
+
+
+def test_node2vec_uniform_walk_skips_the_prev_join(spark):
+    """A uniform walk of length L joins the frontier against the adjacency
+    table once per step (L - 1 joins); a biased walk adds the prev
+    adjacency join on every step after the first.  Counted in the plan
+    as built, before the optimizer drops joins whose columns go unread."""
+    triples = _triples_df(spark, [("a", "b"), ("b", "c"), ("c", "a")])
+
+    def joins(**weights):
+        walks = graphstats.node2vec_walks(triples, length=5, **weights)
+        return walks._jdf.queryExecution().analyzed().toString().count(
+            "Join LeftOuter")
+
+    assert joins(w_return=1, w_near=1, w_far=1) == 4
+    assert joins(w_return=2, w_near=2, w_far=2) == 4
+    assert joins(w_return=1, w_near=4, w_far=2) == 4 + 3
 
 
 def test_node2vec_walks_follow_edges_and_stop_at_sinks(spark):

@@ -125,6 +125,16 @@ def test_auto_sizing_keeps_candidate_pairs_linear(spark):
     assert n_large_fixed / n_small > ratio, (n_large_fixed, n_large)
 
 
+def test_cell_count_takes_one_sizing(spark):
+    """``n_centroids`` and ``target_cell_size`` are alternatives: every IVF
+    entry point rejects both at once instead of ignoring one."""
+    emb = _synth_emb(spark, 40)
+    for op in (similarity.assign_cells, similarity.ivf_topk,
+               similarity.embedding_near_dup_pairs):
+        with pytest.raises(ValueError, match="not both"):
+            op(emb, n_centroids=4, target_cell_size=10)
+
+
 def test_media_inventory_and_decode_stub(spark, sf_dir):
     sp = docs_src.spans_table(
         corpus.narrative_documents(docs_src.load_documents(spark, sf_dir))

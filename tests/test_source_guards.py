@@ -1,5 +1,6 @@
-"""Source-level guards: one pin policy, no def that only tests reach, oracle
-builders without defaults, and a packaged zip that matches kgx/."""
+"""Source-level guards: one pin policy, one in-row pair enumeration, no def
+that only tests reach, oracle builders without defaults, and a packaged zip
+that matches kgx/."""
 
 import ast
 import collections
@@ -46,6 +47,19 @@ def test_local_checkpoint_only_inside_plan_materialize():
         rel = path.relative_to(ROOT).as_posix()
         sites += [(rel, fn) for fn, attr in calls if attr == "localCheckpoint"]
     assert sites == [("kgx/functions/plan.py", "materialize")]
+
+
+def test_unordered_pairs_only_inside_the_array_helper():
+    """The in-row unordered-pair enumeration (each element against the
+    slice after it) is written once, in
+    ``kgx.functions.arrays.unordered_pairs``; operators call it."""
+    pattern = re.compile(r"slice\([^,()]+, i \+ 2, size\(")
+    sites = []
+    for path in _sources():
+        text = path.read_text()
+        rel = path.relative_to(ROOT).as_posix()
+        sites += [rel] * len(pattern.findall(text))
+    assert sites == ["kgx/functions/arrays.py"]
 
 
 def test_no_per_call_pin_switches():

@@ -128,10 +128,12 @@ SECTIONS = [
      "TakeOrderedAndProject, and the rank window runs over the "
      "already-limited k rows."),
     ("graph_random_walks",
-     "Round 5 (DeepWalk walk corpus): length−1 unrolled steps, each ONE "
-     "label equi-join of the walk frontier against the lazy adjacency "
-     "aggregate (every step probes the same exchange, which Spark "
-     "reuses); the distinct edge list below is localCheckpointed so the "
+     "Round 5 (DeepWalk walk corpus: node2vec_walks with equal weights, "
+     "so no step joins the predecessor's adjacency): length−1 unrolled "
+     "steps, each ONE label equi-join of the walk frontier against the "
+     "lazy adjacency aggregate (every step probes the same exchange, "
+     "which Spark reuses); the distinct edge list below is "
+     "localCheckpointed so the "
      "extraction subtree runs once; frontier rows carry only labels and "
      "a ≤ length-string array."),
     ("walk_skipgram_pairs",
