@@ -174,8 +174,9 @@ def sentence_prune(documents: DataFrame) -> DataFrame:
     sentence away immediately (keeping only ``(doc_id, idx, h)`` bigints), the
     first-occurrence aggregate and the keep-key join shuffle pure bigints, and
     the surviving 0-based index *array* joins back to the one-row-per-document
-    table where a position-aware higher-order ``filter`` rebuilds the text
-    map-side.  The only exchange touching text is that final doc_id equi-join.
+    table, where a ``transform`` over the sorted indices gathers the kept
+    sentences map-side in O(kept) per document.  The only exchange touching
+    text is that final doc_id equi-join.
 
     Order key: ``k = doc_id * 2^20 + idx`` — one bigint both engines compare
     identically, avoiding cross-engine struct-ordering semantics.  It is
@@ -215,10 +216,7 @@ def sentence_prune(documents: DataFrame) -> DataFrame:
             F.size("sents").cast("long").alias("n_sentences"),
             F.coalesce(F.size("kept_idx"), F.lit(0)).cast("long").alias("n_kept"),
             F.array_join(
-                F.expr(
-                    "filter(sents, (s, i) -> array_contains("
-                    "coalesce(kept_idx, array()), i))"
-                ),
+                F.expr("transform(coalesce(kept_idx, array()), i -> sents[i])"),
                 ". ",
             ).alias("pruned_text"),
         )

@@ -337,7 +337,7 @@ def near_dup_clusters(
 
         (doc_id, canonical_doc_id, cluster_size, is_duplicate)
 
-    with ``canonical_doc_id`` = lexicographic min doc_id of the cluster,
+    with ``canonical_doc_id`` = minimum doc_id of the cluster,
     singletons mapping to themselves, ``is_duplicate`` marking the rows a
     keep-one policy would drop.
 

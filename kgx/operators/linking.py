@@ -22,8 +22,11 @@ the north star adds:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 from kgx.functions.plan import materialize
 
@@ -113,9 +116,11 @@ def connected_components(
     edges: DataFrame, max_iter: int = 25, driver_threshold: int = 500_000
 ) -> DataFrame:
     """(src_label, dst_label) undirected edges → (label, component) where
-    ``component`` is the lexicographic minimum label of the component.
+    ``component`` is the minimum label of the component in the labels' own
+    order (lexicographic for strings, numeric for bigint doc ids).
 
-    Adaptive strategy (both paths produce identical output):
+    Adaptive strategy (both paths return the same rows with the same
+    schema: both columns keep the edge columns' type):
 
     - ``|edges| <= driver_threshold``: collect + union-find on the driver.
       500 k edges is about 50 MB of collected label strings at ~100 B/edge,
@@ -141,7 +146,7 @@ def connected_components(
     if driver_threshold > 0:
         sample = e.limit(driver_threshold + 1).collect()
         if len(sample) <= driver_threshold:
-            return _driver_union_find(edges.sparkSession, sample)
+            return _driver_union_find(edges.sparkSession, sample, e.schema["u"])
 
     def _checksum(df: DataFrame):
         row = df.agg(
@@ -187,8 +192,10 @@ def connected_components(
     return members.union(roots).distinct()
 
 
-def _driver_union_find(spark, edge_rows) -> DataFrame:
-    """Small-graph path: classic union-find, component = min label."""
+def _driver_union_find(spark, edge_rows, label: StructField) -> DataFrame:
+    """Small-graph path: classic union-find, component = min label.  Both
+    output columns take ``label``'s type, and the frame is built from
+    Arrow (a local scan, no Python worker)."""
     parent: dict = {}
 
     def find(x):
@@ -209,8 +216,14 @@ def _driver_union_find(spark, edge_rows) -> DataFrame:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
 
-    out = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(out, "label string, component string")
+    schema = StructType([
+        StructField(name, label.dataType, label.nullable) for name in ("label", "component")
+    ])
+    out = pa.Table.from_pydict(
+        {"label": list(parent), "component": [find(x) for x in parent]},
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(out, schema)
 
 
 def canonical_map(

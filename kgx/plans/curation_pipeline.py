@@ -22,8 +22,10 @@ Stages 1–4 are one ordered table (:func:`_stages`) and stage 5 is
 :func:`funnel_final` (the lazy gate-query view) both walk them, pinning the
 input and every stage boundary with an eager local checkpoint
 (:func:`kgx.functions.plan.materialize`) of (doc_id, text), plus the pii
-stage's redaction count.  So the funnel metrics cost no recomputation and
-each stage's plan starts from a short leaf scan.  Output: ``curated/``
+stage's redaction count.  So each stage's plan starts from a short leaf
+scan.  :func:`run` reads every funnel count from the checkpoint job that
+pins the boundary (a ``DataFrame.observe`` on the pinned frame), so the
+metrics cost no job of their own.  Output: ``curated/``
 parquet (doc_id, text) plus a one-row ``funnel`` table of per-stage
 document counts — the number a 100 TB curation run reports to its
 operators.
@@ -40,7 +42,8 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgx.functions.plan import materialize, release
@@ -181,7 +184,9 @@ def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
     and ``funnel/`` under ``cfg.out_dir`` and returns the metrics.
 
     Walks the same :func:`_stages` table as :func:`funnel_final`, pinning
-    the input and every stage boundary, then counts each.  With
+    the input and every stage boundary.  Each boundary's document count,
+    and the pii stage's redaction sum, are observed in the checkpoint job
+    that pins it: no count runs a job of its own.  With
     ``cfg.resume``, every stage commits its survivor snapshot
     (``stages/<name>`` parquet, (doc_id, text) only) and then appends a
     funnel-lineage row; a restarted run loads the snapshot of the longest
@@ -200,31 +205,34 @@ def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
     pinned: list[DataFrame] = []
     funnel: dict[str, int] = {}
 
-    def _pin(df: DataFrame) -> DataFrame:
-        df = materialize(df)
+    def _pin(df: DataFrame) -> tuple[DataFrame, dict]:
+        """Pin ``df`` and return it with the boundary's numbers, observed
+        in the checkpoint job itself: ``n_docs``, plus ``n_pii`` (the
+        redaction sum) when the stage carries it."""
+        seen = Observation()
+        metrics = [F.count(F.lit(1)).alias("n_docs")]
+        if "n_pii" in df.columns:
+            metrics.append(F.coalesce(F.sum("n_pii"), F.lit(0)).alias("n_pii"))
+        df = materialize(df.observe(seen, *metrics))
         pinned.append(df)
-        return df
+        return df, seen.get
 
     try:
-        docs = _pin(documents)
-        funnel["input"] = docs.count()
+        docs, seen = _pin(documents)
+        funnel["input"] = seen["n_docs"]
         funnel["pii_redactions"] = 0
         for stage, metric, _ in stages[:n_done]:
             funnel[metric] = int(done[stage]["n_docs"])
             funnel["pii_redactions"] += int(done[stage]["n_pii"])
         if n_done:
-            docs = _pin(spark.read.parquet(
+            docs, _ = _pin(spark.read.parquet(
                 _stage_snapshot_path(cfg.out_dir, stages[n_done - 1][0])
             ))
 
         for stage, metric, build in stages[n_done:]:
-            survivors = _pin(build(docs))
-            funnel[metric] = survivors.count()
-            n_pii = 0
-            if "n_pii" in survivors.columns:
-                n_pii = int(survivors.agg(
-                    F.coalesce(F.sum("n_pii"), F.lit(0))
-                ).collect()[0][0])
+            survivors, seen = _pin(build(docs))
+            funnel[metric] = seen["n_docs"]
+            n_pii = seen.get("n_pii", 0)
             funnel["pii_redactions"] += n_pii
             docs = survivors.select("doc_id", "text")
             if cfg.resume:
@@ -237,10 +245,12 @@ def run(spark: SparkSession, documents: DataFrame, cfg: CurationConfig) -> dict:
                       "n_pii": n_pii, "finished_at": datetime.now(timezone.utc)}],
                 )
 
-        final = _pin(_final(docs, cfg))
-        funnel["final_docs"] = final.count()
+        final, seen = _pin(_final(docs, cfg))
+        funnel["final_docs"] = seen["n_docs"]
         final.write.mode("overwrite").parquet(os.path.join(cfg.out_dir, "curated"))
-        spark.createDataFrame([funnel]).coalesce(1).write.mode("overwrite").parquet(
+        # one row, columns in name order, built from Arrow on the driver
+        row = pa.Table.from_pylist([dict(sorted(funnel.items()))])
+        spark.createDataFrame(row).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(cfg.out_dir, "funnel")
         )
     finally:

@@ -33,6 +33,7 @@ from datetime import datetime, timezone
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Schemes that NEED (and support) the dot-temp + atomic-rename protocol:
 #: HDFS-family filesystems expose in-progress files with growing length, so
@@ -73,7 +74,18 @@ def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame([], schema)
+        struct = StructType.fromDDL(schema)
+        return spark.createDataFrame(_arrow_rows([], struct), struct)
+
+
+def _arrow_rows(rows: list[dict], struct: StructType):
+    """``rows`` (dicts keyed by column) as a pyarrow Table of the Spark
+    schema ``struct``.  A frame built from it is a local scan, with no
+    Python worker to unpickle the rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -136,14 +148,9 @@ def append_rows(out_dir: str, subdir: str, schema: str, rows: list[dict]) -> Non
     copy+delete, Azure flat-namespace accounts where rename raises)."""
     import uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
-    tbl = pa.Table.from_pylist(
-        rows, schema=to_arrow_schema(StructType.fromDDL(schema))
-    )
+    tbl = _arrow_rows(rows, StructType.fromDDL(schema))
     fname = f"part-{uuid.uuid4().hex}.parquet"
     scheme = out_dir.split("://", 1)[0] if "://" in out_dir else ""
     if scheme in ("", "file"):

@@ -37,32 +37,28 @@ PII_DOC = (
 )
 
 
+FUNNEL_ROWS = [
+    (1, GOOD),
+    (2, GOOD),  # exact dup of doc 1
+    (3, GOOD.replace("quarter", "month")),  # one-token change: near-dup of doc 1
+    (4, GOOD2),
+    (5, PII_DOC),
+    (6, "too short"),  # quality-gate kill
+    (7, GOOD2),  # exact dup of doc 4
+]
+
+
 @pytest.fixture(scope="module")
 def funnel_result(spark):
-    near_dup = GOOD.replace("quarter", "month")  # one-token change: near-dup of GOOD
-    rows = [
-        (1, GOOD),
-        (2, GOOD),  # exact dup of doc 1
-        (3, near_dup),  # near-dup of doc 1
-        (4, GOOD2),
-        (5, PII_DOC),
-        (6, "too short"),  # quality-gate kill
-        (7, GOOD2),  # exact dup of doc 4
-    ]
-    documents = spark.createDataFrame(rows, "doc_id long, text string")
+    documents = spark.createDataFrame(FUNNEL_ROWS, "doc_id long, text string")
     out = tempfile.mkdtemp(prefix="kgx_curation_")
-    metrics = run(
-        spark,
-        documents,
-        CurationConfig(
-            out_dir=out,
-            min_tokens=20,
-            near_dup_threshold=0.5,
-            quality_kwargs={"max_symbol_ratio": 0.2},
-        ),
-    )
+    metrics = run(spark, documents, _resume_cfg(out, resume=False))
     yield spark, out, metrics
     shutil.rmtree(out, ignore_errors=True)
+
+
+def _no_count(self):
+    raise AssertionError("a funnel boundary ran a count job of its own")
 
 
 def test_funnel_counts_monotone_and_exact(funnel_result):
@@ -76,6 +72,18 @@ def test_funnel_counts_monotone_and_exact(funnel_result):
     order = ["input", "after_quality", "after_exact_dedup", "after_near_dup", "final_docs"]
     vals = [m[k] for k in order]
     assert vals == sorted(vals, reverse=True)
+
+
+def test_funnel_counts_come_from_the_checkpoint_pass(funnel_result, monkeypatch, tmp_path):
+    # each boundary is counted by the checkpoint job that pins it: with
+    # DataFrame.count raising, run returns the same funnel, and the pii
+    # stage's redaction sum exactly (email + phone + ip in doc 5)
+    spark, _, m = funnel_result
+    documents = spark.createDataFrame(FUNNEL_ROWS, "doc_id long, text string")
+    monkeypatch.setattr(type(documents), "count", _no_count)
+    got = run(spark, documents, _resume_cfg(str(tmp_path), resume=False))
+    assert got == m
+    assert got["pii_redactions"] == 3
 
 
 def test_curated_output_round_trip(funnel_result):
@@ -268,6 +276,27 @@ def test_funnel_resume_skips_committed_stages(spark):
         assert ids == {1, 3, 5}
     finally:
         _sh.rmtree(out, ignore_errors=True)
+
+
+def test_funnel_resume_commits_observed_counts(spark, tmp_path, monkeypatch):
+    # the committed funnel-lineage rows carry the counts the checkpoint
+    # pass observed, with no count job of their own
+    from kgx.plans.curation_pipeline import read_stage_lineage
+
+    rows = [(1, GOOD), (2, GOOD), (3, GOOD2), (5, PII_DOC)]
+    documents = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(type(documents), "count", _no_count)
+    run(spark, documents, _resume_cfg(str(tmp_path)))
+    committed = {
+        stage: (r["metric"], r["n_docs"], r["n_pii"])
+        for stage, r in read_stage_lineage(spark, str(tmp_path)).items()
+    }
+    assert committed == {
+        "quality": ("after_quality", 4, 0),
+        "exact_dedup": ("after_exact_dedup", 3, 0),
+        "near_dup": ("after_near_dup", 3, 0),
+        "pii": ("after_pii", 3, 3),
+    }
 
 
 def test_funnel_resume_mid_death_converges_to_clean_run(spark):

@@ -4,6 +4,7 @@ near-duplicates, connected components on known graph shapes."""
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kgx.operators import linking
 
@@ -38,16 +39,27 @@ def test_alias_edges_share_stem(spark):
             [("a", "b"), ("x", "y"), ("y", "w")],
             {"a": "a", "b": "a", "x": "w", "y": "w", "w": "w"},
         ),
+        # bigint labels (near-dup doc ids): numeric minimum, 9 < 10 < 100
+        ([(10, 9), (9, 100), (7, 8)], {10: 9, 9: 9, 100: 9, 7: 7, 8: 7}),
     ],
 )
 @pytest.mark.parametrize("threshold", [2_000_000, 0], ids=["driver", "distributed"])
 def test_connected_components_shapes(spark, edges, expected, threshold):
-    df = spark.createDataFrame(edges, "src_label string, dst_label string")
-    got = {
-        r["label"]: r["component"]
-        for r in linking.connected_components(df, driver_threshold=threshold).collect()
-    }
+    kind = "bigint" if isinstance(edges[0][0], int) else "string"
+    df = spark.createDataFrame(edges, f"src_label {kind}, dst_label {kind}")
+    comp = linking.connected_components(df, driver_threshold=threshold)
+    got = {r["label"]: r["component"] for r in comp.collect()}
     assert got == expected
+    # both paths keep the edges' label type, so their schemas agree
+    assert comp.schema == StructType.fromDDL(f"label {kind}, component {kind}")
+
+
+def test_driver_union_find_builds_no_python_rdd(spark):
+    # the union-find result is an Arrow local scan: no pickled rows, no
+    # Python worker
+    df = spark.createDataFrame([("a", "b"), ("b", "c")], "src_label string, dst_label string")
+    comp = linking.connected_components(df, driver_threshold=100)
+    assert "PythonRDD" not in comp._jdf.queryExecution().toRdd().toDebugString()
 
 
 def test_connected_components_giant_component(spark):

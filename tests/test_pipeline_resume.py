@@ -7,6 +7,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kgx.plans import lineage as lin
 from kgx.plans import pipeline
@@ -321,6 +322,15 @@ def test_unreadable_lineage_raises(spark):
             lin.read_lineage(spark, "nosuchfs://bucket/out")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_missing_lineage_reads_as_an_arrow_scan(spark, tmp_path):
+    # the empty table of a fresh out_dir is built from Arrow on the driver:
+    # the lineage DDL's schema, no rows, no PythonRDD
+    empty = lin.read_lineage(spark, str(tmp_path))
+    assert empty.schema == StructType.fromDDL(lin.LINEAGE_SCHEMA)
+    assert empty.collect() == []
+    assert "PythonRDD" not in empty._jdf.queryExecution().toRdd().toDebugString()
 
 
 @pytest.mark.parametrize(

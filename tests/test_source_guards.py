@@ -1,6 +1,6 @@
-"""Source-level guards: one pin policy, one in-row pair enumeration, no def
-that only tests reach, oracle builders without defaults, and a packaged zip
-that matches kgx/."""
+"""Source-level guards: one pin policy, driver-built frames from Arrow, one
+in-row pair enumeration, no def that only tests reach, oracle builders
+without defaults, and a packaged zip that matches kgx/."""
 
 import ast
 import collections
@@ -47,6 +47,39 @@ def test_local_checkpoint_only_inside_plan_materialize():
         rel = path.relative_to(ROOT).as_posix()
         sites += [(rel, fn) for fn, attr in calls if attr == "localCheckpoint"]
     assert sites == [("kgx/functions/plan.py", "materialize")]
+
+
+def test_driver_built_frames_come_from_arrow():
+    """No ``createDataFrame`` in ``kgx/`` takes a Python list, tuple or
+    comprehension as its data, directly or through a name its scope binds
+    to one: those rows are pickled through a ``PythonRDD`` and start Python
+    workers, where a pyarrow Table is a local scan."""
+    python_rows = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp)
+    sites = set()
+    for path in sorted((ROOT / "kgx").rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        for scope in ast.walk(tree):
+            if not isinstance(scope, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            bound = collections.defaultdict(list)
+            calls = []
+            for node in ast.walk(scope):
+                if isinstance(node, ast.Assign):
+                    for target in node.targets:
+                        if isinstance(target, ast.Name):
+                            bound[target.id].append(node.value)
+                if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame"):
+                    calls.append(node)
+            for call in calls:
+                data = call.args[0] if call.args else next(
+                    (k.value for k in call.keywords if k.arg == "data"), None
+                )
+                values = bound[data.id] if isinstance(data, ast.Name) else [data]
+                if any(isinstance(v, python_rows) for v in values):
+                    sites.add((rel, call.lineno))
+    assert sorted(sites) == []
 
 
 def test_unordered_pairs_only_inside_the_array_helper():

@@ -47,10 +47,13 @@ SECTIONS = [
     ("dedup_clusters",
      "Corpus keep-one dedup: LSH-bucketed pair graph (skew-capped band "
      "join), connected components over pairs only, then a doc_id equi-join "
-     "back to the corpus — no CartesianProduct at any stage.  Round 4: the "
-     "hashed-shingle table is localCheckpointed once (an ExistingRDD scan "
-     "below) and feeds the signature aggregate plus both verification join "
-     "sides — the tokenize+shingle+md5 pass runs once, not three times."),
+     "back to the corpus — no CartesianProduct at any stage.  The pair graph "
+     "is small here, so union-find runs on the driver and returns an Arrow "
+     "local table in the doc_id type: the join back broadcasts it, with no "
+     "cast.  Round 4: the hashed-shingle table is localCheckpointed once and "
+     "feeds the signature aggregate plus both verification join sides (in "
+     "the pair job, before this plan) — the tokenize+shingle+md5 pass runs "
+     "once, not three times."),
     ("media_decode_real",
      "LIVE image decode (round 4): blob synthesis and the stdlib BMP/PPM "
      "parse are two MapInPandas nodes in one pipelined stage over a "
