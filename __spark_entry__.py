@@ -28,9 +28,8 @@ from kgx import oracles as O
 from kgx.functions import hashing
 from kgx.functions.plan import materialize
 from kgx.operators import (
-    clustering, curation, dedup, extract, graphstats, indexing, jsonio, linking,
-    media, packing, security, similarity, sketches, spans as spans_op, temporal,
-    textstats, validate,
+    curation, dedup, extract, graphstats, jsonio, linking, media, packing,
+    security, spans as spans_op, textstats, validate,
 )
 from kgx.plans import versions
 from kgx.plans.curation_pipeline import (
@@ -63,13 +62,6 @@ def _location(spark: SparkSession, sf_dir: str) -> tuple[SparkSession, str]:
 def _table(name: str) -> Callable[[SparkSession, str], DataFrame]:
     """One sf-dir table as scanned: a single split per file."""
     return lambda spark, sf_dir: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    """One sf-dir table spread across cores (``spread_small_scan``)."""
-    return lambda spark, sf_dir: docs_src.spread_small_scan(
-        spark, _table(name)(spark, sf_dir)
-    )
 
 
 def _then(src: Callable, op: Callable) -> Callable[[SparkSession, str], DataFrame]:
@@ -130,9 +122,6 @@ _image_blobs = _then(_media, media.synthesize_media_blobs)
 _audio_blobs = _then(_media, media.synthesize_audio_blobs)
 _video_blobs = _then(_media, media.synthesize_video_blobs)
 _events = _table("events")
-_spread_events = _spread("events")
-_embeddings = _table("embeddings")
-_spread_embeddings = _spread("embeddings")
 
 
 # ---------------------------------------------------------------------------
@@ -254,80 +243,6 @@ def q_balanced_sample(docs: DataFrame) -> DataFrame:
     """Balance-to-minority sampling over the domain fixture strata."""
     strata = docs.selectExpr("doc_id", curation.DOMAIN_FIXTURE_EXPR + " AS stratum")
     return curation.balanced_sample(docs, strata)
-
-
-def _bench_bloom(sh: DataFrame, bench_mod: int, m_bits: int, k: int) -> DataFrame:
-    bench = sh.where(F.col("doc_id") % bench_mod == 0)
-    return sketches.bloom_registers(
-        bench, "shingle_hash", m_bits=m_bits, k=k, pre_hashed=True
-    )
-
-
-def q_bloom_registers(
-    docs: DataFrame, bench_mod: int, n: int, m_bits: int, k: int
-) -> DataFrame:
-    """Bloom-filter bitmap of the benchmark slice's shingle hashes."""
-    return _bench_bloom(dedup.shingle_table(docs, n=n), bench_mod, m_bits, k)
-
-
-def q_bloom_contamination(
-    docs: DataFrame, bench_mod: int, n: int, m_bits: int, k: int
-) -> DataFrame:
-    """Every train shingle probes the benchmark bitmap: a superset of the
-    exact ``contamination`` screen's hits."""
-    sh = dedup.shingle_table(docs, n=n)
-    regs = _bench_bloom(sh, bench_mod, m_bits, k)
-    return sketches.bloom_probe(
-        sh.where(F.col("doc_id") % bench_mod != 0), regs, m_bits=m_bits, k=k
-    )
-
-
-def q_asof_last_click(ev: DataFrame) -> DataFrame:
-    """For every purchase, the user's latest click at-or-before it.  Both
-    sides pre-dedup per (user_id, ts) by max event_id so tie semantics are
-    engine-independent; the oracle uses DuckDB's native ASOF JOIN."""
-    one = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    ev = (
-        ev.withColumn("__rn", F.row_number().over(one))
-        .where("__rn = 1")
-        .drop("__rn")
-    )
-    purchases = ev.where("event_type = 'purchase'").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
-    )
-    clicks = ev.where("event_type = 'click'").select(
-        "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-    )
-    return temporal.asof_join(
-        purchases,
-        clicks,
-        key="user_id",
-        left_ts="purchase_ts",
-        right_ts="click_ts",
-        payload=["click_id", "click_ts"],
-        how="inner",
-    )
-
-
-def q_range_clicks_before_purchase(ev: DataFrame) -> DataFrame:
-    """Every click within 24 h before each purchase; the oracle is the plain
-    inequality join."""
-    purchases = ev.where("event_type = 'purchase'").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
-    )
-    clicks = ev.where("event_type = 'click'").select(
-        "user_id", F.col("ts").alias("click_ts2"), F.col("event_id").alias("click_id")
-    )
-    out = temporal.range_join_binned(
-        purchases,
-        clicks.withColumnRenamed("click_ts2", "ts"),
-        key="user_id",
-        left_ts="purchase_ts",
-        right_ts="ts",
-        window_sec=86400,
-        payload=["click_id"],
-    )
-    return out.select("user_id", "purchase_id", "purchase_ts", "click_id")
 
 
 # --- JSON ops / validation / CSV-prose (SURVEY §2.4, §2.2 P7-P9, §2.1 S5) --
@@ -591,46 +506,6 @@ def q_pricing_summary(li: DataFrame) -> DataFrame:
     )
 
 
-def q_a8_event_value_quantiles(ev: DataFrame) -> DataFrame:
-    """Exact per-group quantiles (median/p90 via Spark's exact `percentile`,
-    matching DuckDB's quantile_cont linear interpolation bit-for-bit on the
-    same doubles), quantized to micro-units for the value hash.  Partial
-    aggregation does NOT apply to exact percentiles — the group's values
-    must co-locate — which is why the group key (event_type, 5 values) must
-    be low-cardinality relative to the corpus; for high-cardinality keys
-    use approx_percentile instead (not oracle-comparable)."""
-    return ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.expr("cast(round(min(value) * 1000000) as bigint)").alias("min_u"),
-        F.expr("cast(round(max(value) * 1000000) as bigint)").alias("max_u"),
-        F.expr("cast(round(percentile(value, 0.5) * 1000000) as bigint)").alias("p50_u"),
-        F.expr("cast(round(percentile(value, 0.9) * 1000000) as bigint)").alias("p90_u"),
-    )
-
-
-def q_a9_rollup_order_stats(o: DataFrame) -> DataFrame:
-    """Multi-dimensional rollup (status × priority → status → grand total)
-    in one pass — Spark's Expand feeds a single partially-aggregated
-    shuffle; integer cents keep the sums engine-exact.  NULL grouping
-    columns are the rollup subtotal markers, coalesced to '∅' so the
-    cross-engine hash compare is unambiguous."""
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.expr(
-                "cast(sum(cast(round(o_totalprice * 100) as bigint)) as bigint)"
-            ).alias("price_cents"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("∅")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("∅")).alias("priority"),
-            "n_orders",
-            "price_cents",
-        )
-    )
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     q_kg_triples = queries()["kg_triples"]
@@ -668,15 +543,6 @@ QUERIES = (
     # sf0.1 it drops the near-identical flood clusters (34k vs 272k pairs)
     ("dedup_simhash_pairs", _documents, dedup.simhash_pairs,
      dict(max_hamming=3, max_bucket=200), O.dedup_simhash_sql),
-    ("ann_topk", _spread_embeddings, similarity.cosine_topk,
-     dict(n_queries=8, k=5), O.ann_topk_sql),
-    # target_cell_size sizes the cell count
-    ("ann_ivf_topk", _spread_embeddings, similarity.ivf_topk,
-     dict(n_queries=8, k=5, n_centroids=None, nprobe=4, target_cell_size=32),
-     O.ann_ivf_sql),
-    ("emb_near_dup_pairs", _spread_embeddings, similarity.embedding_near_dup_pairs,
-     dict(min_cosine=0.2, n_centroids=None, n_assign=2, target_cell_size=32),
-     O.emb_near_dup_sql),
     ("text_stats", _documents, textstats.text_stats, {}, O.text_stats_sql),
     ("quality_filter", _documents, textstats.quality_filter,
      dict(min_tokens=20, max_tokens=100_000, min_mean_word_len=3.0,
@@ -711,20 +577,10 @@ QUERIES = (
     ("video_decode_real", _video_blobs, media.decode_video_bytes, {},
      O.video_decode_real_sql),
     ("media_inventory", _flat_spans, media.media_inventory, {}, O.media_inventory_sql),
-    ("asof_last_click", _events, q_asof_last_click, {}, O.asof_last_click_sql),
-    ("range_clicks_before_purchase", _events, q_range_clicks_before_purchase, {},
-     O.range_clicks_sql),
-    # Spark's native session_window; the oracle re-derives the sessions with
-    # a gaps-and-islands window cascade
-    ("sessions", _events, partial(temporal.sessionize, key="user_id", ts="ts"),
-     dict(gap_sec=21600), O.sessions_sql),
     ("w2_latest_event_per_user", _events, q_latest_event_per_user, {},
      O.latest_event_sql),
     ("w3_retention_tail", _events, q_retention_tail, dict(keep=3),
      O.retention_tail_sql),
-    ("ann_ivfpq_topk", _embeddings, clustering.ivf_pq_topk,
-     dict(n_queries=8, k=5, n_centroids=16, nprobe=4, m=8, k_codes=16, rounds=2),
-     O.ann_ivfpq_sql),
     ("jn6_customers_no_orders", _location, q_customers_no_orders, {},
      O.customers_no_orders_sql),
     ("s2_binary_ingest", _location, q_s2_binary_ingest, dict(max_doc_id=400),
@@ -732,15 +588,10 @@ QUERIES = (
     ("graph_kcore", _triples, graphstats.kcore, dict(k=2, iters=4), O.graph_kcore_sql),
     ("a1_pricing_summary", _table("lineitem"), q_pricing_summary, {},
      O.pricing_summary_sql),
-    ("a8_event_value_quantiles", _events, q_a8_event_value_quantiles, {},
-     O.event_value_quantiles_sql),
-    ("bloom_contamination", _documents, q_bloom_contamination,
-     dict(bench_mod=19, n=3, m_bits=65536, k=4), O.bloom_contamination_sql),
     ("jn2_graph_fetch", _graphs, q_jn2_graph_fetch, {}, O.graph_fetch_sql),
     ("a7_bucket_metrics", _graphs, q_a7_bucket_metrics, {}, O.bucket_metrics_sql),
     ("fn_scalar_suite", _documents, q_fn_scalar_suite, {}, O.scalar_suite_sql),
     ("p6_p8_text_gate", _documents, q_p6_p8_text_gate, {}, O.text_gate_sql),
-    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("j1_props_parse", _events, q_j1_props_parse, {}, O.props_parse_sql),
     ("j2_json_repair", _events, q_j2_json_repair, {}, O.json_repair_sql),
     ("j3_graph_coercion", _events, q_j3_graph_coercion, {}, O.graph_coercion_sql),
@@ -753,6 +604,7 @@ QUERIES = (
     ("s7_llm_fake_edges", _spans, q_s7_llm_fake_edges, {}, O.llm_edges_sql),
     ("media_decode_real", _image_blobs, media.decode_media_bytes, {},
      O.media_decode_real_sql),
+    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("audio_decode_real", _audio_blobs, media.decode_audio_bytes, {},
      O.audio_decode_real_sql),
     ("video_frames_real", _video_blobs, media.video_frame_means, {},
@@ -766,8 +618,6 @@ QUERIES = (
      O.entity_pmi_sql),
     ("a3_latest_order_per_customer", _table("orders"), q_latest_order_per_customer,
      {}, O.latest_order_sql),
-    ("a9_rollup_order_stats", _table("orders"), q_a9_rollup_order_stats, {},
-     O.rollup_order_stats_sql),
     ("kg_version_diff", _triples, q_kg_version_diff, {}, O.kg_version_diff_sql),
     ("graph_link_candidates", _triples, graphstats.common_neighbor_candidates,
      dict(max_degree=64, min_common=2), O.graph_link_candidates_sql),
@@ -775,41 +625,12 @@ QUERIES = (
      O.kg_training_pairs_sql),
     ("kg_negative_samples", _triples, graphstats.negative_samples,
      dict(k=2, buckets=64), O.kg_negative_samples_sql),
-    ("emb_kmeans", _spread_embeddings, clustering.kmeans_assign,
-     dict(k=8, rounds=2, target_cluster_size=64), O.emb_kmeans_sql),
-    ("semdedup", _spread_embeddings, clustering.semdedup,
-     dict(k=8, rounds=2, min_cosine=0.4, target_cluster_size=64), O.semdedup_sql),
-    ("inverted_postings", _documents, indexing.inverted_postings,
-     dict(min_df=2, max_df=400), O.inverted_postings_sql),
     ("media_captions", _flat_spans, media.media_caption_pairs, {},
      O.media_caption_pairs_sql),
     # media spans cost a fixed vision-encoder budget: 576 = 24x24 patches
     ("seq_pack_interleaved", _spans, packing.seq_pack_interleaved,
      dict(capacity=4096, n_shards=8, media_token_cost=576),
      O.seq_pack_interleaved_sql),
-    ("hll_registers", _spread_events,
-     partial(sketches.hll_registers, col_expr="cast(event_id as string)"),
-     dict(m=64), partial(O.hll_registers_sql, col_expr="cast(event_id as varchar)")),
-    ("cm_registers", _spread_events,
-     partial(sketches.cm_registers, col_expr="cast(user_id as string)"),
-     dict(depth=4, width=256),
-     partial(O.cm_registers_sql, col_expr="cast(user_id as varchar)")),
-    ("bloom_registers", _documents, q_bloom_registers,
-     dict(bench_mod=19, n=3, m_bits=65536, k=4), O.bloom_registers_sql),
-    # floor(value * 100) is IEEE-identical across engines where round() is not
-    ("hist_registers", _spread_events,
-     partial(sketches.hist_registers, col_expr="cast(floor(value * 100) as bigint)"),
-     {}, partial(O.hist_registers_sql, col_expr="CAST(floor(value * 100) AS BIGINT)")),
-    ("cm_heavy_hitters", _spread_events,
-     partial(sketches.cm_heavy_hitters, col_expr="cast(user_id as string)"),
-     dict(threshold=75, depth=4, width=256),
-     partial(O.cm_heavy_hitters_sql, col_expr="cast(user_id as varchar)")),
-    ("hll_by_group", _spread_events,
-     partial(sketches.hll_registers_grouped, col_expr="cast(user_id as string)"),
-     dict(group_col="event_type", m=64),
-     partial(O.hll_grouped_sql, col_expr="cast(user_id as varchar)")),
-    ("lm_trigram_counts", _documents, indexing.lm_ngram_counts,
-     dict(n=3, min_count=2), O.lm_ngram_counts_sql),
     ("seq_pack", _documents, packing.seq_pack, dict(capacity=128, n_shards=8),
      O.seq_pack_sql),
     ("shard_manifest", _documents, packing.shard_manifest, dict(n_shards=8),
@@ -817,14 +638,6 @@ QUERIES = (
     ("token_mix", _documents, packing.token_mix_plan, {}, O.token_mix_sql),
     ("repetition_stats", _documents, textstats.repetition_stats,
      dict(top_n=2, dup_n=3), O.repetition_sql),
-    # 'dup' is the one rare token in the driver vocabulary (idf_bits 5), the
-    # others are common (idf_bits 1): the ranking exercises both idf extremes
-    ("bm25_topk", _documents, indexing.bm25_topk,
-     dict(query_terms=["dup", "window", "join", "hash"], k=25, k1_centi=120,
-          b_centi=75),
-     O.bm25_topk_sql),
-    ("unigram_surprisal", _documents, indexing.unigram_surprisal, {},
-     O.unigram_surprisal_sql),
     # equal weights: uniform DeepWalk steps
     ("graph_random_walks", _triples,
      partial(graphstats.node2vec_walks, w_return=1, w_near=1, w_far=1),
@@ -833,12 +646,6 @@ QUERIES = (
      dict(length=4, walks_per_node=2, seed=0, window=2), O.walk_skipgram_pairs_sql),
     ("kg_transe_margin", _triples, q_kg_transe_margin,
      dict(k=2, buckets=64, dim=8, modulus=1024), O.kg_transe_margin_sql),
-    ("pq_codes", _embeddings, clustering.pq_codes, dict(m=8, k=16, rounds=2),
-     O.pq_codes_sql),
-    ("pq_topk", _embeddings, clustering.pq_topk,
-     dict(n_queries=8, k=5, m=8, k_codes=16, rounds=2), O.pq_topk_sql),
-    ("ann_recall", _embeddings, similarity.ivf_recall,
-     dict(n_queries=8, k=5, n_centroids=16, nprobe=4), O.ann_recall_sql),
     ("graph_two_hop", _triples, graphstats.two_hop_stats, dict(max_degree=64),
      O.graph_two_hop_sql),
     ("a2_user_type_stats", _events, q_user_type_stats, {}, O.user_type_stats_sql),

@@ -36,10 +36,6 @@ HEADLINE = (
     "link_canonical_triples",
     "dedup_minhash_lsh",
     "dedup_simhash_pairs",
-    "emb_near_dup_pairs",
-    "ann_topk",
-    "emb_kmeans",
-    "semdedup",
     "seq_pack",
     "text_stats",
     "curation_funnel",

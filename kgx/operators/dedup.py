@@ -487,10 +487,9 @@ def lsh_blocking_recall(
     max_bucket: int = 200,
 ) -> DataFrame:
     """Blocking-quality audit of the MinHash-LSH near-dup join against
-    the exact inverted-index Jaccard join — the dedup counterpart of the
-    ANN family's recall audit (kgx.operators.similarity.ivf_recall), and
-    the dial that sizes ``bands``/``num_hashes`` in production: how many
-    of the TRUE >= threshold pairs does banded LSH recover?  Both sides
+    the exact inverted-index Jaccard join, and the dial that sizes
+    ``bands``/``num_hashes`` in production: how many of the TRUE >=
+    threshold pairs does banded LSH recover?  Both sides
     verify with exact n-gram Jaccard, so on a corpus where the
     ``max_shingle_df`` guard is INACTIVE (no shingle exceeds the df
     cutoff — true of the gate corpus, max df 7 vs cutoff 50) every miss

@@ -198,7 +198,7 @@ LEFT JOIN cmap co ON co.label = t.obj
 
 
 # ---------------------------------------------------------------------------
-# training-data pipeline extras (raw documents / embeddings tables)
+# training-data pipeline extras (raw documents table)
 # ---------------------------------------------------------------------------
 
 def _duck_md5_60(expr: str) -> str:
@@ -496,136 +496,6 @@ FROM ok x
 JOIN ok y ON x.band = y.band AND x.band_bits = y.band_bits
          AND x.doc_id < y.doc_id
 WHERE bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
-""".strip()
-
-
-_QUANT_CTES = """
-qv AS (
-    SELECT vec_id,
-           list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q
-    FROM embeddings
-),
-base AS (
-    SELECT vec_id, q,
-           CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS nrm
-    FROM qv
-    WHERE CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) > 0
-)
-""".strip()
-
-_DUCK_DOT = (
-    "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i] * {b}[i])) AS BIGINT)"
-)
-
-_DUCK_COS = (
-    "CAST(dot AS DOUBLE) / (sqrt(CAST(qnrm AS DOUBLE)) * sqrt(CAST(vnrm AS DOUBLE)))"
-)
-
-
-def ann_topk_sql(n_queries: int, k: int) -> str:
-    dot = _DUCK_DOT.format(a="qs.q", b="base.q")
-    return f"""
-WITH {_QUANT_CTES},
-qs AS (SELECT vec_id AS query_id, q, nrm AS qnrm FROM base WHERE vec_id < {n_queries}),
-scored AS (
-    SELECT qs.query_id, base.vec_id, {dot} AS dot, qs.qnrm, base.nrm AS vnrm
-    FROM qs CROSS JOIN base
-    WHERE base.vec_id <> qs.query_id
-),
-ranked AS (
-    SELECT query_id, vec_id, {_DUCK_COS} AS cosine,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY {_DUCK_COS} DESC, vec_id) AS rank
-    FROM scored
-)
-SELECT query_id, CAST(rank AS INT) AS rank, vec_id, cosine
-FROM ranked WHERE rank <= {k}
-""".strip()
-
-
-def ann_ivf_sql(
-    n_queries: int,
-    k: int,
-    n_centroids: int | None,
-    nprobe: int,
-    target_cell_size: int | None,
-) -> str:
-    if target_cell_size:
-        n_centroids = _auto_k_expr(target_cell_size)
-    cdot_v = _DUCK_DOT.format(a="base.q", b="c.q")
-    cdot_q = _DUCK_DOT.format(a="qs.q", b="c.q")
-    dot = _DUCK_DOT.format(a="pr.qq", b="cells.q")
-    return f"""
-WITH {_QUANT_CTES},
-cents AS (SELECT vec_id AS cell, q FROM base WHERE vec_id < {n_centroids}),
-cell_scored AS (
-    SELECT base.vec_id, base.q, base.nrm, c.cell, {cdot_v} AS cdot,
-           row_number() OVER (PARTITION BY base.vec_id
-                              ORDER BY {cdot_v} DESC, c.cell) AS rn
-    FROM base CROSS JOIN cents c
-),
-cells AS (SELECT vec_id, q, nrm, cell FROM cell_scored WHERE rn = 1),
-qs AS (SELECT vec_id AS query_id, q, nrm AS qnrm FROM base WHERE vec_id < {n_queries}),
-probe_scored AS (
-    SELECT qs.query_id, qs.q AS qq, qs.qnrm, c.cell, {cdot_q} AS cdot,
-           row_number() OVER (PARTITION BY qs.query_id
-                              ORDER BY {cdot_q} DESC, c.cell) AS rn
-    FROM qs CROSS JOIN cents c
-),
-pr AS (SELECT query_id, qq, qnrm, cell FROM probe_scored WHERE rn <= {nprobe}),
-scored AS (
-    SELECT pr.query_id, cells.vec_id, {dot} AS dot, pr.qnrm, cells.nrm AS vnrm
-    FROM pr JOIN cells USING (cell)
-    WHERE cells.vec_id <> pr.query_id
-),
-ranked AS (
-    SELECT query_id, vec_id, {_DUCK_COS} AS cosine,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY {_DUCK_COS} DESC, vec_id) AS rank
-    FROM scored
-)
-SELECT query_id, CAST(rank AS INT) AS rank, vec_id, cosine
-FROM ranked WHERE rank <= {k}
-""".strip()
-
-
-def emb_near_dup_sql(
-    min_cosine: float,
-    n_centroids: int | None,
-    n_assign: int,
-    target_cell_size: int | None,
-) -> str:
-    """Oracle for cell-bucketed embedding near-dup pairs: each vector indexed
-    into its top-``n_assign`` IVF cells, candidates = cell-cohabiting pairs,
-    verified with the exact quantized cosine (mirror of
-    kgx.operators.similarity.embedding_near_dup_pairs).
-    ``target_cell_size`` auto-sizes the cell count via :func:`_auto_k_expr`."""
-    if target_cell_size:
-        n_centroids = _auto_k_expr(target_cell_size)
-    cdot = _DUCK_DOT.format(a="base.q", b="c.q")
-    dot = _DUCK_DOT.format(a="a.q", b="b.q")
-    return f"""
-WITH {_QUANT_CTES},
-cents AS (SELECT vec_id AS cell, q FROM base WHERE vec_id < {n_centroids}),
-cell_scored AS (
-    SELECT base.vec_id, c.cell, {cdot} AS cdot,
-           row_number() OVER (PARTITION BY base.vec_id
-                              ORDER BY {cdot} DESC, c.cell) AS rn
-    FROM base CROSS JOIN cents c
-),
-idx AS (SELECT vec_id, cell FROM cell_scored WHERE rn <= {n_assign}),
-cands AS (
-    SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-    FROM idx x JOIN idx y ON x.cell = y.cell AND x.vec_id < y.vec_id
-),
-pairs AS (
-    SELECT c.vec_a, c.vec_b, {dot} AS dot, a.nrm AS qnrm, b.nrm AS vnrm
-    FROM cands c
-    JOIN base a ON a.vec_id = c.vec_a
-    JOIN base b ON b.vec_id = c.vec_b
-)
-SELECT vec_a, vec_b, {_DUCK_COS} AS cosine
-FROM pairs WHERE {_DUCK_COS} >= {min_cosine}
 """.strip()
 
 
@@ -1624,63 +1494,6 @@ FROM rates r LEFT JOIN picked p USING (stratum)
 """.strip()
 
 
-# ---------------------------------------------------------------------------
-# temporal joins (kgx.operators.temporal) — independent DuckDB implementations
-# ---------------------------------------------------------------------------
-
-_EVENTS_DEDUP_CTE = """
-ev AS (
-    SELECT user_id, ts, event_id, event_type
-    FROM events
-    QUALIFY row_number() OVER (PARTITION BY user_id, ts
-                               ORDER BY event_id DESC) = 1
-)
-""".strip()
-
-
-def asof_last_click_sql() -> str:
-    """Oracle for the distributed as-of join via DuckDB's NATIVE ASOF JOIN —
-    a genuinely independent implementation of the same semantics (mirror of
-    __spark_entry__.q_asof_last_click: per-(user_id, ts) max-event_id dedup,
-    inner, right ts <= left ts)."""
-    return f"""
-WITH {_EVENTS_DEDUP_CTE},
-purchases AS (
-    SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-    FROM ev WHERE event_type = 'purchase'
-),
-clicks AS (
-    SELECT user_id, ts AS click_ts, event_id AS click_id
-    FROM ev WHERE event_type = 'click'
-)
-SELECT p.user_id, p.purchase_id, p.purchase_ts, c.click_id, c.click_ts
-FROM purchases p
-ASOF JOIN clicks c
-  ON p.user_id = c.user_id AND c.click_ts <= p.purchase_ts
-""".strip()
-
-
-def range_clicks_sql() -> str:
-    """Oracle for the binned range join via a plain inequality join (mirror
-    of __spark_entry__.q_range_clicks_before_purchase: clicks in the 24 h
-    window at-or-before each purchase, raw events, no dedup)."""
-    return """
-WITH purchases AS (
-    SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-    FROM events WHERE event_type = 'purchase'
-),
-clicks AS (
-    SELECT user_id, ts AS click_ts, event_id AS click_id
-    FROM events WHERE event_type = 'click'
-)
-SELECT p.user_id, p.purchase_id, p.purchase_ts, c.click_id
-FROM purchases p JOIN clicks c
-  ON p.user_id = c.user_id
- AND c.click_ts <= p.purchase_ts
- AND c.click_ts >= p.purchase_ts - INTERVAL 86400 SECOND
-""".strip()
-
-
 def vocab_topk_sql(k: int) -> str:
     """Oracle for the vocabulary top-k (mirror of
     kgx.operators.textstats.vocab_topk: whitespace tokens, count-desc /
@@ -1701,77 +1514,6 @@ counts AS (
 SELECT token, n_occurrences, n_docs,
        CAST(row_number() OVER (ORDER BY n_occurrences DESC, token) AS BIGINT) AS rank
 FROM counts
-""".strip()
-
-
-def sessions_sql(gap_sec: int) -> str:
-    """Oracle for gap-based sessionization via the classic gaps-and-islands
-    cascade (independent of Spark's native session_window merge): new
-    session when the gap from the previous event is STRICTLY greater than
-    gap_sec (Spark's merge boundary is inclusive — pinned by
-    test_sessionize_gap_boundary_semantics); session_end = last ts + gap."""
-    gap_us = gap_sec * 1_000_000
-    return f"""
-WITH e AS (
-    SELECT user_id, ts,
-           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-    FROM events
-),
-f AS (
-    SELECT user_id, ts,
-           CASE WHEN prev IS NULL
-                     OR epoch_us(ts) - epoch_us(prev) > {gap_us}
-                THEN 1 ELSE 0 END AS new_s
-    FROM e
-),
-s AS (
-    SELECT user_id, ts,
-           sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                            ROWS UNBOUNDED PRECEDING) AS grp
-    FROM f
-),
-g AS (
-    SELECT user_id, grp,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL {gap_sec} SECOND AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM s GROUP BY 1, 2
-)
-SELECT user_id,
-       CAST(row_number() OVER (PARTITION BY user_id ORDER BY session_start)
-            AS BIGINT) AS session_id,
-       session_start, session_end, n_events
-FROM g
-""".strip()
-
-
-def event_value_quantiles_sql() -> str:
-    """Oracle for exact per-group quantiles (mirror of
-    __spark_entry__.q_a8_event_value_quantiles: DuckDB quantile_cont uses
-    the same linear interpolation as Spark's exact percentile)."""
-    return """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(round(min(value) * 1000000) AS BIGINT) AS min_u,
-       CAST(round(max(value) * 1000000) AS BIGINT) AS max_u,
-       CAST(round(quantile_cont(value, 0.5) * 1000000) AS BIGINT) AS p50_u,
-       CAST(round(quantile_cont(value, 0.9) * 1000000) AS BIGINT) AS p90_u
-FROM events
-GROUP BY event_type
-""".strip()
-
-
-def rollup_order_stats_sql() -> str:
-    """Oracle for the status × priority rollup (mirror of
-    __spark_entry__.q_a9_rollup_order_stats; NULL rollup markers coalesced
-    to the same sentinel)."""
-    return """
-SELECT coalesce(o_orderstatus, '∅') AS status,
-       coalesce(o_orderpriority, '∅') AS priority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
-FROM orders
-GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """.strip()
 
 
@@ -2017,81 +1759,6 @@ FROM kc_e{iters} GROUP BY 1
 """.strip()
 
 
-def _bloom_regs_cte(bench_mod: int, n: int, m_bits: int, k: int) -> str:
-    """Shared CTE chain: benchmark shingle hashes -> Bloom register table
-    (mirror of kgx.operators.sketches.bloom_registers over the
-    doc_id % bench_mod = 0 slice — 32-bit words, double-hashed positions)."""
-    pos_branches = "\n    UNION ALL ".join(
-        f"SELECT (h1 + {j} * stride) % {m_bits} AS pos FROM bl_hs"
-        for j in range(k)
-    )
-    return f"""
-bl_sh AS MATERIALIZED (
-    SELECT doc_id, {_duck_md5_60('shingle')} AS shingle_hash
-    FROM (SELECT doc_id, unnest({_duck_shingles(n)}) AS shingle FROM documents)
-),
-bl_hs AS (
-    SELECT shingle_hash % {m_bits} AS h1,
-           2 * ((shingle_hash // {m_bits}) % {m_bits}) + 1 AS stride
-    FROM bl_sh WHERE doc_id % {bench_mod} = 0
-),
-bl_pos AS (
-    {pos_branches}
-),
-bl_regs AS MATERIALIZED (
-    SELECT CAST(pos // 32 AS BIGINT) AS word,
-           CAST(bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS BIGINT) AS bits
-    FROM bl_pos GROUP BY 1
-)
-""".strip()
-
-
-def bloom_registers_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
-    """Oracle for the benchmark-slice Bloom filter register table."""
-    return f"""
-WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)}
-SELECT word, bits FROM bl_regs
-""".strip()
-
-
-def bloom_contamination_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
-    """Oracle for the Bloom-filter decontamination probe (mirror of
-    kgx.operators.sketches.bloom_probe over the train slice): per shingle
-    all k probe bits must be set; per doc count shingles and flagged
-    shingles."""
-    probe_branches = "\n    UNION ALL ".join(
-        f"SELECT doc_id, h0, (h1 + {j} * stride) % {m_bits} AS pos FROM bl_tr"
-        for j in range(k)
-    )
-    return f"""
-WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)},
-bl_tr AS (
-    SELECT doc_id, shingle_hash AS h0,
-           shingle_hash % {m_bits} AS h1,
-           2 * ((shingle_hash // {m_bits}) % {m_bits}) + 1 AS stride
-    FROM bl_sh WHERE doc_id % {bench_mod} != 0
-),
-bl_tp AS (
-    {probe_branches}
-),
-bl_hits AS (
-    SELECT t.doc_id, t.h0,
-           CASE WHEN (coalesce(r.bits, 0) & (1::BIGINT << CAST(t.pos % 32 AS INT)))
-                     = (1::BIGINT << CAST(t.pos % 32 AS INT))
-                THEN 1 ELSE 0 END AS hit
-    FROM (SELECT doc_id, h0, pos, CAST(pos // 32 AS BIGINT) AS word FROM bl_tp) t
-    LEFT JOIN bl_regs r ON r.word = t.word
-),
-bl_per AS (
-    SELECT doc_id, h0, min(hit) AS all_hit FROM bl_hits GROUP BY 1, 2
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(all_hit) AS BIGINT) AS n_flagged
-FROM bl_per GROUP BY 1
-""".strip()
-
-
 def _tri_cte_head() -> str:
     """The full triples oracle re-packaged as CTE chain + a materialized
     ``tri`` table (shared by the version-diff and negative-sampling
@@ -2266,18 +1933,6 @@ WHERE n.label <> p.obj
 """.strip()
 
 
-def hist_registers_sql(col_expr: str) -> str:
-    """Oracle for the log2 histogram sketch (mirror of
-    kgx.operators.sketches.hist_registers: bin 0 for x <= 0, else
-    length(bin(x)) — the HLL rho's bit-length arithmetic)."""
-    return f"""
-SELECT CAST(CASE WHEN ({col_expr}) <= 0 THEN 0
-            ELSE length(bin({col_expr})) END AS BIGINT) AS bin,
-       CAST(count(*) AS BIGINT) AS cnt
-FROM events GROUP BY 1
-""".strip()
-
-
 def graph_link_candidates_sql(max_degree: int, min_common: int) -> str:
     """Oracle for common-neighbor link-prediction candidates (mirror of
     kgx.operators.graphstats.common_neighbor_candidates): undirected
@@ -2317,81 +1972,6 @@ FROM lc_cn c
 JOIN lc_deg da ON da.subj = c.label_a
 JOIN lc_deg db ON db.subj = c.label_b
 LEFT JOIN lc_canon e ON e.label_a = c.label_a AND e.label_b = c.label_b
-""".strip()
-
-
-def cm_heavy_hitters_sql(col_expr: str, threshold: int, depth: int, width: int) -> str:
-    """Oracle for count-min heavy-hitter consumption (mirror of
-    kgx.operators.sketches.cm_heavy_hitters): registers replayed, per-key
-    cells derived with the same universal-hash chain, estimate = min over
-    depth, threshold filter, exact count beside."""
-    from kgx.functions.hashing import minhash_derived
-
-    h = _duck_md5_60(col_expr)
-    kh = _duck_md5_60("key")
-    reg_branches = "\n    UNION ALL ".join(
-        f"SELECT CAST({d} AS BIGINT) AS d, "
-        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
-        f"FROM hh_hashed"
-        for d in range(depth)
-    )
-    key_branches = "\n    UNION ALL ".join(
-        f"SELECT key, exact_count, CAST({d} AS BIGINT) AS d, "
-        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
-        f"FROM hh_keys"
-        for d in range(depth)
-    )
-    return f"""
-WITH hh_hashed AS (
-    SELECT CAST({h} AS BIGINT) AS h0 FROM events
-),
-hh_cells AS (
-    {reg_branches}
-),
-hh_regs AS MATERIALIZED (
-    SELECT d, col, CAST(count(*) AS BIGINT) AS cnt FROM hh_cells GROUP BY 1, 2
-),
-hh_keys AS (
-    SELECT key, exact_count, CAST({kh} AS BIGINT) AS h0
-    FROM (
-        SELECT {col_expr} AS key, CAST(count(*) AS BIGINT) AS exact_count
-        FROM events GROUP BY 1
-    )
-),
-hh_kcells AS (
-    {key_branches}
-),
-hh_est AS (
-    SELECT k.key, k.exact_count, CAST(min(r.cnt) AS BIGINT) AS est_count
-    FROM hh_kcells k JOIN hh_regs r ON r.d = k.d AND r.col = k.col
-    GROUP BY 1, 2
-)
-SELECT key, est_count, exact_count
-FROM hh_est WHERE est_count >= {threshold}
-""".strip()
-
-
-def hll_grouped_sql(group_col: str, col_expr: str, m: int) -> str:
-    """Oracle for the per-group HLL register sketch (mirror of
-    kgx.operators.sketches.hll_registers_grouped)."""
-    b = m.bit_length() - 1
-    w = 60 - b
-    h = _duck_md5_60(col_expr)
-    return f"""
-WITH hashed AS (
-    SELECT {group_col} AS grp,
-           CAST({h} % {m} AS BIGINT) AS bucket,
-           CAST({h} // {m} AS BIGINT) AS rest
-    FROM events
-),
-rhod AS (
-    SELECT grp, bucket,
-           CAST(CASE WHEN rest = 0 THEN {w + 1}
-                ELSE {w} - length(bin(rest)) + 1 END AS BIGINT) AS rho
-    FROM hashed
-)
-SELECT grp, bucket, CAST(max(rho) AS BIGINT) AS max_rho
-FROM rhod GROUP BY 1, 2
 """.strip()
 
 
@@ -2457,119 +2037,6 @@ SELECT deg.label,
        CAST(coalesce(pn.triangles, 0) AS BIGINT) AS triangles,
        deg.degree
 FROM deg LEFT JOIN pn USING (label)
-""".strip()
-
-
-# ---------------------------------------------------------------------------
-# embedding k-means (kgx.operators.clustering)
-# ---------------------------------------------------------------------------
-
-
-def _auto_k_expr(target_cell_size: int) -> str:
-    """DuckDB twin of kgx.operators.similarity.auto_centroids: the derived
-    centroid/cluster count ``max(1, ceil(N / target))`` as a scalar subquery
-    in exact integer arithmetic, so Spark's driver-side count and the
-    oracle's in-plan count give the identical k at ANY sf."""
-    t = int(target_cell_size)
-    return f"(SELECT greatest(1, (count(*) + {t - 1}) // {t}) FROM embeddings)"
-
-
-def _kmeans_ctes(k: int | str = 8, rounds: int = 2) -> str:
-    """Shared CTE chain for the unrolled integer Lloyd's k-means: ends with
-    ``fin`` (vec_id, cluster, dot, qnrm, vnrm, rn) — final assignment is
-    ``rn = 1``."""
-    ctes = [
-        _QUANT_CTES,
-        "vdims AS MATERIALIZED (SELECT vec_id, unnest(q) AS v,"
-        " unnest(range(len(q))) AS pos FROM base)",
-        f"c0 AS (SELECT vec_id AS cluster, q AS cq, nrm AS cnrm"
-        f" FROM base WHERE vec_id < {k})",
-    ]
-    for r in range(rounds):
-        dot = _DUCK_DOT.format(a="base.q", b=f"c{r}.cq")
-        ctes.append(f"""
-s{r} AS (
-    SELECT base.vec_id, c{r}.cluster,
-           row_number() OVER (
-               PARTITION BY base.vec_id
-               ORDER BY CAST({dot} AS DOUBLE) / sqrt(CAST(c{r}.cnrm AS DOUBLE)) DESC,
-                        c{r}.cluster) AS rn
-    FROM base CROSS JOIN c{r}
-),
-a{r} AS (SELECT vec_id, cluster FROM s{r} WHERE rn = 1),
-m{r} AS (
-    SELECT a.cluster, d.pos, sum(d.v) // count(*) AS c
-    FROM a{r} a JOIN vdims d USING (vec_id)
-    GROUP BY 1, 2
-),
-c{r + 1} AS (
-    SELECT cluster, list(c ORDER BY pos) AS cq,
-           CAST(list_sum(list_transform(list(c ORDER BY pos), x -> x * x)) AS BIGINT) AS cnrm
-    FROM m{r} GROUP BY cluster
-    HAVING CAST(list_sum(list_transform(list(c ORDER BY pos), x -> x * x)) AS BIGINT) > 0
-)
-""".strip())
-    fdot = _DUCK_DOT.format(a="base.q", b=f"c{rounds}.cq")
-    ctes.append(f"""
-fin AS (
-    SELECT base.vec_id, c{rounds}.cluster, {fdot} AS dot,
-           base.nrm AS qnrm, c{rounds}.cnrm AS vnrm,
-           row_number() OVER (
-               PARTITION BY base.vec_id
-               ORDER BY CAST({fdot} AS DOUBLE) / sqrt(CAST(c{rounds}.cnrm AS DOUBLE)) DESC,
-                        c{rounds}.cluster) AS rn
-    FROM base CROSS JOIN c{rounds}
-)
-""".strip())
-    return ",\n".join(ctes)
-
-
-def emb_kmeans_sql(k: int, rounds: int, target_cluster_size: int | None) -> str:
-    """Oracle for integer-arithmetic Lloyd's k-means (mirror of
-    kgx.operators.clustering.kmeans_assign).  Rounds are UNROLLED into
-    chained CTEs (the graph_pagerank_sql stance); centroid means use
-    DuckDB ``//`` == Spark ``DIV`` toward-zero truncation; the argmax
-    ranking double ``dot / sqrt(cnrm)`` is correctly-rounded IEEE on exact
-    integer inputs, so assignments match Spark bit-for-bit.
-    ``target_cluster_size`` switches k to the auto-sized scalar subquery
-    (:func:`_auto_k_expr`), mirroring the engine's k ∝ N sizing."""
-    ke = _auto_k_expr(target_cluster_size) if target_cluster_size else k
-    return f"""
-WITH {_kmeans_ctes(ke, rounds)}
-SELECT vec_id, cluster, {_DUCK_COS} AS cosine FROM fin WHERE rn = 1
-""".strip()
-
-
-def semdedup_sql(
-    k: int,
-    rounds: int,
-    min_cosine: float,
-    target_cluster_size: int | None,
-) -> str:
-    """Oracle for SemDeDup-style within-cluster semantic dedup (mirror of
-    kgx.operators.clustering.semdedup): k-means buckets, within-cluster
-    exact quantized cosine, keep-first (drop a vector iff a smaller-id
-    cluster-mate sits within the cosine ball).  ``target_cluster_size``
-    auto-sizes k via :func:`_auto_k_expr`."""
-    ke = _auto_k_expr(target_cluster_size) if target_cluster_size else k
-    dot = _DUCK_DOT.format(a="x.q", b="y.q")
-    cos = (
-        f"CAST({dot} AS DOUBLE) / (sqrt(CAST(x.nrm AS DOUBLE)) * sqrt(CAST(y.nrm AS DOUBLE)))"
-    )
-    return f"""
-WITH {_kmeans_ctes(ke, rounds)},
-asg AS (SELECT vec_id, cluster FROM fin WHERE rn = 1),
-vb AS (SELECT a.vec_id, a.cluster, base.q, base.nrm
-       FROM asg a JOIN base USING (vec_id)),
-dp AS (
-    SELECT y.vec_id, CAST(min(x.vec_id) AS BIGINT) AS dup_of
-    FROM vb x JOIN vb y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-    WHERE {cos} >= {min_cosine}
-    GROUP BY 1
-)
-SELECT a.vec_id, a.cluster, dp.dup_of,
-       (dp.dup_of IS NOT NULL) AS is_duplicate
-FROM asg a LEFT JOIN dp USING (vec_id)
 """.strip()
 
 
@@ -2734,125 +2201,6 @@ GROUP BY m.shard
 """.strip()
 
 
-# ---------------------------------------------------------------------------
-# text indexing (kgx.operators.indexing)
-# ---------------------------------------------------------------------------
-
-_DOC_TOKENS_CTE = """
-toks AS MATERIALIZED (
-    SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
-    FROM documents
-)
-""".strip()
-
-
-def inverted_postings_sql(min_df: int, max_df: int | None) -> str:
-    """Oracle for the inverted token index (mirror of
-    kgx.operators.indexing.inverted_postings)."""
-    max_clause = f"AND df <= {max_df}" if max_df is not None else ""
-    return f"""
-WITH {_DOC_TOKENS_CTE},
-tf AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
-       FROM toks GROUP BY 1, 2),
-dft AS (SELECT token, CAST(count(*) AS BIGINT) AS df
-        FROM tf GROUP BY 1 HAVING count(*) >= {min_df} {max_clause})
-SELECT tf.token, tf.doc_id, tf.tf, dft.df
-FROM tf JOIN dft USING (token)
-""".strip()
-
-
-def lm_ngram_counts_sql(n: int, min_count: int) -> str:
-    """Oracle for the n-gram LM count table with KN continuation counts
-    (mirror of kgx.operators.indexing.lm_ngram_counts)."""
-    t = "list_filter(str_split(text, ' '), t -> t <> '')"
-    return f"""
-WITH grams AS MATERIALIZED (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len({t}) - {n - 2}),
-                                 i -> array_to_string(list_slice({t}, i, i + {n - 1}), ' '))) AS gram
-    FROM documents
-),
-counts AS (
-    SELECT gram, CAST(count(*) AS BIGINT) AS n_occurrences,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM grams GROUP BY 1 HAVING count(*) >= {min_count}
-),
-cont AS (
-    SELECT substring(gram, length(split_part(gram, ' ', 1)) + 2) AS suffix,
-           CAST(count(DISTINCT split_part(gram, ' ', 1)) AS BIGINT) AS continuation_count
-    FROM grams GROUP BY 1
-)
-SELECT c.gram, c.n_occurrences, c.n_docs,
-       substring(c.gram, length(split_part(c.gram, ' ', 1)) + 2) AS suffix,
-       ct.continuation_count
-FROM counts c
-JOIN cont ct ON ct.suffix = substring(c.gram, length(split_part(c.gram, ' ', 1)) + 2)
-""".strip()
-
-
-def bm25_topk_sql(query_terms: list[str], k: int, k1_centi: int, b_centi: int) -> str:
-    """Oracle for fixed-point BM25 top-k retrieval (mirror of
-    kgx.operators.indexing.bm25_topk): identical bigint formula — DuckDB
-    ``//`` replays Spark ``div`` (both floor on non-negative operands),
-    ``length(bin(x))`` replays the log2-bit-length idf — so score_milli
-    matches bit-for-bit and the (score DESC, doc_id) tie-break pins the
-    same top-k and ranks."""
-    K, B = int(k1_centi), int(b_centi)
-    terms = ", ".join("'" + t.replace("'", "''") + "'" for t in query_terms)
-    t = "list_filter(str_split(text, ' '), t -> t <> '')"
-    return f"""
-WITH {_DOC_TOKENS_CTE},
-tf AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
-       FROM toks WHERE token IN ({terms}) GROUP BY 1, 2),
-dft AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-dl AS (SELECT doc_id, CAST(len({t}) AS BIGINT) AS dl FROM documents),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(len({t})) AS BIGINT) AS total_tokens
-          FROM documents),
-contrib AS (
-    SELECT tf.doc_id,
-           (1000 * CAST(length(bin(n_docs // df)) AS BIGINT) * tf
-            * {100 + K} * 100 * total_tokens)
-           // (10000 * total_tokens * tf
-               + {K * (100 - B)} * total_tokens
-               + {K * B} * dl.dl * n_docs) AS c
-    FROM tf JOIN dft USING (token) JOIN dl USING (doc_id) CROSS JOIN stats
-),
-per_doc AS (
-    SELECT doc_id, CAST(sum(c) AS BIGINT) AS score_milli,
-           CAST(count(*) AS BIGINT) AS n_terms
-    FROM contrib GROUP BY 1
-)
-SELECT doc_id, score_milli, n_terms,
-       CAST(row_number() OVER (ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rank
-FROM per_doc
-ORDER BY score_milli DESC, doc_id
-LIMIT {int(k)}
-""".strip()
-
-
-def unigram_surprisal_sql() -> str:
-    """Oracle for the per-document mean unigram surprisal screen (mirror
-    of kgx.operators.indexing.unigram_surprisal): same log2-bit-length
-    quantization (``length(bin(T // ct))``) and milli-scaled floor-divided
-    mean, so every score matches bit-for-bit."""
-    return f"""
-WITH {_DOC_TOKENS_CTE},
-ct AS (SELECT token, CAST(count(*) AS BIGINT) AS ct FROM toks GROUP BY 1),
-stats AS (SELECT CAST(sum(ct) AS BIGINT) AS t_total FROM ct),
-scored AS (
-    SELECT toks.doc_id,
-           CAST(length(bin(t_total // ct)) AS BIGINT) AS bits
-    FROM toks JOIN ct USING (token) CROSS JOIN stats
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(bits) AS BIGINT) AS total_bits,
-       (1000 * CAST(sum(bits) AS BIGINT)) // CAST(count(*) AS BIGINT)
-           AS mean_milli_bits
-FROM scored GROUP BY 1
-""".strip()
-
-
 def media_caption_pairs_sql() -> str:
     """Oracle for interleaved caption mining (mirror of
     kgx.operators.media.media_caption_pairs): nearest non-empty text spans
@@ -2918,56 +2266,6 @@ FROM cum
 """.strip()
 
 
-def cm_registers_sql(col_expr: str, depth: int, width: int) -> str:
-    """Oracle for the count-min counter table (mirror of
-    kgx.operators.sketches.cm_registers): same md5-60 base hash, same
-    per-row universal-hash derivation unrolled as UNION ALL branches —
-    counters match bit-for-bit."""
-    from kgx.functions.hashing import minhash_derived
-
-    h = _duck_md5_60(col_expr)
-    branches = "\n    UNION ALL ".join(
-        f"SELECT CAST({d} AS BIGINT) AS d, "
-        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
-        f"FROM hashed"
-        for d in range(depth)
-    )
-    return f"""
-WITH hashed AS (
-    SELECT CAST({h} AS BIGINT) AS h0 FROM events
-),
-cells AS (
-    {branches}
-)
-SELECT d, col, CAST(count(*) AS BIGINT) AS cnt
-FROM cells GROUP BY 1, 2
-""".strip()
-
-
-def hll_registers_sql(col_expr: str, m: int) -> str:
-    """Oracle for the HLL register sketch (mirror of
-    kgx.operators.sketches.hll_registers): same md5-60 hash, same
-    length(bin(x)) leading-zero rank — registers match bit-for-bit."""
-    b = m.bit_length() - 1
-    w = 60 - b
-    h = _duck_md5_60(col_expr)
-    return f"""
-WITH hashed AS (
-    SELECT CAST({h} % {m} AS BIGINT) AS bucket,
-           CAST({h} // {m} AS BIGINT) AS rest
-    FROM events
-),
-rhod AS (
-    SELECT bucket,
-           CAST(CASE WHEN rest = 0 THEN {w + 1}
-                ELSE {w} - length(bin(rest)) + 1 END AS BIGINT) AS rho
-    FROM hashed
-)
-SELECT bucket, CAST(max(rho) AS BIGINT) AS max_rho
-FROM rhod GROUP BY bucket
-""".strip()
-
-
 def kg_transe_margin_sql(dim: int, modulus: int, k: int, buckets: int) -> str:
     """Oracle for the per-predicate TransE energy audit (mirror of
     kgx.operators.graphstats.transe_margin): the full training-pair oracle
@@ -3020,221 +2318,6 @@ SELECT pred, n_pos, n_neg, sum_pos_energy, sum_neg_energy,
             ELSE sum_neg_energy // n_neg - sum_pos_energy // n_pos
             END AS BIGINT) AS margin
 FROM tm_agg
-""".strip()
-
-
-def _pq_l2(a: str, b: str) -> str:
-    """Exact bigint squared-L2 between two equal-length lists."""
-    return (
-        f"CAST(list_sum(list_transform(range(1, len({a}) + 1), "
-        f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) AS BIGINT)"
-    )
-
-
-def _pq_ctes(m: int, k: int, rounds: int) -> str:
-    """Shared PQ CTE chain (quantize → subvectors → unrolled per-subspace
-    Lloyd rounds → final assignment ``pq_fin``) — the training/assignment
-    core of pq_codes_sql and pq_topk_sql; the emb_kmeans_sql unroll
-    stance with L2 instead of cosine."""
-    l2 = _pq_l2("b.sq", "c.cq")
-    ctes = [
-        "pq_qv AS (SELECT vec_id, list_transform(embedding, "
-        "x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q "
-        "FROM embeddings)",
-        # dim-divisibility guard mirrors the Spark side's raise_error
-        # (kgx.operators.clustering._pq_sub_table): an indivisible dim
-        # must fail LOUDLY in BOTH engines, never silently truncate
-        f"pq_sub AS MATERIALIZED (\n"
-        f"    SELECT vec_id, CAST(s AS INT) AS subspace,\n"
-        f"           list_slice(q,\n"
-        f"                      CASE WHEN len(q) % {m} = 0\n"
-        f"                           THEN s * (len(q) // {m}) + 1\n"
-        f"                           ELSE CAST(error('pq: embedding dim '\n"
-        f"                                || len(q) || ' not divisible by m={m}')\n"
-        f"                                AS BIGINT) END,\n"
-        f"                      (s + 1) * (len(q) // {m})) AS sq\n"
-        f"    FROM pq_qv, (SELECT unnest(range({m})) AS s))",
-        f"pq_c0 AS (SELECT subspace, vec_id AS code, sq AS cq\n"
-        f"          FROM pq_sub WHERE vec_id < {k})",
-    ]
-    for r in range(rounds):
-        ctes.append(f"""
-pq_s{r} AS (
-    SELECT b.vec_id, b.subspace, c.code, b.sq, {l2} AS sq_dist,
-           row_number() OVER (
-               PARTITION BY b.vec_id, b.subspace
-               ORDER BY {l2}, c.code) AS rn
-    FROM pq_sub b JOIN pq_c{r} c USING (subspace)
-),
-pq_a{r} AS (SELECT vec_id, subspace, code, sq FROM pq_s{r} WHERE rn = 1),
-pq_m{r} AS (
-    SELECT subspace, code, pos, sum(v) // count(*) AS c
-    FROM (SELECT subspace, code, unnest(sq) AS v,
-                 unnest(range(len(sq))) AS pos
-          FROM pq_a{r})
-    GROUP BY 1, 2, 3
-),
-pq_c{r + 1} AS (
-    SELECT subspace, code, list(c ORDER BY pos) AS cq
-    FROM pq_m{r} GROUP BY 1, 2
-)
-""".strip())
-    ctes.append(f"""
-pq_fin AS (
-    SELECT b.vec_id, b.subspace, c.code, {l2} AS sq_dist,
-           row_number() OVER (
-               PARTITION BY b.vec_id, b.subspace
-               ORDER BY {l2}, c.code) AS rn
-    FROM pq_sub b JOIN pq_c{rounds} c USING (subspace)
-)
-""".strip())
-    return ",\n".join(ctes)
-
-
-def pq_codes_sql(m: int, k: int, rounds: int) -> str:
-    """Oracle for product-quantization codes (mirror of
-    kgx.operators.clustering.pq_codes): same 1e-4 quantization, same
-    subvector slicing, per-subspace Lloyd rounds UNROLLED into chained
-    CTEs (the emb_kmeans_sql stance), exact bigint squared-L2, argmin
-    ties → min code, toward-zero ``//`` centroid means — codes and
-    distances match Spark bit-for-bit."""
-    return f"""
-WITH {_pq_ctes(m, k, rounds)}
-SELECT vec_id, subspace, code, sq_dist FROM pq_fin WHERE rn = 1
-""".strip()
-
-
-def pq_topk_sql(n_queries: int, k: int, m: int, k_codes: int, rounds: int) -> str:
-    """Oracle for PQ asymmetric-distance top-k (mirror of
-    kgx.operators.clustering.pq_topk): the shared PQ chain, the same
-    query-subvector × codebook LUT of exact subspace L2 distances, score
-    = sum of LUT entries over each vector's codes (self excluded), rank
-    ascending with vec_id tie-break."""
-    return f"""
-WITH {_pq_ctes(m, k_codes, rounds)},
-pqt_codes AS (SELECT vec_id, subspace, code FROM pq_fin WHERE rn = 1),
-pqt_q AS (
-    SELECT vec_id AS query_id, subspace, sq AS qsq
-    FROM pq_sub WHERE vec_id < {n_queries}
-),
-pqt_lut AS (
-    SELECT q.query_id, q.subspace, c.code, {_pq_l2("q.qsq", "c.cq")} AS lut_dist
-    FROM pqt_q q JOIN pq_c{rounds} c USING (subspace)
-),
-pqt_adc AS (
-    SELECT l.query_id, t.vec_id, CAST(sum(l.lut_dist) AS BIGINT) AS adc_dist
-    FROM pqt_codes t
-    JOIN pqt_lut l ON l.subspace = t.subspace AND l.code = t.code
-    WHERE t.vec_id <> l.query_id
-    GROUP BY 1, 2
-),
-pqt_ranked AS (
-    SELECT query_id, vec_id, adc_dist,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY adc_dist, vec_id) AS rank
-    FROM pqt_adc
-)
-SELECT query_id, CAST(rank AS INT) AS rank, vec_id, adc_dist
-FROM pqt_ranked WHERE rank <= {k}
-""".strip()
-
-
-def ann_ivfpq_sql(
-    n_queries: int,
-    k: int,
-    n_centroids: int,
-    nprobe: int,
-    m: int,
-    k_codes: int,
-    rounds: int,
-) -> str:
-    """Oracle for composed IVF-PQ search (mirror of
-    kgx.operators.clustering.ivf_pq_topk): the ann_ivf_sql coarse
-    quantizer CTEs (max-dot cells + nprobe probes, nrm>0 base) joined
-    with the shared PQ chain's codes and the ADC lookup table — candidate
-    set restricted to probed cells, ranked by summed subspace L2."""
-    cdot_v = _DUCK_DOT.format(a="base.q", b="c.q")
-    cdot_q = _DUCK_DOT.format(a="qs.q", b="c.q")
-    return f"""
-WITH {_QUANT_CTES},
-cents AS (SELECT vec_id AS cell, q FROM base WHERE vec_id < {n_centroids}),
-cell_scored AS (
-    SELECT base.vec_id, c.cell, {cdot_v} AS cdot,
-           row_number() OVER (PARTITION BY base.vec_id
-                              ORDER BY {cdot_v} DESC, c.cell) AS rn
-    FROM base CROSS JOIN cents c
-),
-cells AS (SELECT vec_id, cell FROM cell_scored WHERE rn = 1),
-qs AS (SELECT vec_id AS query_id, q FROM base WHERE vec_id < {n_queries}),
-probe_scored AS (
-    SELECT qs.query_id, c.cell, {cdot_q} AS cdot,
-           row_number() OVER (PARTITION BY qs.query_id
-                              ORDER BY {cdot_q} DESC, c.cell) AS rn
-    FROM qs CROSS JOIN cents c
-),
-pr AS (SELECT query_id, cell FROM probe_scored WHERE rn <= {nprobe}),
-{_pq_ctes(m, k_codes, rounds)},
-ivfpq_codes AS (SELECT vec_id, subspace, code FROM pq_fin WHERE rn = 1),
-ivfpq_q AS (
-    SELECT vec_id AS query_id, subspace, sq AS qsq
-    FROM pq_sub WHERE vec_id < {n_queries}
-),
-ivfpq_lut AS (
-    SELECT q.query_id, q.subspace, c.code, {_pq_l2("q.qsq", "c.cq")} AS lut_dist
-    FROM ivfpq_q q JOIN pq_c{rounds} c USING (subspace)
-),
-ivfpq_cand AS (
-    SELECT pr.query_id, cells.vec_id
-    FROM pr JOIN cells USING (cell)
-    WHERE cells.vec_id <> pr.query_id
-),
-ivfpq_adc AS (
-    SELECT c.query_id, c.vec_id, CAST(sum(l.lut_dist) AS BIGINT) AS adc_dist
-    FROM ivfpq_cand c
-    JOIN ivfpq_codes t ON t.vec_id = c.vec_id
-    JOIN ivfpq_lut l ON l.query_id = c.query_id
-                    AND l.subspace = t.subspace AND l.code = t.code
-    GROUP BY 1, 2
-),
-ivfpq_ranked AS (
-    SELECT query_id, vec_id, adc_dist,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY adc_dist, vec_id) AS rank
-    FROM ivfpq_adc
-)
-SELECT query_id, CAST(rank AS INT) AS rank, vec_id, adc_dist
-FROM ivfpq_ranked WHERE rank <= {k}
-""".strip()
-
-
-def ann_recall_sql(n_queries: int, k: int, n_centroids: int, nprobe: int) -> str:
-    """Oracle for the IVF recall@k audit (mirror of
-    kgx.operators.similarity.ivf_recall): the exact and IVF top-k
-    oracles nested verbatim as CTEs, joined on (query_id, vec_id),
-    floor-divided basis points."""
-    return f"""
-WITH ar_exact AS MATERIALIZED (
-    {ann_topk_sql(n_queries=n_queries, k=k)}
-),
-ar_approx AS MATERIALIZED (
-    {ann_ivf_sql(n_queries=n_queries, k=k, n_centroids=n_centroids, nprobe=nprobe,
-                 target_cell_size=None)}
-),
-ar_n AS (
-    SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-    FROM ar_exact GROUP BY 1
-),
-ar_h AS (
-    SELECT e.query_id, CAST(count(*) AS BIGINT) AS hits
-    FROM ar_exact e JOIN ar_approx a USING (query_id, vec_id)
-    GROUP BY 1
-)
-SELECT n.query_id, n.n_exact,
-       CAST(coalesce(h.hits, 0) AS BIGINT) AS hits,
-       CAST((10000 * coalesce(h.hits, 0)) // n.n_exact AS BIGINT) AS recall_bp
-FROM ar_n n LEFT JOIN ar_h h USING (query_id)
 """.strip()
 
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -66,16 +65,17 @@ def lineage_path(out_dir: str) -> str:
 
 def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """The parquet table at ``path``, or an empty one when the path does
-    not exist (a fresh output dir).  Any other read error propagates: a
-    corrupt or unreachable commit log must fail the job, not read as
-    "nothing committed" and silently redo committed work."""
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    not exist (a fresh output dir).  Absence is asked of the path's Hadoop
+    filesystem under the session's configuration, so a fresh output dir
+    costs no failed read (and no logged Java stack trace).  Every read
+    error propagates: a corrupt or unreachable commit log must fail the
+    job, not read as "nothing committed" and silently redo committed work."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(conf).exists(hpath):
         struct = StructType.fromDDL(schema)
         return spark.createDataFrame(_arrow_rows([], struct), struct)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _arrow_rows(rows: list[dict], struct: StructType):
@@ -107,11 +107,8 @@ def append_lineage(
     per_bucket,
     started_at: datetime,
 ) -> None:
-    """``per_bucket``: (bucket, docs, nodes, edges, triples) — a collected
-    row list, or a (small) DataFrame for convenience.  Appends one 'done'
-    row per bucket with :func:`append_rows`."""
-    if isinstance(per_bucket, DataFrame):
-        per_bucket = per_bucket.collect()
+    """``per_bucket``: collected (bucket, docs, nodes, edges, triples)
+    rows.  Appends one 'done' row per bucket with :func:`append_rows`."""
     finished = datetime.now(timezone.utc)
     counts = ("docs", "nodes", "edges", "triples")
     append_rows(out_dir, "lineage", LINEAGE_SCHEMA, [

@@ -3,6 +3,7 @@ DuckDB oracle at the test sf, on row count, sorted schema and value hash —
 the comparison ``tools/compare_oracle.py`` runs from the command line."""
 
 import inspect
+import re
 
 import pytest
 
@@ -40,6 +41,13 @@ def test_row_params_bind_to_op_and_oracle():
             except TypeError as e:
                 unbound.append((name, str(e)))
     assert unbound == []
+
+
+def test_oracle_connection_names_only_tables_it_reads():
+    """Each sf-dir table ``compare_oracle.connect`` registers is read by
+    some oracle, so the connection lists no table the gate never queries."""
+    words = set(re.findall(r"\w+", " ".join(entrymod.oracle_sql().values())))
+    assert [t for t in compare_oracle.TABLES if t not in words] == []
 
 
 @pytest.mark.parametrize("name", NAMES)

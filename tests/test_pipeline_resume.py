@@ -333,6 +333,20 @@ def test_missing_lineage_reads_as_an_arrow_scan(spark, tmp_path):
     assert "PythonRDD" not in empty._jdf.queryExecution().toRdd().toDebugString()
 
 
+def test_missing_lineage_is_not_read(spark, tmp_path, monkeypatch):
+    # a fresh out_dir is found absent by asking its filesystem, not by a
+    # parquet read that fails (and logs a Java stack trace) first
+    from pyspark.sql.readwriter import DataFrameReader
+
+    def no_read(*_, **__):
+        raise AssertionError("read a lineage path that does not exist")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    empty = lin.read_lineage(spark, str(tmp_path))
+    assert empty.schema == StructType.fromDDL(lin.LINEAGE_SCHEMA)
+    assert empty.collect() == []
+
+
 @pytest.mark.parametrize(
     "start",
     [

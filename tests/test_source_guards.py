@@ -1,6 +1,7 @@
 """Source-level guards: one pin policy, driver-built frames from Arrow, one
-in-row pair enumeration, no def that only tests reach, oracle builders
-without defaults, and a packaged zip that matches kgx/."""
+in-row pair enumeration, no def that only tests reach, no kgx module off a
+job path without a stated reason, oracle builders without defaults, and a
+packaged zip that matches kgx/."""
 
 import ast
 import collections
@@ -112,13 +113,7 @@ def test_every_def_has_a_non_test_caller():
     """Every top-level ``def``/``class`` in the shipped sources is named
     somewhere outside ``tests/`` other than on its own definition line, so
     code that only tests reach is deleted rather than kept.  Referrers are
-    the shipped sources plus ``bench.py``, ``tools/`` and ``perfbench/``.
-
-    The one exception, ``estimate_count``, is the count-min read side:
-    ``test_sketches`` checks ``cm_registers`` against it (point estimates
-    never underestimate), so it is the reference that test compares
-    against rather than dead code."""
-    allowed = {"estimate_count"}
+    the shipped sources plus ``bench.py``, ``tools/`` and ``perfbench/``."""
     referrers = [*_sources(), ROOT / "bench.py"]
     for d in ("tools", "perfbench"):
         referrers += sorted((ROOT / d).rglob("*.py"))
@@ -134,8 +129,71 @@ def test_every_def_has_a_non_test_caller():
                 own = re.findall(r"\w+", lines[node.lineno - 1]).count(node.name)
                 if words[node.name] == own:
                     unreached.append(node.name)
-    stray = sorted(set(unreached) - allowed)
-    assert stray == [], f"defs that only tests reach: {stray}"
+    assert unreached == [], f"defs that only tests reach: {sorted(unreached)}"
+
+
+#: kgx modules that no ``jobs/`` entry imports, each with why it stays
+UNREACHED_BY_JOBS = {
+    "kgx.oracles": "the DuckDB reference implementation the oracle gate compares against",
+    "kgx.sources.binary": "binary-file ingest, SURVEY S2-S6",
+    "kgx.sources.minidoc": "the pdf/docx parsers of binary ingest, SURVEY S2-S6",
+    "kgx.sources.llm": "the LLM extraction source, SURVEY S7/S8",
+    "kgx.operators.jsonio": "LLM JSON parse, repair and coercion, SURVEY J1-J3",
+    "kgx.operators.security": "file-security predicates, SURVEY P10",
+    "kgx.plans.versions": "snapshot diff and SCD2 intervals, the SURVEY Version table",
+    "kgx.operators.media": "the media payload of the interleaved corpus",
+    "kgx.sources.miniimage": "the media payload's image codec",
+    "kgx.sources.miniwav": "the media payload's audio codec",
+    "kgx.sources.miniavi": "the media payload's video container",
+}
+
+
+def _kgx_modules():
+    """Dotted name → path of every ``kgx/**/*.py`` module."""
+    mods = {}
+    for path in sorted((ROOT / "kgx").rglob("*.py")):
+        parts = path.relative_to(ROOT).with_suffix("").parts
+        mods[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = path
+    return mods
+
+
+def _imported(path, mods):
+    """The kgx modules ``path`` imports anywhere in its body, function-local
+    imports included, with the packages each import runs on the way."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names = [node.module] + [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            continue
+        for name in names:
+            parts = name.split(".")
+            found.update(
+                m for m in (".".join(parts[:i]) for i in range(1, len(parts) + 1))
+                if m in mods
+            )
+    return found
+
+
+def test_every_kgx_module_is_on_a_job_path():
+    """Every ``kgx`` module is imported, at least transitively, by a
+    ``jobs/`` entry, or is in ``UNREACHED_BY_JOBS`` with its reason; an
+    operator family that only the oracle gate runs is wired to a job or
+    deleted.  An exception that a job does reach is stale and fails too."""
+    mods = _kgx_modules()
+    reached = set()
+    todo = [i for p in sorted((ROOT / "jobs").glob("*.py")) for i in _imported(p, mods)]
+    while todo:
+        mod = todo.pop()
+        if mod not in reached:
+            reached.add(mod)
+            todo += _imported(mods[mod], mods)
+    off_path = sorted(set(mods) - reached - set(UNREACHED_BY_JOBS))
+    assert off_path == [], f"modules no job imports: {off_path}"
+    stale = sorted((set(UNREACHED_BY_JOBS) & reached) | (set(UNREACHED_BY_JOBS) - set(mods)))
+    assert stale == [], f"stale exceptions: {stale}"
 
 
 def test_oracle_builders_take_no_defaults():
