@@ -28,8 +28,8 @@ from kgx import oracles as O
 from kgx.functions import hashing
 from kgx.functions.plan import materialize
 from kgx.operators import (
-    curation, dedup, extract, graphstats, jsonio, linking, media, packing,
-    security, spans as spans_op, textstats, validate,
+    curation, dedup, extract, graphstats, indexing, jsonio, linking, media,
+    packing, security, sketches, spans as spans_op, temporal, textstats, validate,
 )
 from kgx.plans import versions
 from kgx.plans.curation_pipeline import (
@@ -62,6 +62,13 @@ def _location(spark: SparkSession, sf_dir: str) -> tuple[SparkSession, str]:
 def _table(name: str) -> Callable[[SparkSession, str], DataFrame]:
     """One sf-dir table as scanned: a single split per file."""
     return lambda spark, sf_dir: spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _spread(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """One sf-dir table spread across cores (``spread_small_scan``)."""
+    return lambda spark, sf_dir: docs_src.spread_small_scan(
+        spark, _table(name)(spark, sf_dir)
+    )
 
 
 def _then(src: Callable, op: Callable) -> Callable[[SparkSession, str], DataFrame]:
@@ -122,6 +129,7 @@ _image_blobs = _then(_media, media.synthesize_media_blobs)
 _audio_blobs = _then(_media, media.synthesize_audio_blobs)
 _video_blobs = _then(_media, media.synthesize_video_blobs)
 _events = _table("events")
+_spread_events = _spread("events")
 
 
 # ---------------------------------------------------------------------------
@@ -243,6 +251,80 @@ def q_balanced_sample(docs: DataFrame) -> DataFrame:
     """Balance-to-minority sampling over the domain fixture strata."""
     strata = docs.selectExpr("doc_id", curation.DOMAIN_FIXTURE_EXPR + " AS stratum")
     return curation.balanced_sample(docs, strata)
+
+
+def _bench_bloom(sh: DataFrame, bench_mod: int, m_bits: int, k: int) -> DataFrame:
+    bench = sh.where(F.col("doc_id") % bench_mod == 0)
+    return sketches.bloom_registers(
+        bench, "shingle_hash", m_bits=m_bits, k=k, pre_hashed=True
+    )
+
+
+def q_bloom_registers(
+    docs: DataFrame, bench_mod: int, n: int, m_bits: int, k: int
+) -> DataFrame:
+    """Bloom-filter bitmap of the benchmark slice's shingle hashes."""
+    return _bench_bloom(dedup.shingle_table(docs, n=n), bench_mod, m_bits, k)
+
+
+def q_bloom_contamination(
+    docs: DataFrame, bench_mod: int, n: int, m_bits: int, k: int
+) -> DataFrame:
+    """Every train shingle probes the benchmark bitmap: a superset of the
+    exact ``contamination`` screen's hits."""
+    sh = dedup.shingle_table(docs, n=n)
+    regs = _bench_bloom(sh, bench_mod, m_bits, k)
+    return sketches.bloom_probe(
+        sh.where(F.col("doc_id") % bench_mod != 0), regs, m_bits=m_bits, k=k
+    )
+
+
+def q_asof_last_click(ev: DataFrame) -> DataFrame:
+    """For every purchase, the user's latest click at-or-before it.  Both
+    sides pre-dedup per (user_id, ts) by max event_id so tie semantics are
+    engine-independent; the oracle uses DuckDB's native ASOF JOIN."""
+    one = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
+    ev = (
+        ev.withColumn("__rn", F.row_number().over(one))
+        .where("__rn = 1")
+        .drop("__rn")
+    )
+    purchases = ev.where("event_type = 'purchase'").select(
+        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
+    )
+    clicks = ev.where("event_type = 'click'").select(
+        "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
+    )
+    return temporal.asof_join(
+        purchases,
+        clicks,
+        key="user_id",
+        left_ts="purchase_ts",
+        right_ts="click_ts",
+        payload=["click_id", "click_ts"],
+        how="inner",
+    )
+
+
+def q_range_clicks_before_purchase(ev: DataFrame) -> DataFrame:
+    """Every click within 24 h before each purchase; the oracle is the plain
+    inequality join."""
+    purchases = ev.where("event_type = 'purchase'").select(
+        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
+    )
+    clicks = ev.where("event_type = 'click'").select(
+        "user_id", F.col("ts").alias("click_ts2"), F.col("event_id").alias("click_id")
+    )
+    out = temporal.range_join_binned(
+        purchases,
+        clicks.withColumnRenamed("click_ts2", "ts"),
+        key="user_id",
+        left_ts="purchase_ts",
+        right_ts="ts",
+        window_sec=86400,
+        payload=["click_id"],
+    )
+    return out.select("user_id", "purchase_id", "purchase_ts", "click_id")
 
 
 # --- JSON ops / validation / CSV-prose (SURVEY §2.4, §2.2 P7-P9, §2.1 S5) --
@@ -577,6 +659,13 @@ QUERIES = (
     ("video_decode_real", _video_blobs, media.decode_video_bytes, {},
      O.video_decode_real_sql),
     ("media_inventory", _flat_spans, media.media_inventory, {}, O.media_inventory_sql),
+    ("asof_last_click", _events, q_asof_last_click, {}, O.asof_last_click_sql),
+    ("range_clicks_before_purchase", _events, q_range_clicks_before_purchase, {},
+     O.range_clicks_sql),
+    # Spark's native session_window; the oracle re-derives the sessions with
+    # a gaps-and-islands window cascade
+    ("sessions", _events, partial(temporal.sessionize, key="user_id", ts="ts"),
+     dict(gap_sec=21600), O.sessions_sql),
     ("w2_latest_event_per_user", _events, q_latest_event_per_user, {},
      O.latest_event_sql),
     ("w3_retention_tail", _events, q_retention_tail, dict(keep=3),
@@ -588,6 +677,8 @@ QUERIES = (
     ("graph_kcore", _triples, graphstats.kcore, dict(k=2, iters=4), O.graph_kcore_sql),
     ("a1_pricing_summary", _table("lineitem"), q_pricing_summary, {},
      O.pricing_summary_sql),
+    ("bloom_contamination", _documents, q_bloom_contamination,
+     dict(bench_mod=19, n=3, m_bits=65536, k=4), O.bloom_contamination_sql),
     ("jn2_graph_fetch", _graphs, q_jn2_graph_fetch, {}, O.graph_fetch_sql),
     ("a7_bucket_metrics", _graphs, q_a7_bucket_metrics, {}, O.bucket_metrics_sql),
     ("fn_scalar_suite", _documents, q_fn_scalar_suite, {}, O.scalar_suite_sql),
@@ -597,6 +688,7 @@ QUERIES = (
     ("j3_graph_coercion", _events, q_j3_graph_coercion, {}, O.graph_coercion_sql),
     ("p9_graph_checks", _graphs, validate.graph_checks, {}, O.graph_checks_sql),
     ("p10_media_security", _media, q_p10_media_security, {}, O.media_security_sql),
+    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("s5_csv_prose", _table("customer"), q_s5_csv_prose, dict(rows_per_doc=50),
      O.csv_prose_sql),
     ("jn6_customers_with_orders", _location, q_customers_with_orders, {},
@@ -604,7 +696,6 @@ QUERIES = (
     ("s7_llm_fake_edges", _spans, q_s7_llm_fake_edges, {}, O.llm_edges_sql),
     ("media_decode_real", _image_blobs, media.decode_media_bytes, {},
      O.media_decode_real_sql),
-    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("audio_decode_real", _audio_blobs, media.decode_audio_bytes, {},
      O.audio_decode_real_sql),
     ("video_frames_real", _video_blobs, media.video_frame_means, {},
@@ -625,12 +716,37 @@ QUERIES = (
      O.kg_training_pairs_sql),
     ("kg_negative_samples", _triples, graphstats.negative_samples,
      dict(k=2, buckets=64), O.kg_negative_samples_sql),
+    ("inverted_postings", _documents, indexing.inverted_postings,
+     dict(min_df=2, max_df=400), O.inverted_postings_sql),
     ("media_captions", _flat_spans, media.media_caption_pairs, {},
      O.media_caption_pairs_sql),
     # media spans cost a fixed vision-encoder budget: 576 = 24x24 patches
     ("seq_pack_interleaved", _spans, packing.seq_pack_interleaved,
      dict(capacity=4096, n_shards=8, media_token_cost=576),
      O.seq_pack_interleaved_sql),
+    ("hll_registers", _spread_events,
+     partial(sketches.hll_registers, col_expr="cast(event_id as string)"),
+     dict(m=64), partial(O.hll_registers_sql, col_expr="cast(event_id as varchar)")),
+    ("cm_registers", _spread_events,
+     partial(sketches.cm_registers, col_expr="cast(user_id as string)"),
+     dict(depth=4, width=256),
+     partial(O.cm_registers_sql, col_expr="cast(user_id as varchar)")),
+    ("bloom_registers", _documents, q_bloom_registers,
+     dict(bench_mod=19, n=3, m_bits=65536, k=4), O.bloom_registers_sql),
+    # floor(value * 100) is IEEE-identical across engines where round() is not
+    ("hist_registers", _spread_events,
+     partial(sketches.hist_registers, col_expr="cast(floor(value * 100) as bigint)"),
+     {}, partial(O.hist_registers_sql, col_expr="CAST(floor(value * 100) AS BIGINT)")),
+    ("cm_heavy_hitters", _spread_events,
+     partial(sketches.cm_heavy_hitters, col_expr="cast(user_id as string)"),
+     dict(threshold=75, depth=4, width=256),
+     partial(O.cm_heavy_hitters_sql, col_expr="cast(user_id as varchar)")),
+    ("hll_by_group", _spread_events,
+     partial(sketches.hll_registers_grouped, col_expr="cast(user_id as string)"),
+     dict(group_col="event_type", m=64),
+     partial(O.hll_grouped_sql, col_expr="cast(user_id as varchar)")),
+    ("lm_trigram_counts", _documents, indexing.lm_ngram_counts,
+     dict(n=3, min_count=2), O.lm_ngram_counts_sql),
     ("seq_pack", _documents, packing.seq_pack, dict(capacity=128, n_shards=8),
      O.seq_pack_sql),
     ("shard_manifest", _documents, packing.shard_manifest, dict(n_shards=8),
@@ -638,6 +754,14 @@ QUERIES = (
     ("token_mix", _documents, packing.token_mix_plan, {}, O.token_mix_sql),
     ("repetition_stats", _documents, textstats.repetition_stats,
      dict(top_n=2, dup_n=3), O.repetition_sql),
+    # 'dup' is the one rare token in the driver vocabulary (idf_bits 5), the
+    # others are common (idf_bits 1): the ranking exercises both idf extremes
+    ("bm25_topk", _documents, indexing.bm25_topk,
+     dict(query_terms=["dup", "window", "join", "hash"], k=25, k1_centi=120,
+          b_centi=75),
+     O.bm25_topk_sql),
+    ("unigram_surprisal", _documents, indexing.unigram_surprisal, {},
+     O.unigram_surprisal_sql),
     # equal weights: uniform DeepWalk steps
     ("graph_random_walks", _triples,
      partial(graphstats.node2vec_walks, w_return=1, w_near=1, w_far=1),

@@ -1,10 +1,9 @@
 """Text indexing: inverted postings and n-gram language-model counts.
 
-The retrieval-side companions to the ANN family (kgx.operators.similarity):
-an inverted token index is how a 100 TB corpus serves keyword/BM25-style
-retrieval next to embedding search, and n-gram count tables (with
-Kneser-Ney continuation counts) are the statistical-LM prep a data
-pipeline exports for perplexity filtering and infini-gram-style lookups.
+An inverted token index is how a 100 TB corpus serves keyword/BM25-style
+retrieval, and n-gram count tables (with Kneser-Ney continuation counts)
+are the statistical-LM prep a data pipeline exports for perplexity
+filtering and infini-gram-style lookups.
 The reference extractor has none of this (single-document HTTP service) —
 north-star NEW operators.
 
@@ -113,8 +112,8 @@ def bm25_topk(
     Engine-neutral by construction: every quantity is a BIGINT and every
     division is an explicit floor division (Spark ``div`` == DuckDB ``//``
     on non-negative operands), so the DuckDB oracle replays the score
-    bit-for-bit — the same discipline as the integer PageRank and the
-    quantized ANN dot products.  Two deliberate quantizations versus
+    bit-for-bit — the same discipline as the integer PageRank.  Two
+    deliberate quantizations versus
     textbook BM25 (Robertson/Okapi):
 
     - **idf**: ``length(bin(N div df))`` = floor(log2(N/df)) + 1 — the

@@ -1494,6 +1494,63 @@ FROM rates r LEFT JOIN picked p USING (stratum)
 """.strip()
 
 
+# ---------------------------------------------------------------------------
+# temporal joins (kgx.operators.temporal) — independent DuckDB implementations
+# ---------------------------------------------------------------------------
+
+_EVENTS_DEDUP_CTE = """
+ev AS (
+    SELECT user_id, ts, event_id, event_type
+    FROM events
+    QUALIFY row_number() OVER (PARTITION BY user_id, ts
+                               ORDER BY event_id DESC) = 1
+)
+""".strip()
+
+
+def asof_last_click_sql() -> str:
+    """Oracle for the distributed as-of join via DuckDB's NATIVE ASOF JOIN —
+    a genuinely independent implementation of the same semantics (mirror of
+    __spark_entry__.q_asof_last_click: per-(user_id, ts) max-event_id dedup,
+    inner, right ts <= left ts)."""
+    return f"""
+WITH {_EVENTS_DEDUP_CTE},
+purchases AS (
+    SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
+    FROM ev WHERE event_type = 'purchase'
+),
+clicks AS (
+    SELECT user_id, ts AS click_ts, event_id AS click_id
+    FROM ev WHERE event_type = 'click'
+)
+SELECT p.user_id, p.purchase_id, p.purchase_ts, c.click_id, c.click_ts
+FROM purchases p
+ASOF JOIN clicks c
+  ON p.user_id = c.user_id AND c.click_ts <= p.purchase_ts
+""".strip()
+
+
+def range_clicks_sql() -> str:
+    """Oracle for the binned range join via a plain inequality join (mirror
+    of __spark_entry__.q_range_clicks_before_purchase: clicks in the 24 h
+    window at-or-before each purchase, raw events, no dedup)."""
+    return """
+WITH purchases AS (
+    SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
+    FROM events WHERE event_type = 'purchase'
+),
+clicks AS (
+    SELECT user_id, ts AS click_ts, event_id AS click_id
+    FROM events WHERE event_type = 'click'
+)
+SELECT p.user_id, p.purchase_id, p.purchase_ts, c.click_id
+FROM purchases p JOIN clicks c
+  ON p.user_id = c.user_id
+ AND c.click_ts <= p.purchase_ts
+ AND c.click_ts >= p.purchase_ts - INTERVAL 86400 SECOND
+""".strip()
+
+
 def vocab_topk_sql(k: int) -> str:
     """Oracle for the vocabulary top-k (mirror of
     kgx.operators.textstats.vocab_topk: whitespace tokens, count-desc /
@@ -1514,6 +1571,47 @@ counts AS (
 SELECT token, n_occurrences, n_docs,
        CAST(row_number() OVER (ORDER BY n_occurrences DESC, token) AS BIGINT) AS rank
 FROM counts
+""".strip()
+
+
+def sessions_sql(gap_sec: int) -> str:
+    """Oracle for gap-based sessionization via the classic gaps-and-islands
+    cascade (independent of Spark's native session_window merge): new
+    session when the gap from the previous event is STRICTLY greater than
+    gap_sec (Spark's merge boundary is inclusive — pinned by
+    test_sessionize_gap_boundary_semantics); session_end = last ts + gap."""
+    gap_us = gap_sec * 1_000_000
+    return f"""
+WITH e AS (
+    SELECT user_id, ts,
+           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+    FROM events
+),
+f AS (
+    SELECT user_id, ts,
+           CASE WHEN prev IS NULL
+                     OR epoch_us(ts) - epoch_us(prev) > {gap_us}
+                THEN 1 ELSE 0 END AS new_s
+    FROM e
+),
+s AS (
+    SELECT user_id, ts,
+           sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                            ROWS UNBOUNDED PRECEDING) AS grp
+    FROM f
+),
+g AS (
+    SELECT user_id, grp,
+           min(ts) AS session_start,
+           max(ts) + INTERVAL {gap_sec} SECOND AS session_end,
+           CAST(count(*) AS BIGINT) AS n_events
+    FROM s GROUP BY 1, 2
+)
+SELECT user_id,
+       CAST(row_number() OVER (PARTITION BY user_id ORDER BY session_start)
+            AS BIGINT) AS session_id,
+       session_start, session_end, n_events
+FROM g
 """.strip()
 
 
@@ -1759,6 +1857,81 @@ FROM kc_e{iters} GROUP BY 1
 """.strip()
 
 
+def _bloom_regs_cte(bench_mod: int, n: int, m_bits: int, k: int) -> str:
+    """Shared CTE chain: benchmark shingle hashes -> Bloom register table
+    (mirror of kgx.operators.sketches.bloom_registers over the
+    doc_id % bench_mod = 0 slice — 32-bit words, double-hashed positions)."""
+    pos_branches = "\n    UNION ALL ".join(
+        f"SELECT (h1 + {j} * stride) % {m_bits} AS pos FROM bl_hs"
+        for j in range(k)
+    )
+    return f"""
+bl_sh AS MATERIALIZED (
+    SELECT doc_id, {_duck_md5_60('shingle')} AS shingle_hash
+    FROM (SELECT doc_id, unnest({_duck_shingles(n)}) AS shingle FROM documents)
+),
+bl_hs AS (
+    SELECT shingle_hash % {m_bits} AS h1,
+           2 * ((shingle_hash // {m_bits}) % {m_bits}) + 1 AS stride
+    FROM bl_sh WHERE doc_id % {bench_mod} = 0
+),
+bl_pos AS (
+    {pos_branches}
+),
+bl_regs AS MATERIALIZED (
+    SELECT CAST(pos // 32 AS BIGINT) AS word,
+           CAST(bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS BIGINT) AS bits
+    FROM bl_pos GROUP BY 1
+)
+""".strip()
+
+
+def bloom_registers_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
+    """Oracle for the benchmark-slice Bloom filter register table."""
+    return f"""
+WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)}
+SELECT word, bits FROM bl_regs
+""".strip()
+
+
+def bloom_contamination_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
+    """Oracle for the Bloom-filter decontamination probe (mirror of
+    kgx.operators.sketches.bloom_probe over the train slice): per shingle
+    all k probe bits must be set; per doc count shingles and flagged
+    shingles."""
+    probe_branches = "\n    UNION ALL ".join(
+        f"SELECT doc_id, h0, (h1 + {j} * stride) % {m_bits} AS pos FROM bl_tr"
+        for j in range(k)
+    )
+    return f"""
+WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)},
+bl_tr AS (
+    SELECT doc_id, shingle_hash AS h0,
+           shingle_hash % {m_bits} AS h1,
+           2 * ((shingle_hash // {m_bits}) % {m_bits}) + 1 AS stride
+    FROM bl_sh WHERE doc_id % {bench_mod} != 0
+),
+bl_tp AS (
+    {probe_branches}
+),
+bl_hits AS (
+    SELECT t.doc_id, t.h0,
+           CASE WHEN (coalesce(r.bits, 0) & (1::BIGINT << CAST(t.pos % 32 AS INT)))
+                     = (1::BIGINT << CAST(t.pos % 32 AS INT))
+                THEN 1 ELSE 0 END AS hit
+    FROM (SELECT doc_id, h0, pos, CAST(pos // 32 AS BIGINT) AS word FROM bl_tp) t
+    LEFT JOIN bl_regs r ON r.word = t.word
+),
+bl_per AS (
+    SELECT doc_id, h0, min(hit) AS all_hit FROM bl_hits GROUP BY 1, 2
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_keys,
+       CAST(sum(all_hit) AS BIGINT) AS n_flagged
+FROM bl_per GROUP BY 1
+""".strip()
+
+
 def _tri_cte_head() -> str:
     """The full triples oracle re-packaged as CTE chain + a materialized
     ``tri`` table (shared by the version-diff and negative-sampling
@@ -1933,6 +2106,18 @@ WHERE n.label <> p.obj
 """.strip()
 
 
+def hist_registers_sql(col_expr: str) -> str:
+    """Oracle for the log2 histogram sketch (mirror of
+    kgx.operators.sketches.hist_registers: bin 0 for x <= 0, else
+    length(bin(x)) — the HLL rho's bit-length arithmetic)."""
+    return f"""
+SELECT CAST(CASE WHEN ({col_expr}) <= 0 THEN 0
+            ELSE length(bin({col_expr})) END AS BIGINT) AS bin,
+       CAST(count(*) AS BIGINT) AS cnt
+FROM events GROUP BY 1
+""".strip()
+
+
 def graph_link_candidates_sql(max_degree: int, min_common: int) -> str:
     """Oracle for common-neighbor link-prediction candidates (mirror of
     kgx.operators.graphstats.common_neighbor_candidates): undirected
@@ -1972,6 +2157,81 @@ FROM lc_cn c
 JOIN lc_deg da ON da.subj = c.label_a
 JOIN lc_deg db ON db.subj = c.label_b
 LEFT JOIN lc_canon e ON e.label_a = c.label_a AND e.label_b = c.label_b
+""".strip()
+
+
+def cm_heavy_hitters_sql(col_expr: str, threshold: int, depth: int, width: int) -> str:
+    """Oracle for count-min heavy-hitter consumption (mirror of
+    kgx.operators.sketches.cm_heavy_hitters): registers replayed, per-key
+    cells derived with the same universal-hash chain, estimate = min over
+    depth, threshold filter, exact count beside."""
+    from kgx.functions.hashing import minhash_derived
+
+    h = _duck_md5_60(col_expr)
+    kh = _duck_md5_60("key")
+    reg_branches = "\n    UNION ALL ".join(
+        f"SELECT CAST({d} AS BIGINT) AS d, "
+        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
+        f"FROM hh_hashed"
+        for d in range(depth)
+    )
+    key_branches = "\n    UNION ALL ".join(
+        f"SELECT key, exact_count, CAST({d} AS BIGINT) AS d, "
+        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
+        f"FROM hh_keys"
+        for d in range(depth)
+    )
+    return f"""
+WITH hh_hashed AS (
+    SELECT CAST({h} AS BIGINT) AS h0 FROM events
+),
+hh_cells AS (
+    {reg_branches}
+),
+hh_regs AS MATERIALIZED (
+    SELECT d, col, CAST(count(*) AS BIGINT) AS cnt FROM hh_cells GROUP BY 1, 2
+),
+hh_keys AS (
+    SELECT key, exact_count, CAST({kh} AS BIGINT) AS h0
+    FROM (
+        SELECT {col_expr} AS key, CAST(count(*) AS BIGINT) AS exact_count
+        FROM events GROUP BY 1
+    )
+),
+hh_kcells AS (
+    {key_branches}
+),
+hh_est AS (
+    SELECT k.key, k.exact_count, CAST(min(r.cnt) AS BIGINT) AS est_count
+    FROM hh_kcells k JOIN hh_regs r ON r.d = k.d AND r.col = k.col
+    GROUP BY 1, 2
+)
+SELECT key, est_count, exact_count
+FROM hh_est WHERE est_count >= {threshold}
+""".strip()
+
+
+def hll_grouped_sql(group_col: str, col_expr: str, m: int) -> str:
+    """Oracle for the per-group HLL register sketch (mirror of
+    kgx.operators.sketches.hll_registers_grouped)."""
+    b = m.bit_length() - 1
+    w = 60 - b
+    h = _duck_md5_60(col_expr)
+    return f"""
+WITH hashed AS (
+    SELECT {group_col} AS grp,
+           CAST({h} % {m} AS BIGINT) AS bucket,
+           CAST({h} // {m} AS BIGINT) AS rest
+    FROM events
+),
+rhod AS (
+    SELECT grp, bucket,
+           CAST(CASE WHEN rest = 0 THEN {w + 1}
+                ELSE {w} - length(bin(rest)) + 1 END AS BIGINT) AS rho
+    FROM hashed
+)
+SELECT grp, bucket, CAST(max(rho) AS BIGINT) AS max_rho
+FROM rhod GROUP BY 1, 2
 """.strip()
 
 
@@ -2201,6 +2461,125 @@ GROUP BY m.shard
 """.strip()
 
 
+# ---------------------------------------------------------------------------
+# text indexing (kgx.operators.indexing)
+# ---------------------------------------------------------------------------
+
+_DOC_TOKENS_CTE = """
+toks AS MATERIALIZED (
+    SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
+    FROM documents
+)
+""".strip()
+
+
+def inverted_postings_sql(min_df: int, max_df: int | None) -> str:
+    """Oracle for the inverted token index (mirror of
+    kgx.operators.indexing.inverted_postings)."""
+    max_clause = f"AND df <= {max_df}" if max_df is not None else ""
+    return f"""
+WITH {_DOC_TOKENS_CTE},
+tf AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
+       FROM toks GROUP BY 1, 2),
+dft AS (SELECT token, CAST(count(*) AS BIGINT) AS df
+        FROM tf GROUP BY 1 HAVING count(*) >= {min_df} {max_clause})
+SELECT tf.token, tf.doc_id, tf.tf, dft.df
+FROM tf JOIN dft USING (token)
+""".strip()
+
+
+def lm_ngram_counts_sql(n: int, min_count: int) -> str:
+    """Oracle for the n-gram LM count table with KN continuation counts
+    (mirror of kgx.operators.indexing.lm_ngram_counts)."""
+    t = "list_filter(str_split(text, ' '), t -> t <> '')"
+    return f"""
+WITH grams AS MATERIALIZED (
+    SELECT doc_id,
+           unnest(list_transform(range(1, len({t}) - {n - 2}),
+                                 i -> array_to_string(list_slice({t}, i, i + {n - 1}), ' '))) AS gram
+    FROM documents
+),
+counts AS (
+    SELECT gram, CAST(count(*) AS BIGINT) AS n_occurrences,
+           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+    FROM grams GROUP BY 1 HAVING count(*) >= {min_count}
+),
+cont AS (
+    SELECT substring(gram, length(split_part(gram, ' ', 1)) + 2) AS suffix,
+           CAST(count(DISTINCT split_part(gram, ' ', 1)) AS BIGINT) AS continuation_count
+    FROM grams GROUP BY 1
+)
+SELECT c.gram, c.n_occurrences, c.n_docs,
+       substring(c.gram, length(split_part(c.gram, ' ', 1)) + 2) AS suffix,
+       ct.continuation_count
+FROM counts c
+JOIN cont ct ON ct.suffix = substring(c.gram, length(split_part(c.gram, ' ', 1)) + 2)
+""".strip()
+
+
+def bm25_topk_sql(query_terms: list[str], k: int, k1_centi: int, b_centi: int) -> str:
+    """Oracle for fixed-point BM25 top-k retrieval (mirror of
+    kgx.operators.indexing.bm25_topk): identical bigint formula — DuckDB
+    ``//`` replays Spark ``div`` (both floor on non-negative operands),
+    ``length(bin(x))`` replays the log2-bit-length idf — so score_milli
+    matches bit-for-bit and the (score DESC, doc_id) tie-break pins the
+    same top-k and ranks."""
+    K, B = int(k1_centi), int(b_centi)
+    terms = ", ".join("'" + t.replace("'", "''") + "'" for t in query_terms)
+    t = "list_filter(str_split(text, ' '), t -> t <> '')"
+    return f"""
+WITH {_DOC_TOKENS_CTE},
+tf AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
+       FROM toks WHERE token IN ({terms}) GROUP BY 1, 2),
+dft AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+dl AS (SELECT doc_id, CAST(len({t}) AS BIGINT) AS dl FROM documents),
+stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+                 CAST(sum(len({t})) AS BIGINT) AS total_tokens
+          FROM documents),
+contrib AS (
+    SELECT tf.doc_id,
+           (1000 * CAST(length(bin(n_docs // df)) AS BIGINT) * tf
+            * {100 + K} * 100 * total_tokens)
+           // (10000 * total_tokens * tf
+               + {K * (100 - B)} * total_tokens
+               + {K * B} * dl.dl * n_docs) AS c
+    FROM tf JOIN dft USING (token) JOIN dl USING (doc_id) CROSS JOIN stats
+),
+per_doc AS (
+    SELECT doc_id, CAST(sum(c) AS BIGINT) AS score_milli,
+           CAST(count(*) AS BIGINT) AS n_terms
+    FROM contrib GROUP BY 1
+)
+SELECT doc_id, score_milli, n_terms,
+       CAST(row_number() OVER (ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rank
+FROM per_doc
+ORDER BY score_milli DESC, doc_id
+LIMIT {int(k)}
+""".strip()
+
+
+def unigram_surprisal_sql() -> str:
+    """Oracle for the per-document mean unigram surprisal screen (mirror
+    of kgx.operators.indexing.unigram_surprisal): same log2-bit-length
+    quantization (``length(bin(T // ct))``) and milli-scaled floor-divided
+    mean, so every score matches bit-for-bit."""
+    return f"""
+WITH {_DOC_TOKENS_CTE},
+ct AS (SELECT token, CAST(count(*) AS BIGINT) AS ct FROM toks GROUP BY 1),
+stats AS (SELECT CAST(sum(ct) AS BIGINT) AS t_total FROM ct),
+scored AS (
+    SELECT toks.doc_id,
+           CAST(length(bin(t_total // ct)) AS BIGINT) AS bits
+    FROM toks JOIN ct USING (token) CROSS JOIN stats
+)
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       CAST(sum(bits) AS BIGINT) AS total_bits,
+       (1000 * CAST(sum(bits) AS BIGINT)) // CAST(count(*) AS BIGINT)
+           AS mean_milli_bits
+FROM scored GROUP BY 1
+""".strip()
+
+
 def media_caption_pairs_sql() -> str:
     """Oracle for interleaved caption mining (mirror of
     kgx.operators.media.media_caption_pairs): nearest non-empty text spans
@@ -2263,6 +2642,56 @@ SELECT doc_id, shard, text_tokens, media_spans, cost,
        CAST((c - 1) // {capacity} AS BIGINT) AS last_seq,
        CAST((c - 1) // {capacity} - (c - cost) // {capacity} + 1 AS BIGINT) AS n_seqs
 FROM cum
+""".strip()
+
+
+def cm_registers_sql(col_expr: str, depth: int, width: int) -> str:
+    """Oracle for the count-min counter table (mirror of
+    kgx.operators.sketches.cm_registers): same md5-60 base hash, same
+    per-row universal-hash derivation unrolled as UNION ALL branches —
+    counters match bit-for-bit."""
+    from kgx.functions.hashing import minhash_derived
+
+    h = _duck_md5_60(col_expr)
+    branches = "\n    UNION ALL ".join(
+        f"SELECT CAST({d} AS BIGINT) AS d, "
+        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
+        f"FROM hashed"
+        for d in range(depth)
+    )
+    return f"""
+WITH hashed AS (
+    SELECT CAST({h} AS BIGINT) AS h0 FROM events
+),
+cells AS (
+    {branches}
+)
+SELECT d, col, CAST(count(*) AS BIGINT) AS cnt
+FROM cells GROUP BY 1, 2
+""".strip()
+
+
+def hll_registers_sql(col_expr: str, m: int) -> str:
+    """Oracle for the HLL register sketch (mirror of
+    kgx.operators.sketches.hll_registers): same md5-60 hash, same
+    length(bin(x)) leading-zero rank — registers match bit-for-bit."""
+    b = m.bit_length() - 1
+    w = 60 - b
+    h = _duck_md5_60(col_expr)
+    return f"""
+WITH hashed AS (
+    SELECT CAST({h} % {m} AS BIGINT) AS bucket,
+           CAST({h} // {m} AS BIGINT) AS rest
+    FROM events
+),
+rhod AS (
+    SELECT bucket,
+           CAST(CASE WHEN rest = 0 THEN {w + 1}
+                ELSE {w} - length(bin(rest)) + 1 END AS BIGINT) AS rho
+    FROM hashed
+)
+SELECT bucket, CAST(max(rho) AS BIGINT) AS max_rho
+FROM rhod GROUP BY bucket
 """.strip()
 
 

@@ -75,6 +75,11 @@ SECTIONS = [
      "the P3 mention cap — no self-join of the extraction plan); one "
      "partial-aggregated (a, b) count exchange, margins joined back "
      "AQE-decided, the 1-row corpus count broadcast."),
+    ("cm_registers",
+     "Count-min counters: one md5 per row fans out to depth cells via a "
+     "Generate node, then ONE map-side-combined aggregate — the exchange "
+     "carries at most partitions x depth x width pre-combined rows "
+     "regardless of corpus size."),
     ("pii_scrub",
      "PII redaction cascade + audit counts in one codegen projection — "
      "zero exchanges; the pass can front the raw corpus scan."),
@@ -86,6 +91,16 @@ SECTIONS = [
      "Decontamination screen: benchmark n-gram hash set broadcast "
      "(bounded by eval-suite size); the train side never shuffles before "
      "the join."),
+    ("asof_last_click",
+     "Distributed as-of join: union both sides, ONE per-key window "
+     "exchange — no range explosion, no nested loop."),
+    ("range_clicks_before_purchase",
+     "Binned range join: equi-join on (key, time-bin) with a 2-bin "
+     "explode, exact filter after — a shuffled hash join, never a "
+     "BroadcastNestedLoopJoin."),
+    ("sessions",
+     "Native session_window aggregate: one shuffle on user_id feeds the "
+     "session merge; the numbering window reuses the same partitioning."),
     ("curation_funnel",
      "End-to-end curation funnel: survivor-set boundaries are "
      "`plan.materialize` checkpoints, so the plan starts at Scan ExistingRDD "
@@ -101,6 +116,15 @@ SECTIONS = [
      "Vocabulary head: partial HashAggregate collapses hot tokens "
      "map-side; the global head is TakeOrderedAndProject (per-partition "
      "heaps), not a full sort."),
+    ("bm25_topk",
+     "Round 5 (fixed-point BM25 retrieval): the token explode is filtered "
+     "to the query terms before any aggregation, so tf/df exchanges carry "
+     "matching postings only; the per-term tf table is localCheckpointed "
+     "once and feeds both the df aggregate and the scoring join (a lazy "
+     "plan replays the corpus explode per branch — A/B'd in the "
+     "docstring); corpus scalars ride a 1-row broadcast; the top-k is "
+     "TakeOrderedAndProject, and the rank window runs over the "
+     "already-limited k rows."),
     ("graph_random_walks",
      "Round 5 (DeepWalk walk corpus: node2vec_walks with equal weights, "
      "so no step joins the predecessor's adjacency): length−1 unrolled "
@@ -116,6 +140,12 @@ SECTIONS = [
      "entity_cooccurrence stance, no self-join), then ONE map-side-"
      "combined count aggregate; the only full-width exchange carries "
      "pre-combined (center, context) rows."),
+    ("unigram_surprisal",
+     "Round 5 (corpus-statistics perplexity screen): ONE token explode "
+     "feeds the vocab-sized count aggregate (1-row total broadcast back) "
+     "and the scoring join; the count side is AQE-decided (unbounded "
+     "vocab, no forced broadcast); the corpus-scale token pin was A/B'd "
+     "and measured a LOSER, so the plan stays lazy."),
     ("seq_pack",
      "Concat-then-chunk packing: ONE hash exchange on shard, then a "
      "per-shard running-sum window — never a global sort/single-partition "
