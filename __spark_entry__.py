@@ -29,7 +29,7 @@ from kgx.functions import hashing
 from kgx.functions.plan import materialize
 from kgx.operators import (
     curation, dedup, extract, graphstats, indexing, jsonio, linking, media,
-    packing, security, sketches, spans as spans_op, temporal, textstats, validate,
+    packing, security, spans as spans_op, temporal, textstats, validate,
 )
 from kgx.plans import versions
 from kgx.plans.curation_pipeline import (
@@ -62,13 +62,6 @@ def _location(spark: SparkSession, sf_dir: str) -> tuple[SparkSession, str]:
 def _table(name: str) -> Callable[[SparkSession, str], DataFrame]:
     """One sf-dir table as scanned: a single split per file."""
     return lambda spark, sf_dir: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    """One sf-dir table spread across cores (``spread_small_scan``)."""
-    return lambda spark, sf_dir: docs_src.spread_small_scan(
-        spark, _table(name)(spark, sf_dir)
-    )
 
 
 def _then(src: Callable, op: Callable) -> Callable[[SparkSession, str], DataFrame]:
@@ -129,7 +122,6 @@ _image_blobs = _then(_media, media.synthesize_media_blobs)
 _audio_blobs = _then(_media, media.synthesize_audio_blobs)
 _video_blobs = _then(_media, media.synthesize_video_blobs)
 _events = _table("events")
-_spread_events = _spread("events")
 
 
 # ---------------------------------------------------------------------------
@@ -251,32 +243,6 @@ def q_balanced_sample(docs: DataFrame) -> DataFrame:
     """Balance-to-minority sampling over the domain fixture strata."""
     strata = docs.selectExpr("doc_id", curation.DOMAIN_FIXTURE_EXPR + " AS stratum")
     return curation.balanced_sample(docs, strata)
-
-
-def _bench_bloom(sh: DataFrame, bench_mod: int, m_bits: int, k: int) -> DataFrame:
-    bench = sh.where(F.col("doc_id") % bench_mod == 0)
-    return sketches.bloom_registers(
-        bench, "shingle_hash", m_bits=m_bits, k=k, pre_hashed=True
-    )
-
-
-def q_bloom_registers(
-    docs: DataFrame, bench_mod: int, n: int, m_bits: int, k: int
-) -> DataFrame:
-    """Bloom-filter bitmap of the benchmark slice's shingle hashes."""
-    return _bench_bloom(dedup.shingle_table(docs, n=n), bench_mod, m_bits, k)
-
-
-def q_bloom_contamination(
-    docs: DataFrame, bench_mod: int, n: int, m_bits: int, k: int
-) -> DataFrame:
-    """Every train shingle probes the benchmark bitmap: a superset of the
-    exact ``contamination`` screen's hits."""
-    sh = dedup.shingle_table(docs, n=n)
-    regs = _bench_bloom(sh, bench_mod, m_bits, k)
-    return sketches.bloom_probe(
-        sh.where(F.col("doc_id") % bench_mod != 0), regs, m_bits=m_bits, k=k
-    )
 
 
 def q_asof_last_click(ev: DataFrame) -> DataFrame:
@@ -677,8 +643,6 @@ QUERIES = (
     ("graph_kcore", _triples, graphstats.kcore, dict(k=2, iters=4), O.graph_kcore_sql),
     ("a1_pricing_summary", _table("lineitem"), q_pricing_summary, {},
      O.pricing_summary_sql),
-    ("bloom_contamination", _documents, q_bloom_contamination,
-     dict(bench_mod=19, n=3, m_bits=65536, k=4), O.bloom_contamination_sql),
     ("jn2_graph_fetch", _graphs, q_jn2_graph_fetch, {}, O.graph_fetch_sql),
     ("a7_bucket_metrics", _graphs, q_a7_bucket_metrics, {}, O.bucket_metrics_sql),
     ("fn_scalar_suite", _documents, q_fn_scalar_suite, {}, O.scalar_suite_sql),
@@ -688,9 +652,9 @@ QUERIES = (
     ("j3_graph_coercion", _events, q_j3_graph_coercion, {}, O.graph_coercion_sql),
     ("p9_graph_checks", _graphs, validate.graph_checks, {}, O.graph_checks_sql),
     ("p10_media_security", _media, q_p10_media_security, {}, O.media_security_sql),
-    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("s5_csv_prose", _table("customer"), q_s5_csv_prose, dict(rows_per_doc=50),
      O.csv_prose_sql),
+    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("jn6_customers_with_orders", _location, q_customers_with_orders, {},
      O.customers_with_orders_sql),
     ("s7_llm_fake_edges", _spans, q_s7_llm_fake_edges, {}, O.llm_edges_sql),
@@ -724,27 +688,6 @@ QUERIES = (
     ("seq_pack_interleaved", _spans, packing.seq_pack_interleaved,
      dict(capacity=4096, n_shards=8, media_token_cost=576),
      O.seq_pack_interleaved_sql),
-    ("hll_registers", _spread_events,
-     partial(sketches.hll_registers, col_expr="cast(event_id as string)"),
-     dict(m=64), partial(O.hll_registers_sql, col_expr="cast(event_id as varchar)")),
-    ("cm_registers", _spread_events,
-     partial(sketches.cm_registers, col_expr="cast(user_id as string)"),
-     dict(depth=4, width=256),
-     partial(O.cm_registers_sql, col_expr="cast(user_id as varchar)")),
-    ("bloom_registers", _documents, q_bloom_registers,
-     dict(bench_mod=19, n=3, m_bits=65536, k=4), O.bloom_registers_sql),
-    # floor(value * 100) is IEEE-identical across engines where round() is not
-    ("hist_registers", _spread_events,
-     partial(sketches.hist_registers, col_expr="cast(floor(value * 100) as bigint)"),
-     {}, partial(O.hist_registers_sql, col_expr="CAST(floor(value * 100) AS BIGINT)")),
-    ("cm_heavy_hitters", _spread_events,
-     partial(sketches.cm_heavy_hitters, col_expr="cast(user_id as string)"),
-     dict(threshold=75, depth=4, width=256),
-     partial(O.cm_heavy_hitters_sql, col_expr="cast(user_id as varchar)")),
-    ("hll_by_group", _spread_events,
-     partial(sketches.hll_registers_grouped, col_expr="cast(user_id as string)"),
-     dict(group_col="event_type", m=64),
-     partial(O.hll_grouped_sql, col_expr="cast(user_id as varchar)")),
     ("lm_trigram_counts", _documents, indexing.lm_ngram_counts,
      dict(n=3, min_count=2), O.lm_ngram_counts_sql),
     ("seq_pack", _documents, packing.seq_pack, dict(capacity=128, n_shards=8),

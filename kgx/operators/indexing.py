@@ -117,8 +117,7 @@ def bm25_topk(
     textbook BM25 (Robertson/Okapi):
 
     - **idf**: ``length(bin(N div df))`` = floor(log2(N/df)) + 1 — the
-      log2-bit-length idf (exact integer; the HLL rho / log2-histogram
-      arithmetic), monotone non-increasing in df.
+      log2-bit-length idf (exact integer), monotone non-increasing in df.
     - **tf saturation + length normalization**: with k1 = k1_centi/100,
       b = b_centi/100, avgdl = T/N (T = corpus token count), the real-valued
       term ``tf·(k1+1) / (tf + k1·(1−b) + k1·b·dl/avgdl)`` is evaluated as
@@ -210,7 +209,7 @@ def unigram_surprisal(documents: DataFrame) -> DataFrame:
     Engine-neutral bigint arithmetic throughout: a token with corpus count
     ct out of T total tokens gets ``surprisal_bits = length(bin(T div
     ct))`` = floor(log2(T/ct)) + 1 — the log2-bit-length quantization of
-    −log2 p(t) (same arithmetic as the HLL rho and the BM25 idf), and the
+    −log2 p(t) (same arithmetic as the BM25 idf), and the
     per-doc mean is milli-scaled floor division, so the DuckDB oracle
     replays every score bit-for-bit.
 

@@ -11,7 +11,7 @@ insert between extraction and materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAX_NODES = 1000
@@ -22,33 +22,47 @@ MAX_TYPE = 100
 MAX_REL = 100
 
 
+def _longest(arr: str, field: str) -> str:
+    """SQL: the longest ``field`` over the structs of ``arr`` (0 when empty)."""
+    return f"coalesce(aggregate({arr}, 0, (a, x) -> greatest(a, length(x.{field}))), 0)"
+
+
+_UNIQUE_NODE_IDS = "size(nodes) = size(array_distinct(transform(nodes, n -> n.node_id)))"
+_UNIQUE_EDGES = (
+    "size(edges) = size(array_distinct(transform(edges, "
+    "e -> concat(e.src, '|', e.dst, '|', e.relationship))))"
+)
+
+
+def is_valid() -> Column:
+    """The P7-P9 verdict over one nested graph row: every count and field
+    length cap holds, and node ids and edges are unique."""
+    return F.expr(" AND ".join([
+        f"size(nodes) <= {MAX_NODES}",
+        f"size(edges) <= {MAX_EDGES}",
+        f"{_longest('nodes', 'label')} <= {MAX_LABEL}",
+        f"{_longest('nodes', 'node_id')} <= {MAX_NODE_ID}",
+        f"{_longest('nodes', 'node_type')} <= {MAX_TYPE}",
+        f"{_longest('edges', 'relationship')} <= {MAX_REL}",
+        _UNIQUE_NODE_IDS,
+        _UNIQUE_EDGES,
+    ]))
+
+
 def graph_checks(graphs: DataFrame) -> DataFrame:
     """(doc_id, nodes, edges, ...) → per-doc validation metrics + verdict."""
     return graphs.select(
         "doc_id",
         F.size("nodes").cast("int").alias("n_nodes"),
         F.size("edges").cast("int").alias("n_edges"),
-        F.expr(
-            "cast(coalesce(aggregate(nodes, 0, (a, n) -> greatest(a, length(n.label))), 0) as int)"
-        ).alias("max_label_len"),
-        F.expr(
-            "size(nodes) = size(array_distinct(transform(nodes, n -> n.node_id)))"
-        ).alias("unique_node_ids"),
-        F.expr(
-            "size(edges) = size(array_distinct(transform(edges, "
-            "e -> concat(e.src, '|', e.dst, '|', e.relationship))))"
-        ).alias("unique_edges"),
-    ).withColumn(
-        "is_valid",
-        (F.col("n_nodes") <= MAX_NODES)
-        & (F.col("n_edges") <= MAX_EDGES)
-        & (F.col("max_label_len") <= MAX_LABEL)
-        & F.col("unique_node_ids")
-        & F.col("unique_edges"),
+        F.expr(f"cast({_longest('nodes', 'label')} as int)").alias("max_label_len"),
+        F.expr(_UNIQUE_NODE_IDS).alias("unique_node_ids"),
+        F.expr(_UNIQUE_EDGES).alias("unique_edges"),
+        is_valid().alias("is_valid"),
     )
 
 
 def valid_graphs(graphs: DataFrame) -> DataFrame:
-    """Filtered pass-through — the pipeline insertion point."""
-    checks = graph_checks(graphs).where("is_valid").select("doc_id")
-    return graphs.join(checks, "doc_id", "left_semi")
+    """Filtered pass-through — the pipeline insertion point.  A filter on
+    the graph row itself, so the extraction that produced it runs once."""
+    return graphs.where(is_valid())

@@ -15,7 +15,7 @@ empirically by tools/compare_oracle.py at sf0.01.
 
 from __future__ import annotations
 
-from kgx.operators import curation, rules
+from kgx.operators import curation, rules, validate
 from kgx.sources.corpus import NARRATIVE_CTE
 
 # ---------------------------------------------------------------------------
@@ -867,8 +867,9 @@ FROM cls
 
 def graph_checks_sql() -> str:
     """Per-doc validation metrics (P7-P9) recomputed from the extraction
-    CTEs; every narrative doc satisfies the caps, so is_valid must be TRUE
-    everywhere while the metric columns vary per doc."""
+    CTEs, with the caps of kgx.operators.validate; every narrative doc
+    satisfies them, so is_valid must be TRUE everywhere while the metric
+    columns vary per doc."""
     tri = triples_sql()
     body = tri[len("WITH "):]
     head, tail = body.rsplit("SELECT DISTINCT doc_id, subj, pred, obj FROM resolved", 1)
@@ -877,18 +878,27 @@ def graph_checks_sql() -> str:
 WITH {head.rstrip()},
 tri AS (SELECT DISTINCT doc_id, subj, pred, obj FROM resolved),
 node_stats AS (
-    SELECT doc_id, count(*) AS n_nodes, max(length(label)) AS max_label_len
+    SELECT doc_id, count(*) AS n_nodes, max(length(label)) AS max_label_len,
+           max(length(node_id)) AS max_id_len,
+           max(length({_node_type_case()})) AS max_type_len
     FROM nodes GROUP BY doc_id
 ),
-edge_stats AS (SELECT doc_id, count(*) AS n_edges FROM tri GROUP BY doc_id)
+edge_stats AS (
+    SELECT doc_id, count(*) AS n_edges, max(length(pred)) AS max_rel_len
+    FROM tri GROUP BY doc_id
+)
 SELECT d.doc_id,
        CAST(coalesce(ns.n_nodes, 0) AS INT) AS n_nodes,
        CAST(coalesce(es.n_edges, 0) AS INT) AS n_edges,
        CAST(coalesce(ns.max_label_len, 0) AS INT) AS max_label_len,
        TRUE AS unique_node_ids,
        TRUE AS unique_edges,
-       (coalesce(ns.n_nodes, 0) <= 1000 AND coalesce(es.n_edges, 0) <= 2000
-        AND coalesce(ns.max_label_len, 0) <= 255) AS is_valid
+       (coalesce(ns.n_nodes, 0) <= {validate.MAX_NODES}
+        AND coalesce(es.n_edges, 0) <= {validate.MAX_EDGES}
+        AND coalesce(ns.max_label_len, 0) <= {validate.MAX_LABEL}
+        AND coalesce(ns.max_id_len, 0) <= {validate.MAX_NODE_ID}
+        AND coalesce(ns.max_type_len, 0) <= {validate.MAX_TYPE}
+        AND coalesce(es.max_rel_len, 0) <= {validate.MAX_REL}) AS is_valid
 FROM doctext d
 LEFT JOIN node_stats ns USING (doc_id)
 LEFT JOIN edge_stats es USING (doc_id)
@@ -1857,81 +1867,6 @@ FROM kc_e{iters} GROUP BY 1
 """.strip()
 
 
-def _bloom_regs_cte(bench_mod: int, n: int, m_bits: int, k: int) -> str:
-    """Shared CTE chain: benchmark shingle hashes -> Bloom register table
-    (mirror of kgx.operators.sketches.bloom_registers over the
-    doc_id % bench_mod = 0 slice — 32-bit words, double-hashed positions)."""
-    pos_branches = "\n    UNION ALL ".join(
-        f"SELECT (h1 + {j} * stride) % {m_bits} AS pos FROM bl_hs"
-        for j in range(k)
-    )
-    return f"""
-bl_sh AS MATERIALIZED (
-    SELECT doc_id, {_duck_md5_60('shingle')} AS shingle_hash
-    FROM (SELECT doc_id, unnest({_duck_shingles(n)}) AS shingle FROM documents)
-),
-bl_hs AS (
-    SELECT shingle_hash % {m_bits} AS h1,
-           2 * ((shingle_hash // {m_bits}) % {m_bits}) + 1 AS stride
-    FROM bl_sh WHERE doc_id % {bench_mod} = 0
-),
-bl_pos AS (
-    {pos_branches}
-),
-bl_regs AS MATERIALIZED (
-    SELECT CAST(pos // 32 AS BIGINT) AS word,
-           CAST(bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS BIGINT) AS bits
-    FROM bl_pos GROUP BY 1
-)
-""".strip()
-
-
-def bloom_registers_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
-    """Oracle for the benchmark-slice Bloom filter register table."""
-    return f"""
-WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)}
-SELECT word, bits FROM bl_regs
-""".strip()
-
-
-def bloom_contamination_sql(bench_mod: int, n: int, m_bits: int, k: int) -> str:
-    """Oracle for the Bloom-filter decontamination probe (mirror of
-    kgx.operators.sketches.bloom_probe over the train slice): per shingle
-    all k probe bits must be set; per doc count shingles and flagged
-    shingles."""
-    probe_branches = "\n    UNION ALL ".join(
-        f"SELECT doc_id, h0, (h1 + {j} * stride) % {m_bits} AS pos FROM bl_tr"
-        for j in range(k)
-    )
-    return f"""
-WITH {_bloom_regs_cte(bench_mod, n, m_bits, k)},
-bl_tr AS (
-    SELECT doc_id, shingle_hash AS h0,
-           shingle_hash % {m_bits} AS h1,
-           2 * ((shingle_hash // {m_bits}) % {m_bits}) + 1 AS stride
-    FROM bl_sh WHERE doc_id % {bench_mod} != 0
-),
-bl_tp AS (
-    {probe_branches}
-),
-bl_hits AS (
-    SELECT t.doc_id, t.h0,
-           CASE WHEN (coalesce(r.bits, 0) & (1::BIGINT << CAST(t.pos % 32 AS INT)))
-                     = (1::BIGINT << CAST(t.pos % 32 AS INT))
-                THEN 1 ELSE 0 END AS hit
-    FROM (SELECT doc_id, h0, pos, CAST(pos // 32 AS BIGINT) AS word FROM bl_tp) t
-    LEFT JOIN bl_regs r ON r.word = t.word
-),
-bl_per AS (
-    SELECT doc_id, h0, min(hit) AS all_hit FROM bl_hits GROUP BY 1, 2
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(all_hit) AS BIGINT) AS n_flagged
-FROM bl_per GROUP BY 1
-""".strip()
-
-
 def _tri_cte_head() -> str:
     """The full triples oracle re-packaged as CTE chain + a materialized
     ``tri`` table (shared by the version-diff and negative-sampling
@@ -2106,18 +2041,6 @@ WHERE n.label <> p.obj
 """.strip()
 
 
-def hist_registers_sql(col_expr: str) -> str:
-    """Oracle for the log2 histogram sketch (mirror of
-    kgx.operators.sketches.hist_registers: bin 0 for x <= 0, else
-    length(bin(x)) — the HLL rho's bit-length arithmetic)."""
-    return f"""
-SELECT CAST(CASE WHEN ({col_expr}) <= 0 THEN 0
-            ELSE length(bin({col_expr})) END AS BIGINT) AS bin,
-       CAST(count(*) AS BIGINT) AS cnt
-FROM events GROUP BY 1
-""".strip()
-
-
 def graph_link_candidates_sql(max_degree: int, min_common: int) -> str:
     """Oracle for common-neighbor link-prediction candidates (mirror of
     kgx.operators.graphstats.common_neighbor_candidates): undirected
@@ -2157,81 +2080,6 @@ FROM lc_cn c
 JOIN lc_deg da ON da.subj = c.label_a
 JOIN lc_deg db ON db.subj = c.label_b
 LEFT JOIN lc_canon e ON e.label_a = c.label_a AND e.label_b = c.label_b
-""".strip()
-
-
-def cm_heavy_hitters_sql(col_expr: str, threshold: int, depth: int, width: int) -> str:
-    """Oracle for count-min heavy-hitter consumption (mirror of
-    kgx.operators.sketches.cm_heavy_hitters): registers replayed, per-key
-    cells derived with the same universal-hash chain, estimate = min over
-    depth, threshold filter, exact count beside."""
-    from kgx.functions.hashing import minhash_derived
-
-    h = _duck_md5_60(col_expr)
-    kh = _duck_md5_60("key")
-    reg_branches = "\n    UNION ALL ".join(
-        f"SELECT CAST({d} AS BIGINT) AS d, "
-        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
-        f"FROM hh_hashed"
-        for d in range(depth)
-    )
-    key_branches = "\n    UNION ALL ".join(
-        f"SELECT key, exact_count, CAST({d} AS BIGINT) AS d, "
-        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
-        f"FROM hh_keys"
-        for d in range(depth)
-    )
-    return f"""
-WITH hh_hashed AS (
-    SELECT CAST({h} AS BIGINT) AS h0 FROM events
-),
-hh_cells AS (
-    {reg_branches}
-),
-hh_regs AS MATERIALIZED (
-    SELECT d, col, CAST(count(*) AS BIGINT) AS cnt FROM hh_cells GROUP BY 1, 2
-),
-hh_keys AS (
-    SELECT key, exact_count, CAST({kh} AS BIGINT) AS h0
-    FROM (
-        SELECT {col_expr} AS key, CAST(count(*) AS BIGINT) AS exact_count
-        FROM events GROUP BY 1
-    )
-),
-hh_kcells AS (
-    {key_branches}
-),
-hh_est AS (
-    SELECT k.key, k.exact_count, CAST(min(r.cnt) AS BIGINT) AS est_count
-    FROM hh_kcells k JOIN hh_regs r ON r.d = k.d AND r.col = k.col
-    GROUP BY 1, 2
-)
-SELECT key, est_count, exact_count
-FROM hh_est WHERE est_count >= {threshold}
-""".strip()
-
-
-def hll_grouped_sql(group_col: str, col_expr: str, m: int) -> str:
-    """Oracle for the per-group HLL register sketch (mirror of
-    kgx.operators.sketches.hll_registers_grouped)."""
-    b = m.bit_length() - 1
-    w = 60 - b
-    h = _duck_md5_60(col_expr)
-    return f"""
-WITH hashed AS (
-    SELECT {group_col} AS grp,
-           CAST({h} % {m} AS BIGINT) AS bucket,
-           CAST({h} // {m} AS BIGINT) AS rest
-    FROM events
-),
-rhod AS (
-    SELECT grp, bucket,
-           CAST(CASE WHEN rest = 0 THEN {w + 1}
-                ELSE {w} - length(bin(rest)) + 1 END AS BIGINT) AS rho
-    FROM hashed
-)
-SELECT grp, bucket, CAST(max(rho) AS BIGINT) AS max_rho
-FROM rhod GROUP BY 1, 2
 """.strip()
 
 
@@ -2642,56 +2490,6 @@ SELECT doc_id, shard, text_tokens, media_spans, cost,
        CAST((c - 1) // {capacity} AS BIGINT) AS last_seq,
        CAST((c - 1) // {capacity} - (c - cost) // {capacity} + 1 AS BIGINT) AS n_seqs
 FROM cum
-""".strip()
-
-
-def cm_registers_sql(col_expr: str, depth: int, width: int) -> str:
-    """Oracle for the count-min counter table (mirror of
-    kgx.operators.sketches.cm_registers): same md5-60 base hash, same
-    per-row universal-hash derivation unrolled as UNION ALL branches —
-    counters match bit-for-bit."""
-    from kgx.functions.hashing import minhash_derived
-
-    h = _duck_md5_60(col_expr)
-    branches = "\n    UNION ALL ".join(
-        f"SELECT CAST({d} AS BIGINT) AS d, "
-        f"CAST(({minhash_derived('h0', d)}) % {width} AS BIGINT) AS col "
-        f"FROM hashed"
-        for d in range(depth)
-    )
-    return f"""
-WITH hashed AS (
-    SELECT CAST({h} AS BIGINT) AS h0 FROM events
-),
-cells AS (
-    {branches}
-)
-SELECT d, col, CAST(count(*) AS BIGINT) AS cnt
-FROM cells GROUP BY 1, 2
-""".strip()
-
-
-def hll_registers_sql(col_expr: str, m: int) -> str:
-    """Oracle for the HLL register sketch (mirror of
-    kgx.operators.sketches.hll_registers): same md5-60 hash, same
-    length(bin(x)) leading-zero rank — registers match bit-for-bit."""
-    b = m.bit_length() - 1
-    w = 60 - b
-    h = _duck_md5_60(col_expr)
-    return f"""
-WITH hashed AS (
-    SELECT CAST({h} % {m} AS BIGINT) AS bucket,
-           CAST({h} // {m} AS BIGINT) AS rest
-    FROM events
-),
-rhod AS (
-    SELECT bucket,
-           CAST(CASE WHEN rest = 0 THEN {w + 1}
-                ELSE {w} - length(bin(rest)) + 1 END AS BIGINT) AS rho
-    FROM hashed
-)
-SELECT bucket, CAST(max(rho) AS BIGINT) AS max_rho
-FROM rhod GROUP BY bucket
 """.strip()
 
 

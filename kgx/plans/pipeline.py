@@ -14,6 +14,7 @@ single node) with one batch DataFrame job designed for 10^12 documents:
       → nodes/edges/triples derived by JVM-side explodes of the
         materialized graphs table (extraction runs exactly once)
       → lineage append with per-bucket metrics
+      → optional canonical tail over all committed graphs (canonicalize)
 
 Scale notes:
 - ``repartition(P, bucket, salt)`` spreads each bucket over ``salt_factor``
@@ -218,6 +219,15 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
         stored.unpersist()
     stages["flat_writes_and_metrics"] = round(time.time() - t_stage, 3)
 
+    t_stage = time.time()
+    # per_bucket_rows is already on the driver — the commit is a direct
+    # pyarrow write (see append_lineage), zero Spark jobs in the serial tail.
+    # It comes before the canonical tail: every bucket table is written by
+    # now, so a tail failure keeps the buckets committed, and a resume
+    # re-runs only the tail over all committed graphs
+    lin.append_lineage(spark, cfg.out_dir, run_id, per_bucket_rows, started)
+    stages["lineage_commit"] = round(time.time() - t_stage, 3)
+
     if cfg.canonicalize:
         # north-star tail: entity linking over ALL committed buckets (the
         # canonical map is global — recomputed cheaply from unique labels,
@@ -235,12 +245,6 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
         _bucketed(canon, cfg.n_buckets).write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(os.path.join(cfg.out_dir, "triples_canonical"))
-
-    t_stage = time.time()
-    # per_bucket_rows is already on the driver — the commit is a direct
-    # pyarrow write (see append_lineage), zero Spark jobs in the serial tail
-    lin.append_lineage(spark, cfg.out_dir, run_id, per_bucket_rows, started)
-    stages["lineage_commit"] = round(time.time() - t_stage, 3)
 
     docs_this_run = sum(r["docs"] for r in per_bucket_rows)
     triples_this_run = sum(r["triples"] for r in per_bucket_rows)

@@ -4,7 +4,7 @@ and the span-sequence round-trip invariant under forced shuffles."""
 import pandas as pd
 from pyspark.sql import functions as F
 
-from kgx.operators import extract, rules, spans
+from kgx.operators import extract, rules, spans, validate
 from kgx.sources import docs as docs_src
 
 
@@ -83,3 +83,34 @@ def test_pipeline_on_real_documents_parquet(spark, sf_dir):
     graphs = extract.extract_graphs(spans.with_doc_text(sp))
     total = graphs.count()
     assert total == docs_src.load_documents(spark, sf_dir).count()
+
+
+def test_valid_graphs_runs_the_extraction_once(spark):
+    """The validation gate filters the extraction output in place: its
+    executed plan crosses into Python once, not once per side of a join."""
+    df = _docs_df(spark, [{"doc_id": "d", "doc_text": SAMPLE}])
+    checked = validate.valid_graphs(extract.extract_graphs(df))
+    assert [r["doc_id"] for r in checked.collect()] == ["d"]
+    plan = checked._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def test_graph_checks_enforce_the_field_caps(spark):
+    """An over-long node id, node type or relationship each fails the
+    verdict, as the reference's validators.py caps say."""
+    def graph(node_id="n1", node_type="Person", rel="works_at"):
+        nodes = [(node_id, "Ann Lee", node_type), ("n2", "Acme Corp", "Organization")]
+        return nodes, [(node_id, "n2", rel)], [("Ann Lee", rel, "Acme Corp")]
+
+    rows = {
+        "ok": graph(),
+        "long_id": graph(node_id="n" * (validate.MAX_NODE_ID + 1)),
+        "long_type": graph(node_type="T" * (validate.MAX_TYPE + 1)),
+        "long_rel": graph(rel="r" * (validate.MAX_REL + 1)),
+    }
+    graphs = spark.createDataFrame(
+        [(doc_id, *g) for doc_id, g in rows.items()], extract.GRAPH_SCHEMA
+    )
+    verdict = {r["doc_id"]: r["is_valid"] for r in validate.graph_checks(graphs).collect()}
+    assert verdict == {"ok": True, "long_id": False, "long_type": False, "long_rel": False}
+    assert [r["doc_id"] for r in validate.valid_graphs(graphs).collect()] == ["ok"]

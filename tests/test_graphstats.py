@@ -462,6 +462,21 @@ def test_negative_samples_laws(spark):
         graphstats.negative_samples(df, k=0)
 
 
+def test_negative_samples_sparse_buckets(spark):
+    # buckets >> nodes: most target buckets are empty — candidates whose
+    # hash lands in an empty bucket are dropped identically to the
+    # pure-Python reference (inner-join semantics)
+    edges = [("a", "b"), ("b", "c"), ("c", "d")]
+    df = _triples_df(spark, edges)
+    got = {
+        (r.subj, r.pred, r.obj, r.sample_idx, r.neg_obj)
+        for r in graphstats.negative_samples(df, k=4, buckets=256).collect()
+    }
+    assert got == _py_negative_samples(
+        [(u, "rel", v) for u, v in edges], k=4, buckets=256
+    )
+
+
 def test_kcore_fixpoint_converges_and_matches_reference(spark):
     clique = [(a, b) for a in "abcd" for b in "abcd" if a < b]
     chain = [("d", "p"), ("p", "q"), ("q", "r")]

@@ -230,6 +230,45 @@ def test_canonicalize_tail_merges_aliases(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+
+def test_canonical_tail_failure_keeps_every_bucket_committed(spark, docs, monkeypatch):
+    """The bucket lineage is committed before the canonical tail runs: a
+    tail that fails leaves every bucket committed, and the resumed run
+    re-extracts none of them and builds the map an unfailed run builds."""
+    from kgx.operators import linking
+
+    real = linking.canonical_map
+
+    def fail_once(*args, **kwargs):
+        monkeypatch.setattr(linking, "canonical_map", real)
+        raise RuntimeError("canonical tail failed")
+
+    def cfg(out, resume):
+        return pipeline.PipelineConfig(
+            out_dir=out, n_buckets=4, resume=resume, canonicalize=True
+        )
+
+    def cmap(out):
+        rows = spark.read.parquet(os.path.join(out, "canonical_map")).collect()
+        return sorted(tuple(r) for r in rows)
+
+    out = tempfile.mkdtemp(prefix="kgx_tail_fail_")
+    clean = tempfile.mkdtemp(prefix="kgx_tail_clean_")
+    try:
+        monkeypatch.setattr(linking, "canonical_map", fail_once)
+        with pytest.raises(RuntimeError, match="canonical tail failed"):
+            pipeline.run(spark, docs, cfg(out, resume=False))
+        assert sorted(lin.completed_buckets(spark, out)) == [0, 1, 2, 3]
+
+        resumed = pipeline.run(spark, docs, cfg(out, resume=True))
+        assert resumed["buckets_this_run"] == 0
+        pipeline.run(spark, docs, cfg(clean, resume=False))
+        expected = cmap(clean)
+        assert expected and cmap(out) == expected
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(clean, ignore_errors=True)
+
 def test_append_lineage_accepts_file_uri(spark):
     """append_lineage handles filesystem-URI out_dirs, not only bare local
     paths (round-3 advisory: the pyarrow rewrite must keep working for

@@ -231,7 +231,7 @@ def test_repetition_stats_single_scan_no_join(spark, sf_dir):
 
 
 def test_round4_operators_have_no_cartesian(spark, sf_dir):
-    """The r4 graph/versioning/sketch family must never degrade to a
+    """The r4 graph and versioning family must never degrade to a
     cartesian or nested-loop join (except the 1-row broadcast count
     pattern): a cartesian over a web-scale label/triple table is the
     100×-scale killer every bucket/cap design here exists to avoid."""
@@ -243,20 +243,7 @@ def test_round4_operators_have_no_cartesian(spark, sf_dir):
         "kg_negative_samples",
         "graph_link_candidates",
         "kg_version_diff",
-        "bloom_contamination",
-        "cm_heavy_hitters",
     ):
         plan = _physical(spark, qs[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, (name, plan)
 
-
-def test_bloom_probe_and_cm_join_broadcast_registers(spark, sf_dir):
-    """Register tables are bounded by construction (m_bits/32 and
-    depth×width rows) and MUST be the broadcast side — shuffling the
-    corpus against a kilobyte table would be a plan regression."""
-    import __spark_entry__ as em
-
-    qs = em.queries()
-    for name in ("bloom_contamination", "cm_heavy_hitters"):
-        plan = _physical(spark, qs[name](spark, sf_dir))
-        assert "BroadcastHashJoin" in plan, (name, plan)

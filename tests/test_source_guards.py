@@ -113,13 +113,7 @@ def test_every_def_has_a_non_test_caller():
     """Every top-level ``def``/``class`` in the shipped sources is named
     somewhere outside ``tests/`` other than on its own definition line, so
     code that only tests reach is deleted rather than kept.  Referrers are
-    the shipped sources plus ``bench.py``, ``tools/`` and ``perfbench/``.
-
-    The one exception, ``estimate_count``, is the count-min read side:
-    ``test_sketches`` checks ``cm_registers`` against it (point estimates
-    never underestimate), so it is the reference that test compares
-    against rather than dead code."""
-    allowed = {"estimate_count"}
+    the shipped sources plus ``bench.py``, ``tools/`` and ``perfbench/``."""
     referrers = [*_sources(), ROOT / "bench.py"]
     for d in ("tools", "perfbench"):
         referrers += sorted((ROOT / d).rglob("*.py"))
@@ -135,8 +129,7 @@ def test_every_def_has_a_non_test_caller():
                 own = re.findall(r"\w+", lines[node.lineno - 1]).count(node.name)
                 if words[node.name] == own:
                     unreached.append(node.name)
-    stray = sorted(set(unreached) - allowed)
-    assert stray == [], f"defs that only tests reach: {stray}"
+    assert unreached == [], f"defs that only tests reach: {sorted(unreached)}"
 
 
 #: kgx modules that no ``jobs/`` entry imports, each with why it stays
@@ -152,9 +145,8 @@ UNREACHED_BY_JOBS = {
     "kgx.sources.miniimage": "the media payload's image codec",
     "kgx.sources.miniwav": "the media payload's audio codec",
     "kgx.sources.miniavi": "the media payload's video container",
-    # SURVEY §2 has no row for these three families either: they are the
+    # SURVEY §2 has no row for these two families either: they are the
     # open half of ROADMAP item 10, to be deleted next
-    "kgx.operators.sketches": "approx-aggregate sketches, out of SURVEY §2.6; pending deletion",
     "kgx.operators.indexing": "postings, LM n-grams and BM25, in no SURVEY row; pending deletion",
     "kgx.operators.temporal": "as-of, range and session joins, out of SURVEY §2.5/§2.10; pending deletion",
 }

@@ -75,11 +75,6 @@ SECTIONS = [
      "the P3 mention cap — no self-join of the extraction plan); one "
      "partial-aggregated (a, b) count exchange, margins joined back "
      "AQE-decided, the 1-row corpus count broadcast."),
-    ("cm_registers",
-     "Count-min counters: one md5 per row fans out to depth cells via a "
-     "Generate node, then ONE map-side-combined aggregate — the exchange "
-     "carries at most partitions x depth x width pre-combined rows "
-     "regardless of corpus size."),
     ("pii_scrub",
      "PII redaction cascade + audit counts in one codegen projection — "
      "zero exchanges; the pass can front the raw corpus scan."),
