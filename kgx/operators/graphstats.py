@@ -226,7 +226,7 @@ def label_propagation(triples: DataFrame, iters: int = 3) -> DataFrame:
     magnitude smaller than the corpus.  Output: (label, community).
 
     The per-round LABELS state is not pinned: each round references it
-    exactly once, so lineage stays linear — unlike kcore's
+    exactly once, so lineage stays linear — unlike kcore_fixpoint's
     twice-referenced state."""
     from pyspark.sql.window import Window
 
@@ -296,29 +296,19 @@ def triangle_counts(triples: DataFrame) -> DataFrame:
     )
 
 
-def _peel(und: DataFrame, k: int) -> DataFrame:
-    """One k-core round over the undirected edge list: drop every node of
-    degree < ``k`` and the edges touching it.  Pinned, because the next
-    round reads the result twice (see :func:`kcore`)."""
-    keep = (
-        und.groupBy("subj")
-        .agg(F.count("*").alias("deg"))
-        .where(F.col("deg") >= k)
-        .select("subj")
-    )
-    return materialize(
-        und.join(keep, "subj", "left_semi")
-        .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
-    )
+def kcore_fixpoint(
+    triples: DataFrame, k: int = 2, max_rounds: int = 50
+) -> tuple[DataFrame, int]:
+    """Synchronous k-core peel over the UNDIRECTED distinct edge set, run
+    to the fixpoint or for at most ``max_rounds`` rounds: each round drops
+    every node whose current degree is below ``k`` (and the edges touching
+    it).  Returns ((label, core_degree), rounds used), where core_degree is
+    the residual-graph degree of every surviving node.
 
-
-def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
-    """Synchronous k-core peel over the UNDIRECTED distinct edge set:
-    each round drops every node whose current degree is below ``k`` (and
-    the edges touching it), for a FIXED ``iters`` rounds — the same
-    bounded-round determinism contract as :func:`label_propagation`, so
-    the unrolled DuckDB oracle agrees bit-for-bit.  Output: (label,
-    core_degree) — the residual-graph degree of every surviving node.
+    The peel stops early only after a round that removes no edge, and every
+    later round would remove none either, so a run capped at ``r`` rounds
+    returns exactly the rows of ``r`` unconditional rounds — the DuckDB
+    oracle unrolls ``max_rounds`` rounds and agrees bit-for-bit.
 
     The reference materializes the KG but has no subgraph analytics
     (database_service.py get_graph serves per-doc slices); k-core is the
@@ -336,19 +326,36 @@ def kcore(triples: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
     Unlike PageRank/LPA (whose per-round state is referenced ONCE), each
     peel round references the live edge list TWICE — the degree aggregate
     and the semi-join probe — so a lazy chained plan re-evaluates the
-    upstream extraction 2^iters times.  The edge list is therefore
+    upstream extraction 2^rounds times.  The edge list is therefore
     pinned every round (:func:`~kgx.functions.plan.materialize`): it only
     SHRINKS, the per-round materialization is two bigint-pair columns,
-    and the pin is exactly the lineage cut a fixpoint-seeking job needs
-    anyway (measured: 386 s lazy → seconds checkpointed at sf0.01).
+    lineage stays one round deep regardless of depth, and the driver-side
+    convergence test reads a materialized count (measured: 386 s lazy →
+    seconds checkpointed at sf0.01).
     """
     und = _undirected_edges(triples)
-    for _ in range(iters):
-        und = _peel(und, k)
-    return (
-        und.groupBy(F.col("subj").alias("label"))
-        .agg(F.count("*").cast("long").alias("core_degree"))
+    n = und.count()
+    rounds = 0
+    for _ in range(max_rounds):
+        keep = (
+            und.groupBy("subj")
+            .agg(F.count("*").alias("deg"))
+            .where(F.col("deg") >= k)
+            .select("subj")
+        )
+        und = materialize(
+            und.join(keep, "subj", "left_semi")
+            .join(keep.withColumnRenamed("subj", "obj"), "obj", "left_semi")
+        )
+        rounds += 1
+        m = und.count()
+        if m == n:
+            break
+        n = m
+    core = und.groupBy(F.col("subj").alias("label")).agg(
+        F.count("*").cast("long").alias("core_degree")
     )
+    return core, rounds
 
 
 def negative_samples(
@@ -429,32 +436,6 @@ def _negative_samples(t: DataFrame, k: int, buckets: int) -> DataFrame:
             F.col("label").alias("neg_obj"),
         )
     )
-
-
-def kcore_fixpoint(
-    triples: DataFrame, k: int = 2, max_rounds: int = 50
-) -> tuple[DataFrame, int]:
-    """k-core peel run to the FIXPOINT (for jobs; the gate query
-    :func:`kcore` uses a fixed round count so its oracle can unroll).
-    Returns (core degrees, rounds used).  Each round's edge list is
-    already pinned (see :func:`kcore`), so the driver-side convergence
-    test reads a materialized count — no extra evaluation; lineage stays
-    one round deep regardless of depth.
-    """
-    und = _undirected_edges(triples)
-    n = und.count()
-    rounds = 0
-    for _ in range(max_rounds):
-        und = _peel(und, k)
-        rounds += 1
-        m = und.count()
-        if m == n:
-            break
-        n = m
-    core = und.groupBy(F.col("subj").alias("label")).agg(
-        F.count("*").cast("long").alias("core_degree")
-    )
-    return core, rounds
 
 
 def common_neighbor_candidates(

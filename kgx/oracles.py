@@ -523,6 +523,10 @@ FROM documents WHERE doc_id < {max_doc_id}
 """.strip()
 
 
+# ---------------------------------------------------------------------------
+# text statistics (kgx.operators.textstats)
+# ---------------------------------------------------------------------------
+
 def text_stats_sql() -> str:
     toks = "list_filter(str_split(text, ' '), t -> t <> '')"
     return f"""
@@ -612,6 +616,29 @@ WITH t AS (
 SELECT doc_id, ws_tokens, bpe_tokens, char_count,
        char_count / CAST(bpe_tokens AS DOUBLE) AS chars_per_token
 FROM t WHERE bpe_tokens > 0
+""".strip()
+
+
+def vocab_topk_sql(k: int) -> str:
+    """Oracle for the vocabulary top-k (mirror of
+    kgx.operators.textstats.vocab_topk: whitespace tokens, count-desc /
+    token-asc deterministic order)."""
+    return f"""
+WITH toks AS (
+    SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
+    FROM documents
+),
+counts AS (
+    SELECT token,
+           CAST(count(*) AS BIGINT) AS n_occurrences,
+           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+    FROM toks GROUP BY 1
+    ORDER BY n_occurrences DESC, token
+    LIMIT {k}
+)
+SELECT token, n_occurrences, n_docs,
+       CAST(row_number() OVER (ORDER BY n_occurrences DESC, token) AS BIGINT) AS rank
+FROM counts
 """.strip()
 
 
@@ -732,6 +759,10 @@ def fingerprints_sql() -> str:
         " AS fingerprint FROM documents"
     )
 
+
+# ---------------------------------------------------------------------------
+# interleaved media spans (kgx.operators.media)
+# ---------------------------------------------------------------------------
 
 def media_inventory_sql() -> str:
     h = _duck_md5_60("media_ref")
@@ -1504,127 +1535,6 @@ FROM rates r LEFT JOIN picked p USING (stratum)
 """.strip()
 
 
-# ---------------------------------------------------------------------------
-# temporal joins (kgx.operators.temporal) — independent DuckDB implementations
-# ---------------------------------------------------------------------------
-
-_EVENTS_DEDUP_CTE = """
-ev AS (
-    SELECT user_id, ts, event_id, event_type
-    FROM events
-    QUALIFY row_number() OVER (PARTITION BY user_id, ts
-                               ORDER BY event_id DESC) = 1
-)
-""".strip()
-
-
-def asof_last_click_sql() -> str:
-    """Oracle for the distributed as-of join via DuckDB's NATIVE ASOF JOIN —
-    a genuinely independent implementation of the same semantics (mirror of
-    __spark_entry__.q_asof_last_click: per-(user_id, ts) max-event_id dedup,
-    inner, right ts <= left ts)."""
-    return f"""
-WITH {_EVENTS_DEDUP_CTE},
-purchases AS (
-    SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-    FROM ev WHERE event_type = 'purchase'
-),
-clicks AS (
-    SELECT user_id, ts AS click_ts, event_id AS click_id
-    FROM ev WHERE event_type = 'click'
-)
-SELECT p.user_id, p.purchase_id, p.purchase_ts, c.click_id, c.click_ts
-FROM purchases p
-ASOF JOIN clicks c
-  ON p.user_id = c.user_id AND c.click_ts <= p.purchase_ts
-""".strip()
-
-
-def range_clicks_sql() -> str:
-    """Oracle for the binned range join via a plain inequality join (mirror
-    of __spark_entry__.q_range_clicks_before_purchase: clicks in the 24 h
-    window at-or-before each purchase, raw events, no dedup)."""
-    return """
-WITH purchases AS (
-    SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-    FROM events WHERE event_type = 'purchase'
-),
-clicks AS (
-    SELECT user_id, ts AS click_ts, event_id AS click_id
-    FROM events WHERE event_type = 'click'
-)
-SELECT p.user_id, p.purchase_id, p.purchase_ts, c.click_id
-FROM purchases p JOIN clicks c
-  ON p.user_id = c.user_id
- AND c.click_ts <= p.purchase_ts
- AND c.click_ts >= p.purchase_ts - INTERVAL 86400 SECOND
-""".strip()
-
-
-def vocab_topk_sql(k: int) -> str:
-    """Oracle for the vocabulary top-k (mirror of
-    kgx.operators.textstats.vocab_topk: whitespace tokens, count-desc /
-    token-asc deterministic order)."""
-    return f"""
-WITH toks AS (
-    SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
-    FROM documents
-),
-counts AS (
-    SELECT token,
-           CAST(count(*) AS BIGINT) AS n_occurrences,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM toks GROUP BY 1
-    ORDER BY n_occurrences DESC, token
-    LIMIT {k}
-)
-SELECT token, n_occurrences, n_docs,
-       CAST(row_number() OVER (ORDER BY n_occurrences DESC, token) AS BIGINT) AS rank
-FROM counts
-""".strip()
-
-
-def sessions_sql(gap_sec: int) -> str:
-    """Oracle for gap-based sessionization via the classic gaps-and-islands
-    cascade (independent of Spark's native session_window merge): new
-    session when the gap from the previous event is STRICTLY greater than
-    gap_sec (Spark's merge boundary is inclusive — pinned by
-    test_sessionize_gap_boundary_semantics); session_end = last ts + gap."""
-    gap_us = gap_sec * 1_000_000
-    return f"""
-WITH e AS (
-    SELECT user_id, ts,
-           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-    FROM events
-),
-f AS (
-    SELECT user_id, ts,
-           CASE WHEN prev IS NULL
-                     OR epoch_us(ts) - epoch_us(prev) > {gap_us}
-                THEN 1 ELSE 0 END AS new_s
-    FROM e
-),
-s AS (
-    SELECT user_id, ts,
-           sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                            ROWS UNBOUNDED PRECEDING) AS grp
-    FROM f
-),
-g AS (
-    SELECT user_id, grp,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL {gap_sec} SECOND AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM s GROUP BY 1, 2
-)
-SELECT user_id,
-       CAST(row_number() OVER (PARTITION BY user_id ORDER BY session_start)
-            AS BIGINT) AS session_id,
-       session_start, session_end, n_events
-FROM g
-""".strip()
-
-
 def curation_funnel_sql(
     min_tokens: int = 20,
     max_symbol_ratio: float = 0.2,
@@ -1837,17 +1747,18 @@ SELECT node AS label, community FROM lp{iters}
 """.strip()
 
 
-def graph_kcore_sql(k: int, iters: int) -> str:
-    """Oracle for the synchronous k-core peel (mirror of
-    kgx.operators.graphstats.kcore): undirected distinct edges, each round
-    keeps only nodes with current degree >= k and the edges between
-    survivors, unrolled into chained CTEs kc_e0..kc_e{iters}; output is
-    the residual-graph degree of every surviving node."""
+def graph_kcore_sql(k: int, max_rounds: int) -> str:
+    """Oracle for the capped k-core peel (mirror of
+    kgx.operators.graphstats.kcore_fixpoint): undirected distinct edges,
+    each round keeps only nodes with current degree >= k and the edges
+    between survivors, unrolled into chained CTEs kc_e0..kc_e{max_rounds}
+    (a round past the fixpoint changes nothing, so the engine's early stop
+    agrees); output is the residual-graph degree of every surviving node."""
     ctes = [
         "kc_e0 AS MATERIALIZED (SELECT subj, obj FROM gr_edges UNION "
         "SELECT obj, subj FROM gr_edges)",
     ]
-    for i in range(iters):
+    for i in range(max_rounds):
         ctes.append(f"""
 kc_k{i} AS (
     SELECT subj FROM kc_e{i} GROUP BY 1 HAVING count(*) >= {k}
@@ -1863,7 +1774,7 @@ kc_e{i + 1} AS (
 {_graph_edges_ctes()},
 {joined}
 SELECT subj AS label, CAST(count(*) AS BIGINT) AS core_degree
-FROM kc_e{iters} GROUP BY 1
+FROM kc_e{max_rounds} GROUP BY 1
 """.strip()
 
 
@@ -2306,125 +2217,6 @@ SELECT m.shard,
        any_value(p.spanning_docs) AS spanning_docs
 FROM sh m JOIN pstats p USING (shard)
 GROUP BY m.shard
-""".strip()
-
-
-# ---------------------------------------------------------------------------
-# text indexing (kgx.operators.indexing)
-# ---------------------------------------------------------------------------
-
-_DOC_TOKENS_CTE = """
-toks AS MATERIALIZED (
-    SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
-    FROM documents
-)
-""".strip()
-
-
-def inverted_postings_sql(min_df: int, max_df: int | None) -> str:
-    """Oracle for the inverted token index (mirror of
-    kgx.operators.indexing.inverted_postings)."""
-    max_clause = f"AND df <= {max_df}" if max_df is not None else ""
-    return f"""
-WITH {_DOC_TOKENS_CTE},
-tf AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
-       FROM toks GROUP BY 1, 2),
-dft AS (SELECT token, CAST(count(*) AS BIGINT) AS df
-        FROM tf GROUP BY 1 HAVING count(*) >= {min_df} {max_clause})
-SELECT tf.token, tf.doc_id, tf.tf, dft.df
-FROM tf JOIN dft USING (token)
-""".strip()
-
-
-def lm_ngram_counts_sql(n: int, min_count: int) -> str:
-    """Oracle for the n-gram LM count table with KN continuation counts
-    (mirror of kgx.operators.indexing.lm_ngram_counts)."""
-    t = "list_filter(str_split(text, ' '), t -> t <> '')"
-    return f"""
-WITH grams AS MATERIALIZED (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len({t}) - {n - 2}),
-                                 i -> array_to_string(list_slice({t}, i, i + {n - 1}), ' '))) AS gram
-    FROM documents
-),
-counts AS (
-    SELECT gram, CAST(count(*) AS BIGINT) AS n_occurrences,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM grams GROUP BY 1 HAVING count(*) >= {min_count}
-),
-cont AS (
-    SELECT substring(gram, length(split_part(gram, ' ', 1)) + 2) AS suffix,
-           CAST(count(DISTINCT split_part(gram, ' ', 1)) AS BIGINT) AS continuation_count
-    FROM grams GROUP BY 1
-)
-SELECT c.gram, c.n_occurrences, c.n_docs,
-       substring(c.gram, length(split_part(c.gram, ' ', 1)) + 2) AS suffix,
-       ct.continuation_count
-FROM counts c
-JOIN cont ct ON ct.suffix = substring(c.gram, length(split_part(c.gram, ' ', 1)) + 2)
-""".strip()
-
-
-def bm25_topk_sql(query_terms: list[str], k: int, k1_centi: int, b_centi: int) -> str:
-    """Oracle for fixed-point BM25 top-k retrieval (mirror of
-    kgx.operators.indexing.bm25_topk): identical bigint formula — DuckDB
-    ``//`` replays Spark ``div`` (both floor on non-negative operands),
-    ``length(bin(x))`` replays the log2-bit-length idf — so score_milli
-    matches bit-for-bit and the (score DESC, doc_id) tie-break pins the
-    same top-k and ranks."""
-    K, B = int(k1_centi), int(b_centi)
-    terms = ", ".join("'" + t.replace("'", "''") + "'" for t in query_terms)
-    t = "list_filter(str_split(text, ' '), t -> t <> '')"
-    return f"""
-WITH {_DOC_TOKENS_CTE},
-tf AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
-       FROM toks WHERE token IN ({terms}) GROUP BY 1, 2),
-dft AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-dl AS (SELECT doc_id, CAST(len({t}) AS BIGINT) AS dl FROM documents),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(len({t})) AS BIGINT) AS total_tokens
-          FROM documents),
-contrib AS (
-    SELECT tf.doc_id,
-           (1000 * CAST(length(bin(n_docs // df)) AS BIGINT) * tf
-            * {100 + K} * 100 * total_tokens)
-           // (10000 * total_tokens * tf
-               + {K * (100 - B)} * total_tokens
-               + {K * B} * dl.dl * n_docs) AS c
-    FROM tf JOIN dft USING (token) JOIN dl USING (doc_id) CROSS JOIN stats
-),
-per_doc AS (
-    SELECT doc_id, CAST(sum(c) AS BIGINT) AS score_milli,
-           CAST(count(*) AS BIGINT) AS n_terms
-    FROM contrib GROUP BY 1
-)
-SELECT doc_id, score_milli, n_terms,
-       CAST(row_number() OVER (ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rank
-FROM per_doc
-ORDER BY score_milli DESC, doc_id
-LIMIT {int(k)}
-""".strip()
-
-
-def unigram_surprisal_sql() -> str:
-    """Oracle for the per-document mean unigram surprisal screen (mirror
-    of kgx.operators.indexing.unigram_surprisal): same log2-bit-length
-    quantization (``length(bin(T // ct))``) and milli-scaled floor-divided
-    mean, so every score matches bit-for-bit."""
-    return f"""
-WITH {_DOC_TOKENS_CTE},
-ct AS (SELECT token, CAST(count(*) AS BIGINT) AS ct FROM toks GROUP BY 1),
-stats AS (SELECT CAST(sum(ct) AS BIGINT) AS t_total FROM ct),
-scored AS (
-    SELECT toks.doc_id,
-           CAST(length(bin(t_total // ct)) AS BIGINT) AS bits
-    FROM toks JOIN ct USING (token) CROSS JOIN stats
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(bits) AS BIGINT) AS total_bits,
-       (1000 * CAST(sum(bits) AS BIGINT)) // CAST(count(*) AS BIGINT)
-           AS mean_milli_bits
-FROM scored GROUP BY 1
 """.strip()
 
 

@@ -267,7 +267,7 @@ def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
         "wall_sec": wall,
         "stages": stages,
         "buckets_total": len({r["bucket"] for r in per_bucket_rows} | done),
-        "buckets_this_run": cfg.n_buckets - len(done),
+        "buckets_this_run": len(per_bucket_rows),
         "docs": docs_this_run + (int(prior["d"]) if prior else 0),
         "triples": triples_this_run + (int(prior["t"]) if prior else 0),
     }

@@ -13,7 +13,7 @@ is what we'd ship in ``spark-defaults.conf`` for a 1000-executor job:
   downward, so oversizing is safe and undersizing is not.
 - ANSI mode and the UTC session time zone pinned (:data:`ANSWER_CONF`),
   not inherited from a cluster's ``spark-defaults``: every fixed-point
-  operator (PageRank, BM25, node2vec weights, token_mix rates) relies on
+  operator (PageRank, node2vec weights, token_mix rates) relies on
   bigint overflow raising ARITHMETIC_OVERFLOW; with ANSI off it would wrap
   around silently.
 """

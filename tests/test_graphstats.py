@@ -355,9 +355,9 @@ def test_kcore_planted_clique_sheds_chain(spark):
     chain = [("d", "p"), ("p", "q"), ("q", "r")]
     got = {
         r.label: r.core_degree
-        for r in graphstats.kcore(
-            _triples_df(spark, clique + chain), k=2, iters=4
-        ).collect()
+        for r in graphstats.kcore_fixpoint(
+            _triples_df(spark, clique + chain), k=2, max_rounds=4
+        )[0].collect()
     }
     assert got == _py_kcore(clique + chain, k=2, iters=4)
     assert set(got) == set("abcd")
@@ -365,9 +365,9 @@ def test_kcore_planted_clique_sheds_chain(spark):
     # fixpoint reached: one more round changes nothing
     more = {
         r.label: r.core_degree
-        for r in graphstats.kcore(
-            _triples_df(spark, clique + chain), k=2, iters=5
-        ).collect()
+        for r in graphstats.kcore_fixpoint(
+            _triples_df(spark, clique + chain), k=2, max_rounds=5
+        )[0].collect()
     }
     assert more == got
 
@@ -384,9 +384,9 @@ def test_kcore_matches_reference_on_random_graph(spark, seed):
     for iters in (1, 3):
         got = {
             r.label: r.core_degree
-            for r in graphstats.kcore(
-                _triples_df(spark, edges), k=2, iters=iters
-            ).collect()
+            for r in graphstats.kcore_fixpoint(
+                _triples_df(spark, edges), k=2, max_rounds=iters
+            )[0].collect()
         }
         assert got == _py_kcore(edges, k=2, iters=iters)
 
@@ -394,9 +394,9 @@ def test_kcore_matches_reference_on_random_graph(spark, seed):
 def test_kcore_direction_and_dup_insensitive(spark):
     base = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
     flipped = [(v, u) for u, v in base] + base
-    g1 = graphstats.kcore(_triples_df(spark, base)).collect()
-    g2 = graphstats.kcore(_triples_df(spark, flipped)).collect()
-    assert sorted(map(tuple, g1)) == sorted(map(tuple, g2))
+    g1, _ = graphstats.kcore_fixpoint(_triples_df(spark, base), max_rounds=4)
+    g2, _ = graphstats.kcore_fixpoint(_triples_df(spark, flipped), max_rounds=4)
+    assert sorted(map(tuple, g1.collect())) == sorted(map(tuple, g2.collect()))
 
 
 def _md5_60(s):

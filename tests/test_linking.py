@@ -27,6 +27,17 @@ def test_alias_edges_share_stem(spark):
     assert not any("Gamma" in a and "Beta" in b for a, b in pairs)
 
 
+def test_alias_edges_star_from_minimum_label(spark):
+    # five spellings of one stem: a star of 4 edges from the minimum label,
+    # not the 10 pairs of a stem self-join
+    names = ["Acme Corp", "ACME", "acme  Inc", "Acme Ltd", "Acme Corporation"]
+    pairs = [
+        (r["src_label"], r["dst_label"])
+        for r in linking.alias_edges(_labels(spark, names)).collect()
+    ]
+    assert sorted(pairs) == [("ACME", n) for n in sorted(set(names) - {"ACME"})]
+
+
 @pytest.mark.parametrize(
     "edges,expected",
     [

@@ -20,6 +20,21 @@ def docs(spark, sf_dir):
     return docs_src.spans_table(narrative).cache()
 
 
+def _text_docs(spark, texts):
+    """(doc_id, text) pairs as one text span per doc, the minimal
+    spans-table shape."""
+    import pandas as pd
+
+    raw = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [d for d, _ in texts], "text": [t for _, t in texts]})
+    )
+    return raw.selectExpr(
+        "doc_id",
+        "array(named_struct('kind', 'text', 'text', text, 'media_ref', '',"
+        " 'offset', 0)) AS spans",
+    )
+
+
 def _triples_set(spark, out_dir):
     df = pipeline.read_output(spark, out_dir, "triples")
     return {tuple(r) for r in df.select("doc_id", "subj", "pred", "obj").collect()}
@@ -185,26 +200,11 @@ def test_canonicalize_tail_merges_aliases(spark):
     MinHash linking on) must emit a canonical_map whose alias variants merge
     and a triples_canonical table whose object labels are canonicalized and
     deduplicated across the alias split."""
-    import os
-
-    import pandas as pd
-
-    from kgx.sources import docs as docs_src
-
-    texts = [
+    docs = _text_docs(spark, [
         ("doc-a", "John Doe is the CEO of Acme Corporation."),
         ("doc-b", "John Doe is the CEO of Acme Corp."),
         ("doc-c", "Jane Smith founded Widget Systems."),
-    ]
-    raw = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [d for d, _ in texts], "text": [t for _, t in texts]})
-    )
-    # one text span per doc, the minimal spans-table shape
-    docs = raw.selectExpr(
-        "doc_id",
-        "array(named_struct('kind', 'text', 'text', text, 'media_ref', '',"
-        " 'offset', 0)) AS spans",
-    )
+    ])
     out = tempfile.mkdtemp(prefix="kgx_canon_")
     try:
         pipeline.run(
@@ -268,6 +268,27 @@ def test_canonical_tail_failure_keeps_every_bucket_committed(spark, docs, monkey
     finally:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(clean, ignore_errors=True)
+
+
+def test_buckets_this_run_counts_only_committed_buckets(spark):
+    """A bucket that no document hashes to is never committed, so no run
+    counts it: two documents of one bucket out of four report one bucket,
+    and a resume over the same, fully written input reports none."""
+    ids = pipeline._bucketed(
+        spark.range(16).selectExpr("concat('doc-', id) AS doc_id"), 4
+    ).collect()
+    bucket = ids[0]["bucket"]
+    same = [r["doc_id"] for r in ids if r["bucket"] == bucket][:2]
+    assert len(same) == 2
+    docs = _text_docs(spark, [(d, "Jane Smith founded Widget Systems.") for d in same])
+    out = tempfile.mkdtemp(prefix="kgx_buckets_")
+    try:
+        cfg = pipeline.PipelineConfig(out_dir=out, n_buckets=4)
+        assert pipeline.run(spark, docs, cfg)["buckets_this_run"] == 1
+        assert pipeline.run(spark, docs, cfg)["buckets_this_run"] == 0
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
 
 def test_append_lineage_accepts_file_uri(spark):
     """append_lineage handles filesystem-URI out_dirs, not only bare local

@@ -145,10 +145,6 @@ UNREACHED_BY_JOBS = {
     "kgx.sources.miniimage": "the media payload's image codec",
     "kgx.sources.miniwav": "the media payload's audio codec",
     "kgx.sources.miniavi": "the media payload's video container",
-    # SURVEY §2 has no row for these two families either: they are the
-    # open half of ROADMAP item 10, to be deleted next
-    "kgx.operators.indexing": "postings, LM n-grams and BM25, in no SURVEY row; pending deletion",
-    "kgx.operators.temporal": "as-of, range and session joins, out of SURVEY §2.5/§2.10; pending deletion",
 }
 
 

@@ -86,16 +86,6 @@ SECTIONS = [
      "Decontamination screen: benchmark n-gram hash set broadcast "
      "(bounded by eval-suite size); the train side never shuffles before "
      "the join."),
-    ("asof_last_click",
-     "Distributed as-of join: union both sides, ONE per-key window "
-     "exchange — no range explosion, no nested loop."),
-    ("range_clicks_before_purchase",
-     "Binned range join: equi-join on (key, time-bin) with a 2-bin "
-     "explode, exact filter after — a shuffled hash join, never a "
-     "BroadcastNestedLoopJoin."),
-    ("sessions",
-     "Native session_window aggregate: one shuffle on user_id feeds the "
-     "session merge; the numbering window reuses the same partitioning."),
     ("curation_funnel",
      "End-to-end curation funnel: survivor-set boundaries are "
      "`plan.materialize` checkpoints, so the plan starts at Scan ExistingRDD "
@@ -111,15 +101,6 @@ SECTIONS = [
      "Vocabulary head: partial HashAggregate collapses hot tokens "
      "map-side; the global head is TakeOrderedAndProject (per-partition "
      "heaps), not a full sort."),
-    ("bm25_topk",
-     "Round 5 (fixed-point BM25 retrieval): the token explode is filtered "
-     "to the query terms before any aggregation, so tf/df exchanges carry "
-     "matching postings only; the per-term tf table is localCheckpointed "
-     "once and feeds both the df aggregate and the scoring join (a lazy "
-     "plan replays the corpus explode per branch — A/B'd in the "
-     "docstring); corpus scalars ride a 1-row broadcast; the top-k is "
-     "TakeOrderedAndProject, and the rank window runs over the "
-     "already-limited k rows."),
     ("graph_random_walks",
      "Round 5 (DeepWalk walk corpus: node2vec_walks with equal weights, "
      "so no step joins the predecessor's adjacency): length−1 unrolled "
@@ -135,12 +116,6 @@ SECTIONS = [
      "entity_cooccurrence stance, no self-join), then ONE map-side-"
      "combined count aggregate; the only full-width exchange carries "
      "pre-combined (center, context) rows."),
-    ("unigram_surprisal",
-     "Round 5 (corpus-statistics perplexity screen): ONE token explode "
-     "feeds the vocab-sized count aggregate (1-row total broadcast back) "
-     "and the scoring join; the count side is AQE-decided (unbounded "
-     "vocab, no forced broadcast); the corpus-scale token pin was A/B'd "
-     "and measured a LOSER, so the plan stays lazy."),
     ("seq_pack",
      "Concat-then-chunk packing: ONE hash exchange on shard, then a "
      "per-shard running-sum window — never a global sort/single-partition "
