@@ -537,18 +537,10 @@ QUERIES = (
     ("link_minhash_pairs", _labels, linking.minhash_edges, dict(min_jaccard=0.7),
      O.link_minhash_sql),
     ("dedup_exact", _documents, dedup.exact_groups, {}, O.dedup_exact_sql),
-    # the hot-shingle guard drops nothing here: the driver corpus' max
-    # shingle df is 7
-    ("dedup_jaccard_pairs", _documents, dedup.ngram_jaccard_pairs,
-     dict(threshold=0.5, max_shingle_df=50), O.dedup_jaccard_sql),
     ("dedup_minhash_lsh", _documents, dedup.minhash_lsh_pairs, _MINHASH,
      O.dedup_minhash_sql),
     ("dedup_clusters", _documents, dedup.near_dup_clusters, _MINHASH,
      O.dedup_clusters_sql),
-    # the band-bucket cap drops nothing at sf0.01 (2932 rows either way); at
-    # sf0.1 it drops the near-identical flood clusters (34k vs 272k pairs)
-    ("dedup_simhash_pairs", _documents, dedup.simhash_pairs,
-     dict(max_hamming=3, max_bucket=200), O.dedup_simhash_sql),
     ("text_stats", _documents, textstats.text_stats, {}, O.text_stats_sql),
     ("quality_filter", _documents, textstats.quality_filter,
      dict(min_tokens=20, max_tokens=100_000, min_mean_word_len=3.0,
@@ -611,23 +603,19 @@ QUERIES = (
     ("s7_llm_fake_edges", _spans, q_s7_llm_fake_edges, {}, O.llm_edges_sql),
     ("media_decode_real", _image_blobs, media.decode_media_bytes, {},
      O.media_decode_real_sql),
-    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("audio_decode_real", _audio_blobs, media.decode_audio_bytes, {},
      O.audio_decode_real_sql),
     ("video_frames_real", _video_blobs, media.video_frame_means, {},
      O.video_frames_real_sql),
+    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("media_resize_real", _image_blobs, media.resize_media_real,
      dict(max_w=8, max_h=8), O.media_resize_real_sql),
     ("fingerprints", _documents, textstats.fingerprints, {}, O.fingerprints_sql),
     ("graph_label_prop", _triples, graphstats.label_propagation, dict(iters=3),
      O.graph_label_prop_sql),
-    ("graph_entity_pmi", _nodes, graphstats.entity_cooccurrence, dict(min_co=2),
-     O.entity_pmi_sql),
     ("a3_latest_order_per_customer", _table("orders"), q_latest_order_per_customer,
      {}, O.latest_order_sql),
     ("kg_version_diff", _triples, q_kg_version_diff, {}, O.kg_version_diff_sql),
-    ("graph_link_candidates", _triples, graphstats.common_neighbor_candidates,
-     dict(max_degree=64, min_common=2), O.graph_link_candidates_sql),
     ("kg_training_pairs", _triples, graphstats.training_pairs, dict(k=2, buckets=64),
      O.kg_training_pairs_sql),
     ("kg_negative_samples", _triples, graphstats.negative_samples,
@@ -653,15 +641,10 @@ QUERIES = (
      dict(length=4, walks_per_node=2, seed=0, window=2), O.walk_skipgram_pairs_sql),
     ("kg_transe_margin", _triples, q_kg_transe_margin,
      dict(k=2, buckets=64, dim=8, modulus=1024), O.kg_transe_margin_sql),
-    ("graph_two_hop", _triples, graphstats.two_hop_stats, dict(max_degree=64),
-     O.graph_two_hop_sql),
     ("a2_user_type_stats", _events, q_user_type_stats, {}, O.user_type_stats_sql),
     ("graph_node2vec_walks", _triples, graphstats.node2vec_walks,
      dict(length=4, walks_per_node=2, seed=0, w_return=1, w_near=4, w_far=2),
      O.node2vec_walks_sql),
-    ("lsh_recall", _documents, dedup.lsh_blocking_recall,
-     dict(threshold=0.5, max_shingle_df=50, num_hashes=16, bands=8, max_bucket=200),
-     O.lsh_recall_sql),
     ("dataset_split", _documents, curation.dataset_split,
      dict(val_bp=500, test_bp=500, strat_col="source", seed="split"),
      O.dataset_split_sql),

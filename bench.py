@@ -35,7 +35,6 @@ HEADLINE = (
     "kg_triples",
     "link_canonical_triples",
     "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
     "seq_pack",
     "text_stats",
     "curation_funnel",

@@ -1,8 +1,9 @@
 """Cross-engine deterministic hashing helpers.
 
-MinHash/SimHash need hash functions that produce IDENTICAL values in Spark
-and in the DuckDB oracle.  ``xxhash64``/``hash`` differ between engines, so
-we derive 60-bit integers from md5 hex (stable everywhere):
+MinHash and the seeded samplers need hash functions that produce IDENTICAL
+values in Spark and in the DuckDB oracle.  ``xxhash64``/``hash`` differ
+between engines, so we derive 60-bit integers from md5 hex (stable
+everywhere):
 
     Spark : cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)
     DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT

@@ -1,4 +1,5 @@
-"""Document deduplication suite — exact, n-gram Jaccard, MinHash-LSH, SimHash.
+"""Document deduplication — exact groups, MinHash-LSH pairs and near-dup
+clusters.
 
 Core operators a 100 TB training-data pipeline needs in front of the KG
 extractor (duplicate web pages would otherwise dominate both compute and the
@@ -8,17 +9,13 @@ results bit-for-bit (kgx.functions.hashing).
 
 Scale design:
 - exact: one shuffle on a 60-bit text hash (not the text itself).
-- n-gram Jaccard: inverted-index self-join on shingle hashes.  At corpus
-  scale, add a document-frequency cutoff on hot shingles before the join
-  (``max_shingle_df``) — a stop-shingle filter, same trick as stop words.
 - MinHash-LSH: signatures are computed per-row with higher-order array
   functions (aggregate over the shingle array — zero shuffle), then ONE
   shuffle on (band, band_hash) buckets.  Candidates are verified with true
   Jaccard before reporting, so precision is exact and recall is the standard
   LSH s-curve.
-- SimHash: 64-bit fingerprint per doc via bit-vote aggregation; candidate
-  pairs via 4×16-bit band buckets (Hamming ≤ 3 ⇒ at least one band equal),
-  verified with bit_count(xor) — all JVM-side.
+- clusters: connected components over the verified LSH pairs, one
+  canonical document per component.
 """
 
 from __future__ import annotations
@@ -54,33 +51,15 @@ def exact_groups(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shingles (shared by Jaccard + MinHash)
+# shingles (shared by MinHash-LSH and the contamination screen)
 # ---------------------------------------------------------------------------
 
-def _shingle_expr(n: int, col: str = "text") -> str:
-    """Distinct word n-gram shingle strings from ``col`` (space-tokenized).
-    Guarded: Spark's sequence(1, 0) would DESCEND, so short docs short-circuit
-    to an empty array.
-
-    NOTE the ``slice(split(col), i, n)`` inside the lambda re-tokenizes the
-    document per shingle when ``col`` is a raw expression (the nested-HOF
-    inlining trap documented in kgx.functions.plan) — O(tokens × doc_len)
-    per document.  Negligible on sub-KB fixture docs, quadratic-ish on long
-    web documents, so :func:`_tokenized` hoists the split behind a
-    project_barrier and passes the bound ``toks`` attribute here instead;
-    this raw-column form remains for caller-supplied expressions (e.g.
-    char shingles over short entity labels, where hoisting buys nothing)."""
-    return (
-        f"CASE WHEN size(split({col}, ' ')) < {n} THEN array() "
-        f"ELSE array_distinct(transform(sequence(1, size(split({col}, ' ')) - {n - 1}), "
-        f"i -> array_join(slice(split({col}, ' '), i, {n}), ' '))) END"
-    )
-
-
 def _toks_shingle_expr(n: int) -> str:
-    """Same shingle semantics over a pre-materialized ``toks`` array
-    attribute: slice per element is an O(n) bound-array copy, so shingling
-    is linear in document length."""
+    """Distinct word n-gram shingle strings over a pre-materialized
+    ``toks`` array attribute (:func:`_tokenized`).  Guarded: Spark's
+    sequence(1, 0) would DESCEND, so docs shorter than ``n`` tokens
+    short-circuit to an empty array.  Slice per element is an O(n)
+    bound-array copy, so shingling is linear in document length."""
     return (
         f"CASE WHEN size(toks) < {n} THEN array() "
         f"ELSE array_distinct(transform(sequence(1, size(toks) - {n - 1}), "
@@ -111,60 +90,14 @@ def char_shingle_expr(col: str, n: int = 3) -> str:
     )
 
 
-def shingle_table(
-    documents: DataFrame,
-    n: int = 3,
-    shingle_expr: str | None = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, shingle_hash) — exploded distinct shingles, hashed to 60 bits.
-    ``shingle_expr`` overrides the default word-n-gram expression (e.g.
-    :func:`char_shingle_expr` for entity-label linking)."""
-    if shingle_expr is None:
-        src = _tokenized(documents, id_col)
-        expr = _toks_shingle_expr(n)
-    else:
-        src, expr = documents, shingle_expr
+def shingle_table(documents: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingle_hash) — exploded distinct word n-gram shingles,
+    hashed to 60 bits."""
     return (
-        src.select(id_col, F.expr(expr).alias("shingles"))
-        .select(id_col, F.explode("shingles").alias("shingle"))
-        .select(id_col, F.expr(hashing.spark_md5_60("shingle")).alias("shingle_hash"))
-    )
-
-
-def ngram_jaccard_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity join via inverted index.
-
-    Output: (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard ≥ threshold.
-    ``max_shingle_df`` drops shingles appearing in more than that many docs
-    before the self-join (the skew guard for web-scale corpora)."""
-    # pinned: the hot-shingle aggregate, the per-doc sizes and both
-    # self-join sides read the shingle table (the filtered one is pinned
-    # again); A/B at sf0.1: 2.47-4.04 s pinned vs 2.92-4.14 s lazy
-    sh = plan_fn.materialize(shingle_table(documents, n))
-    if max_shingle_df is not None:
-        hot = sh.groupBy("shingle_hash").count().where(F.col("count") > max_shingle_df)
-        sh = plan_fn.materialize(
-            sh.join(hot.select("shingle_hash"), "shingle_hash", "left_anti")
-        )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle_hash") == F.col("b.shingle_hash")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_shingles", "nb"), "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        _tokenized(documents, "doc_id")
+        .select("doc_id", F.expr(_toks_shingle_expr(n)).alias("shingles"))
+        .select("doc_id", F.explode("shingles").alias("shingle"))
+        .select("doc_id", F.expr(hashing.spark_md5_60("shingle")).alias("shingle_hash"))
     )
 
 
@@ -286,9 +219,9 @@ def minhash_lsh_pairs(
     )
     # exact-Jaccard verification restricted to the candidate pairs — the
     # whole point of LSH is to never materialize the full similarity join.
-    # hs is a distinct set by construction (_shingle_expr array_distincts
-    # before hashing), so array_intersect sizes equal the old relational
-    # hash-equality join counts.  Both sides read the (materialized)
+    # hs is a distinct set by construction (both shingle expressions
+    # array_distinct before hashing), so array_intersect sizes equal the
+    # old relational hash-equality join counts.  Both sides read the (materialized)
     # shingle table built above — not a fresh pipeline.
     sa = sets_all.select(F.col(id_col).alias("doc_a"), F.col("hs").alias("ha"))
     sb = sets_all.select(F.col(id_col).alias("doc_b"), F.col("hs").alias("hb"))
@@ -375,168 +308,3 @@ def near_dup_clusters(
         (F.col("doc_id") != F.col("canonical_doc_id")).alias("is_duplicate"),
     )
 
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-def simhash_fingerprints(documents: DataFrame) -> DataFrame:
-    """(doc_id, simhash bigint) — 64-bit SimHash over distinct tokens.
-
-    Bit j of the fingerprint is 1 iff more token-hashes have bit j set than
-    unset.  Round 2: computed entirely per-row with higher-order array
-    functions (one ``aggregate`` per bit over the token-hash array, same
-    shape as the MinHash signatures) — ZERO shuffle.  The round-1 version
-    exploded every doc into 60 × |tokens| (doc_id, bit) rows and shuffled
-    them through two groupBys; at corpus scale that exchange carried 60×
-    the token count for a value that is a pure per-document function.
-    Only 60 bits are populated (md5_60), plenty for near-dup work.
-    """
-    bit_exprs = " + ".join(
-        f"(CASE WHEN aggregate(hs, 0, (acc, h) -> acc + "
-        f"(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END)) > 0 "
-        f"THEN cast(shiftleft(cast(1 as bigint), {b}) as bigint) ELSE cast(0 as bigint) END)"
-        for b in range(60)
-    )
-    return (
-        documents.select(
-            "doc_id",
-            F.expr(
-                "filter(array_distinct(split(text, ' ')), t -> t != '')"
-            ).alias("toks"),
-        )
-        .where(F.size("toks") > 0)
-        .select(
-            "doc_id",
-            F.expr(f"transform(toks, t -> {hashing.spark_md5_60('t')})").alias("hs"),
-        )
-        .select("doc_id", F.expr(f"cast({bit_exprs} as bigint)").alias("simhash"))
-    )
-
-
-def simhash_pairs(
-    documents: DataFrame, max_hamming: int = 3, max_bucket: int = 200
-) -> DataFrame:
-    """Near-dup pairs by SimHash: 4×15-bit band buckets (Hamming ≤ 3 over 60
-    bits ⇒ pigeonhole: some band identical), verified by bit_count(xor).
-
-    Output: (doc_a, doc_b, hamming int).
-
-    ``max_bucket`` is the same LSH skew guard as
-    :func:`minhash_lsh_pairs`: a band bucket holding more than that many
-    documents is a low-information collision whose within-bucket pair count
-    grows QUADRATICALLY — a boilerplate cluster of B near-identical docs
-    would otherwise enumerate O(B²) joined rows in one 15-bit bucket.  The
-    bucket is dropped before pair enumeration; genuinely-similar-but-not-
-    boilerplate pairs still collide in their other 3 discriminative bands.
-    (A >max_bucket cluster of near-IDENTICAL docs floods all 4 of its bands
-    and loses its internal pairs — the accepted guard trade, identical to
-    the MinHash twin; use :func:`exact_groups` first, which removes
-    byte-identical floods for one cheap hash shuffle.)
-
-    Plan shape (round 3, mirroring the round-2 MinHash rework): one
-    groupBy(band, band_bits) + collect_list whose in-bucket pairs are
-    enumerated with array higher-order functions — bounded by
-    ``max_bucket``² per bucket — replacing the uncapped band self-join.
-    The bucket rows carry (doc_id, simhash) structs so the Hamming verify
-    needs no join back to the fingerprint table.
-    """
-    fp = simhash_fingerprints(documents)
-    banded = fp.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(0, 3), b -> shiftright(simhash, b * 15) & 32767)"
-            )
-        ).alias("band", "band_bits"),
-    )
-    buckets = (
-        banded.groupBy("band", "band_bits")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("ds")
-        )
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-    )
-    return (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    unordered_pairs(
-                        "ds",
-                        "named_struct('doc_a', x.doc_id, 'doc_b', y.doc_id, "
-                        "'hamming', cast(bit_count(x.simhash ^ y.simhash) as int))",
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def lsh_blocking_recall(
-    documents: DataFrame,
-    threshold: float = 0.5,
-    max_shingle_df: int = 50,
-    num_hashes: int = 16,
-    bands: int = 8,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Blocking-quality audit of the MinHash-LSH near-dup join against
-    the exact inverted-index Jaccard join, and the dial that sizes
-    ``bands``/``num_hashes`` in production: how many of the TRUE >=
-    threshold pairs does banded LSH recover?  Both sides
-    verify with exact n-gram Jaccard, so on a corpus where the
-    ``max_shingle_df`` guard is INACTIVE (no shingle exceeds the df
-    cutoff — true of the gate corpus, max df 7 vs cutoff 50) every miss
-    is attributable to the banding (a pair whose signatures agree in no
-    band) or to the ``max_bucket`` skew cap.  When the guard IS active,
-    the two sides define Jaccard over different shingle sets (the exact
-    side df-filters, the LSH verification does not) and a miss can also
-    be that threshold-definition gap — tune bands on a guard-inactive
-    sample, or raise ``max_shingle_df`` until it deactivates.
-
-    Scale shape: a composition of the two pair plans AS USERS RUN THEM —
-    each side tokenizes and shingles the corpus independently (two
-    passes; sharing one shingle table would couple the audit to both
-    operators' internals).  Everything after them is pair-key aggregates
-    (one LEFT SEMI join on the (doc_a, doc_b) key, two single-row
-    counts, one 1×1 cross join).  The exact side costs the
-    inverted-index self-join — at 100 TB this audit runs on a SAMPLED
-    partition of the corpus exactly as blocking recall is estimated for
-    production ER systems; at gate scale it runs whole.
-
-    Output: ONE row (n_exact_pairs, n_lsh_pairs, missed_pairs,
-    recall_bp) — counts of true pairs, LSH-recovered true pairs (the
-    intersection, robust to guard-setting drift between the two sides),
-    their difference, and floor-divided basis-point recall (NULL when no
-    true pair exists).
-    """
-    exact = ngram_jaccard_pairs(
-        documents, threshold=threshold, max_shingle_df=max_shingle_df
-    ).select("doc_a", "doc_b")
-    lsh = minhash_lsh_pairs(
-        documents,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        max_bucket=max_bucket,
-    ).select("doc_a", "doc_b")
-    ne = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
-    nl = (
-        lsh.join(exact, ["doc_a", "doc_b"], "left_semi")
-        .agg(F.count("*").cast("long").alias("n_lsh_pairs"))
-    )
-    return ne.crossJoin(nl).select(
-        "n_exact_pairs",
-        "n_lsh_pairs",
-        F.expr("n_exact_pairs - n_lsh_pairs").cast("long").alias("missed_pairs"),
-        F.expr(
-            "CASE WHEN n_exact_pairs = 0 THEN NULL "
-            "ELSE (10000 * n_lsh_pairs) div n_exact_pairs END"
-        ).cast("long").alias("recall_bp"),
-    )

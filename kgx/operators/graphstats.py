@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgx.functions.arrays import unordered_pairs
 from kgx.functions.plan import materialize
 
 
@@ -131,76 +130,6 @@ def pagerank(
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             ranks = materialize(ranks)
     return ranks
-
-
-def entity_cooccurrence(nodes: DataFrame, min_co: int = 2) -> DataFrame:
-    """Document-level entity co-occurrence with an exact-integer lift
-    score — the edge-weighting signal entity-linking and KG-completion
-    pipelines hang off the raw co-mention counts (PMI's monotone cousin,
-    kept in floor-divided basis points so Spark and DuckDB agree
-    bit-for-bit where a float log never would):
-
-    ``lift_bp(a, b) = ((10000 * co_docs DIV docs_a) * n_docs) DIV docs_b``
-
-    evaluated in exactly that two-step order: ``co_docs <= docs_a`` makes
-    the first quotient <= 10000, so the second product stays under 2^63
-    for corpora up to ~10^14 documents — no unbounded triple product.
-    lift_bp > 10000 means the pair co-occurs more than independence
-    predicts.
-
-    Plan shape: distinct (doc_id, label) → per-doc sorted label array →
-    in-row pair enumeration via array HOFs (bounded by the extraction
-    contract's per-doc mention cap, SURVEY P3 — no self-join re-evaluating
-    the upstream plan twice) → one (a, b) count aggregate; the per-label
-    margins and the scalar doc count are broadcast back onto the surviving
-    ``co_docs >= min_co`` pairs — margin joins are AQE-decided (the label
-    margin table is one row per distinct entity, which at KG scale can be
-    too large to force-broadcast); only the 1-row corpus count is an
-    explicit broadcast.  Output: (label_a, label_b, co_docs, docs_a,
-    docs_b, lift_bp)."""
-    # pinned: four branches read it (per-doc arrays, both margin joins, the
-    # corpus count); A/B at sf0.1: 2.07-2.62 s lazy vs 1.74-2.15 s pinned
-    dl = materialize(nodes.select("doc_id", "label").distinct())
-    per_doc = dl.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("label")).alias("ls")
-    )
-    pairs = per_doc.select(
-        F.explode(
-            F.expr(unordered_pairs("ls", "named_struct('label_a', x, 'label_b', y)"))
-        ).alias("p")
-    ).select("p.label_a", "p.label_b")
-    co = (
-        pairs.groupBy("label_a", "label_b")
-        .agg(F.count("*").cast("long").alias("co_docs"))
-        .where(F.col("co_docs") >= min_co)
-    )
-    margins = dl.groupBy("label").agg(F.count("*").cast("long").alias("docs"))
-    n = dl.agg(F.count_distinct("doc_id").cast("long").alias("n_docs"))
-    return (
-        co.join(
-            margins.select(
-                F.col("label").alias("label_a"), F.col("docs").alias("docs_a")
-            ),
-            "label_a",
-        )
-        .join(
-            margins.select(
-                F.col("label").alias("label_b"), F.col("docs").alias("docs_b")
-            ),
-            "label_b",
-        )
-        .crossJoin(F.broadcast(n))
-        .select(
-            "label_a",
-            "label_b",
-            "co_docs",
-            "docs_a",
-            "docs_b",
-            F.expr(
-                "((10000 * co_docs) div docs_a) * n_docs div docs_b"
-            ).cast("long").alias("lift_bp"),
-        )
-    )
 
 
 def label_propagation(triples: DataFrame, iters: int = 3) -> DataFrame:
@@ -438,79 +367,6 @@ def _negative_samples(t: DataFrame, k: int, buckets: int) -> DataFrame:
     )
 
 
-def common_neighbor_candidates(
-    triples: DataFrame,
-    max_degree: int = 64,
-    min_common: int = 2,
-) -> DataFrame:
-    """Link-prediction candidate generation over the KG: node pairs that
-    share >= ``min_common`` neighbors, with their exact common-neighbor
-    count, floor-divided Jaccard similarity in basis points, and whether
-    the pair is ALREADY an edge (candidates for KG completion are the
-    ``is_edge = 0`` rows; the ``is_edge = 1`` rows are the confidence
-    signal for existing edges).  Output: (label_a, label_b,
-    common_neighbors, degree_a, degree_b, jaccard_bp, is_edge).
-
-    Skew contract: wedges are enumerated IN-ROW from each center node's
-    sorted neighbor array (the entity_cooccurrence pattern — no
-    self-join), and centers with degree > ``max_degree`` are EXCLUDED
-    from wedge generation — a hub with degree d would emit d² pairs, the
-    same quadratic flood the MinHash/SimHash band caps guard against
-    (kgx.operators.dedup).  Hub neighborhoods still participate through
-    their non-hub co-neighbors; full (uncapped) degrees are used for the
-    Jaccard denominator.  One count aggregate on (a, b), two AQE-decided
-    margin joins, one left join onto the canonical edge set."""
-    # read by degrees, neighbor lists and the canonical-edge left join;
-    # A/B at sf0.1: 1.87-2.01 s lazy vs 1.17-1.57 s pinned
-    und = _undirected_edges(triples)
-    deg = und.groupBy("subj").agg(F.count("*").cast("long").alias("deg"))
-    nbrs = und.groupBy("subj").agg(
-        F.sort_array(F.collect_list("obj")).alias("ns")
-    )
-    pairs = (
-        nbrs.where(F.size("ns") <= max_degree)
-        .select(
-            F.explode(
-                F.expr(unordered_pairs("ns", "named_struct('label_a', x, 'label_b', y)"))
-            ).alias("p")
-        )
-        .select("p.label_a", "p.label_b")
-    )
-    cn = (
-        pairs.groupBy("label_a", "label_b")
-        .agg(F.count("*").cast("long").alias("common_neighbors"))
-        .where(F.col("common_neighbors") >= min_common)
-    )
-    canon = und.where(F.col("subj") < F.col("obj")).select(
-        F.col("subj").alias("label_a"),
-        F.col("obj").alias("label_b"),
-        F.lit(1).cast("long").alias("edge_flag"),
-    )
-    return (
-        cn.join(
-            deg.select(F.col("subj").alias("label_a"), F.col("deg").alias("degree_a")),
-            "label_a",
-        )
-        .join(
-            deg.select(F.col("subj").alias("label_b"), F.col("deg").alias("degree_b")),
-            "label_b",
-        )
-        .join(canon, ["label_a", "label_b"], "left")
-        .select(
-            "label_a",
-            "label_b",
-            "common_neighbors",
-            "degree_a",
-            "degree_b",
-            F.expr(
-                "(10000 * common_neighbors) div "
-                "(degree_a + degree_b - common_neighbors)"
-            ).cast("long").alias("jaccard_bp"),
-            F.coalesce("edge_flag", F.lit(0)).cast("long").alias("is_edge"),
-        )
-    )
-
-
 def training_pairs(
     triples: DataFrame, k: int = 2, buckets: int = 64
 ) -> DataFrame:
@@ -555,8 +411,8 @@ def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     consumes, composing directly over :func:`node2vec_walks` output.
 
     Pair enumeration is IN-ROW over each walk array (nested array HOFs +
-    one Generate — the entity_cooccurrence stance: no self-join, work per
-    row bounded by ``walk_len × 2·window``), followed by ONE
+    one Generate — no self-join, work per row bounded by
+    ``walk_len × 2·window``), followed by ONE
     map-side-combined count aggregate, so the shuffle carries
     pre-combined (center, context) rows.  Pairs keep multiplicity
     (standard skip-gram), and a label co-occurring with itself from two
@@ -670,66 +526,6 @@ def transe_margin(
     )
 
 
-def two_hop_stats(triples: DataFrame, max_degree: int = 64) -> DataFrame:
-    """Two-hop neighborhood size per node — the graph-expansion signal
-    (how fast does each entity's neighborhood grow?) that prices
-    traversal queries and flags hub-adjacent entities before a
-    2-hop-join workload is launched.  Output: (label, degree, two_hop,
-    expansion_bp) where ``two_hop`` counts DISTINCT nodes at exactly
-    distance 2 (direct neighbors and self excluded) and
-    ``expansion_bp`` = 10000·two_hop/degree floor-divided.
-
-    Skew contract (the common_neighbor_candidates hub stance): 2-hop
-    paths are enumerated IN-ROW from each center's sorted neighbor
-    array — ordered (x, y) pairs, never a self-join — and centers with
-    degree > ``max_degree`` are EXCLUDED from path generation (a hub
-    would emit degree² pairs); reported degrees stay uncapped.  One
-    distinct shuffle on the (label, hop2) pair key, one left-anti join
-    dropping 1-hop edges, one count aggregate.
-    """
-    # read by degrees, neighbor arrays and the anti-join build side
-    und = _undirected_edges(triples)
-    deg = und.groupBy("subj").agg(F.count("*").cast("long").alias("degree"))
-    nbrs = und.groupBy("subj").agg(
-        F.sort_array(F.collect_list("obj")).alias("ns")
-    )
-    p2 = (
-        nbrs.where(F.size("ns") <= max_degree)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ns, x -> "
-                    "transform(filter(ns, y -> y != x), y -> "
-                    "named_struct('label', x, 'hop2', y))))"
-                )
-            ).alias("p")
-        )
-        .select("p.label", "p.hop2")
-        .distinct()
-    )
-    two = (
-        p2.join(
-            und.select(F.col("subj").alias("label"), F.col("obj").alias("hop2")),
-            ["label", "hop2"],
-            "left_anti",
-        )
-        .groupBy("label")
-        .agg(F.count("*").cast("long").alias("two_hop"))
-    )
-    return (
-        deg.withColumnRenamed("subj", "label")
-        .join(two, "label", "left")
-        .select(
-            "label",
-            "degree",
-            F.coalesce("two_hop", F.lit(0)).cast("long").alias("two_hop"),
-            F.expr(
-                "(10000 * coalesce(two_hop, 0)) div degree"
-            ).cast("long").alias("expansion_bp"),
-        )
-    )
-
-
 def _walk_scaffold(
     triples: DataFrame, walks_per_node: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -797,8 +593,7 @@ def node2vec_walks(
     1.56/1.06/1.08 s — every step's join probes one identical exchange
     Spark already reuses, while the pin serializes corpus-scale neighbor
     arrays.  Hub adjacency arrays are bounded by out-degree; for open-web
-    graphs compose with a degree cap upstream (the
-    common_neighbor_candidates hub stance).
+    graphs compose with a degree cap upstream.
 
     Output: (start_label, walk_id, walk array<string>, walk_len) —
     ``walks_per_node`` rows per graph node.

@@ -244,39 +244,6 @@ jpairs AS (
 """.strip()
 
 
-def dedup_jaccard_sql(threshold: float, max_shingle_df: int) -> str:
-    """Oracle for the Jaccard similarity join with the hot-shingle guard:
-    shingles in more than ``max_shingle_df`` docs are removed BEFORE the
-    self-join and the per-doc sizes (mirror of
-    kgx.operators.dedup.ngram_jaccard_pairs with max_shingle_df set)."""
-    return f"""
-WITH sh0 AS (
-    SELECT doc_id, {_duck_md5_60('shingle')} AS shingle_hash
-    FROM (SELECT doc_id, unnest({_duck_shingles()}) AS shingle FROM documents)
-),
-hot AS (
-    SELECT shingle_hash FROM sh0 GROUP BY 1 HAVING count(*) > {max_shingle_df}
-),
-sh AS (
-    SELECT * FROM sh0
-    WHERE shingle_hash NOT IN (SELECT shingle_hash FROM hot)
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-    FROM sh a JOIN sh b ON a.shingle_hash = b.shingle_hash AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
-jpairs AS (
-    SELECT doc_a, doc_b, inter / (sa.n + sb.n - inter) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-)
-SELECT doc_a, doc_b, jaccard FROM jpairs WHERE jaccard >= {threshold}
-""".strip()
-
-
 def dedup_minhash_sql(
     num_hashes: int, bands: int, threshold: float, max_bucket: int
 ) -> str:
@@ -452,50 +419,6 @@ labs AS (SELECT DISTINCT label FROM nodes),
 {body}
 SELECT doc_a AS src_label, doc_b AS dst_label, jaccard
 FROM mh_pairs WHERE jaccard >= {min_jaccard}
-""".strip()
-
-
-def dedup_simhash_sql(max_hamming: int, max_bucket: int) -> str:
-    """``max_bucket`` mirrors the engine's LSH skew guard
-    (kgx.operators.dedup.simhash_pairs): band buckets holding more than
-    ``max_bucket`` docs are dropped before pair enumeration."""
-    return f"""
-WITH tok AS (
-    SELECT doc_id, {_duck_md5_60('token')} AS th
-    FROM (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS token
-          FROM documents)
-    WHERE token <> ''
-),
-votes AS (
-    SELECT doc_id, bit,
-           sum(CASE WHEN ((th >> bit) & 1) = 1 THEN 1 ELSE -1 END) AS vote
-    FROM tok CROSS JOIN (SELECT unnest(range(0, 60)) AS bit)
-    GROUP BY 1, 2
-),
-fp AS (
-    SELECT doc_id,
-           CAST(sum(CASE WHEN vote > 0 THEN (1::BIGINT << bit) ELSE 0::BIGINT END) AS BIGINT) AS simhash
-    FROM votes GROUP BY 1
-),
-banded AS MATERIALIZED (
-    SELECT doc_id, simhash, band, (simhash >> (band * 15)) & 32767 AS band_bits
-    FROM fp CROSS JOIN (SELECT unnest(range(0, 4)) AS band)
-),
-bsize AS (
-    SELECT band, band_bits, count(*) AS n
-    FROM banded GROUP BY 1, 2
-),
-ok AS (
-    SELECT b.* FROM banded b
-    JOIN bsize s USING (band, band_bits)
-    WHERE s.n BETWEEN 2 AND {max_bucket}
-)
-SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       CAST(bit_count(xor(x.simhash, y.simhash)) AS INT) AS hamming
-FROM ok x
-JOIN ok y ON x.band = y.band AND x.band_bits = y.band_bits
-         AND x.doc_id < y.doc_id
-WHERE bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
 """.strip()
 
 
@@ -1678,39 +1601,6 @@ SELECT label, rank FROM pr{iters}
 """.strip()
 
 
-def entity_pmi_sql(min_co: int) -> str:
-    """Oracle for document-level entity co-occurrence lift (mirror of
-    kgx.operators.graphstats.entity_cooccurrence): distinct (doc, label)
-    pairs self-joined within doc (a < b), margins and the corpus doc count
-    joined back, and the SAME two-step floor-divided basis-point lift —
-    ``((10000 * co) // docs_a) * n // docs_b`` — so the integer quotient
-    chain matches Spark's ``div`` exactly."""
-    return f"""
-{_BASE},
-{_NODES_CTES},
-dl AS MATERIALIZED (SELECT DISTINCT doc_id, label FROM nodes),
-co AS (
-    SELECT a.label AS label_a, b.label AS label_b,
-           CAST(count(*) AS BIGINT) AS co_docs
-    FROM dl a JOIN dl b ON a.doc_id = b.doc_id AND a.label < b.label
-    GROUP BY 1, 2
-    HAVING count(*) >= {min_co}
-),
-margins AS MATERIALIZED (
-    SELECT label, CAST(count(*) AS BIGINT) AS docs FROM dl GROUP BY 1
-),
-nn AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM dl)
-SELECT co.label_a, co.label_b, co.co_docs,
-       ma.docs AS docs_a, mb.docs AS docs_b,
-       CAST(((10000 * co.co_docs) // ma.docs) * nn.n_docs // mb.docs
-            AS BIGINT) AS lift_bp
-FROM co
-JOIN margins ma ON ma.label = co.label_a
-JOIN margins mb ON mb.label = co.label_b
-CROSS JOIN nn
-""".strip()
-
-
 def graph_label_prop_sql(iters: int) -> str:
     """Oracle for deterministic frequency-vote label propagation (mirror
     of kgx.operators.graphstats.label_propagation): undirected distinct
@@ -1949,48 +1839,6 @@ SELECT p.subj, p.pred, p.obj, CAST(p.j AS BIGINT) AS sample_idx,
        n.label AS neg_obj
 FROM ns_pick p JOIN ns_num n USING (bucket, idx)
 WHERE n.label <> p.obj
-""".strip()
-
-
-def graph_link_candidates_sql(max_degree: int, min_common: int) -> str:
-    """Oracle for common-neighbor link-prediction candidates (mirror of
-    kgx.operators.graphstats.common_neighbor_candidates): undirected
-    distinct edges, wedges from centers with degree <= max_degree only
-    (the hub cap), full degrees in the Jaccard denominator, left join
-    onto the canonical u < v edge set for is_edge."""
-    return f"""
-{_graph_edges_ctes()},
-lc_und AS MATERIALIZED (
-    SELECT subj, obj FROM gr_edges UNION SELECT obj, subj FROM gr_edges
-),
-lc_deg AS MATERIALIZED (
-    SELECT subj, CAST(count(*) AS BIGINT) AS deg FROM lc_und GROUP BY 1
-),
-lc_wedge AS (
-    SELECT a.obj AS label_a, b.obj AS label_b
-    FROM lc_und a
-    JOIN lc_und b ON a.subj = b.subj AND a.obj < b.obj
-    JOIN lc_deg d ON d.subj = a.subj
-    WHERE d.deg <= {max_degree}
-),
-lc_cn AS (
-    SELECT label_a, label_b, CAST(count(*) AS BIGINT) AS common_neighbors
-    FROM lc_wedge GROUP BY 1, 2
-    HAVING count(*) >= {min_common}
-),
-lc_canon AS (
-    SELECT subj AS label_a, obj AS label_b, CAST(1 AS BIGINT) AS edge_flag
-    FROM lc_und WHERE subj < obj
-)
-SELECT c.label_a, c.label_b, c.common_neighbors,
-       da.deg AS degree_a, db.deg AS degree_b,
-       CAST((10000 * c.common_neighbors) //
-            (da.deg + db.deg - c.common_neighbors) AS BIGINT) AS jaccard_bp,
-       CAST(coalesce(e.edge_flag, 0) AS BIGINT) AS is_edge
-FROM lc_cn c
-JOIN lc_deg da ON da.subj = c.label_a
-JOIN lc_deg db ON db.subj = c.label_b
-LEFT JOIN lc_canon e ON e.label_a = c.label_a AND e.label_b = c.label_b
 """.strip()
 
 
@@ -2340,42 +2188,6 @@ FROM tm_agg
 """.strip()
 
 
-def graph_two_hop_sql(max_degree: int) -> str:
-    """Oracle for per-node two-hop neighborhood size (mirror of
-    kgx.operators.graphstats.two_hop_stats): undirected distinct edges,
-    ordered 2-hop pairs through centers with degree <= max_degree only,
-    distinct endpoints, direct neighbors dropped by NOT EXISTS, uncapped
-    degree in the denominator."""
-    return f"""
-{_graph_edges_ctes()},
-th_und AS MATERIALIZED (
-    SELECT subj, obj FROM gr_edges UNION SELECT obj, subj FROM gr_edges
-),
-th_deg AS MATERIALIZED (
-    SELECT subj, CAST(count(*) AS BIGINT) AS degree FROM th_und GROUP BY 1
-),
-th_p2 AS (
-    SELECT DISTINCT a.obj AS label, b.obj AS hop2
-    FROM th_und a
-    JOIN th_und b ON a.subj = b.subj AND a.obj <> b.obj
-    JOIN th_deg d ON d.subj = a.subj
-    WHERE d.degree <= {max_degree}
-),
-th_two AS (
-    SELECT label, CAST(count(*) AS BIGINT) AS two_hop
-    FROM th_p2 p
-    WHERE NOT EXISTS (
-        SELECT 1 FROM th_und u WHERE u.subj = p.label AND u.obj = p.hop2
-    )
-    GROUP BY 1
-)
-SELECT d.subj AS label, d.degree,
-       CAST(coalesce(t.two_hop, 0) AS BIGINT) AS two_hop,
-       CAST((10000 * coalesce(t.two_hop, 0)) // d.degree AS BIGINT) AS expansion_bp
-FROM th_deg d LEFT JOIN th_two t ON t.label = d.subj
-""".strip()
-
-
 def node2vec_walks_sql(
     length: int,
     walks_per_node: int,
@@ -2447,41 +2259,6 @@ nv_w{i} AS (
 SELECT start_label, walk_id, walk,
        CAST(len(walk) AS BIGINT) AS walk_len
 FROM nv_w{length - 1}
-""".strip()
-
-
-def lsh_recall_sql(
-    threshold: float,
-    max_shingle_df: int,
-    num_hashes: int,
-    bands: int,
-    max_bucket: int,
-) -> str:
-    """Oracle for the LSH blocking-recall audit (mirror of
-    kgx.operators.dedup.lsh_blocking_recall): the exact and LSH pair
-    oracles nested verbatim as CTEs, intersection counted via EXISTS,
-    floor-divided basis points, NULL-guarded."""
-    return f"""
-WITH lr_exact AS MATERIALIZED (
-    {dedup_jaccard_sql(threshold=threshold, max_shingle_df=max_shingle_df)}
-),
-lr_lsh AS MATERIALIZED (
-    {dedup_minhash_sql(num_hashes=num_hashes, bands=bands,
-                       threshold=threshold, max_bucket=max_bucket)}
-),
-lr_e AS (SELECT CAST(count(*) AS BIGINT) AS n_exact_pairs FROM lr_exact),
-lr_l AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_lsh_pairs
-    FROM lr_lsh x
-    WHERE EXISTS (SELECT 1 FROM lr_exact e
-                  WHERE e.doc_a = x.doc_a AND e.doc_b = x.doc_b)
-)
-SELECT n_exact_pairs, n_lsh_pairs,
-       CAST(n_exact_pairs - n_lsh_pairs AS BIGINT) AS missed_pairs,
-       CAST(CASE WHEN n_exact_pairs = 0 THEN NULL
-            ELSE (10000 * n_lsh_pairs) // n_exact_pairs
-            END AS BIGINT) AS recall_bp
-FROM lr_e, lr_l
 """.strip()
 
 

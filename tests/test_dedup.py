@@ -21,15 +21,6 @@ def test_exact_groups_planted_dup(spark):
     assert got[0] == (0, 2) and got[1] == (0, 2) and got[2] == (2, 1)
 
 
-def test_jaccard_pairs_near_dup(spark):
-    near = BASE.replace("kappa", "lambda")  # 8 shingles, 7 shared
-    far = "one two three four five six seven eight nine ten"
-    df = _docs(spark, [BASE, near, far])
-    rows = dedup.ngram_jaccard_pairs(df, threshold=0.5).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(0, 1)}
-    assert abs(rows[0]["jaccard"] - 7 / 9) < 1e-12
-
-
 def test_minhash_lsh_finds_planted_near_dups(spark):
     texts = [f"doc number {i} filler words to make shingles unique {i}" for i in range(20)]
     texts.append(BASE)
@@ -37,39 +28,6 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
     df = _docs(spark, texts)
     pairs = {(r["doc_a"], r["doc_b"]) for r in dedup.minhash_lsh_pairs(df, threshold=0.5).collect()}
     assert (20, 21) in pairs
-
-
-def test_jaccard_hot_shingle_cutoff(spark):
-    # every doc shares the same hot prefix; cutoff removes it from the index
-    texts = [f"common shared prefix words doc {i} unique tail {i}" for i in range(10)]
-    df = _docs(spark, texts)
-    without = dedup.ngram_jaccard_pairs(df, threshold=0.1)
-    with_cut = dedup.ngram_jaccard_pairs(df, threshold=0.1, max_shingle_df=3)
-    assert with_cut.count() < without.count()
-
-
-def test_jaccard_hot_shingle_guard_collapses_boilerplate_pairs(spark):
-    """Web-corpus shape: a long boilerplate block shared by EVERY doc makes
-    the unguarded inverted-index self-join quadratic (all 45 pairs of 10 docs
-    collide) and drags every pair over the threshold.  The guard drops the
-    boilerplate shingles, collapsing candidates to ~0 while a genuine
-    near-duplicate pair built from RARE shingles survives untouched."""
-    boiler = " ".join(f"boilerplate{i}" for i in range(30))
-    texts = [f"{boiler} unique{i}a unique{i}b unique{i}c" for i in range(10)]
-    texts.append(BASE)                             # 10: rare-shingle doc
-    texts.append(BASE.replace("kappa", "lambda"))  # 11: its near-duplicate
-    df = _docs(spark, texts)
-
-    unguarded = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(df, threshold=0.5).collect()
-    }
-    guarded = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(df, threshold=0.5, max_shingle_df=5).collect()
-    }
-    assert len(unguarded) == 45 + 1  # all boilerplate pairs + the planted pair
-    assert guarded == {(10, 11)}  # guard kills boilerplate, keeps the real dup
 
 
 def test_near_dup_clusters_transitive_chain(spark):
@@ -97,35 +55,25 @@ def test_near_dup_clusters_transitive_chain(spark):
     assert rows[3]["is_duplicate"] is False
 
 
-def test_simhash_identical_and_disjoint(spark):
-    df = _docs(spark, [BASE, BASE, "entirely disjoint vocabulary set list"])
-    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash_fingerprints(df).collect()}
-    assert fp[0] == fp[1]
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in dedup.simhash_pairs(df).collect()}
-    assert pairs.get((0, 1)) == 0
-    assert (0, 2) not in pairs or pairs[(0, 2)] > 3
-
-
-def test_simhash_band_bucket_guard_collapses_boilerplate(spark):
-    """Web-corpus shape for the SimHash path: a cluster of 30 identical
-    boilerplate docs floods a 15-bit band bucket, so the uncapped
-    enumeration materializes all 435 within-cluster pairs (quadratic in
-    cluster size).  With the guard, those buckets are dropped while a
-    genuine duplicate pair in a small bucket survives untouched."""
+def test_minhash_lsh_band_bucket_cap_collapses_boilerplate(spark):
+    """Web-corpus shape: a cluster of 30 identical boilerplate docs floods
+    every band bucket, so the uncapped enumeration verifies all 435
+    within-cluster pairs (quadratic in cluster size).  With ``max_bucket``
+    those buckets are dropped, while a genuine duplicate pair in small
+    buckets survives."""
     boiler = "subscribe to our newsletter for daily updates and offers today"
-    texts = [boiler] * 30 + [BASE, BASE]
-    df = _docs(spark, texts)
+    df = _docs(spark, [boiler] * 30 + [BASE, BASE])
 
-    unguarded = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.simhash_pairs(df, max_bucket=10**9).collect()
-    }
-    guarded = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.simhash_pairs(df, max_bucket=10).collect()
-    }
-    assert len(unguarded) == 30 * 29 // 2 + 1  # quadratic blowup + real pair
-    assert guarded == {(30, 31)}  # guard kills the flood, keeps the real dup
+    def pairs(max_bucket):
+        return {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.minhash_lsh_pairs(
+                df, threshold=0.5, max_bucket=max_bucket
+            ).collect()
+        }
+
+    assert len(pairs(10**9)) == 30 * 29 // 2 + 1  # quadratic blowup + real pair
+    assert pairs(10) == {(30, 31)}  # the cap kills the flood, keeps the real dup
 
 
 def test_short_docs_produce_no_shingles(spark):
@@ -363,32 +311,3 @@ def test_vocab_topk_order_and_plan(spark):
     )
     # global top-k must be the per-partition-heap operator, not a full sort
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_lsh_blocking_recall_consistency(spark):
-    """The audit row equals the overlap computed from the two pair
-    operators directly; intersection bounds hold by construction."""
-    texts = [f"doc number {i} filler words to make shingles unique {i}"
-             for i in range(12)]
-    texts += [BASE, BASE.replace("kappa", "lambda"),
-              BASE.replace("alpha", "omega")]
-    df = _docs(spark, texts)
-    row = dedup.lsh_blocking_recall(df, threshold=0.5).collect()[0]
-    exact = {(r.doc_a, r.doc_b)
-             for r in dedup.ngram_jaccard_pairs(df, threshold=0.5).collect()}
-    lsh = {(r.doc_a, r.doc_b)
-           for r in dedup.minhash_lsh_pairs(df, threshold=0.5).collect()}
-    hits = len(lsh & exact)
-    assert (row.n_exact_pairs, row.n_lsh_pairs) == (len(exact), hits)
-    assert row.missed_pairs == len(exact) - hits >= 0
-    assert row.recall_bp == (10000 * hits) // len(exact)
-    assert exact  # the fixture plants real near-dup pairs
-
-
-def test_lsh_blocking_recall_null_on_empty_truth(spark):
-    df = _docs(spark, ["completely unique alpha words here",
-                       "different beta tokens entirely now",
-                       "third gamma sentence nothing shared"])
-    row = dedup.lsh_blocking_recall(df, threshold=0.9).collect()[0]
-    assert (row.n_exact_pairs, row.n_lsh_pairs, row.missed_pairs) == (0, 0, 0)
-    assert row.recall_bp is None

@@ -255,80 +255,6 @@ def test_label_prop_direction_and_dup_insensitive(spark):
     assert sorted(map(tuple, g1)) == sorted(map(tuple, g2))
 
 
-def _nodes_df(spark, docs):
-    """docs: {doc_id: [labels]} -> nodes-table shape."""
-    rows = [
-        (d, f"n{i + 1}", lab, "Entity")
-        for d, labs in docs.items()
-        for i, lab in enumerate(labs)
-    ]
-    return spark.createDataFrame(
-        rows, "doc_id string, node_id string, label string, node_type string"
-    )
-
-
-def _py_cooc(docs, min_co=2):
-    from collections import Counter
-
-    dl = {(d, l) for d, labs in docs.items() for l in labs}
-    margins = Counter(l for _, l in dl)
-    n = len({d for d, _ in dl})
-    co = Counter()
-    for d in {d for d, _ in dl}:
-        labs = sorted(l for dd, l in dl if dd == d)
-        for i, a in enumerate(labs):
-            for b in labs[i + 1:]:
-                co[(a, b)] += 1
-    return {
-        (a, b): (
-            c, margins[a], margins[b],
-            ((10000 * c) // margins[a]) * n // margins[b],
-        )
-        for (a, b), c in co.items()
-        if c >= min_co
-    }
-
-
-def test_entity_cooccurrence_lift_semantics(spark):
-    # X and Y always together (perfectly dependent); X and Z independent-ish
-    docs = {
-        "d1": ["X", "Y", "Z"],
-        "d2": ["X", "Y"],
-        "d3": ["X", "Y", "Z"],
-        "d4": ["Z"],
-        "d5": ["W", "W"],  # dup labels inside a doc count once
-    }
-    got = {
-        (r.label_a, r.label_b): (r.co_docs, r.docs_a, r.docs_b, r.lift_bp)
-        for r in graphstats.entity_cooccurrence(
-            _nodes_df(spark, docs), min_co=2
-        ).collect()
-    }
-    assert got == _py_cooc(docs, min_co=2)
-    # perfectly-dependent pair: lift = n / docs_y = 5/3 -> 16666 bp
-    assert got[("X", "Y")] == (3, 3, 3, 16666)
-    # X-Z co-occurs twice in 5 docs: ((10000*2)//3)*5//3 = 11110
-    assert got[("X", "Z")] == (2, 3, 3, 11110)
-    # W never pairs (single-label docs dedup internally)
-    assert not any("W" in k for k in got)
-
-
-@pytest.mark.parametrize("seed", [5, 23])
-def test_entity_cooccurrence_matches_reference(spark, seed):
-    rng = random.Random(seed)
-    labels = [f"E{i}" for i in range(12)]
-    docs = {
-        f"d{j}": rng.sample(labels, rng.randint(1, 6)) for j in range(30)
-    }
-    got = {
-        (r.label_a, r.label_b): (r.co_docs, r.docs_a, r.docs_b, r.lift_bp)
-        for r in graphstats.entity_cooccurrence(
-            _nodes_df(spark, docs), min_co=2
-        ).collect()
-    }
-    assert got == _py_cooc(docs, min_co=2)
-
-
 def _py_kcore(edges, k=2, iters=4):
     """Driver-side reference: synchronous bounded-round peel, plain sets."""
     und = set()
@@ -488,69 +414,6 @@ def test_kcore_fixpoint_converges_and_matches_reference(spark):
     assert rounds == 4
     assert got == _py_kcore(clique + chain, k=2, iters=rounds)
     assert set(got) == set("abcd") and all(v == 3 for v in got.values())
-
-
-def _py_link_candidates(edges, max_degree=64, min_common=2):
-    """Driver-side reference for common-neighbor candidates."""
-    und = set()
-    for u, v in set(edges):
-        if u != v:
-            und.add((u, v)); und.add((v, u))
-    nbrs, deg = {}, {}
-    for u, v in und:
-        nbrs.setdefault(u, set()).add(v)
-        deg[u] = deg.get(u, 0) + 1
-    cn = {}
-    for c, ns in nbrs.items():
-        if len(ns) > max_degree:
-            continue
-        ns = sorted(ns)
-        for i, a in enumerate(ns):
-            for b in ns[i + 1:]:
-                cn[(a, b)] = cn.get((a, b), 0) + 1
-    out = {}
-    for (a, b), c in cn.items():
-        if c < min_common:
-            continue
-        jac = (10000 * c) // (deg[a] + deg[b] - c)
-        out[(a, b)] = (c, deg[a], deg[b], jac, 1 if (a, b) in und else 0)
-    return out
-
-
-@pytest.mark.parametrize("seed", [13, 29])
-def test_link_candidates_match_reference(spark, seed):
-    rng = random.Random(seed)
-    nodes = [f"n{i}" for i in range(20)]
-    edges = [
-        (u, v)
-        for u, v in {(rng.choice(nodes), rng.choice(nodes)) for _ in range(70)}
-        if u != v
-    ]
-    got = {
-        (r.label_a, r.label_b): (
-            r.common_neighbors, r.degree_a, r.degree_b, r.jaccard_bp, r.is_edge
-        )
-        for r in graphstats.common_neighbor_candidates(
-            _triples_df(spark, edges), max_degree=6, min_common=2
-        ).collect()
-    }
-    assert got == _py_link_candidates(edges, max_degree=6, min_common=2)
-
-
-def test_link_candidates_hub_cap_drops_hub_wedges(spark):
-    # star: hub h connected to 8 leaves; every leaf pair shares ONLY h.
-    # With max_degree < 8 the hub generates no wedges -> no candidates.
-    star = [("h", f"l{i}") for i in range(8)]
-    none = graphstats.common_neighbor_candidates(
-        _triples_df(spark, star), max_degree=4, min_common=1
-    ).collect()
-    assert none == []
-    # uncapped, all 28 leaf pairs appear with exactly one common neighbor
-    full = graphstats.common_neighbor_candidates(
-        _triples_df(spark, star), max_degree=64, min_common=1
-    ).collect()
-    assert len(full) == 28  # all C(8,2) leaf pairs, one common neighbor each
-    assert all(r.common_neighbors == 1 and r.is_edge == 0 for r in full)
 
 
 def test_training_pairs_composition(spark):
@@ -864,66 +727,6 @@ def test_transe_margin_energy_bound_and_determinism(spark):
     for row in a:
         for v in (row[3], row[2]):  # sum energies
             assert 0 <= v <= 3 * (4 * 3 * 32)
-
-
-# ---------------------------------------------------------------------------
-# two_hop_stats: degree-capped two-hop neighborhood size
-# ---------------------------------------------------------------------------
-
-
-def _py_two_hop(edges, max_degree):
-    und = set()
-    for u, v in edges:
-        if u != v:
-            und.add((u, v)); und.add((v, u))
-    nbrs = {}
-    for u, v in und:
-        nbrs.setdefault(u, set()).add(v)
-    out = {}
-    for u in nbrs:
-        two = set()
-        for c in nbrs[u]:
-            if len(nbrs[c]) <= max_degree:
-                two |= nbrs[c]
-        two -= nbrs[u] | {u}
-        d = len(nbrs[u])
-        out[u] = (d, len(two), (10000 * len(two)) // d)
-    return out
-
-
-def test_two_hop_path_graph(spark):
-    # a-b-c-d: a's 2-hop = {c}, b's = {d}, symmetric
-    edges = [("a", "b"), ("b", "c"), ("c", "d")]
-    got = {r.label: (r.degree, r.two_hop, r.expansion_bp)
-           for r in graphstats.two_hop_stats(_triples_df(spark, edges)).collect()}
-    assert got == {"a": (1, 1, 10000), "b": (2, 1, 5000),
-                   "c": (2, 1, 5000), "d": (1, 1, 10000)}
-
-
-def test_two_hop_hub_cap(spark):
-    star = [("h", f"l{i}") for i in range(8)]
-    # uncapped: each leaf reaches the 7 other leaves through h
-    full = {r.label: r.two_hop
-            for r in graphstats.two_hop_stats(
-                _triples_df(spark, star), max_degree=64).collect()}
-    assert full["h"] == 0 and all(full[f"l{i}"] == 7 for i in range(8))
-    # hub capped out: no center generates paths -> all zeros
-    capped = {r.label: r.two_hop
-              for r in graphstats.two_hop_stats(
-                  _triples_df(spark, star), max_degree=4).collect()}
-    assert set(capped.values()) == {0}
-
-
-@pytest.mark.parametrize("seed", [9, 31])
-def test_two_hop_matches_reference(spark, seed):
-    rng = random.Random(seed)
-    labels = [f"n{i}" for i in range(16)]
-    edges = [(u, v) for u, v in {(rng.choice(labels), rng.choice(labels))
-                                 for _ in range(40)} if u != v]
-    got = {r.label: (r.degree, r.two_hop, r.expansion_bp)
-           for r in graphstats.two_hop_stats(
-               _triples_df(spark, edges), max_degree=5).collect()}
-    assert got == _py_two_hop(edges, max_degree=5)
 
 
 # ---------------------------------------------------------------------------

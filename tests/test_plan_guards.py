@@ -85,19 +85,6 @@ def test_alias_edges_join_strategy_is_adaptive(spark):
     assert "BroadcastHashJoin" in final, final
 
 
-def test_simhash_fingerprints_have_no_exchange(spark, sf_dir):
-    """SimHash fingerprints are a pure per-row function (round 2: bit votes
-    via aggregate() over the token-hash array) — any Exchange in the
-    signature computation is a regression to the exploded bit-vote shuffle."""
-    from kgx.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    plan = dedup.simhash_fingerprints(docs)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "Exchange" not in plan, plan
-
-
 def test_jn2_graph_fetch_has_no_exchange(spark, sf_dir):
     """jn2 is a pure array projection of the extraction output — its plan on
     top of the (cached) graphs must contain no aggregation exchanges beyond
@@ -166,19 +153,6 @@ def test_fn_scalar_suite_has_no_exchange(spark, sf_dir):
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 1, plan
 
 
-def test_simhash_pairs_plan_has_no_join(spark, sf_dir):
-    """Round 3: the capped SimHash pair enumeration is groupBy buckets +
-    array HOFs — a Join/CartesianProduct anywhere is a regression to the
-    uncapped band self-join (O(B²) on boilerplate floods)."""
-    from kgx.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    plan = dedup.simhash_pairs(docs)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "Join" not in plan and "CartesianProduct" not in plan, plan
-
-
 def test_winnowed_fingerprints_keeps_projection_barriers(spark, sf_dir):
     """Round 3: winnowed fingerprints MUST keep its two project_barrier
     Generate nodes (plus the final explode = 3 Generates total).  Without
@@ -241,7 +215,7 @@ def test_round4_operators_have_no_cartesian(spark, sf_dir):
     for name in (
         "graph_kcore",
         "kg_negative_samples",
-        "graph_link_candidates",
+        "graph_triangles",
         "kg_version_diff",
     ):
         plan = _physical(spark, qs[name](spark, sf_dir))

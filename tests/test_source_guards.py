@@ -1,7 +1,7 @@
 """Source-level guards: one pin policy, driver-built frames from Arrow, one
-in-row pair enumeration, no def that only tests reach, no kgx module off a
-job path without a stated reason, oracle builders without defaults, and a
-packaged zip that matches kgx/."""
+in-row pair enumeration, no def that only tests reach, no kgx module or
+public def off a job path without a stated reason, oracle builders without
+defaults, and a packaged zip that matches kgx/."""
 
 import ast
 import collections
@@ -109,29 +109,6 @@ def test_no_per_call_pin_switches():
     assert found == []
 
 
-def test_every_def_has_a_non_test_caller():
-    """Every top-level ``def``/``class`` in the shipped sources is named
-    somewhere outside ``tests/`` other than on its own definition line, so
-    code that only tests reach is deleted rather than kept.  Referrers are
-    the shipped sources plus ``bench.py``, ``tools/`` and ``perfbench/``."""
-    referrers = [*_sources(), ROOT / "bench.py"]
-    for d in ("tools", "perfbench"):
-        referrers += sorted((ROOT / d).rglob("*.py"))
-    words = collections.Counter()
-    for path in referrers:
-        words.update(re.findall(r"\w+", path.read_text()))
-    unreached = []
-    for path in _sources():
-        text = path.read_text()
-        lines = text.splitlines()
-        for node in ast.parse(text, str(path)).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                own = re.findall(r"\w+", lines[node.lineno - 1]).count(node.name)
-                if words[node.name] == own:
-                    unreached.append(node.name)
-    assert unreached == [], f"defs that only tests reach: {sorted(unreached)}"
-
-
 #: kgx modules that no ``jobs/`` entry imports, each with why it stays
 UNREACHED_BY_JOBS = {
     "kgx.oracles": "the DuckDB reference implementation the oracle gate compares against",
@@ -177,22 +154,141 @@ def _imported(path, mods):
     return found
 
 
+def _modules_imported_by(paths):
+    """The kgx modules ``paths`` import, transitively."""
+    mods = _kgx_modules()
+    reached = set()
+    todo = [i for p in paths for i in _imported(p, mods)]
+    while todo:
+        mod = todo.pop()
+        if mod not in reached:
+            reached.add(mod)
+            todo += _imported(mods[mod], mods)
+    return reached
+
+
+def _names(node):
+    """Every ``Name``, ``Attribute`` and import-alias name under ``node``."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield from n.name.split(".")
+            if n.asname:
+                yield n.asname
+
+
+def _top_defs(path):
+    return [
+        node for node in ast.parse(path.read_text(), str(path)).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    ]
+
+
+def _reached_defs(roots, names=()):
+    """``(path, name)`` of every top-level def, in the shipped sources or
+    in ``roots``, that a name walk reaches from the module-level code of
+    ``roots`` and of the kgx modules they import, or from the defs called
+    ``names``.  A reached def's body is walked in turn.  Names match by
+    name alone, so a name reaches every def it could mean: approximate,
+    as the module guard is."""
+    mods = _kgx_modules()
+    by_name = collections.defaultdict(list)
+    for path in {*_sources(), *roots}:
+        for node in _top_defs(path):
+            by_name[node.name].append((path, node))
+    todo = list(names)
+    for path in [*roots, *(mods[m] for m in _modules_imported_by(roots))]:
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                todo += _names(stmt)
+    reached = set()
+    while todo:
+        for path, node in by_name.get(todo.pop(), ()):
+            if (path, node.name) not in reached:
+                reached.add((path, node.name))
+                todo += _names(node)
+    return reached
+
+
 def test_every_kgx_module_is_on_a_job_path():
     """Every ``kgx`` module is imported, at least transitively, by a
     ``jobs/`` entry, or is in ``UNREACHED_BY_JOBS`` with its reason; an
     operator family that only the oracle gate runs is wired to a job or
     deleted.  An exception that a job does reach is stale and fails too."""
     mods = _kgx_modules()
-    reached = set()
-    todo = [i for p in sorted((ROOT / "jobs").glob("*.py")) for i in _imported(p, mods)]
-    while todo:
-        mod = todo.pop()
-        if mod not in reached:
-            reached.add(mod)
-            todo += _imported(mods[mod], mods)
+    reached = _modules_imported_by(sorted((ROOT / "jobs").glob("*.py")))
     off_path = sorted(set(mods) - reached - set(UNREACHED_BY_JOBS))
     assert off_path == [], f"modules no job imports: {off_path}"
     stale = sorted((set(UNREACHED_BY_JOBS) & reached) | (set(UNREACHED_BY_JOBS) - set(mods)))
+    assert stale == [], f"stale exceptions: {stale}"
+
+
+def test_every_def_has_a_non_test_caller():
+    """Every top-level ``def``/``class`` in the shipped sources is reached
+    by a name walk from a non-test front end, so code that only tests reach
+    is deleted rather than kept.  The front ends are the jobs, the driver
+    entry module, ``bench.py``, ``tools/`` and ``perfbench/``; a word in a
+    comment or docstring reaches nothing.  The one exception is the
+    driver's ``entry``, which the driver calls by name."""
+    roots = [*sorted((ROOT / "jobs").glob("*.py")), ROOT / "__spark_entry__.py",
+             ROOT / "bench.py"]
+    for d in ("tools", "perfbench"):
+        roots += sorted((ROOT / d).rglob("*.py"))
+    reached = _reached_defs(roots)
+    unreached = sorted(
+        node.name for path in _sources() for node in _top_defs(path)
+        if (path, node.name) not in reached
+    )
+    assert unreached == ["entry"], f"defs that only tests reach: {unreached}"
+
+
+#: public defs in job-imported kgx modules that no ``jobs/`` entry reaches,
+#: as ``module.def``, each with why it stays
+OFF_JOB_DEFS = {
+    "textstats.text_stats": "text-analysis extra, the `text_stats` row",
+    "textstats.token_counts": "text-analysis extra, the `token_counts` row",
+    "textstats.vocab_topk": "text-analysis extra, the `vocab_topk` row",
+    "textstats.repetition_stats": "Gopher repetition signals, the `repetition_stats` row",
+    "textstats.fingerprints": "SURVEY §2.9 normalized md5, the `fingerprints` row",
+    "textstats.winnowed_fingerprints": "MOSS fingerprints, the `fingerprints_winnowed` row",
+    "curation.sentence_dedup_stats": "CCNet duplicate-sentence audit, the `sentence_dedup` row",
+    "curation.balanced_sample": "stratified sampling extra, the `balanced_sample` row",
+    "curation.contamination_screen": "n-gram decontamination extra, the `contamination` row",
+    "curation.dataset_split": "train/val/test split audit, the `dataset_split` row",
+    "curation.pii_fixture_expr": "plants the PII of the `pii_scrub` row and its oracle",
+    "packing.seq_pack_interleaved": "multimodal packing, the `seq_pack_interleaved` row",
+    "spans.explode_spans": "SURVEY W5 span explode, the `kg_spans` row",
+    "spans.reassemble_spans": "SURVEY W5 reassembly after a shuffle, the `kg_doc_text` row",
+    "validate.graph_checks": "SURVEY P7/P9 per-graph checks, the `p9_graph_checks` row",
+    "curation_pipeline.funnel_final": "the funnel as one lazy frame, the `curation_funnel` row",
+    "curation_pipeline.clear_funnel_cache": "frees `funnel_final`'s pins after the gate",
+    "corpus.replicate": "perfbench's corpus scale-up",
+    "corpus.heavy_tail": "perfbench's long-document skew",
+    "docs.load_documents": "the documents scan of perfbench and the gate's inputs",
+}
+
+
+def test_every_kgx_def_is_on_a_job_path():
+    """Every public top-level def in a kgx module that a job imports is
+    reached by a name walk from ``jobs/``, or is in ``OFF_JOB_DEFS`` with
+    its reason.  The walk also starts from the listed defs, so what only
+    they call needs no entry of its own.  A listed def that a job reaches,
+    or that no longer exists, is stale and fails too."""
+    jobs = sorted((ROOT / "jobs").glob("*.py"))
+    mods = _kgx_modules()
+    public = {
+        f"{mods[m].stem}.{node.name}" for m in _modules_imported_by(jobs)
+        for node in _top_defs(mods[m]) if not node.name.startswith("_")
+    }
+    listed = [key.rsplit(".", 1)[1] for key in OFF_JOB_DEFS]
+    by_jobs = {f"{p.stem}.{name}" for p, name in _reached_defs(jobs)}
+    reached = {f"{p.stem}.{name}" for p, name in _reached_defs(jobs, listed)}
+    off_path = sorted(public - reached)
+    assert off_path == [], f"defs no job reaches: {off_path}"
+    stale = sorted((set(OFF_JOB_DEFS) & by_jobs) | (set(OFF_JOB_DEFS) - public))
     assert stale == [], f"stale exceptions: {stale}"
 
 

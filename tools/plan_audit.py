@@ -69,12 +69,6 @@ SECTIONS = [
      "partial-aggregated vote count, and a per-node top-1 window that "
      "reuses the same hash partitioning — nothing wider than two label "
      "columns crosses an exchange."),
-    ("graph_entity_pmi",
-     "Entity co-occurrence lift: pair enumeration is IN-ROW over the "
-     "per-doc sorted label array (Generate over array HOFs, bounded by "
-     "the P3 mention cap — no self-join of the extraction plan); one "
-     "partial-aggregated (a, b) count exchange, margins joined back "
-     "AQE-decided, the 1-row corpus count broadcast."),
     ("pii_scrub",
      "PII redaction cascade + audit counts in one codegen projection — "
      "zero exchanges; the pass can front the raw corpus scan."),
@@ -112,8 +106,8 @@ SECTIONS = [
      "a ≤ length-string array."),
     ("walk_skipgram_pairs",
      "Round 5 (node2vec pair table): skip-gram windows enumerate IN-ROW "
-     "over each walk array (nested HOFs + one Generate — the "
-     "entity_cooccurrence stance, no self-join), then ONE map-side-"
+     "over each walk array (nested HOFs + one Generate, no self-join), "
+     "then ONE map-side-"
      "combined count aggregate; the only full-width exchange carries "
      "pre-combined (center, context) rows."),
     ("seq_pack",
@@ -124,10 +118,6 @@ SECTIONS = [
      "Source-mixing plan: two map-side-combined aggregates over the "
      "corpus; the |sources|-row rate table broadcasts back for the "
      "sampling audit."),
-    ("dedup_simhash_pairs",
-     "Round 3: the band self-join is gone — ONE groupBy(band, band_bits) "
-     "exchange builds capped buckets, pairs enumerate via array HOFs "
-     "(no Join operator anywhere in the plan)."),
     ("fingerprints_winnowed",
      "Round 3: the two project_barrier Generate nodes pin norm and "
      "gram_hashes as bound attributes — without them CollapseProject "
