@@ -245,12 +245,6 @@ def q_kg_scd2_intervals(triples: DataFrame) -> DataFrame:
     return versions.scd2_intervals(runs)
 
 
-def q_balanced_sample(docs: DataFrame) -> DataFrame:
-    """Balance-to-minority sampling over the domain fixture strata."""
-    strata = docs.selectExpr("doc_id", curation.DOMAIN_FIXTURE_EXPR + " AS stratum")
-    return curation.balanced_sample(docs, strata)
-
-
 # --- JSON ops / validation / CSV-prose (SURVEY §2.4, §2.2 P7-P9, §2.1 S5) --
 
 def q_j1_props_parse(ev: DataFrame) -> DataFrame:
@@ -541,17 +535,12 @@ QUERIES = (
      O.dedup_minhash_sql),
     ("dedup_clusters", _documents, dedup.near_dup_clusters, _MINHASH,
      O.dedup_clusters_sql),
-    ("text_stats", _documents, textstats.text_stats, {}, O.text_stats_sql),
     ("quality_filter", _documents, textstats.quality_filter,
      dict(min_tokens=20, max_tokens=100_000, min_mean_word_len=3.0,
           max_mean_word_len=10.0, max_symbol_ratio=0.1, min_unique_ratio=0.3,
           min_stop_hits=2),
      partial(O.quality_filter_sql, src="documents")),
-    ("token_counts", _documents, textstats.token_counts, {}, O.token_counts_sql),
-    ("vocab_topk", _documents, textstats.vocab_topk, dict(k=200), O.vocab_topk_sql),
     ("pii_scrub", _documents, q_pii_scrub, {}, O.pii_scrub_sql),
-    ("sentence_dedup", _narrative, curation.sentence_dedup_stats, {},
-     O.sentence_dedup_sql),
     ("sentence_prune", _narrative, curation.sentence_prune, {}, O.sentence_prune_sql),
     ("curation_funnel", _narrative, q_curation_funnel,
      dict(min_tokens=20, max_symbol_ratio=0.2), O.curation_funnel_sql),
@@ -565,13 +554,6 @@ QUERIES = (
     # test_graphstats covers planted triangles
     ("graph_triangles", _triples, graphstats.triangle_counts, {},
      O.graph_triangles_sql),
-    ("balanced_sample", _documents, q_balanced_sample, {}, O.balanced_sample_sql),
-    # n=3 suits this corpus' tiny vocabulary; eval screens use 8-13-grams
-    ("contamination", _documents, curation.contamination_screen,
-     dict(bench_mod=19, n=3), O.contamination_sql),
-    ("fingerprints_winnowed", _documents, textstats.winnowed_fingerprints,
-     dict(k=8, window=4), O.winnowed_fingerprints_sql),
-    ("language_id", _documents, textstats.language_id, {}, O.language_id_sql),
     ("video_decode_real", _video_blobs, media.decode_video_bytes, {},
      O.video_decode_real_sql),
     ("media_inventory", _flat_spans, media.media_inventory, {}, O.media_inventory_sql),
@@ -607,10 +589,8 @@ QUERIES = (
      O.audio_decode_real_sql),
     ("video_frames_real", _video_blobs, media.video_frame_means, {},
      O.video_frames_real_sql),
-    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("media_resize_real", _image_blobs, media.resize_media_real,
      dict(max_w=8, max_h=8), O.media_resize_real_sql),
-    ("fingerprints", _documents, textstats.fingerprints, {}, O.fingerprints_sql),
     ("graph_label_prop", _triples, graphstats.label_propagation, dict(iters=3),
      O.graph_label_prop_sql),
     ("a3_latest_order_per_customer", _table("orders"), q_latest_order_per_customer,
@@ -622,17 +602,12 @@ QUERIES = (
      dict(k=2, buckets=64), O.kg_negative_samples_sql),
     ("media_captions", _flat_spans, media.media_caption_pairs, {},
      O.media_caption_pairs_sql),
-    # media spans cost a fixed vision-encoder budget: 576 = 24x24 patches
-    ("seq_pack_interleaved", _spans, packing.seq_pack_interleaved,
-     dict(capacity=4096, n_shards=8, media_token_cost=576),
-     O.seq_pack_interleaved_sql),
     ("seq_pack", _documents, packing.seq_pack, dict(capacity=128, n_shards=8),
      O.seq_pack_sql),
+    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
     ("shard_manifest", _documents, packing.shard_manifest, dict(n_shards=8),
      O.shard_manifest_sql),
     ("token_mix", _documents, packing.token_mix_plan, {}, O.token_mix_sql),
-    ("repetition_stats", _documents, textstats.repetition_stats,
-     dict(top_n=2, dup_n=3), O.repetition_sql),
     # equal weights: uniform DeepWalk steps
     ("graph_random_walks", _triples,
      partial(graphstats.node2vec_walks, w_return=1, w_near=1, w_far=1),
@@ -645,9 +620,6 @@ QUERIES = (
     ("graph_node2vec_walks", _triples, graphstats.node2vec_walks,
      dict(length=4, walks_per_node=2, seed=0, w_return=1, w_near=4, w_far=2),
      O.node2vec_walks_sql),
-    ("dataset_split", _documents, curation.dataset_split,
-     dict(val_bp=500, test_bp=500, strat_col="source", seed="split"),
-     O.dataset_split_sql),
     ("kg_scd2_intervals", _triples, q_kg_scd2_intervals, {}, O.kg_scd2_sql),
 )
 

@@ -36,7 +36,7 @@ HEADLINE = (
     "link_canonical_triples",
     "dedup_minhash_lsh",
     "seq_pack",
-    "text_stats",
+    "quality_filter",
     "curation_funnel",
     "a1_pricing_summary",
 )

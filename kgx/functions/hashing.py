@@ -1,9 +1,9 @@
 """Cross-engine deterministic hashing helpers.
 
-MinHash and the seeded samplers need hash functions that produce IDENTICAL
-values in Spark and in the DuckDB oracle.  ``xxhash64``/``hash`` differ
-between engines, so we derive 60-bit integers from md5 hex (stable
-everywhere):
+MinHash, sharding and the hash-Bernoulli samplers need hash functions that
+produce IDENTICAL values in Spark and in the DuckDB oracle.
+``xxhash64``/``hash`` differ between engines, so we derive 60-bit integers
+from md5 hex (stable everywhere):
 
     Spark : cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)
     DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT
@@ -20,12 +20,6 @@ def spark_md5_60(expr: str) -> str:
 
 def duckdb_md5_60(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def seeded(expr: str, seed: int | str, dialect: str) -> str:
-    """Hash of ``'<seed>|' || expr`` — family of independent hash functions."""
-    salted = f"concat('{seed}', '|', {expr})"
-    return spark_md5_60(salted) if dialect == "spark" else duckdb_md5_60(salted)
 
 
 #: Mersenne prime 2^31 - 1 for the universal-hash MinHash family.

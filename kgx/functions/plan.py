@@ -6,7 +6,7 @@ duplicating non-cheap expressions, but a reference INSIDE a higher-order-
 function lambda body slips through with a single textual occurrence — and
 is then re-evaluated PER ARRAY ELEMENT at runtime.  Nest two HOF stages
 (array built from a computed column, then a second lambda referencing that
-array) and the cost multiplies: profiled on the winnowed-fingerprint
+array) and the cost multiplies: profiled on a winnowed-fingerprint
 operator, 500 sub-KB documents ran for >10 MINUTES because every
 sliding-window element re-evaluated the full k-gram md5 array, which
 itself re-evaluated the regex-normalized text per gram — O(L²·regex)

@@ -1,21 +1,16 @@
-"""Corpus-curation operators beyond dedup: PII scrubbing, sentence-level
-duplication stats, and benchmark-decontamination screening.
+"""Corpus-curation operators beyond dedup: PII scrubbing and sentence-level
+dedup.
 
-These are the remaining standard passes a large-scale training-data pipeline
-runs over a web corpus (the reference extractor has no equivalent — it
-ingests one trusted document per HTTP request, reference main.py:69-117;
-at 10^12 docs the corpus is adversarial and these gates run *before*
-extraction):
+These are the funnel's last two passes over a web corpus (the reference
+extractor has no equivalent — it ingests one trusted document per HTTP
+request, reference main.py:69-117; at 10^12 docs the corpus is adversarial
+and these gates run *before* extraction):
 
 - :func:`pii_scrub` — regex redaction of emails / SSNs / phone numbers /
   IPv4s with per-category counts (the C4-style "remove lines with PII"
   pass, applied per document).
-- :func:`sentence_dedup_stats` — cross-document duplicate-sentence
-  detection (CCNet / RefinedWeb style): the per-sentence document
-  frequency, aggregated per document.
-- :func:`contamination_screen` — n-gram-overlap decontamination against a
-  held-out benchmark set (the GPT-3 appendix-C / PaLM 13-gram screen
-  shape).
+- :func:`sentence_prune` — keep-first-occurrence sentence dedup across
+  documents (the CCNet / RefinedWeb duplicate-sentence pass).
 
 Every operator is built-in Spark SQL functions only (JVM-side, codegen, no
 UDFs), with regex constructs restricted to the Java-regex ∩ RE2 common
@@ -101,7 +96,7 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sentence-level duplication
+# sentence-level dedup
 # ---------------------------------------------------------------------------
 
 #: a sentence ends at a run of '.' followed by whitespace or the end of the
@@ -120,49 +115,9 @@ _SENT_EXPR = (
 )
 
 
-def sentence_dedup_stats(documents: DataFrame) -> DataFrame:
-    """Cross-document duplicate-sentence stats (CCNet / RefinedWeb pass).
-
-    For every document: ``n_sentences``, ``n_shared`` (sentences whose
-    normalized form appears in more than one distinct document) and
-    ``shared_ratio``.  This is the detection half of sentence-level dedup;
-    a removal pass keeps the first global occurrence of each sentence.
-
-    Scale shape: sentences collapse to 60-bit hashes before any exchange,
-    so both shuffles (the document-frequency aggregation and the hash
-    equi-join back to instances) carry ``(bigint, bigint)`` rows — never
-    text.  Hot sentences ("click here to subscribe") concentrate on one
-    key only inside the tiny ``df``-per-hash aggregate, not the join
-    (instances stay spread across their documents' partitions), and AQE
-    handles residual skew.
-    """
-    inst = documents.select(
-        "doc_id", F.explode(F.expr(_SENT_EXPR)).alias("sentence")
-    ).select("doc_id", F.expr(spark_md5_60("lower(sentence)")).alias("h"))
-    df_per_h = inst.groupBy("h").agg(
-        F.countDistinct("doc_id").alias("df")
-    )
-    return (
-        inst.join(df_per_h, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_sentences"),
-            F.sum(F.when(F.col("df") > 1, 1).otherwise(0))
-            .cast("long")
-            .alias("n_shared"),
-        )
-        .select(
-            "doc_id",
-            "n_sentences",
-            "n_shared",
-            (F.col("n_shared") / F.col("n_sentences")).alias("shared_ratio"),
-        )
-    )
-
-
 def sentence_prune(documents: DataFrame) -> DataFrame:
-    """Keep-first-occurrence sentence-level dedup — the removal half of the
-    CCNet pass (:func:`sentence_dedup_stats` is the detection half).
+    """Keep-first-occurrence sentence-level dedup — the CCNet
+    duplicate-sentence pass.
 
     Every distinct normalized sentence keeps exactly ONE instance corpus-wide:
     the occurrence with the smallest ``(doc_id, idx)`` order key.  Output per
@@ -222,178 +177,3 @@ def sentence_prune(documents: DataFrame) -> DataFrame:
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# stratified corpus sampling
-# ---------------------------------------------------------------------------
-
-#: Dialect-neutral stratum fixture for the gate query (the driver corpus is
-#: uniformly English, so language is a degenerate stratum; this stands in for
-#: the crawl-source/domain column a production corpus carries): 60% web,
-#: 20% books, 10% code, 10% wiki.  ONE string shared with the oracle.
-DOMAIN_FIXTURE_EXPR = (
-    "CASE WHEN doc_id % 10 < 6 THEN 'web'"
-    " WHEN doc_id % 10 < 8 THEN 'books'"
-    " WHEN doc_id % 10 < 9 THEN 'code'"
-    " ELSE 'wiki' END"
-)
-
-
-def balanced_sample(documents: DataFrame, strata: DataFrame | None = None) -> DataFrame:
-    """Deterministic balance-to-minority stratified sampling.
-
-    Given a per-document stratum label (default: :func:`language_id
-    <kgx.operators.textstats.language_id>` over the corpus), each stratum is
-    downsampled toward the SMALLEST stratum's size with a per-stratum keep
-    rate in basis points ``rate_bp = min(10000, (10000 * min_count) div
-    count)`` — pure bigint arithmetic, so the rate is bit-identical across
-    engines.  Selection is the deterministic hash-Bernoulli
-    ``md5_60(doc_id) % 10000 < rate_bp`` — reproducible under re-runs,
-    restarts, and repartitioning, unlike ``DataFrame.sample`` whose output
-    depends on partition layout.
-
-    Returns per-stratum audit stats ``(stratum, n_docs, rate_bp,
-    n_sampled)``.  Scale shape: the stratum-size aggregate is tiny (bounded
-    by the label vocabulary), rates broadcast back, and the Bernoulli filter
-    is a stateless map — no shuffle ever carries text.
-    """
-    if strata is None:
-        from kgx.operators.textstats import language_id
-
-        strata = language_id(documents).select(
-            "doc_id", F.col("lang_guess").alias("stratum")
-        )
-    counts = strata.groupBy("stratum").agg(F.count("*").alias("n_docs"))
-    min_n = counts.agg(F.min("n_docs").alias("min_n"))
-    rates = counts.crossJoin(F.broadcast(min_n)).select(
-        "stratum",
-        "n_docs",
-        F.expr("least(10000, (10000 * min_n) div n_docs)")
-        .cast("long")
-        .alias("rate_bp"),
-    )
-    picked = (
-        strata.select(
-            "stratum",
-            (
-                F.expr(spark_md5_60("cast(doc_id as string)")) % 10000
-            ).alias("u"),
-        )
-        .join(F.broadcast(rates.select("stratum", "rate_bp")), "stratum")
-        .where(F.col("u") < F.col("rate_bp"))
-        .groupBy("stratum")
-        .agg(F.count("*").cast("long").alias("n_sampled"))
-    )
-    return (
-        rates.join(picked, "stratum", "left")
-        .select(
-            "stratum",
-            "n_docs",
-            "rate_bp",
-            F.coalesce("n_sampled", F.lit(0)).cast("long").alias("n_sampled"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# benchmark decontamination
-# ---------------------------------------------------------------------------
-
-
-def contamination_screen(
-    documents: DataFrame, bench_mod: int = 19, n: int = 5
-) -> DataFrame:
-    """n-gram-overlap decontamination screen (GPT-3 appendix C shape).
-
-    The benchmark set is the deterministic slice ``doc_id % bench_mod = 0``
-    (standing in for an eval suite; at production it is a real benchmark
-    table).  Every OTHER document is scored by the fraction of its distinct
-    word ``n``-grams that also occur anywhere in the benchmark set:
-    (doc_id, n_shingles, n_contaminated, contamination).
-
-    Scale shape: the benchmark shingle-hash set is bounded by the eval
-    suite's size (millions of hashes at worst — eval suites are small by
-    construction, unlike the unbounded label tables that forbid broadcast
-    in kgx.operators.linking), so it is explicitly broadcast and the scan
-    side never shuffles: hash, broadcast-hash-join, partial aggregate per
-    doc. Docs with no ``n``-gram (shorter than ``n`` words) are excluded,
-    mirroring the guarded shingle expression.
-    """
-    from kgx.operators.dedup import shingle_table
-
-    sh = shingle_table(documents, n=n)
-    bench = (
-        sh.where(F.col("doc_id") % bench_mod == 0)
-        .select("shingle_hash")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    train = sh.where(F.col("doc_id") % bench_mod != 0)
-    return (
-        train.join(F.broadcast(bench), "shingle_hash", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_shingles"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("long")
-            .alias("n_contaminated"),
-        )
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_contaminated",
-            (F.col("n_contaminated") / F.col("n_shingles")).alias("contamination"),
-        )
-    )
-
-
-def dataset_split(
-    documents: DataFrame,
-    val_bp: int = 500,
-    test_bp: int = 500,
-    strat_col: str = "source",
-    seed: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test split audit — the assignment every
-    training-data pipeline needs to be REPRODUCIBLE and leakage-free:
-    each document's split is a pure function of its id
-    (``md5_60(seed|doc_id) % 10000`` against basis-point thresholds), so
-    re-runs, backfills, and incremental appends can never move a
-    document across the split boundary (the only leakage-safe property
-    that matters at 100 TB — a random() split reshuffles on every
-    retry).  Hash uniformity makes the split self-stratifying within
-    ANY stratum; this query emits the per-``strat_col`` audit that
-    verifies it: (stratum, split, n_docs, share_bp) with floor-divided
-    basis-point shares per stratum.  A NULL ``strat_col`` (web-crawl
-    metadata is often missing) is its own stratum, keyed NULL and kept
-    apart from any literal string value.
-
-    Scale shape: one integer projection + one map-side-combined count
-    aggregate on the (stratum, split) key + one window summing each
-    stratum's ≤ 3 counter rows into its total; nothing but pre-combined
-    counter rows ever shuffles.  Output rows ≤ 3 × distinct strata.
-    """
-    from kgx.functions.hashing import seeded
-
-    if val_bp < 0 or test_bp < 0 or val_bp + test_bp > 10000:
-        raise ValueError(f"bad split shares val_bp={val_bp} test_bp={test_bp}")
-    h = seeded("cast(doc_id as string)", seed, "spark")
-    assigned = documents.select(
-        F.expr(strat_col).alias("stratum"),
-        F.expr(
-            f"CASE WHEN ({h}) % 10000 < {test_bp} THEN 'test' "
-            f"WHEN ({h}) % 10000 < {test_bp + val_bp} THEN 'val' "
-            f"ELSE 'train' END"
-        ).alias("split"),
-    )
-    counts = assigned.groupBy("stratum", "split").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )
-    return counts.select(
-        "stratum",
-        "split",
-        "n_docs",
-        F.expr(
-            "(10000 * n_docs) div sum(n_docs) OVER (PARTITION BY stratum)"
-        ).cast("long").alias("share_bp"),
-    )

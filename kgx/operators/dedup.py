@@ -51,7 +51,7 @@ def exact_groups(documents: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shingles (shared by MinHash-LSH and the contamination screen)
+# shingles (word n-grams for MinHash-LSH, char n-grams for label linking)
 # ---------------------------------------------------------------------------
 
 def _toks_shingle_expr(n: int) -> str:
@@ -87,17 +87,6 @@ def char_shingle_expr(col: str, n: int = 3) -> str:
     return (
         f"array_distinct(transform(sequence(1, length({p}) - {n - 1}), "
         f"i -> substring({p}, i, {n})))"
-    )
-
-
-def shingle_table(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle_hash) — exploded distinct word n-gram shingles,
-    hashed to 60 bits."""
-    return (
-        _tokenized(documents, "doc_id")
-        .select("doc_id", F.expr(_toks_shingle_expr(n)).alias("shingles"))
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-        .select("doc_id", F.expr(hashing.spark_md5_60("shingle")).alias("shingle_hash"))
     )
 
 
@@ -177,11 +166,10 @@ def minhash_lsh_pairs(
     enumerated with array higher-order functions (bounded by
     ``max_bucket``² per bucket), replacing the earlier bucket SELF-JOIN
     that re-evaluated the signature plan on both sides; verification
-    carries each candidate's distinct-shingle hash array (identical set to
-    the old exploded shingle_table) and computes exact Jaccard with
-    ``array_intersect`` on the candidate rows only, replacing three more
-    full re-evaluations of the shingle pipeline (sizes + two exploded join
-    sides).  Same output bit-for-bit, ~4× less work: the corpus-wide cost
+    carries each candidate's distinct-shingle hash array and computes
+    exact Jaccard with ``array_intersect`` on the candidate rows only,
+    replacing three more full re-evaluations of the shingle pipeline
+    (sizes + two exploded join sides).  Same output bit-for-bit, ~4× less work: the corpus-wide cost
     is one shingle+hash pass and one minhash pass, and the only shuffles
     carry (band, band_hash, id) buckets and candidate-id arrays.
     """
@@ -241,7 +229,7 @@ def minhash_lsh_pairs(
     # into the join CONDITION), evaluating the O(na+nb) set-build up to 4×
     # per candidate row — measured 3.5-6.4 s → 2.3-2.8 s at sf0.1, where
     # boilerplate band collisions make |candidates| ≈ 116k (round-5 plan
-    # audit; same trap class as the winnowed-fingerprint HOF fix).
+    # audit; same trap class as kgx.functions.plan.project_barrier's).
     return (
         plan_fn.project_barrier(stats)
         .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
@@ -307,4 +295,3 @@ def near_dup_clusters(
         F.count("*").over(w).alias("cluster_size"),
         (F.col("doc_id") != F.col("canonical_doc_id")).alias("is_duplicate"),
     )
-

@@ -81,32 +81,22 @@ def seq_pack(docs: DataFrame, capacity: int = 128, n_shards: int = 8) -> DataFra
     One shuffle (hash by shard), then a per-shard window — the global-sort
     trap is avoided by construction.
     """
-    t = with_shard(docs, n_shards)
-    return _pack_window(t, ["doc_id", "shard", "n_tokens"], "n_tokens", capacity)
-
-
-def _pack_window(
-    t: DataFrame, keep: list[str], cost: str, capacity: int
-) -> DataFrame:
-    """The per-shard packing window over (doc_id, shard, ..., ``cost``)
-    rows: a running sum of ``cost`` in doc_id order within each shard
-    places every doc at ``start_tok`` and spans it over sequences
-    ``first_seq..last_seq`` (``n_seqs`` of them) of ``capacity`` tokens.
-    Output: the ``keep`` columns plus (start_tok, first_seq, last_seq,
-    n_seqs)."""
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return t.withColumn("cum", F.sum(cost).over(w)).select(
-        *keep,
-        (F.col("cum") - F.col(cost)).alias("start_tok"),
-        F.expr(f"(cum - {cost}) DIV {capacity}").alias("first_seq"),
+    t = with_shard(docs, n_shards)
+    return t.withColumn("cum", F.sum("n_tokens").over(w)).select(
+        "doc_id",
+        "shard",
+        "n_tokens",
+        (F.col("cum") - F.col("n_tokens")).alias("start_tok"),
+        F.expr(f"(cum - n_tokens) DIV {capacity}").alias("first_seq"),
         F.expr(f"(cum - 1) DIV {capacity}").alias("last_seq"),
         (
             F.expr(f"(cum - 1) DIV {capacity}")
-            - F.expr(f"(cum - {cost}) DIV {capacity}")
+            - F.expr(f"(cum - n_tokens) DIV {capacity}")
             + F.lit(1)
         ).cast("long").alias("n_seqs"),
     )
@@ -196,42 +186,3 @@ def token_mix_plan(docs: DataFrame) -> DataFrame:
             F.coalesce("sampled_tokens", F.lit(0)).cast("long").alias("sampled_tokens"),
         )
     )
-
-
-def seq_pack_interleaved(
-    docs_spans: DataFrame,
-    capacity: int = 4096,
-    n_shards: int = 8,
-    media_token_cost: int = 576,
-) -> DataFrame:
-    """Concat-then-chunk packing for INTERLEAVED multimodal documents.
-
-    A multimodal training sequence budgets text by tokenizer tokens and each
-    media span by its fixed vision-encoder cost (``media_token_cost``, e.g.
-    a 24×24-patch image = 576 embeddings).  Per document the cost is
-    computed from the span array with higher-order functions — no explode,
-    zero shuffle until the per-shard packing window (same machinery as
-    :func:`seq_pack`).
-
-    Output: (doc_id, shard, text_tokens, media_spans, cost, start_tok,
-    first_seq, last_seq, n_seqs).
-    """
-    text_toks = (
-        "aggregate(spans, cast(0 as bigint), (acc, s) -> acc + "
-        "(CASE WHEN s.kind = 'text' THEN "
-        "size(filter(split(s.text, ' '), t -> t != '')) ELSE 0 END))"
-    )
-    media_n = "size(filter(spans, s -> s.kind = 'media'))"
-    costed = docs_spans.selectExpr(
-        "doc_id",
-        f"cast({spark_md5_60('cast(doc_id as string)')} % {n_shards} as bigint) AS shard",
-        f"cast({text_toks} as bigint) AS text_tokens",
-        f"cast({media_n} as bigint) AS media_spans",
-    ).selectExpr(
-        "doc_id",
-        "shard",
-        "text_tokens",
-        "media_spans",
-        f"text_tokens + {media_token_cost} * media_spans AS cost",
-    ).where(F.col("cost") > 0)
-    return _pack_window(costed, costed.columns, "cost", capacity)

@@ -1,10 +1,11 @@
-"""Text analysis operators for training-data curation.
+"""The per-document quality gate of the curation funnel.
 
-Language-ID (stop-word-list heuristic), quality scoring, token counting and
-document fingerprinting — the per-document filters a web-scale corpus runs
-before extraction.  Everything is built-in Spark SQL functions (JVM-side,
-codegen'd, no UDFs), and arithmetic avoids transcendentals so the DuckDB
-oracle reproduces values bit-for-bit (integer counts + IEEE division only).
+:func:`quality_filter` scores every document against Gopher/C4-style rules
+before dedup and extraction; its whitespace tokenizer :data:`TOKENS_EXPR`
+also counts the tokens the packing operators budget (kgx.operators.packing).
+Everything is built-in Spark SQL functions (JVM-side, codegen'd, no UDFs),
+and arithmetic avoids transcendentals so the DuckDB oracle reproduces values
+bit-for-bit (integer counts + IEEE division only).
 """
 
 from __future__ import annotations
@@ -12,214 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: tiny per-language function-word lists for the n-gram/stop-word heuristic.
-#: Deliberately small + fixed: the operator contract is deterministic scoring,
-#: not linguistic accuracy.
-LANG_MARKERS = {
-    "en": ("the", "and", "of", "is", "a"),
-    "de": ("der", "die", "und", "ist", "das"),
-    "fr": ("le", "la", "et", "est", "les"),
-    "es": ("el", "la", "y", "es", "los"),
-    "zh": ("de", "shi", "he", "zai", "le"),
-}
+#: the English function words the ``no_stop_words`` rule counts.
+#: Deliberately small + fixed: the rule is deterministic scoring, not
+#: linguistic accuracy.
+EN_STOP_WORDS = ("the", "and", "of", "is", "a")
 
 TOKENS_EXPR = "filter(split(text, ' '), t -> t != '')"
 PUNCT_EXPR = "length(text) - length(regexp_replace(text, '[.!?,;:]', ''))"
-
-#: GPT-2-style pre-tokenizer approximation: contraction suffixes, letter
-#: runs, digit runs, symbol runs — each folding one leading space — plus
-#: whitespace runs and stray apostrophes.  Restricted to constructs with
-#: identical semantics in Java regex (Spark) and RE2 (DuckDB): ordered
-#: leftmost alternation, non-capturing group, explicit whitespace class
-#: (``\s`` differs between the engines on vertical-tab).
-BPE_TOKEN_PATTERN = (
-    r"'(?:s|t|re|ve|m|ll|d)"
-    r"| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r']+"
-    r"|[ \t\n\r]+|'"
-)
-
-
-def text_stats(documents: DataFrame) -> DataFrame:
-    """Per-doc counts + quality score.
-
-    quality = unique_ratio * min(1, tokens/50) * (1 - punct_ratio) — rational
-    arithmetic over exact integers; deterministic across engines.
-    """
-    t = documents.select(
-        "doc_id",
-        F.expr(f"size({TOKENS_EXPR})").cast("long").alias("token_count"),
-        F.expr(f"size(array_distinct({TOKENS_EXPR}))").cast("long").alias("unique_tokens"),
-        F.length("text").cast("long").alias("char_count"),
-        F.expr(PUNCT_EXPR).cast("long").alias("punct_count"),
-    )
-    # filter BEFORE dividing: ANSI mode makes 0-token/0-char docs a hard
-    # divide-by-zero error, not a NULL
-    return t.where(F.col("token_count") > 0).select(
-        "doc_id",
-        "token_count",
-        "unique_tokens",
-        "char_count",
-        "punct_count",
-        (
-            (F.col("unique_tokens") / F.col("token_count"))
-            * F.least(F.lit(1.0), F.col("token_count") / F.lit(50.0))
-            * (F.lit(1.0) - F.col("punct_count") / F.col("char_count"))
-        ).alias("quality"),
-    )
-
-
-def token_counts(documents: DataFrame) -> DataFrame:
-    """(doc_id, ws_tokens, bpe_tokens, char_count, chars_per_token) — the
-    two tokenizer families a training-data pipeline budgets with: whitespace
-    split and a BPE-ish regex pre-tokenizer (GPT-2 pattern shape, see
-    BPE_TOKEN_PATTERN).  Pure projection, JVM-side regex, no shuffle; the
-    DuckDB oracle runs the identical pattern under RE2."""
-    t = documents.select(
-        "doc_id",
-        F.expr(f"size({TOKENS_EXPR})").cast("long").alias("ws_tokens"),
-        F.size(
-            F.regexp_extract_all(
-                F.col("text"), F.lit(BPE_TOKEN_PATTERN), F.lit(0)
-            )
-        ).cast("long").alias("bpe_tokens"),
-        F.length("text").cast("long").alias("char_count"),
-    )
-    # filter BEFORE dividing: ANSI mode makes a 0-token doc a hard error
-    return t.where(F.col("bpe_tokens") > 0).select(
-        "doc_id",
-        "ws_tokens",
-        "bpe_tokens",
-        "char_count",
-        (F.col("char_count") / F.col("bpe_tokens")).alias("chars_per_token"),
-    )
-
-
-def _tagged_gram_expr(n: int, tag: int) -> str:
-    """NON-distinct word n-grams of a bound ``toks`` array attribute as
-    (tag, gram) structs — repetition needs multiplicities, unlike the dedup
-    family's distinct shingle sets.  Referencing a bound attribute matters:
-    inlining TOKENS_EXPR into the transform would re-split the whole text
-    once per gram position, O(tokens × doc_length) (the same HOF trap
-    dedup._tokenized exists for).  Docs shorter than ``n`` tokens emit
-    nothing (the CASE guard — Spark's ``sequence(1, 0)`` would DESCEND,
-    not return empty)."""
-    return (
-        f"CASE WHEN size(toks) >= {n} THEN "
-        f"transform(sequence(1, size(toks) - {n} + 1), "
-        f"i -> named_struct('tag', {tag}, "
-        f"'gram', concat_ws(' ', slice(toks, i, {n})))) "
-        f"ELSE array() END"
-    )
-
-
-def _gram_counts(documents: DataFrame, sizes: list[tuple[int, int]]) -> DataFrame:
-    """(doc_id, char_count, tag, h, glen, cnt) — occurrence counts for ALL
-    requested (n, tag) gram sizes in ONE corpus pass: the tokenization is
-    hoisted behind a project_barrier, every size's grams concat into one
-    explode, and text collapses to 60-bit hashes before the single
-    (doc_id, tag, h) count shuffle — pure bigints cross the exchange, the
-    input is scanned exactly once however many gram sizes are requested."""
-    from kgx.functions import hashing
-    from kgx.functions.plan import project_barrier
-
-    toked = project_barrier(
-        documents.selectExpr(
-            "doc_id",
-            f"{TOKENS_EXPR} AS toks",
-            "cast(length(text) as bigint) AS char_count",
-        )
-    )
-    all_grams = "concat(" + ", ".join(
-        _tagged_gram_expr(n, tag) for n, tag in sizes
-    ) + ")"
-    return (
-        toked.select(
-            "doc_id", "char_count", F.explode(F.expr(all_grams)).alias("tg")
-        )
-        .select(
-            "doc_id",
-            "char_count",
-            F.col("tg.tag").alias("tag"),
-            F.expr(hashing.spark_md5_60("tg.gram")).alias("h"),
-            F.length("tg.gram").cast("long").alias("glen"),
-        )
-        .groupBy("doc_id", "tag", "h", "glen")
-        .agg(
-            F.count("*").alias("cnt"),
-            # functionally dependent on doc_id — riding through the agg
-            # keeps the whole operator at ONE corpus scan
-            F.first("char_count").alias("char_count"),
-        )
-    )
-
-
-def repetition_stats(
-    documents: DataFrame, top_n: int = 2, dup_n: int = 3
-) -> DataFrame:
-    """Gopher-style within-document repetition signals (Rae et al. 2021,
-    §A1.3.1: the "repetition" half of their quality suite — the filters
-    production LLM curation applies BEFORE any cross-document dedup).
-
-    Per document (only docs with ≥ ``dup_n`` tokens appear):
-
-    - ``top_gram_count`` / ``top_gram_chars`` / ``top_gram_frac`` — the
-      most frequent word ``top_n``-gram (ties broken by min hash), its
-      character length, and Gopher's *top n-gram character fraction*:
-      chars covered by all its occurrences / total chars.
-    - ``dup_gram_instances`` / ``dup_gram_frac`` — occurrences of repeated
-      ``dup_n``-grams beyond each first (instances, not distinct grams),
-      and their fraction of all ``dup_n``-gram instances — the *duplicate
-      n-gram fraction* screen.
-
-    Scale shape: ONE corpus scan and NO join — both gram sizes and the
-    char count ride a single project_barrier + explode + (doc_id, tag,
-    hash) count, then one conditional aggregation per doc_id computes
-    both halves (a filter-per-half formulation instead lets Catalyst push
-    tag predicates below the count exchange and DUPLICATE the scan —
-    plan-guard-tested single FileScan).  Pure bigints cross both
-    exchanges — text never does; fractions are exact-int IEEE division
-    (bit-identical in the DuckDB oracle, kgx.oracles.repetition_sql)."""
-    counted = _gram_counts(documents, [(top_n, 0), (dup_n, 1)])
-    tag0 = F.col("tag") == 0
-    per_doc = counted.groupBy("doc_id").agg(
-        F.first("char_count").alias("char_count"),
-        F.sum(F.when(tag0, F.col("cnt"))).cast("long").alias("n_top_grams"),
-        # (cnt, -h) max = highest count, smallest hash on ties; glen rides
-        # along (h is md5-unique per gram, so never compared); max ignores
-        # the NULLs the WHEN leaves on tag-1 rows
-        F.max(
-            F.when(
-                tag0,
-                F.struct(
-                    F.col("cnt").alias("cnt"),
-                    (-F.col("h")).alias("negh"),
-                    F.col("glen").alias("glen"),
-                ),
-            )
-        ).alias("m"),
-        F.sum(F.when(~tag0, F.col("cnt"))).cast("long").alias("n_dup_grams"),
-        F.sum(F.when(~tag0, F.col("cnt") - 1)).cast("long").alias("dup_gram_instances"),
-    )
-    return (
-        # a doc with >= top_n but < dup_n tokens has no tag-1 rows: NULL
-        # dup half -> dropped (inner-join semantics, without any join)
-        per_doc.where(
-            F.col("n_top_grams").isNotNull() & F.col("n_dup_grams").isNotNull()
-        ).select(
-            "doc_id",
-            "char_count",
-            "n_top_grams",
-            F.col("m.cnt").cast("long").alias("top_gram_count"),
-            F.col("m.glen").cast("long").alias("top_gram_chars"),
-            (
-                F.col("m.cnt") * F.col("m.glen") / F.col("char_count")
-            ).alias("top_gram_frac"),
-            "n_dup_grams",
-            "dup_gram_instances",
-            (F.col("dup_gram_instances") / F.col("n_dup_grams")).alias("dup_gram_frac"),
-        )
-    )
-
 
 #: rule names in fixed evaluation order — shared with the DuckDB oracle so
 #: the composed fail_reasons string is byte-identical across engines.
@@ -245,8 +45,7 @@ def quality_filter(
     min_stop_hits: int = 2,
 ) -> DataFrame:
     """Gopher/C4-style composite quality gate: per-document rule verdicts
-    with named reasons, the decision layer a curation pipeline applies on
-    top of raw ``text_stats`` scores.
+    with named reasons, the first stage of the curation funnel.
 
     Rules (defaults follow Rae et al. 2021 "Gopher" §A.1.1 and the C4
     heuristics, adapted to rational arithmetic so the DuckDB oracle
@@ -259,8 +58,7 @@ def quality_filter(
     comma-joined QUALITY_RULES subset that fired, '' when the doc passes.
     Pure projection: no shuffle, no UDF, whole-stage codegen end-to-end.
     """
-    en = LANG_MARKERS["en"]
-    in_list = ", ".join(f"'{w}'" for w in en)
+    in_list = ", ".join(f"'{w}'" for w in EN_STOP_WORDS)
     t = documents.select(
         "doc_id",
         F.expr(f"size({TOKENS_EXPR})").cast("long").alias("n_tokens"),
@@ -298,126 +96,4 @@ def quality_filter(
         "stop_hits",
         (reasons == F.lit("")).alias("passes"),
         reasons.alias("fail_reasons"),
-    )
-
-
-def language_id(documents: DataFrame) -> DataFrame:
-    """(doc_id, lang_guess, lang_hits) — argmax of marker-word hit counts,
-    ties broken by language code order.  One pass, no shuffle beyond the
-    final projection."""
-    hit_cols = [
-        F.expr(
-            "size(filter("
-            + TOKENS_EXPR
-            + ", t -> t IN ("
-            + ", ".join(f"'{w}'" for w in words)
-            + ")))"
-        ).cast("long").alias(f"hits_{code}")
-        for code, words in LANG_MARKERS.items()
-    ]
-    scored = documents.select("doc_id", *hit_cols)
-    # argmax via greatest + cascaded CASE (deterministic tie-break by order)
-    best = F.greatest(*[F.col(f"hits_{c}") for c in LANG_MARKERS])
-    guess = F.lit(None).cast("string")
-    for code in reversed(list(LANG_MARKERS)):
-        guess = F.when(F.col(f"hits_{code}") == best, F.lit(code)).otherwise(guess)
-    return scored.select("doc_id", guess.alias("lang_guess"), best.alias("lang_hits"))
-
-
-def fingerprints(documents: DataFrame) -> DataFrame:
-    """Normalized content fingerprint: md5 of lower-cased,
-    whitespace-collapsed text — the join key for cross-snapshot dedup."""
-    return documents.select(
-        "doc_id",
-        F.md5(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-        ).alias("fingerprint"),
-    )
-
-
-def winnowed_fingerprints(
-    documents: DataFrame, k: int = 8, window: int = 4
-) -> DataFrame:
-    """MOSS-style winnowed rolling fingerprints: hash every char k-gram of
-    the normalized text, slide a window of ``window`` consecutive k-gram
-    hashes, keep each window's minimum, dedup — the partial-overlap
-    detector (plagiarism / near-identical passage search) that whole-doc
-    md5 can't do.
-
-    Entirely per-row array expressions (sequence → transform → slice →
-    array_min → explode): zero shuffle before the final distinct, which
-    shuffles only (doc_id, 60-bit hash) pairs.  The guarantee winnowing
-    gives at 100 TB: any shared substring of length ≥ k + window - 1
-    between two documents produces at least one identical selected
-    fingerprint, while storing ~2/(window+1) of all k-gram hashes.
-
-    The two project_barrier calls are load-bearing (round-3 fix): each HOF
-    stage's lambda references the PREVIOUS stage's computed column, and
-    without a materialization barrier CollapseProject inlines the defining
-    expression into the lambda body, re-evaluating it per array element —
-    the nested version re-ran the full gram-hash array (which re-ran the
-    regex normalization per gram) for every sliding-window position:
-    O(L²·regex) per document, profiled at >10 minutes for 500 sub-KB docs.
-    With the barriers each stage is O(L): norm computed once per row,
-    gram_hashes once per row, window mins slice a bound array value.
-    """
-    norm = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
-    from kgx.functions.hashing import spark_md5_60
-    from kgx.functions.plan import project_barrier
-
-    gram_hash = spark_md5_60(f"substring(norm, i, {k})")
-    t = project_barrier(
-        documents.selectExpr("doc_id", f"{norm} AS norm").where(
-            F.length("norm") >= k + window - 1
-        )
-    )
-    hashed = project_barrier(
-        t.selectExpr(
-            "doc_id",
-            f"transform(sequence(1, length(norm) - {k - 1}), i -> {gram_hash})"
-            " AS gram_hashes",
-        )
-    )
-    winnowed = hashed.selectExpr(
-        "doc_id",
-        f"transform(sequence(1, size(gram_hashes) - {window - 1}), "
-        f"j -> array_min(slice(gram_hashes, j, {window}))) AS wins",
-    )
-    return (
-        winnowed.select("doc_id", F.explode("wins").alias("fingerprint"))
-        .distinct()
-    )
-
-
-def vocab_topk(documents: DataFrame, k: int = 200) -> DataFrame:
-    """Global vocabulary top-``k`` — the first pass of tokenizer training
-    (BPE seed vocabulary / stop-word discovery): ``(token, n_occurrences,
-    n_docs, rank)`` ordered by count desc with a deterministic token-order
-    tie-break.
-
-    Scale shape: tokens partially aggregate map-side before the single
-    shuffle on token (hot stop-words combine locally, so skew arrives
-    pre-collapsed), and the global top-``k`` is Spark's
-    ``TakeOrderedAndProject`` — each partition ships only its own top-``k``
-    candidates to the driver-side heap, never the full vocabulary.  The
-    rank window runs over ``k`` rows, not the corpus.
-    """
-    from pyspark.sql.window import Window
-
-    counts = (
-        documents.select(F.explode(F.expr(TOKENS_EXPR)).alias("token"), "doc_id")
-        .groupBy("token")
-        .agg(
-            F.count("*").cast("long").alias("n_occurrences"),
-            F.countDistinct("doc_id").cast("long").alias("n_docs"),
-        )
-        .orderBy(F.col("n_occurrences").desc(), F.col("token"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.col("n_occurrences").desc(), F.col("token"))
-    return counts.select(
-        "token",
-        "n_occurrences",
-        "n_docs",
-        F.row_number().over(w).cast("long").alias("rank"),
     )

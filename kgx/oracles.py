@@ -15,6 +15,7 @@ empirically by tools/compare_oracle.py at sf0.01.
 
 from __future__ import annotations
 
+from kgx.functions.hashing import duckdb_md5_60
 from kgx.operators import curation, rules, validate
 from kgx.sources.corpus import NARRATIVE_CTE
 
@@ -201,12 +202,6 @@ LEFT JOIN cmap co ON co.label = t.obj
 # training-data pipeline extras (raw documents table)
 # ---------------------------------------------------------------------------
 
-def _duck_md5_60(expr: str) -> str:
-    from kgx.functions.hashing import duckdb_md5_60
-
-    return duckdb_md5_60(expr)
-
-
 def _duck_shingles(n: int = 3) -> str:
     return (
         f"CASE WHEN len(str_split(text, ' ')) < {n} THEN []::VARCHAR[] "
@@ -217,7 +212,7 @@ def _duck_shingles(n: int = 3) -> str:
 
 def dedup_exact_sql() -> str:
     return f"""
-WITH h AS (SELECT doc_id, {_duck_md5_60('text')} AS text_hash FROM documents),
+WITH h AS (SELECT doc_id, {duckdb_md5_60('text')} AS text_hash FROM documents),
 g AS (SELECT text_hash, min(doc_id) AS canonical_doc_id, count(*) AS group_size
       FROM h GROUP BY 1)
 SELECT doc_id, text_hash, canonical_doc_id, group_size FROM h JOIN g USING (text_hash)
@@ -226,7 +221,7 @@ SELECT doc_id, text_hash, canonical_doc_id, group_size FROM h JOIN g USING (text
 
 _JACCARD_CTES = f"""
 sh AS (
-    SELECT doc_id, {_duck_md5_60('shingle')} AS shingle_hash
+    SELECT doc_id, {duckdb_md5_60('shingle')} AS shingle_hash
     FROM (SELECT doc_id, unnest({_duck_shingles()}) AS shingle FROM documents)
 ),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -261,7 +256,7 @@ def dedup_minhash_sql(
     )
     return f"""
 WITH {_JACCARD_CTES},
-shw AS (SELECT doc_id, {_duck_md5_60('shingle')} AS hs
+shw AS (SELECT doc_id, {duckdb_md5_60('shingle')} AS hs
         FROM (SELECT doc_id, unnest({_duck_shingles()}) AS shingle FROM documents)),
 sig AS (
     SELECT doc_id,
@@ -363,7 +358,7 @@ def _minhash_pairs_ctes(
     )
     return f"""
 mh_sh AS (
-    SELECT mid, {_duck_md5_60('shingle')} AS hs
+    SELECT mid, {duckdb_md5_60('shingle')} AS hs
     FROM (SELECT {id_col} AS mid, unnest({shingles}) AS shingle FROM {src})
 ),
 mh_sizes AS (SELECT mid, count(*) AS n FROM mh_sh GROUP BY 1),
@@ -447,149 +442,8 @@ FROM documents WHERE doc_id < {max_doc_id}
 
 
 # ---------------------------------------------------------------------------
-# text statistics (kgx.operators.textstats)
+# quality gate (kgx.operators.textstats)
 # ---------------------------------------------------------------------------
-
-def text_stats_sql() -> str:
-    toks = "list_filter(str_split(text, ' '), t -> t <> '')"
-    return f"""
-WITH t AS (
-    SELECT doc_id,
-           CAST(len({toks}) AS BIGINT) AS token_count,
-           CAST(len(list_distinct({toks})) AS BIGINT) AS unique_tokens,
-           CAST(length(text) AS BIGINT) AS char_count,
-           CAST(length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g')) AS BIGINT) AS punct_count
-    FROM documents
-),
-t2 AS (SELECT * FROM t WHERE token_count > 0)
-SELECT doc_id, token_count, unique_tokens, char_count, punct_count,
-       ((unique_tokens / token_count)
-        * least(CAST(1.0 AS DOUBLE), token_count / CAST(50.0 AS DOUBLE)))
-       * (CAST(1.0 AS DOUBLE) - punct_count / char_count) AS quality
-FROM t2
-""".strip()
-
-
-def repetition_sql(top_n: int, dup_n: int) -> str:
-    """Oracle for the Gopher repetition signals (mirror of
-    kgx.operators.textstats.repetition_stats): NON-distinct word n-gram
-    occurrence counts, top-gram tie broken by (count DESC, hash ASC),
-    exact-int IEEE division for the fractions."""
-    toks = "list_filter(str_split(text, ' '), t -> t <> '')"
-
-    def grams(n: int) -> str:
-        return (
-            f"CASE WHEN len({toks}) >= {n} THEN "
-            f"list_transform(range(1, len({toks}) - {n} + 2), "
-            f"i -> array_to_string(list_slice({toks}, i, i + {n} - 1), ' ')) "
-            f"ELSE []::VARCHAR[] END"
-        )
-
-    return f"""
-WITH tg AS (
-    SELECT doc_id, {_duck_md5_60('gram')} AS h,
-           CAST(length(gram) AS BIGINT) AS glen, count(*) AS cnt
-    FROM (SELECT doc_id, unnest({grams(top_n)}) AS gram FROM documents)
-    GROUP BY 1, 2, 3
-),
-top_pick AS (
-    SELECT doc_id, glen, cnt,
-           row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, h ASC) AS rn,
-           sum(cnt) OVER (PARTITION BY doc_id) AS n_top_grams
-    FROM tg
-),
-top AS (
-    SELECT doc_id, CAST(n_top_grams AS BIGINT) AS n_top_grams,
-           CAST(cnt AS BIGINT) AS top_gram_count,
-           CAST(glen AS BIGINT) AS top_gram_chars
-    FROM top_pick WHERE rn = 1
-),
-dg AS (
-    SELECT doc_id, {_duck_md5_60('gram')} AS h, count(*) AS cnt
-    FROM (SELECT doc_id, unnest({grams(dup_n)}) AS gram FROM documents)
-    GROUP BY 1, 2
-),
-dup AS (
-    SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_dup_grams,
-           CAST(sum(cnt - 1) AS BIGINT) AS dup_gram_instances
-    FROM dg GROUP BY 1
-),
-chars AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS char_count FROM documents)
-SELECT doc_id, char_count, n_top_grams, top_gram_count, top_gram_chars,
-       top_gram_count * top_gram_chars / char_count AS top_gram_frac,
-       n_dup_grams, dup_gram_instances,
-       dup_gram_instances / n_dup_grams AS dup_gram_frac
-FROM top JOIN dup USING (doc_id) JOIN chars USING (doc_id)
-""".strip()
-
-
-def token_counts_sql() -> str:
-    from kgx.operators.textstats import BPE_TOKEN_PATTERN
-
-    toks = "list_filter(str_split(text, ' '), t -> t <> '')"
-    pat = BPE_TOKEN_PATTERN.replace("'", "''")
-    return f"""
-WITH t AS (
-    SELECT doc_id,
-           CAST(len({toks}) AS BIGINT) AS ws_tokens,
-           CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS bpe_tokens,
-           CAST(length(text) AS BIGINT) AS char_count
-    FROM documents
-)
-SELECT doc_id, ws_tokens, bpe_tokens, char_count,
-       char_count / CAST(bpe_tokens AS DOUBLE) AS chars_per_token
-FROM t WHERE bpe_tokens > 0
-""".strip()
-
-
-def vocab_topk_sql(k: int) -> str:
-    """Oracle for the vocabulary top-k (mirror of
-    kgx.operators.textstats.vocab_topk: whitespace tokens, count-desc /
-    token-asc deterministic order)."""
-    return f"""
-WITH toks AS (
-    SELECT doc_id, unnest(list_filter(str_split(text, ' '), t -> t <> '')) AS token
-    FROM documents
-),
-counts AS (
-    SELECT token,
-           CAST(count(*) AS BIGINT) AS n_occurrences,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM toks GROUP BY 1
-    ORDER BY n_occurrences DESC, token
-    LIMIT {k}
-)
-SELECT token, n_occurrences, n_docs,
-       CAST(row_number() OVER (ORDER BY n_occurrences DESC, token) AS BIGINT) AS rank
-FROM counts
-""".strip()
-
-
-def winnowed_fingerprints_sql(k: int, window: int) -> str:
-    gram = _duck_md5_60(f"substr(norm, i, {k})")
-    return f"""
-WITH t AS (
-    SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
-    FROM documents
-),
-t2 AS (SELECT * FROM t WHERE length(norm) >= {k + window - 1}),
-hashed AS (
-    SELECT doc_id,
-           list_transform(range(1, length(norm) - {k - 1} + 1),
-                          i -> {gram}) AS gram_hashes
-    FROM t2
-),
-winnowed AS (
-    SELECT doc_id,
-           list_transform(range(1, len(gram_hashes) - {window - 1} + 1),
-                          j -> list_min(list_slice(gram_hashes, j, j + {window - 1})))
-               AS wins
-    FROM hashed
-),
-exploded AS (SELECT doc_id, unnest(wins) AS fingerprint FROM winnowed)
-SELECT DISTINCT doc_id, fingerprint FROM exploded
-""".strip()
-
 
 def quality_filter_sql(
     min_tokens: int,
@@ -603,10 +457,10 @@ def quality_filter_sql(
 ) -> str:
     """Oracle for the Gopher/C4 composite quality gate — same rule order
     (QUALITY_RULES), same rational arithmetic, CASE-composed reasons."""
-    from kgx.operators.textstats import LANG_MARKERS, QUALITY_RULES
+    from kgx.operators.textstats import EN_STOP_WORDS, QUALITY_RULES
 
     toks = "list_filter(str_split(text, ' '), t -> t <> '')"
-    in_list = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
+    in_list = ", ".join(f"'{w}'" for w in EN_STOP_WORDS)
     conds = {
         "too_few_tokens": f"n_tokens < {min_tokens}",
         "too_many_tokens": f"n_tokens > {max_tokens}",
@@ -649,46 +503,12 @@ FROM r
 """.strip()
 
 
-def language_id_sql() -> str:
-    from kgx.operators.textstats import LANG_MARKERS
-
-    toks = "list_filter(str_split(text, ' '), t -> t <> '')"
-    hit_cols = ",\n           ".join(
-        f"CAST(len(list_filter({toks}, t -> t IN ("
-        + ", ".join(f"'{w}'" for w in words)
-        + f"))) AS BIGINT) AS hits_{code}"
-        for code, words in LANG_MARKERS.items()
-    )
-    best = "greatest(" + ", ".join(f"hits_{c}" for c in LANG_MARKERS) + ")"
-    cases = "\n         ".join(
-        f"WHEN hits_{c} = {best} THEN '{c}'" for c in LANG_MARKERS
-    )
-    return f"""
-WITH scored AS (
-    SELECT doc_id,
-           {hit_cols}
-    FROM documents
-)
-SELECT doc_id,
-       CASE {cases} END AS lang_guess,
-       {best} AS lang_hits
-FROM scored
-""".strip()
-
-
-def fingerprints_sql() -> str:
-    return (
-        "SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
-        " AS fingerprint FROM documents"
-    )
-
-
 # ---------------------------------------------------------------------------
 # interleaved media spans (kgx.operators.media)
 # ---------------------------------------------------------------------------
 
 def media_inventory_sql() -> str:
-    h = _duck_md5_60("media_ref")
+    h = duckdb_md5_60("media_ref")
     return f"""
 {_BASE},
 per_chunk AS (
@@ -1028,7 +848,7 @@ def media_decode_real_sql() -> str:
     the Spark side must round-trip encode → Arrow binary column → stdlib
     parse to produce them."""
     inv = media_inventory_sql()
-    h = _duck_md5_60("media_ref")
+    h = duckdb_md5_60("media_ref")
     return f"""
 WITH inv AS (
 {inv}
@@ -1053,7 +873,7 @@ def audio_decode_real_sql() -> str:
     Spark side must round-trip encode → Arrow binary column → stdlib RIFF
     parse to produce these values."""
     inv = media_inventory_sql()
-    h = _duck_md5_60("media_ref")
+    h = duckdb_md5_60("media_ref")
     return f"""
 WITH inv AS (
 {inv}
@@ -1081,7 +901,7 @@ def media_resize_real_sql(max_w: int, max_h: int) -> str:
     only selects existing pixels.  The Spark side must run decode →
     resample → re-encode → re-decode on real bytes to produce them."""
     inv = media_inventory_sql()
-    h = _duck_md5_60("media_ref")
+    h = duckdb_md5_60("media_ref")
     return f"""
 WITH inv AS (
 {inv}
@@ -1122,7 +942,7 @@ def _video_params_cte() -> str:
     ``i`` solid fill ``((h + 37 i) % 256, (h DIV 256 + 53 i) % 256,
     (h DIV 65536 + 71 i) % 256)``)."""
     inv = media_inventory_sql()
-    h = _duck_md5_60("media_ref")
+    h = duckdb_md5_60("media_ref")
     return f"""
 WITH inv AS (
 {inv}
@@ -1243,7 +1063,7 @@ def bucket_metrics_sql() -> str:
     edges / triples per md5-60-derived bucket.  Edges align 1:1 with
     label-resolved triples (rules.extract_document), so both counts derive
     from the triple set."""
-    bucket = f"CAST({_duck_md5_60('d.doc_id')} % 8 AS INT)"
+    bucket = f"CAST({duckdb_md5_60('d.doc_id')} % 8 AS INT)"
     return f"""
 {_BASE},
 {_NODES_CTES},
@@ -1345,52 +1165,6 @@ _DUCK_SENTS = (
 )
 
 
-def sentence_dedup_sql() -> str:
-    """Oracle for the cross-document duplicate-sentence stats over the
-    narrative corpus (mirror of kgx.operators.curation.sentence_dedup_stats:
-    sentence-boundary split, trim, drop empties, lowercase 60-bit hash)."""
-    return f"""
-WITH {NARRATIVE_CTE},
-sents AS (
-    SELECT doc_id, {_duck_md5_60('lower(s)')} AS h
-    FROM (
-        SELECT doc_id,
-               unnest({_DUCK_SENTS}) AS s
-        FROM narrative
-    )
-),
-dfh AS (SELECT h, count(DISTINCT doc_id) AS df FROM sents GROUP BY 1)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_sentences,
-       CAST(sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
-       sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) / count(*) AS shared_ratio
-FROM sents JOIN dfh USING (h)
-GROUP BY doc_id
-""".strip()
-
-
-def contamination_sql(bench_mod: int, n: int) -> str:
-    """Oracle for the n-gram decontamination screen (mirror of
-    kgx.operators.curation.contamination_screen: benchmark slice
-    doc_id % bench_mod = 0, distinct word n-gram hashes, overlap fraction)."""
-    return f"""
-WITH sh AS (
-    SELECT doc_id, {_duck_md5_60('shingle')} AS shingle_hash
-    FROM (SELECT doc_id, unnest({_duck_shingles(n)}) AS shingle FROM documents)
-),
-bench AS (SELECT DISTINCT shingle_hash FROM sh WHERE doc_id % {bench_mod} = 0),
-train AS (SELECT * FROM sh WHERE doc_id % {bench_mod} != 0)
-SELECT t.doc_id,
-       CAST(count(*) AS BIGINT) AS n_shingles,
-       CAST(sum(CASE WHEN b.shingle_hash IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_contaminated,
-       sum(CASE WHEN b.shingle_hash IS NOT NULL THEN 1 ELSE 0 END) / count(*)
-           AS contamination
-FROM train t LEFT JOIN bench b ON t.shingle_hash = b.shingle_hash
-GROUP BY t.doc_id
-""".strip()
-
-
 def sentence_prune_sql() -> str:
     """Oracle for keep-first-occurrence sentence dedup (mirror of
     kgx.operators.curation.sentence_prune: 0-based sentence index, order key
@@ -1405,7 +1179,7 @@ sd AS (
 ),
 inst AS (
     SELECT doc_id, u.x.i AS idx,
-           {_duck_md5_60("lower(u.x.s)")} AS h,
+           {duckdb_md5_60("lower(u.x.s)")} AS h,
            doc_id * 1048576 + u.x.i AS k
     FROM (SELECT doc_id,
                  unnest(list_transform(range(0, len(sents)),
@@ -1426,35 +1200,6 @@ SELECT d.doc_id,
                           i -> d.sents[i + 1]), '. '), '') AS pruned_text
 FROM sd d LEFT JOIN agg a USING (doc_id)
 WHERE len(d.sents) > 0
-""".strip()
-
-
-def balanced_sample_sql() -> str:
-    """Oracle for balance-to-minority stratified sampling (mirror of
-    kgx.operators.curation.balanced_sample over the DOMAIN_FIXTURE_EXPR
-    strata: integer-bp rates, md5-60 hash-Bernoulli selection)."""
-    from kgx.operators.curation import DOMAIN_FIXTURE_EXPR
-
-    u = _duck_md5_60("cast(doc_id as varchar)")
-    return f"""
-WITH strata AS (SELECT doc_id, {DOMAIN_FIXTURE_EXPR} AS stratum FROM documents),
-counts AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_docs
-           FROM strata GROUP BY 1),
-rates AS (
-    SELECT stratum, n_docs,
-           CAST(least(10000, (10000 * (SELECT min(n_docs) FROM counts))
-                             // n_docs) AS BIGINT) AS rate_bp
-    FROM counts
-),
-picked AS (
-    SELECT s.stratum, CAST(count(*) AS BIGINT) AS n_sampled
-    FROM strata s JOIN rates r USING (stratum)
-    WHERE {u} % 10000 < r.rate_bp
-    GROUP BY 1
-)
-SELECT r.stratum, r.n_docs, r.rate_bp,
-       CAST(coalesce(p.n_sampled, 0) AS BIGINT) AS n_sampled
-FROM rates r LEFT JOIN picked p USING (stratum)
 """.strip()
 
 
@@ -1487,7 +1232,7 @@ def curation_funnel_sql(
 WITH RECURSIVE {NARRATIVE_CTE},
 qpass AS (SELECT doc_id FROM ({quality}) WHERE passes),
 q AS (SELECT n.doc_id, n.text FROM narrative n JOIN qpass USING (doc_id)),
-eh AS (SELECT doc_id, {_duck_md5_60('text')} AS text_hash FROM q),
+eh AS (SELECT doc_id, {duckdb_md5_60('text')} AS text_hash FROM q),
 ekeep AS (SELECT min(doc_id) AS doc_id FROM eh GROUP BY text_hash),
 e AS MATERIALIZED (SELECT q.* FROM q JOIN ekeep USING (doc_id)),
 {mh},
@@ -1512,7 +1257,7 @@ sp_sd AS (
 ),
 sp_inst AS (
     SELECT doc_id, u.x.i AS idx,
-           {_duck_md5_60("lower(u.x.s)")} AS h,
+           {duckdb_md5_60("lower(u.x.s)")} AS h,
            doc_id * 1048576 + u.x.i AS k
     FROM (SELECT doc_id,
                  unnest(list_transform(range(0, len(sents)),
@@ -1738,8 +1483,6 @@ def _random_walks_ctes(
     independently of the weighted node2vec oracle; returns (chain,
     final_cte_name) so the walk corpus and the skip-gram pair oracle share
     one generator."""
-    from kgx.functions.hashing import duckdb_md5_60
-
     ctes = _walk_base_ctes(walks_per_node, w0_name="w0", with_prev=False)
     for i in range(1, length):
         h = duckdb_md5_60(
@@ -1811,13 +1554,13 @@ def kg_negative_samples_sql(k: int, buckets: int) -> str:
     kgx.operators.graphstats.negative_samples): md5-60 of
     subj|pred|obj|j picks bucket and in-bucket rank over the
     label-ordered numbered node table; accidental positives dropped."""
-    h = _duck_md5_60("concat_ws('|', subj, pred, obj, CAST(j AS VARCHAR))")
+    h = duckdb_md5_60("concat_ws('|', subj, pred, obj, CAST(j AS VARCHAR))")
     js = "\n    UNION ALL ".join(f"SELECT {j} AS j" for j in range(k))
     return f"""
 WITH {_tri_cte_head()},
 ns_tri AS (SELECT DISTINCT subj, pred, obj FROM tri),
 ns_nodes AS (
-    SELECT label, {_duck_md5_60('label')} % {buckets} AS bucket
+    SELECT label, {duckdb_md5_60('label')} % {buckets} AS bucket
     FROM (SELECT subj AS label FROM ns_tri UNION SELECT obj FROM ns_tri)
 ),
 ns_num AS MATERIALIZED (
@@ -1914,13 +1657,13 @@ FROM deg LEFT JOIN pn USING (label)
 
 def _shard_ctes(n_shards: int) -> str:
     from kgx.operators.packing import CHECKSUM_MOD  # noqa: F401 (doc link)
-    from kgx.oracles import _duck_md5_60 as _h
 
+    h = duckdb_md5_60("cast(doc_id as varchar)")
     tok = "len(list_filter(str_split(text, ' '), t -> t <> ''))"
     return f"""
 sh AS MATERIALIZED (
     SELECT doc_id,
-           CAST({_h("cast(doc_id as varchar)")} % {n_shards} AS BIGINT) AS shard,
+           CAST({h} % {n_shards} AS BIGINT) AS shard,
            CAST({tok} AS BIGINT) AS n_tokens,
            CAST(length(text) AS BIGINT) AS n_chars
     FROM documents
@@ -1955,7 +1698,7 @@ def shard_manifest_sql(n_shards: int) -> str:
     kgx.operators.packing.shard_manifest)."""
     from kgx.operators.packing import CHECKSUM_MOD
 
-    h = _duck_md5_60("cast(doc_id as varchar)")
+    h = duckdb_md5_60("cast(doc_id as varchar)")
     return f"""
 WITH {_shard_ctes(n_shards)}
 SELECT shard,
@@ -1971,8 +1714,8 @@ def token_mix_sql() -> str:
     """Oracle for the source-mixing token-budget plan (mirror of
     kgx.operators.packing.token_mix_plan; shares the WEIGHT fixture via the
     same md5-60 derivation)."""
-    h = _duck_md5_60("cast(doc_id as varchar)")
-    w = f"(1 + {_duck_md5_60('source')} % 3)"
+    h = duckdb_md5_60("cast(doc_id as varchar)")
+    w = f"(1 + {duckdb_md5_60('source')} % 3)"
     tok = "len(list_filter(str_split(text, ' '), t -> t <> ''))"
     return f"""
 WITH base AS MATERIALIZED (
@@ -2023,7 +1766,7 @@ def funnel_export_sql(n_shards: int, capacity: int, **funnel_kwargs) -> str:
     from kgx.operators.packing import CHECKSUM_MOD
 
     funnel = curation_funnel_sql(**funnel_kwargs)
-    h = _duck_md5_60("cast(doc_id as varchar)")
+    h = duckdb_md5_60("cast(doc_id as varchar)")
     tok = "len(list_filter(str_split(text, ' '), t -> t <> ''))"
     return f"""
 WITH curated AS MATERIALIZED (
@@ -2093,46 +1836,6 @@ FROM enr WHERE kind = 'media'
 """.strip()
 
 
-def seq_pack_interleaved_sql(
-    capacity: int, n_shards: int, media_token_cost: int
-) -> str:
-    """Oracle for multimodal sequence packing (mirror of
-    kgx.operators.packing.seq_pack_interleaved): per-doc cost = text tokens
-    + media spans x vision-encoder cost, then the same per-shard
-    running-sum chunking as seq_pack_sql."""
-    h = _duck_md5_60("cast(doc_id as varchar)")
-    return f"""
-WITH sp_all AS ({spans_sql()}),
-doc_cost AS (
-    SELECT doc_id,
-           CAST(sum(CASE WHEN kind = 'text'
-                    THEN len(list_filter(str_split(text, ' '), t -> t <> ''))
-                    ELSE 0 END) AS BIGINT) AS text_tokens,
-           CAST(sum(CASE WHEN kind = 'media' THEN 1 ELSE 0 END) AS BIGINT) AS media_spans
-    FROM sp_all GROUP BY 1
-),
-costed AS (
-    SELECT doc_id,
-           CAST({h} % {n_shards} AS BIGINT) AS shard,
-           text_tokens, media_spans,
-           text_tokens + {media_token_cost} * media_spans AS cost
-    FROM doc_cost
-    WHERE text_tokens + {media_token_cost} * media_spans > 0
-),
-cum AS (
-    SELECT *, sum(cost) OVER (PARTITION BY shard ORDER BY doc_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-    FROM costed
-)
-SELECT doc_id, shard, text_tokens, media_spans, cost,
-       CAST(c - cost AS BIGINT) AS start_tok,
-       CAST((c - cost) // {capacity} AS BIGINT) AS first_seq,
-       CAST((c - 1) // {capacity} AS BIGINT) AS last_seq,
-       CAST((c - 1) // {capacity} - (c - cost) // {capacity} + 1 AS BIGINT) AS n_seqs
-FROM cum
-""".strip()
-
-
 def kg_transe_margin_sql(dim: int, modulus: int, k: int, buckets: int) -> str:
     """Oracle for the per-predicate TransE energy audit (mirror of
     kgx.operators.graphstats.transe_margin): the full training-pair oracle
@@ -2142,9 +1845,9 @@ def kg_transe_margin_sql(dim: int, modulus: int, k: int, buckets: int) -> str:
     from kgx.functions.hashing import minhash_derived
 
     half = modulus // 2
-    hs = _duck_md5_60("concat('e|', subj)")
-    hp = _duck_md5_60("concat('r|', pred)")
-    ho = _duck_md5_60("concat('e|', obj)")
+    hs = duckdb_md5_60("concat('e|', subj)")
+    hp = duckdb_md5_60("concat('r|', pred)")
+    ho = duckdb_md5_60("concat('e|', obj)")
 
     def comp(h: str, d: int) -> str:
         return f"(({minhash_derived(h, d)}) % {modulus} - {half})"
@@ -2204,8 +1907,6 @@ def node2vec_walks_sql(
     candidate is the unique row whose [cum - w, cum) window contains
     md5_60(cur|walk_id|i|seed) % total — identical integer arithmetic,
     bit-for-bit walks."""
-    from kgx.functions.hashing import duckdb_md5_60
-
     ctes = _walk_base_ctes(walks_per_node, w0_name="nv_w0", with_prev=True)
     for i in range(1, length):
         h = duckdb_md5_60(
@@ -2259,34 +1960,6 @@ nv_w{i} AS (
 SELECT start_label, walk_id, walk,
        CAST(len(walk) AS BIGINT) AS walk_len
 FROM nv_w{length - 1}
-""".strip()
-
-
-def dataset_split_sql(val_bp: int, test_bp: int, strat_col: str, seed: str) -> str:
-    """Oracle for the deterministic split audit (mirror of
-    kgx.operators.curation.dataset_split): same seeded md5-60 threshold
-    assignment (kgx.functions.hashing.seeded, duckdb dialect), same
-    NULL stratum (its own group, keyed NULL), same per-stratum
-    floor-divided shares over a windowed stratum total."""
-    from kgx.functions.hashing import seeded
-
-    h = seeded("CAST(doc_id AS VARCHAR)", seed, "duckdb")
-    return f"""
-WITH ds_assigned AS (
-    SELECT {strat_col} AS stratum,
-           CASE WHEN ({h}) % 10000 < {test_bp} THEN 'test'
-                WHEN ({h}) % 10000 < {test_bp + val_bp} THEN 'val'
-                ELSE 'train' END AS split
-    FROM documents
-),
-ds_counts AS (
-    SELECT stratum, split, CAST(count(*) AS BIGINT) AS n_docs
-    FROM ds_assigned GROUP BY 1, 2
-)
-SELECT stratum, split, n_docs,
-       CAST((10000 * n_docs) // sum(n_docs) OVER (PARTITION BY stratum)
-            AS BIGINT) AS share_bp
-FROM ds_counts
 """.strip()
 
 

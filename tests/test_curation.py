@@ -1,4 +1,4 @@
-"""Corpus-curation operators: PII scrub, sentence dedup, decontamination."""
+"""Corpus-curation operators: PII scrub and sentence prune."""
 
 import pandas as pd
 import pytest
@@ -69,39 +69,6 @@ def test_pii_scrub_plan_is_pure_projection(spark, sf_dir):
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", gate_plan, re.M))
     assert n_exchanges <= 1, gate_plan  # input spread only
     assert "BatchEvalPython" not in gate_plan and "ArrowEvalPython" not in gate_plan
-
-
-@pytest.mark.usefixtures("spark")
-def test_sentence_dedup_stats_small(spark):
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2, 3],
-                "text": [
-                    "Click here to subscribe. Alpha beta gamma.",
-                    "click here to subscribe. Delta epsilon.",
-                    "Unique sentence one. Unique sentence two.",
-                ],
-            }
-        )
-    )
-    out = {r["doc_id"]: r.asDict() for r in curation.sentence_dedup_stats(docs).collect()}
-    # the boilerplate sentence is shared case-insensitively across docs 1+2
-    assert out[1]["n_sentences"] == 2 and out[1]["n_shared"] == 1
-    assert out[2]["n_shared"] == 1 and out[2]["shared_ratio"] == 0.5
-    assert out[3]["n_shared"] == 0
-
-
-@pytest.mark.usefixtures("spark")
-def test_sentence_dedup_shuffle_carries_hashes_not_text(spark, sf_dir):
-    """Both exchanges must partition on the 60-bit hash / doc_id — the
-    sentence string itself must be projected away before any exchange."""
-    import __spark_entry__ as em
-
-    plan = _plan(em.queries()["sentence_dedup"](spark, sf_dir))
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "sentence" not in line and "text" not in line, line
 
 
 @pytest.mark.usefixtures("spark")
@@ -185,61 +152,6 @@ def test_sentence_prune_no_sentence_text_in_exchanges(spark, sf_dir):
 
 
 @pytest.mark.usefixtures("spark")
-def test_balanced_sample_rates_and_determinism(spark):
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(range(400)), "text": ["w"] * 400})
-    )
-    strata = docs.selectExpr(
-        "doc_id",
-        "CASE WHEN doc_id < 300 THEN 'big' WHEN doc_id < 380 THEN 'mid'"
-        " ELSE 'small' END AS stratum",
-    )
-    out = {r["stratum"]: r.asDict() for r in curation.balanced_sample(docs, strata).collect()}
-    assert out["small"]["rate_bp"] == 10000  # minority keeps everything
-    assert out["small"]["n_sampled"] == out["small"]["n_docs"] == 20
-    assert out["big"]["rate_bp"] == (10000 * 20) // 300
-    assert out["mid"]["rate_bp"] == (10000 * 20) // 80
-    assert 0 < out["big"]["n_sampled"] <= out["big"]["n_docs"]
-    # hash-Bernoulli selection is reproducible run-to-run
-    again = {r["stratum"]: r.asDict() for r in curation.balanced_sample(docs, strata).collect()}
-    assert again == out
-
-
-@pytest.mark.usefixtures("spark")
-def test_contamination_screen_small(spark):
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2],
-                "text": [
-                    "the quick brown fox jumps",  # benchmark slice (0 % 19 == 0)
-                    "the quick brown cat sits",  # shares 'the quick brown'
-                    "entirely different words here now",
-                ],
-            }
-        )
-    )
-    out = {
-        r["doc_id"]: r.asDict()
-        for r in curation.contamination_screen(docs, bench_mod=19, n=3).collect()
-    }
-    assert 0 not in out  # benchmark docs are not scored
-    assert out[1]["n_shingles"] == 3 and out[1]["n_contaminated"] == 1
-    assert out[2]["n_contaminated"] == 0 and out[2]["contamination"] == 0.0
-
-
-@pytest.mark.usefixtures("spark")
-def test_contamination_benchmark_side_broadcasts(spark, sf_dir):
-    """The eval-suite hash set is bounded by construction → must broadcast;
-    the train side must not shuffle before the join."""
-    import __spark_entry__ as em
-
-    plan = _plan(em.queries()["contamination"](spark, sf_dir))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-@pytest.mark.usefixtures("spark")
 def test_sentence_prune_global_invariant(spark, sf_dir):
     """Corpus-wide conservation law: the kept-sentence count equals the
     number of DISTINCT normalized sentences — exactly one survivor each."""
@@ -261,77 +173,3 @@ def test_sentence_prune_global_invariant(spark, sf_dir):
         .count()
     )
     assert kept == distinct
-
-
-def _py_split(doc_ids, sources, val_bp=500, test_bp=500, seed="split"):
-    import hashlib
-
-    def md5_60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    out = {}
-    for d, s in zip(doc_ids, sources):
-        h = md5_60(f"{seed}|{d}") % 10000
-        split = "test" if h < test_bp else ("val" if h < test_bp + val_bp
-                                            else "train")
-        out[(s, split)] = out.get((s, split), 0) + 1
-    totals = {}
-    for (s, _), n in out.items():
-        totals[s] = totals.get(s, 0) + n
-    return {k: (n, (10000 * n) // totals[k[0]]) for k, n in out.items()}
-
-
-def test_dataset_split_matches_reference_and_is_stable(spark):
-    ids = [f"doc-{i}" for i in range(300)]
-    srcs = ["web" if i % 3 else "books" for i in range(300)]
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ids, "source": srcs})
-    )
-    got = {(r.stratum, r.split): (r.n_docs, r.share_bp)
-           for r in curation.dataset_split(df).collect()}
-    assert got == _py_split(ids, srcs)
-    # per-stratum shares sum to ~10000 (floor-rounding slack < #splits)
-    for s in {"web", "books"}:
-        tot = sum(bp for (st, _), (_, bp) in got.items() if st == s)
-        assert 10000 - 3 < tot <= 10000
-    # APPEND STABILITY: adding docs never moves an existing doc's split —
-    # the per-split hash population over the original ids is unchanged
-    # (assignment is a pure function of doc_id, not of the corpus)
-    df2 = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ids + [f"new-{i}" for i in range(100)],
-                      "source": srcs + ["web"] * 100})
-    )
-    ref2 = _py_split(ids + [f"new-{i}" for i in range(100)],
-                     srcs + ["web"] * 100)
-    got2 = {(r.stratum, r.split): (r.n_docs, r.share_bp)
-            for r in curation.dataset_split(df2).collect()}
-    assert got2 == ref2
-
-
-def test_dataset_split_rejects_bad_shares(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["a"], "source": ["web"]})
-    )
-    with pytest.raises(ValueError, match="bad split shares"):
-        curation.dataset_split(df, val_bp=6000, test_bp=6000)
-
-
-def test_dataset_split_keeps_null_strata(spark):
-    """NULL-source documents must appear in the audit as their own stratum
-    (key None), never silently dropped, and never merged with documents
-    whose source is the literal string '(null)'."""
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [f"d{i}" for i in range(40)],
-                      "source": ["web" if i % 2 else None if i % 4 else "(null)"
-                                 for i in range(40)]})
-    )
-    rows = curation.dataset_split(df).collect()
-    by_stratum, shares = {}, {}
-    for r in rows:
-        by_stratum[r.stratum] = by_stratum.get(r.stratum, 0) + r.n_docs
-        shares[r.stratum] = shares.get(r.stratum, 0) + r.share_bp
-    assert by_stratum.get(None, 0) == 10      # all NULL-source docs audited
-    assert by_stratum.get("(null)", 0) == 10  # literal '(null)' kept apart
-    assert sum(by_stratum.values()) == 40     # nothing dropped
-    # each stratum's shares are over its own total
-    assert all(10000 - 3 < bp <= 10000 for bp in shares.values()), shares

@@ -2,8 +2,11 @@
 the rotation table of docs/COVERAGE.md names every row past the driver
 gate, and the registered / gate / remainder counts quoted in COVERAGE and
 the README's driver-gate paragraph are the registry's own.  The generated
-docs/PLANS.md carries no run-specific expression ids."""
+docs/PLANS.md carries no run-specific expression ids, and its sections are
+the plan audit's ``SECTIONS`` and the epilogue's, each named for a
+registered query."""
 
+import importlib.util
 import os
 import re
 
@@ -53,3 +56,26 @@ def test_plans_doc_has_no_expression_ids():
     # plans that changed
     ids = re.findall(r"\w+#\d+", _read("docs/PLANS.md"))
     assert not ids, ids[:5]
+
+
+def _headings(rel: str) -> list[str]:
+    return [line[3:] for line in _read(rel).splitlines() if line.startswith("## ")]
+
+
+def test_plans_doc_sections_name_registered_queries():
+    """tools/plan_audit.py's ``SECTIONS`` and the hand-written epilogue name
+    only ``QUERIES`` rows, and docs/PLANS.md is their concatenation: a
+    section left behind by a deleted row fails here, without a Spark run
+    to regenerate the doc."""
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit", os.path.join(ROOT, "tools", "plan_audit.py")
+    )
+    plan_audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_audit)
+    sections = [name for name, _ in plan_audit.SECTIONS]
+    registered = set(entrymod.queries())
+    assert [n for n in sections if n not in registered] == []
+    epilogue = _headings("docs/PLANS_epilogue.md")
+    named = [n for heading in epilogue for n in heading.split(" / ")]
+    assert [n for n in named if n not in registered] == []
+    assert _headings("docs/PLANS.md") == sections + epilogue

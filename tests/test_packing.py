@@ -124,24 +124,3 @@ def test_token_mix_single_source_keeps_everything(spark, docs):
     assert len(rows) == 1
     assert rows[0].rate_bp == 10000
     assert rows[0].sampled_docs == rows[0].n_docs
-
-
-def test_seq_pack_interleaved_cost_and_conservation(spark, sf_dir):
-    """Multimodal packing: cost = text tokens + 576 x media spans; per-shard
-    contiguity holds exactly as in the text-only packer."""
-    import __spark_entry__ as em
-
-    rows = (
-        em.queries()["seq_pack_interleaved"](spark, sf_dir)
-        .orderBy("shard", "doc_id")
-        .collect()
-    )
-    assert rows
-    offset = {}
-    for r in rows:
-        assert r.cost == r.text_tokens + 576 * r.media_spans
-        assert r.start_tok == offset.get(r.shard, 0)
-        offset[r.shard] = r.start_tok + r.cost
-        assert r.n_seqs == (r.start_tok + r.cost - 1) // 4096 - r.start_tok // 4096 + 1
-    # media carries real weight in this corpus: some docs span chunks
-    assert any(r.media_spans > 0 for r in rows)

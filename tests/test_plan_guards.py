@@ -153,21 +153,6 @@ def test_fn_scalar_suite_has_no_exchange(spark, sf_dir):
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 1, plan
 
 
-def test_winnowed_fingerprints_keeps_projection_barriers(spark, sf_dir):
-    """Round 3: winnowed fingerprints MUST keep its two project_barrier
-    Generate nodes (plus the final explode = 3 Generates total).  Without
-    them CollapseProject inlines norm/gram_hashes into the HOF lambda
-    bodies and re-evaluates them PER ARRAY ELEMENT — O(L²·regex) per doc,
-    profiled at >10 minutes for 500 sub-KB documents."""
-    from kgx.operators import textstats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    plan = textstats.winnowed_fingerprints(docs)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert plan.count("Generate") >= 3, plan
-
-
 def _physical(spark, df, mode="simple"):
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
@@ -189,21 +174,6 @@ def test_minhash_verify_evaluates_intersection_once(spark, sf_dir):
     assert plan.count("array_intersect") == 1, plan
 
 
-def test_repetition_stats_single_scan_no_join(spark, sf_dir):
-    """Round 5: both gram sizes + the char count must ride ONE corpus scan
-    and fuse into one conditional aggregation — a filter-per-half
-    formulation lets Catalyst push the tag predicates below the count
-    exchange and silently DUPLICATE the tokenize+explode scan (observed:
-    2 FileScans, 0 ReusedExchange), and a join-of-halves re-evaluates the
-    aggregate subplan per branch."""
-    from kgx.operators import textstats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    plan = _physical(spark, textstats.repetition_stats(docs))
-    assert plan.count("Scan parquet") == 1, plan
-    assert "Join" not in plan, plan
-
-
 def test_round4_operators_have_no_cartesian(spark, sf_dir):
     """The r4 graph and versioning family must never degrade to a
     cartesian or nested-loop join (except the 1-row broadcast count
@@ -220,4 +190,3 @@ def test_round4_operators_have_no_cartesian(spark, sf_dir):
     ):
         plan = _physical(spark, qs[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, (name, plan)
-

@@ -173,7 +173,7 @@ def test_quality_filter_matches_python_reference_bulk(spark):
         chars = sum(len(t) for t in toks)
         uniq = len(set(toks))
         punct = sum(c in ".!?,;:" for c in text)
-        stop = sum(t in textstats.LANG_MARKERS["en"] for t in toks)
+        stop = sum(t in textstats.EN_STOP_WORDS for t in toks)
         conds = {
             "too_few_tokens": n < min_tokens,
             "too_many_tokens": n > max_tokens,

@@ -248,18 +248,7 @@ def test_every_def_has_a_non_test_caller():
 #: public defs in job-imported kgx modules that no ``jobs/`` entry reaches,
 #: as ``module.def``, each with why it stays
 OFF_JOB_DEFS = {
-    "textstats.text_stats": "text-analysis extra, the `text_stats` row",
-    "textstats.token_counts": "text-analysis extra, the `token_counts` row",
-    "textstats.vocab_topk": "text-analysis extra, the `vocab_topk` row",
-    "textstats.repetition_stats": "Gopher repetition signals, the `repetition_stats` row",
-    "textstats.fingerprints": "SURVEY §2.9 normalized md5, the `fingerprints` row",
-    "textstats.winnowed_fingerprints": "MOSS fingerprints, the `fingerprints_winnowed` row",
-    "curation.sentence_dedup_stats": "CCNet duplicate-sentence audit, the `sentence_dedup` row",
-    "curation.balanced_sample": "stratified sampling extra, the `balanced_sample` row",
-    "curation.contamination_screen": "n-gram decontamination extra, the `contamination` row",
-    "curation.dataset_split": "train/val/test split audit, the `dataset_split` row",
     "curation.pii_fixture_expr": "plants the PII of the `pii_scrub` row and its oracle",
-    "packing.seq_pack_interleaved": "multimodal packing, the `seq_pack_interleaved` row",
     "spans.explode_spans": "SURVEY W5 span explode, the `kg_spans` row",
     "spans.reassemble_spans": "SURVEY W5 reassembly after a shuffle, the `kg_doc_text` row",
     "validate.graph_checks": "SURVEY P7/P9 per-graph checks, the `p9_graph_checks` row",
@@ -268,6 +257,7 @@ OFF_JOB_DEFS = {
     "corpus.replicate": "perfbench's corpus scale-up",
     "corpus.heavy_tail": "perfbench's long-document skew",
     "docs.load_documents": "the documents scan of perfbench and the gate's inputs",
+    "hashing.duckdb_md5_60": "oracle dialect of `spark_md5_60`",
 }
 
 

@@ -33,9 +33,6 @@ SECTIONS = [
     ("fn_scalar_suite",
      "Whole scalar family in one projection over a 2-column pruned scan — "
      "zero exchanges."),
-    ("token_counts",
-     "Dual tokenizer counts (whitespace + BPE-ish regex) in one zero-"
-     "exchange projection; regex runs JVM-side inside codegen."),
     ("quality_filter",
      "Gopher/C4 composite gate: all seven rule verdicts + composed "
      "fail_reasons in ONE codegen projection — zero exchanges, no Python."),
@@ -76,10 +73,6 @@ SECTIONS = [
      "CCNet removal pass: exploded sentences shed their text before any "
      "exchange (hash/key bigints only); text moves once, in the final "
      "doc_id equi-join that rebuilds pruned documents."),
-    ("contamination",
-     "Decontamination screen: benchmark n-gram hash set broadcast "
-     "(bounded by eval-suite size); the train side never shuffles before "
-     "the join."),
     ("curation_funnel",
      "End-to-end curation funnel: survivor-set boundaries are "
      "`plan.materialize` checkpoints, so the plan starts at Scan ExistingRDD "
@@ -91,10 +84,6 @@ SECTIONS = [
      "equi-join of the edge list against the (label, rank) bigint table "
      "plus one partial-aggregated exchange — the plan a 10^12-doc KG "
      "needs, with checkpoint_every lineage truncation for deep runs."),
-    ("vocab_topk",
-     "Vocabulary head: partial HashAggregate collapses hot tokens "
-     "map-side; the global head is TakeOrderedAndProject (per-partition "
-     "heaps), not a full sort."),
     ("graph_random_walks",
      "Round 5 (DeepWalk walk corpus: node2vec_walks with equal weights, "
      "so no step joins the predecessor's adjacency): length−1 unrolled "
@@ -118,21 +107,10 @@ SECTIONS = [
      "Source-mixing plan: two map-side-combined aggregates over the "
      "corpus; the |sources|-row rate table broadcasts back for the "
      "sampling audit."),
-    ("fingerprints_winnowed",
-     "Round 3: the two project_barrier Generate nodes pin norm and "
-     "gram_hashes as bound attributes — without them CollapseProject "
-     "re-evaluated the gram array per sliding-window element "
-     "(O(L^2) regex per doc; >10 min for 500 sub-KB docs)."),
     ("funnel_export",
      "The composed curation-to-export plan: funnel survivor boundaries are "
      "`plan.materialize` checkpoints (Scan ExistingRDD), then one shard-keyed "
      "exchange feeds both the manifest aggregate and the packing window."),
-    ("repetition_stats",
-     "Round 5 (Gopher repetition signals): tokenization hoisted behind "
-     "project_barrier Generates so the gram lambdas slice a bound array "
-     "(inlined split would re-tokenize per gram position); both shuffles "
-     "carry (doc_id, 60-bit hash) bigints — text never crosses an "
-     "exchange."),
 ]
 
 
