@@ -35,7 +35,6 @@ HEADLINE = (
     "kg_triples",
     "link_canonical_triples",
     "dedup_minhash_lsh",
-    "seq_pack",
     "quality_filter",
     "curation_funnel",
     "a1_pricing_summary",

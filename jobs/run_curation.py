@@ -32,7 +32,6 @@ def main(argv=None) -> int:
     p.add_argument("--no-sentence-prune", action="store_true")
     p.add_argument("--resume", action="store_true",
                    help="commit per-stage snapshots; skip stages already committed in --out")
-    p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
     if not 0 < args.near_dup_threshold <= 1:
         p.error(f"--near-dup-threshold must be in (0, 1], got {args.near_dup_threshold}")
@@ -40,7 +39,7 @@ def main(argv=None) -> int:
     from kgx.plans.curation_pipeline import CurationConfig, run
     from kgx.session import get_spark
 
-    spark = get_spark("kgx-curation", master=args.master)
+    spark = get_spark("kgx-curation")
     documents = spark.read.parquet(args.input).select("doc_id", "text")
     metrics = run(
         spark,

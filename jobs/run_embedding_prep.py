@@ -58,7 +58,6 @@ def main(argv=None) -> int:
                    help="node2vec distance-1 weight, --biased only (default 4)")
     p.add_argument("--w-far", type=int,
                    help="node2vec distance-2 weight (~1/q), --biased only (default 2)")
-    p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
     if not args.biased and any(getattr(args, k) is not None for k in weights):
         p.error("--w-return/--w-near/--w-far apply only to --biased walks")
@@ -74,7 +73,7 @@ def main(argv=None) -> int:
     from kgx.plans import pipeline
     from kgx.session import get_spark
 
-    spark = get_spark("kgx-embedding-prep", master=args.master)
+    spark = get_spark("kgx-embedding-prep")
     triples = pipeline.read_output(spark, args.graph, "triples")
     # the walk corpus feeds BOTH its own write and the skip-gram pass —
     # persist the bounded (labels + short array) table once

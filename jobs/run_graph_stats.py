@@ -38,7 +38,6 @@ def main(argv=None) -> int:
     p.add_argument("--negatives-k", type=at_least(0), default=2,
                    help="negative samples per distinct triple (0 = skip)")
     p.add_argument("--negatives-buckets", type=at_least(1), default=64)
-    p.add_argument("--master", default=None, help="override (sandbox runs)")
     args = p.parse_args(argv)
 
     from pyspark import StorageLevel
@@ -48,7 +47,7 @@ def main(argv=None) -> int:
     from kgx.plans import pipeline
     from kgx.session import get_spark
 
-    spark = get_spark("kgx-graph-stats", master=args.master)
+    spark = get_spark("kgx-graph-stats")
     triples = pipeline.read_output(spark, args.graph, "triples")
     # one cached canonical edge list feeds all three analytics
     edges = graphstats.edge_list(triples).persist(StorageLevel.MEMORY_AND_DISK)

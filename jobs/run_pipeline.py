@@ -67,17 +67,11 @@ def main(argv=None) -> int:
         use_minhash_linking=args.minhash_linking,
     )
 
-    from pyspark.sql import SparkSession
+    from kgx.session import get_spark
 
-    from kgx.session import ANSWER_CONF, get_spark
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        spark = get_spark("kgx-pipeline")
-    # a session spark-submit built keeps the cluster's shuffle and memory
-    # settings, but not a cluster default that changes answers
-    for key, value in ANSWER_CONF.items():
-        spark.conf.set(key, value)
+    # keeps the master, shuffle and memory settings spark-submit was given,
+    # but not a cluster default that changes answers
+    spark = get_spark("kgx-pipeline")
 
     from kgx.sources import corpus, docs as docs_src
 

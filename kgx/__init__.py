@@ -5,8 +5,9 @@ Re-expresses the capabilities of the reference single-node service
 a multi-executor cluster at 10^12-document scale:
 
 - ``kgx.sources``    : interleaved text+media span tables (synthesis + IO)
-- ``kgx.operators``  : extraction, linking, canonicalization, dedup,
-                       curation, text and graph analytics, media plumbing
+- ``kgx.operators``  : extraction, validation, linking, canonicalization,
+                       dedup, the quality gate, curation, graph analytics,
+                       media plumbing
 - ``kgx.functions``  : reusable Column expressions (hashing, shingles, text)
 - ``kgx.plans``      : the end-to-end pipeline with per-partition lineage and
                        checkpoint resumability

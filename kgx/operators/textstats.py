@@ -1,8 +1,8 @@
 """The per-document quality gate of the curation funnel.
 
 :func:`quality_filter` scores every document against Gopher/C4-style rules
-before dedup and extraction; its whitespace tokenizer :data:`TOKENS_EXPR`
-also counts the tokens the packing operators budget (kgx.operators.packing).
+before dedup and extraction, over the whitespace tokenizer
+:data:`TOKENS_EXPR`.
 Everything is built-in Spark SQL functions (JVM-side, codegen'd, no UDFs),
 and arithmetic avoids transcendentals so the DuckDB oracle reproduces values
 bit-for-bit (integer counts + IEEE division only).

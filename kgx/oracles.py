@@ -1415,7 +1415,7 @@ FROM kc_e{max_rounds} GROUP BY 1
 
 def _tri_cte_head() -> str:
     """The full triples oracle re-packaged as CTE chain + a materialized
-    ``tri`` table (shared by the version-diff and negative-sampling
+    ``tri`` table (shared by the version-diff, SCD2 and negative-sampling
     oracles — one extraction replay, referenced many times)."""
     tri = triples_sql()
     body = tri[len("WITH "):]
@@ -1647,167 +1647,6 @@ SELECT deg.label,
        CAST(coalesce(pn.triangles, 0) AS BIGINT) AS triangles,
        deg.degree
 FROM deg LEFT JOIN pn USING (label)
-""".strip()
-
-
-# ---------------------------------------------------------------------------
-# training-data export: sharding / packing / mixing (kgx.operators.packing)
-# ---------------------------------------------------------------------------
-
-
-def _shard_ctes(n_shards: int) -> str:
-    from kgx.operators.packing import CHECKSUM_MOD  # noqa: F401 (doc link)
-
-    h = duckdb_md5_60("cast(doc_id as varchar)")
-    tok = "len(list_filter(str_split(text, ' '), t -> t <> ''))"
-    return f"""
-sh AS MATERIALIZED (
-    SELECT doc_id,
-           CAST({h} % {n_shards} AS BIGINT) AS shard,
-           CAST({tok} AS BIGINT) AS n_tokens,
-           CAST(length(text) AS BIGINT) AS n_chars
-    FROM documents
-    WHERE {tok} > 0
-)
-""".strip()
-
-
-def seq_pack_sql(capacity: int, n_shards: int) -> str:
-    """Oracle for concat-then-chunk sequence packing (mirror of
-    kgx.operators.packing.seq_pack): per-shard running token sum in
-    (shard, doc_id) order, chunk ids by toward-zero integer division."""
-    return f"""
-WITH {_shard_ctes(n_shards)},
-cum AS (
-    SELECT doc_id, shard, n_tokens,
-           sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-    FROM sh
-)
-SELECT doc_id, shard, n_tokens,
-       CAST(c - n_tokens AS BIGINT) AS start_tok,
-       CAST((c - n_tokens) // {capacity} AS BIGINT) AS first_seq,
-       CAST((c - 1) // {capacity} AS BIGINT) AS last_seq,
-       CAST((c - 1) // {capacity} - (c - n_tokens) // {capacity} + 1 AS BIGINT) AS n_seqs
-FROM cum
-""".strip()
-
-
-def shard_manifest_sql(n_shards: int) -> str:
-    """Oracle for per-shard export manifests (mirror of
-    kgx.operators.packing.shard_manifest)."""
-    from kgx.operators.packing import CHECKSUM_MOD
-
-    h = duckdb_md5_60("cast(doc_id as varchar)")
-    return f"""
-WITH {_shard_ctes(n_shards)}
-SELECT shard,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CAST(sum({h} % {CHECKSUM_MOD}) AS BIGINT) AS checksum
-FROM sh GROUP BY shard
-""".strip()
-
-
-def token_mix_sql() -> str:
-    """Oracle for the source-mixing token-budget plan (mirror of
-    kgx.operators.packing.token_mix_plan; shares the WEIGHT fixture via the
-    same md5-60 derivation)."""
-    h = duckdb_md5_60("cast(doc_id as varchar)")
-    w = f"(1 + {duckdb_md5_60('source')} % 3)"
-    tok = "len(list_filter(str_split(text, ' '), t -> t <> ''))"
-    return f"""
-WITH base AS MATERIALIZED (
-    SELECT doc_id, source,
-           CAST({w} AS BIGINT) AS weight,
-           CAST({tok} AS BIGINT) AS n_tokens,
-           CAST({h} % 10000 AS BIGINT) AS u
-    FROM documents
-    WHERE {tok} > 0
-),
-per_source AS (
-    SELECT source, weight, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-    FROM base GROUP BY 1, 2
-),
-binding AS (
-    SELECT n_tokens AS bn, weight AS bw
-    FROM per_source
-    ORDER BY CAST(n_tokens AS DOUBLE) / weight ASC, source ASC
-    LIMIT 1
-),
-rates AS (
-    SELECT source, weight, n_docs, n_tokens,
-           CAST(least(10000, (10000 * weight * b.bn) // (b.bw * n_tokens)) AS BIGINT) AS rate_bp
-    FROM per_source, binding b
-),
-picked AS (
-    SELECT b.source, CAST(count(*) AS BIGINT) AS sampled_docs,
-           CAST(sum(b.n_tokens) AS BIGINT) AS sampled_tokens
-    FROM base b JOIN rates r USING (source)
-    WHERE b.u < r.rate_bp
-    GROUP BY 1
-)
-SELECT r.source, r.weight, r.n_docs, r.n_tokens, r.rate_bp,
-       CAST(coalesce(p.sampled_docs, 0) AS BIGINT) AS sampled_docs,
-       CAST(coalesce(p.sampled_tokens, 0) AS BIGINT) AS sampled_tokens
-FROM rates r LEFT JOIN picked p USING (source)
-""".strip()
-
-
-def funnel_export_sql(n_shards: int, capacity: int, **funnel_kwargs) -> str:
-    """Oracle for the composed curation→export story (mirror of
-    __spark_entry__.q_funnel_export): the five-stage funnel's survivors
-    (curation_funnel_sql, nested as a materialized CTE) flow into the
-    deterministic sharder, per-shard manifests and the concat-then-chunk
-    packing window — the full pretraining-export pipeline value-checked
-    end-to-end, not stage-by-stage."""
-    from kgx.operators.packing import CHECKSUM_MOD
-
-    funnel = curation_funnel_sql(**funnel_kwargs)
-    h = duckdb_md5_60("cast(doc_id as varchar)")
-    tok = "len(list_filter(str_split(text, ' '), t -> t <> ''))"
-    return f"""
-WITH curated AS MATERIALIZED (
-{funnel}
-),
-sh AS MATERIALIZED (
-    SELECT doc_id,
-           CAST({h} % {n_shards} AS BIGINT) AS shard,
-           CAST({tok} AS BIGINT) AS n_tokens,
-           CAST(length(text) AS BIGINT) AS n_chars
-    FROM curated
-    WHERE {tok} > 0
-),
-cum AS (
-    SELECT doc_id, shard, n_tokens,
-           sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-    FROM sh
-),
-pk AS (
-    SELECT shard,
-           (c - 1) // {capacity} AS last_seq,
-           CASE WHEN (c - 1) // {capacity} > (c - n_tokens) // {capacity}
-                THEN 1 ELSE 0 END AS spans
-    FROM cum
-),
-pstats AS (
-    SELECT shard,
-           CAST(max(last_seq) + 1 AS BIGINT) AS n_seqs,
-           CAST(sum(spans) AS BIGINT) AS spanning_docs
-    FROM pk GROUP BY shard
-)
-SELECT m.shard,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(m.n_tokens) AS BIGINT) AS n_tokens,
-       CAST(sum(m.n_chars) AS BIGINT) AS n_chars,
-       CAST(sum({h} % {CHECKSUM_MOD}) AS BIGINT) AS checksum,
-       any_value(p.n_seqs) AS n_seqs,
-       any_value(p.spanning_docs) AS spanning_docs
-FROM sh m JOIN pstats p USING (shard)
-GROUP BY m.shard
 """.strip()
 
 

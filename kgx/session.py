@@ -1,8 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Used by tests and benchmarks; production runs pass their own session from
-``spark-submit``.  Every setting here is cluster-safe — the same config block
-is what we'd ship in ``spark-defaults.conf`` for a 1000-executor job:
+Used by the jobs, tests and benchmarks.  The master, the shuffle-partition
+count and the driver memory are defaults: a setting the launch gave
+(``spark-submit --master``/``--conf``, ``spark-defaults.conf``) wins over
+them, and an explicit argument wins over both.  Every setting here is
+cluster-safe — the same config block is what we'd ship in
+``spark-defaults.conf`` for a 1000-executor job:
 
 - AQE on (runtime coalescing + skew-join splitting) — the heavy-tail doc-size
   distribution makes static partition sizing wrong at 100 TB.
@@ -12,10 +15,10 @@ is what we'd ship in ``spark-defaults.conf`` for a 1000-executor job:
   coalesces from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
   downward, so oversizing is safe and undersizing is not.
 - ANSI mode and the UTC session time zone pinned (:data:`ANSWER_CONF`),
-  not inherited from a cluster's ``spark-defaults``: every fixed-point
-  operator (PageRank, node2vec weights, token_mix rates) relies on
-  bigint overflow raising ARITHMETIC_OVERFLOW; with ANSI off it would wrap
-  around silently.
+  not inherited from a cluster's ``spark-defaults``: the fixed-point graph
+  operators (PageRank ranks, node2vec weights) and ``sentence_prune``'s
+  ``doc_id * 2^20 + idx`` order key rely on bigint overflow raising
+  ARITHMETIC_OVERFLOW; with ANSI off it would wrap around silently.
 """
 
 from __future__ import annotations
@@ -27,8 +30,8 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 
-#: The settings answers depend on.  ``get_spark`` builds with them, and a job
-#: that runs on a session it did not build sets them on that session.
+#: The settings answers depend on.  ``get_spark`` sets them on every session
+#: it returns, one that already ran included, whatever the launch set.
 ANSWER_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "true",
@@ -70,6 +73,19 @@ def _default_driver_mem() -> str:
     return f"{max(2, half)}g"
 
 
+def _launch_conf() -> dict[str, str]:
+    """The settings the driver JVM was launched with, or none while no JVM
+    runs.  Under ``spark-submit`` the JVM starts before the job script, so
+    this is what the submit set."""
+    from pyspark import SparkConf, SparkContext
+
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+    if SparkContext._jvm is None:
+        return {}
+    return dict(SparkConf().getAll())
+
+
 def get_spark(
     app_name: str = "kgx",
     master: str | None = None,
@@ -77,13 +93,20 @@ def get_spark(
     arrow_batch_rows: int = 1024,
 ) -> SparkSession:
     cores = default_parallelism()
-    master = master or os.environ.get("KGX_MASTER", f"local[{cores}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 8)
+    defaults = {
+        "spark.master": os.environ.get("KGX_MASTER", f"local[{cores}]"),
+        "spark.sql.shuffle.partitions": str(max(2 * cores, 8)),
+        "spark.driver.memory": os.environ.get("KGX_DRIVER_MEM", _default_driver_mem()),
+    }
+    launched = _launch_conf()
+    conf = {k: v for k, v in defaults.items() if k not in launched}
+    if master:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(map=conf)
         .config(map=ANSWER_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -91,7 +114,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("KGX_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -1,10 +1,10 @@
 """Every bounded ``jobs/*`` flag is checked before a Spark session starts:
 a bad value exits with argparse's usage error (status 2) naming the flag.
 
-Each case runs the job as a subprocess — ``main()`` in-process would stop
-(``run_export``) or re-configure the shared test session.  The input path
-does not exist, so a job that let the bad value through would fail later,
-after starting Spark, with a different error."""
+Each case runs the job as a subprocess — ``main()`` in-process would
+re-configure the shared test session.  The input path does not exist, so a
+job that let the bad value through would fail later, after starting Spark,
+with a different error."""
 
 import os
 import subprocess
@@ -15,8 +15,6 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CASES = [
-    ("run_export", "--input", "--n-shards", "0"),
-    ("run_export", "--input", "--capacity", "0"),
     ("run_graph_stats", "--graph", "--kcore-k", "0"),
     ("run_graph_stats", "--graph", "--negatives-buckets", "0"),
     ("run_graph_stats", "--graph", "--pagerank-iters", "-1"),

@@ -8,6 +8,12 @@ import pytest
 from kgx.functions import hashing
 
 
+def _physical(spark, df):
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
 def test_minhash_derived_matches_duckdb_and_python():
     """The universal-hash derivation must produce identical values in
     Python, DuckDB, and (by construction, same integer ops) Spark SQL."""
@@ -51,9 +57,7 @@ def test_kg_triples_scan_prunes_to_two_columns(spark, sf_dir):
     import __spark_entry__ as em
 
     df = em.queries()["kg_triples"](spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _physical(spark, df)
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans, plan
     for line in scans:
@@ -92,9 +96,7 @@ def test_jn2_graph_fetch_has_no_exchange(spark, sf_dir):
     import __spark_entry__ as em
 
     df = em.queries()["jn2_graph_fetch"](spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _physical(spark, df)
     assert "HashAggregate" not in plan and "SortMergeJoin" not in plan, plan
 
 
@@ -109,33 +111,15 @@ def test_quality_filter_has_no_exchange_and_no_udf(spark, sf_dir):
     from kgx.operators import textstats
 
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    op_plan = textstats.quality_filter(raw)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    op_plan = _physical(spark, textstats.quality_filter(raw))
     assert "Exchange" not in op_plan, op_plan
 
     import __spark_entry__ as em
 
     df = em.queries()["quality_filter"](spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _physical(spark, df)
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-
-
-def test_dedup_clusters_plan_has_no_cartesian(spark, sf_dir):
-    """Corpus clustering must stay LSH-bucketed end-to-end: a
-    CartesianProduct/BroadcastNestedLoopJoin anywhere in the plan means the
-    pair graph degenerated to all-pairs."""
-    import __spark_entry__ as em
-
-    df = em.queries()["dedup_clusters"](spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_fn_scalar_suite_has_no_exchange(spark, sf_dir):
@@ -147,16 +131,8 @@ def test_fn_scalar_suite_has_no_exchange(spark, sf_dir):
     import __spark_entry__ as em
 
     df = em.queries()["fn_scalar_suite"](spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = _physical(spark, df)
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 1, plan
-
-
-def _physical(spark, df, mode="simple"):
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-    )
 
 
 def test_minhash_verify_evaluates_intersection_once(spark, sf_dir):
@@ -170,23 +146,24 @@ def test_minhash_verify_evaluates_intersection_once(spark, sf_dir):
     from kgx.operators import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    plan = _physical(spark, dedup.minhash_lsh_pairs(docs), "formatted")
+    plan = _physical(spark, dedup.minhash_lsh_pairs(docs))
     assert plan.count("array_intersect") == 1, plan
 
 
-def test_round4_operators_have_no_cartesian(spark, sf_dir):
-    """The r4 graph and versioning family must never degrade to a
-    cartesian or nested-loop join (except the 1-row broadcast count
-    pattern): a cartesian over a web-scale label/triple table is the
-    100×-scale killer every bucket/cap design here exists to avoid."""
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_clusters", "graph_kcore", "kg_negative_samples", "graph_triangles",
+     "kg_version_diff", "link_minhash_pairs", "link_canonical_triples"],
+)
+def test_plan_has_no_cartesian(spark, sf_dir, name):
+    """Pair, graph, linking and versioning rows stay bucketed or key-joined:
+    a CartesianProduct or BroadcastNestedLoopJoin anywhere in the plan means
+    a pair graph or a triple join degenerated to all-pairs, the 100×-scale
+    killer every bucket/cap design here exists to avoid.
+    ``kg_scd2_intervals`` is left out: its 1-row max(run_seq) broadcast is
+    a nested-loop join by design."""
     import __spark_entry__ as em
 
-    qs = em.queries()
-    for name in (
-        "graph_kcore",
-        "kg_negative_samples",
-        "graph_triangles",
-        "kg_version_diff",
-    ):
-        plan = _physical(spark, qs[name](spark, sf_dir))
-        assert "CartesianProduct" not in plan, (name, plan)
+    plan = _physical(spark, em.queries()[name](spark, sf_dir))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan

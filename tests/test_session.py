@@ -1,6 +1,10 @@
-"""Session settings that answers depend on are pinned by get_spark and by
-the pipeline job on a session it did not build, not inherited from cluster
-defaults."""
+"""Session settings that answers depend on are pinned by get_spark, on a
+session that already ran too, not inherited from cluster defaults; the
+settings a spark-submit launch gives win over get_spark's defaults."""
+
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -9,7 +13,8 @@ from kgx.session import get_spark
 
 def test_get_spark_pins_ansi_mode(spark):
     # a cluster default (or an earlier caller) turning ANSI off must not
-    # survive get_spark: fixed-point operators rely on overflow raising
+    # survive get_spark: PageRank, node2vec weights and sentence_prune's
+    # doc_id * 2^20 + idx order key rely on overflow raising
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
@@ -22,8 +27,8 @@ def test_get_spark_pins_ansi_mode(spark):
 def test_run_pipeline_pins_answer_settings_on_the_active_session(
     spark, sf_dir, tmp_path
 ):
-    # under spark-submit run_pipeline reuses the session the cluster's
-    # defaults built; ANSI off or a local time zone there must not survive
+    # run_pipeline reuses a session that is already running; ANSI off or a
+    # local time zone there (a cluster default) must not survive
     from jobs import run_pipeline
 
     spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -38,6 +43,32 @@ def test_run_pipeline_pins_answer_settings_on_the_active_session(
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_get_spark_keeps_the_spark_submit_settings(tmp_path):
+    # a cluster submit must run on the cluster's master and shuffle width,
+    # not on get_spark's local defaults; ANSI is still pinned
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from kgx.session import get_spark\n"
+        "s = get_spark('probe')\n"
+        "print('PROBE', s.sparkContext.master,"
+        " s.conf.get('spark.sql.shuffle.partitions'),"
+        " s.conf.get('spark.sql.ansi.enabled'))\n"
+        "s.stop()\n"
+    )
+    env = {**os.environ, "PYTHONPATH": root, "PYSPARK_PYTHON": sys.executable,
+           "PYSPARK_DRIVER_PYTHON": sys.executable}
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[1]",
+         "--conf", "spark.sql.shuffle.partitions=3", str(probe)],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    probed = [line.split()[1:] for line in proc.stdout.splitlines()
+              if line.startswith("PROBE ")]
+    assert probed == [["local[1]", "3", "true"]], proc.stdout[-2000:]
 
 
 def test_bigint_overflow_raises(spark):

@@ -99,18 +99,6 @@ SECTIONS = [
      "then ONE map-side-"
      "combined count aggregate; the only full-width exchange carries "
      "pre-combined (center, context) rows."),
-    ("seq_pack",
-     "Concat-then-chunk packing: ONE hash exchange on shard, then a "
-     "per-shard running-sum window — never a global sort/single-partition "
-     "window."),
-    ("token_mix",
-     "Source-mixing plan: two map-side-combined aggregates over the "
-     "corpus; the |sources|-row rate table broadcasts back for the "
-     "sampling audit."),
-    ("funnel_export",
-     "The composed curation-to-export plan: funnel survivor boundaries are "
-     "`plan.materialize` checkpoints (Scan ExistingRDD), then one shard-keyed "
-     "exchange feeds both the manifest aggregate and the packing window."),
 ]
 
 
