@@ -71,11 +71,12 @@ def _then(src: Callable, op: Callable) -> Callable[[SparkSession, str], DataFram
 
 #: One cached extraction output at a time, shared by every query over the
 #: same (session, sf_dir).  The extraction mapInPandas pass is by far the
-#: most expensive stage, and 19 of the gate's 50 rows consume its output —
-#: caching it once cuts the correctness/bench walls accordingly.  Bounded by
-#: construction: inserting a new entry unpersists and evicts the previous
-#: one, so repeated runs over many sf dirs cannot accumulate executor memory
-#: (the round-1 per-query ``.cache()`` calls leaked exactly that way).
+#: most expensive stage, and every row over graphs, nodes or triples
+#: consumes its output — caching it once cuts the correctness/bench walls
+#: accordingly.  Bounded by construction: inserting a new entry unpersists
+#: and evicts the previous one, so repeated runs over many sf dirs cannot
+#: accumulate executor memory (the round-1 per-query ``.cache()`` calls
+#: leaked exactly that way).
 _GRAPH_CACHE: dict = {}
 
 
@@ -173,29 +174,10 @@ def q_curation_funnel(
     return funnel_final(narrative, cfg)
 
 
-def q_walk_skipgram_pairs(
-    triples: DataFrame, length: int, walks_per_node: int, seed: int, window: int
-) -> DataFrame:
-    """Skip-gram (center, context) pair counts over the uniform walk corpus."""
-    walks = graphstats.node2vec_walks(
-        triples, length=length, walks_per_node=walks_per_node, seed=seed,
-        w_return=1, w_near=1, w_far=1,
-    )
-    return graphstats.walk_skipgram_pairs(walks, window=window)
-
-
 def q_graph_kcore(triples: DataFrame, k: int, max_rounds: int) -> DataFrame:
     """The k-core the graph-stats job writes, peeled for at most
     ``max_rounds`` rounds (the round count is the job's metric, not a row)."""
     return graphstats.kcore_fixpoint(triples, k=k, max_rounds=max_rounds)[0]
-
-
-def q_kg_transe_margin(
-    triples: DataFrame, k: int, buckets: int, dim: int, modulus: int
-) -> DataFrame:
-    """Per-predicate TransE energy audit of the composed training set."""
-    pairs = graphstats.training_pairs(triples, k=k, buckets=buckets)
-    return graphstats.transe_margin(pairs, dim=dim, modulus=modulus)
 
 
 #: Two simulated earlier pipeline runs as slices of one extraction: the old
@@ -500,8 +482,7 @@ _MINHASH = dict(num_hashes=16, bands=8, threshold=0.5, max_bucket=200)
 
 #: The one query registry: ``(name, input, op, params, oracle)`` rows.  A
 #: parameter that exists on one side only (a dialect's column expression, a
-#: fixed key column) is bound there with ``partial``.  THE ORDER IS
-#: LOAD-BEARING: the driver's correctness gate records the FIRST 50 rows only.
+#: fixed key column) is bound there with ``partial``.
 QUERIES = (
     ("kg_spans", _spans, spans_op.explode_spans, {}, O.spans_sql),
     ("kg_doc_text", _flat_spans, q_kg_doc_text, {}, O.doc_text_sql),
@@ -582,19 +563,7 @@ QUERIES = (
      dict(k=2, buckets=64), O.kg_negative_samples_sql),
     ("media_captions", _flat_spans, media.media_caption_pairs, {},
      O.media_caption_pairs_sql),
-    # equal weights: uniform DeepWalk steps
-    ("graph_random_walks", _triples,
-     partial(graphstats.node2vec_walks, w_return=1, w_near=1, w_far=1),
-     dict(length=4, walks_per_node=2, seed=0), O.graph_random_walks_sql),
-    ("walk_skipgram_pairs", _triples, q_walk_skipgram_pairs,
-     dict(length=4, walks_per_node=2, seed=0, window=2), O.walk_skipgram_pairs_sql),
-    # ---- end of the driver gate; the rotation remainder follows (docs/COVERAGE.md)
-    ("kg_transe_margin", _triples, q_kg_transe_margin,
-     dict(k=2, buckets=64, dim=8, modulus=1024), O.kg_transe_margin_sql),
     ("a2_user_type_stats", _events, q_user_type_stats, {}, O.user_type_stats_sql),
-    ("graph_node2vec_walks", _triples, graphstats.node2vec_walks,
-     dict(length=4, walks_per_node=2, seed=0, w_return=1, w_near=4, w_far=2),
-     O.node2vec_walks_sql),
     ("kg_scd2_intervals", _triples, q_kg_scd2_intervals, {}, O.kg_scd2_sql),
 )
 
@@ -604,8 +573,8 @@ def _query(src: Callable, op: Callable, params: dict) -> Callable:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every registered engine query, in ``QUERIES`` order (first 50 = the
-    driver gate).  Each row is verifiable in one command:
+    """Every registered engine query, in ``QUERIES`` order.  Each row is
+    verifiable in one command:
     ``python tools/compare_oracle.py <sf_dir> <name>``."""
     return {n: _query(src, op, params) for n, src, op, params, _ in QUERIES}
 

@@ -5,7 +5,8 @@ clusters → PII scrub → sentence prune) over a raw (doc_id, text) corpus
 and writes ``<out>/curated`` plus a one-row ``<out>/funnel`` metrics
 table::
 
-    spark-submit --py-files dist/kgx.zip jobs/run_curation.py \\
+    spark-submit --py-files dist/kgx.zip --driver-memory 8g \\
+        jobs/run_curation.py \\
         --input /data/raw_documents_parquet --out /data/curated_out \\
         --min-tokens 50 --near-dup-threshold 0.5
 

@@ -3,7 +3,7 @@
 Deployment shape required by the north rule::
 
     python tools/package.py                       # builds dist/kgx.zip
-    spark-submit --py-files dist/kgx.zip \\
+    spark-submit --py-files dist/kgx.zip --driver-memory 8g \\
         jobs/run_pipeline.py \\
         --input  /data/docs_spans_parquet \\
         --out    /data/kg_out \\

@@ -1,7 +1,7 @@
 """Cross-engine deterministic hashing helpers.
 
-MinHash, exact dedup, the sentence prune, the graph samplers (negative
-sampling, walks, TransE embeddings) and the media fixtures need hash
+MinHash, exact dedup, the sentence prune, the negative sampler and the
+media fixtures need hash
 functions that produce IDENTICAL values in Spark and in the DuckDB oracle.
 ``xxhash64``/``hash`` differ between engines, so we derive 60-bit integers
 from md5 hex (stable everywhere):

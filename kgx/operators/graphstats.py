@@ -403,280 +403,3 @@ def training_pairs(
         .join(tri, ["subj", "pred", "obj"], "left_anti")
     )
     return pos.unionByName(neg)
-
-
-def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
-    """Windowed skip-gram co-occurrence counts over a walk corpus — the
-    (center, context) training-pair table a word2vec/node2vec trainer
-    consumes, composing directly over :func:`node2vec_walks` output.
-
-    Pair enumeration is IN-ROW over each walk array (nested array HOFs +
-    one Generate — no self-join, work per row bounded by
-    ``walk_len × 2·window``), followed by ONE
-    map-side-combined count aggregate, so the shuffle carries
-    pre-combined (center, context) rows.  Pairs keep multiplicity
-    (standard skip-gram), and a label co-occurring with itself from two
-    different walk positions is a legitimate pair.
-
-    Output: (center, context, n_pairs).
-    """
-    if window < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
-    W = int(window)
-    pairs = walks.select(
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(1, size(walk)), i -> "
-                f"transform(filter(sequence(greatest(1, i - {W}), "
-                f"least(size(walk), i + {W})), j -> j != i), "
-                f"j -> struct(element_at(walk, i) AS center, "
-                f"element_at(walk, j) AS context))))"
-            )
-        ).alias("p")
-    )
-    return pairs.select("p.center", "p.context").groupBy(
-        "center", "context"
-    ).agg(F.count("*").cast("long").alias("n_pairs"))
-
-
-def transe_margin(
-    pairs: DataFrame, dim: int = 8, modulus: int = 1024
-) -> DataFrame:
-    """Per-predicate TransE energy audit of the KG-embedding training set
-    (Bordes et al. 2013): score every (subj, pred, obj, is_positive) row
-    from :func:`training_pairs` with the L1 energy
-    ``||e_s + e_p - e_o||_1`` under DETERMINISTIC hash-derived integer
-    embeddings, then aggregate positives vs negatives per predicate.  The
-    margin column (mean negative energy minus mean positive energy) is the
-    quantity a margin-loss trainer maximizes — at init (which hash
-    embeddings are: a reproducible untrained model) it sits near zero, and
-    the table is the epoch-zero baseline an embedding-training pipeline
-    logs before the first gradient step.
-
-    Embedding contract: entity/relation component ``d`` is
-    ``uh_d(md5_60(ns|label)) % modulus - modulus/2`` — the universal-hash
-    family of kgx.functions.hashing (one md5 per row per column, dim
-    components by integer arithmetic; entities and relations live in
-    disjoint ``e|`` / ``r|`` namespaces).  Pure integer math end-to-end,
-    so the DuckDB oracle reproduces every energy bit-for-bit.
-
-    Scale shape: ONE map-side-combined aggregate on the 16-value pred key
-    over a pure projection (3 md5 + 3·dim fused integer ops per row, no
-    HOF lambda — the hash columns are referenced ``dim`` times, which
-    keeps CollapseProject from inlining the md5s, SPARK-36718); nothing
-    but pre-combined (pred, counters) rows ever shuffle.  Composes
-    directly over :func:`training_pairs`' bounded plan.
-
-    Output: (pred, n_pos, n_neg, sum_pos_energy, sum_neg_energy,
-    mean_pos_energy, mean_neg_energy, margin) — one row per predicate;
-    means are toward-zero integer divisions, NULL when a side is empty.
-    """
-    from kgx.functions.hashing import minhash_derived, spark_md5_60
-
-    if dim < 1 or modulus < 2:
-        raise ValueError(f"bad embedding shape dim={dim} modulus={modulus}")
-    half = modulus // 2
-    hashed = pairs.select(
-        "pred",
-        "is_positive",
-        F.expr(spark_md5_60("concat('e|', subj)")).alias("hs"),
-        F.expr(spark_md5_60("concat('r|', pred)")).alias("hp"),
-        F.expr(spark_md5_60("concat('e|', obj)")).alias("ho"),
-    )
-
-    def comp(h: str, d: int) -> str:
-        return f"(({minhash_derived(h, d)}) % {modulus} - {half})"
-
-    energy = " + ".join(
-        f"abs({comp('hs', d)} + {comp('hp', d)} - {comp('ho', d)})"
-        for d in range(dim)
-    )
-    scored = hashed.select(
-        "pred",
-        "is_positive",
-        F.expr(f"cast({energy} as bigint)").alias("energy"),
-    )
-    pos = F.col("is_positive") == 1
-    agg = scored.groupBy("pred").agg(
-        F.sum(F.when(pos, 1).otherwise(0)).cast("long").alias("n_pos"),
-        F.sum(F.when(~pos, 1).otherwise(0)).cast("long").alias("n_neg"),
-        F.sum(F.when(pos, F.col("energy")).otherwise(0)).cast("long").alias(
-            "sum_pos_energy"
-        ),
-        F.sum(F.when(~pos, F.col("energy")).otherwise(0)).cast("long").alias(
-            "sum_neg_energy"
-        ),
-    )
-    return agg.select(
-        "pred",
-        "n_pos",
-        "n_neg",
-        "sum_pos_energy",
-        "sum_neg_energy",
-        F.expr(
-            "CASE WHEN n_pos = 0 THEN NULL ELSE sum_pos_energy div n_pos END"
-        ).cast("long").alias("mean_pos_energy"),
-        F.expr(
-            "CASE WHEN n_neg = 0 THEN NULL ELSE sum_neg_energy div n_neg END"
-        ).cast("long").alias("mean_neg_energy"),
-        F.expr(
-            "CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL "
-            "ELSE sum_neg_energy div n_neg - sum_pos_energy div n_pos END"
-        ).cast("long").alias("margin"),
-    )
-
-
-def _walk_scaffold(
-    triples: DataFrame, walks_per_node: int
-) -> tuple[DataFrame, DataFrame]:
-    """Scaffolding of :func:`node2vec_walks`: pinned distinct edge list →
-    sorted adjacency table + the step-0 walk frontier (start_label,
-    walk_id, cur, prev, walk) with a NULL predecessor."""
-    # pinned: the adjacency aggregate and both node-union halves read it
-    e = materialize(edge_list(triples))
-    adj = e.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("nbrs"))
-    return adj, _node_labels(e).selectExpr(
-        "label AS start_label",
-        f"explode(sequence(0, {walks_per_node - 1})) AS w",
-        "label AS cur",
-        "cast(null as string) AS prev",
-        "array(label) AS walk",
-    ).selectExpr("start_label", "cast(w as bigint) AS walk_id", "cur", "prev", "walk")
-
-
-def node2vec_walks(
-    triples: DataFrame,
-    length: int = 4,
-    walks_per_node: int = 2,
-    seed: int = 0,
-    w_return: int = 1,
-    w_near: int = 4,
-    w_far: int = 2,
-) -> DataFrame:
-    """Deterministic random-walk corpus over the directed KG edge list —
-    the graph→sequence export a skip-gram trainer consumes, closing the
-    loop from extracted graph back to training data next to
-    :func:`training_pairs`.  node2vec's second-order bias (Grover &
-    Leskovec 2016) with integer weights in place of the paper's
-    1/p / 1 / 1/q rationals: from node v arrived-from t, candidate x
-    weighs ``w_return`` if x == t, ``w_near`` if x is ALSO a neighbor of
-    t (distance 1 from t), else ``w_far`` (distance 2) — all >= 1,
-    enforced loudly, so the total weight is always positive.  Equal
-    weights are uniform DeepWalk sampling (Perozzi et al. 2014).
-
-    Step rule: candidates are v's SORTED out-neighbors; the pick is the
-    unique candidate whose cumulative-weight window contains
-    ``md5_60(cur|walk_id|i|seed) % total_weight`` — an in-row integer
-    fold (one ``aggregate`` lambda over the zipped (candidate, weight)
-    array), replayed relationally by the DuckDB oracle as a window
-    prefix-sum, bit-for-bit, and reproducible by (seed, walk_id).  When
-    every candidate weighs the same w — step 1, which has no predecessor
-    (all weigh ``w_far``), and every step of a uniform walk — the fold
-    reduces to the modular index ``(h % (deg·w)) div w``.  Walks stop
-    early at sinks (no out-edges): the walk row keeps its prefix, giving
-    skip-gram windows exactly the context that exists.
-
-    Scale shape: each uniform step is ONE label equi-join of the walk
-    frontier against the adjacency table; a biased step after the first
-    does TWO (cur's neighbors for candidates, prev's for the near test —
-    the price of second-order bias), all AQE-decided, probing the same
-    reused exchange, plus a per-row O(deg_cur · deg_prev) membership fold
-    bounded by hub degree (``array_contains`` is a linear scan).  The
-    weight array is computed ONCE per row as its own projected column —
-    referenced twice downstream, which keeps CollapseProject from
-    inlining the fold into both consumers (SPARK-36718, the transe_margin
-    stance).  Frontier rows carry only labels and a ≤ length-string
-    array, never text.  The distinct EDGE list is pinned
-    (:func:`_walk_scaffold`).  The adjacency table deliberately stays
-    LAZY: the split A/B (200k-edge synthetic, alternating 3-round,
-    warmed) read edge-pin-only 0.84/0.80/0.75 s vs +adj-pin
-    1.56/1.06/1.08 s — every step's join probes one identical exchange
-    Spark already reuses, while the pin serializes corpus-scale neighbor
-    arrays.  Hub adjacency arrays are bounded by out-degree; for open-web
-    graphs compose with a degree cap upstream.
-
-    Output: (start_label, walk_id, walk array<string>, walk_len) —
-    ``walks_per_node`` rows per graph node.
-    """
-    from kgx.functions.hashing import spark_md5_60
-
-    if length < 1 or walks_per_node < 1:
-        raise ValueError(
-            f"bad walk shape length={length} walks_per_node={walks_per_node}"
-        )
-    if min(w_return, w_near, w_far) < 1:
-        raise ValueError(
-            f"node2vec weights must be >= 1 (zero-total draws would stall "
-            f"walkers): w_return={w_return} w_near={w_near} w_far={w_far}"
-        )
-    uniform = w_return == w_near == w_far
-    adj, cur = _walk_scaffold(triples, walks_per_node)
-    padj = adj.select(
-        F.col("subj").alias("psubj"), F.col("nbrs").alias("pnbrs")
-    )
-    for i in range(1, length):
-        h = spark_md5_60(
-            f"concat_ws('|', cur, cast(walk_id as string), '{i}', '{seed}')"
-        )
-        stepped = cur.join(adj, F.col("cur") == F.col("subj"), "left")
-        if uniform or i == 1:
-            # every candidate weighs w_far: the fold with constant weights
-            # reduces to one modular index pick, and needs no prev adjacency
-            pick = (
-                f"element_at(nbrs, cast((({h}) % "
-                f"(size(nbrs) * {w_far})) div {w_far} as int) + 1)"
-            )
-        else:
-            weight = (
-                f"CASE WHEN x = prev THEN cast({w_return} as bigint) "
-                f"WHEN array_contains(coalesce(pnbrs, array()), x) "
-                f"THEN cast({w_near} as bigint) "
-                f"ELSE cast({w_far} as bigint) END"
-            )
-            stepped = stepped.join(
-                padj, F.col("prev") == F.col("psubj"), "left"
-            ).select(
-                "start_label",
-                "walk_id",
-                "cur",
-                "prev",
-                "walk",
-                "nbrs",
-                F.expr(f"transform(nbrs, x -> {weight})").alias("ws"),
-            )
-            pick = (
-                f"aggregate("
-                f"  zip_with(nbrs, ws, (x, w) -> named_struct('x', x, 'w', w)),"
-                f"  named_struct("
-                f"    'rem', cast(({h}) % aggregate(ws,"
-                f"                 cast(0 as bigint), (acc, v) -> acc + v) as bigint),"
-                f"    'pick', cast(null as string)),"
-                f"  (acc, e) -> CASE"
-                f"    WHEN acc.pick IS NOT NULL THEN acc"
-                f"    WHEN acc.rem < e.w THEN named_struct('rem', acc.rem, 'pick', e.x)"
-                f"    ELSE named_struct('rem', acc.rem - e.w, 'pick', acc.pick) END,"
-                f"  acc -> acc.pick)"
-            )
-        cur = stepped.select(
-            "start_label",
-            "walk_id",
-            "cur",
-            "prev",
-            "walk",
-            F.expr(f"CASE WHEN nbrs IS NULL THEN NULL ELSE {pick} END").alias("nxt"),
-        ).select(
-            "start_label",
-            "walk_id",
-            F.expr("coalesce(nxt, cur)").alias("cur"),
-            F.expr("CASE WHEN nxt IS NULL THEN prev ELSE cur END").alias("prev"),
-            F.expr(
-                "CASE WHEN nxt IS NULL THEN walk "
-                "ELSE array_append(walk, nxt) END"
-            ).alias("walk"),
-        )
-    return cur.select(
-        "start_label",
-        "walk_id",
-        "walk",
-        F.expr("cast(size(walk) as bigint)").alias("walk_len"),
-    )

@@ -1453,102 +1453,6 @@ WHERE o.doc_id IS NULL OR n.doc_id IS NULL
 """.strip()
 
 
-def _walk_base_ctes(
-    walks_per_node: int, w0_name: str, with_prev: bool
-) -> list[str]:
-    """Shared base of every walk oracle (mirror of
-    kgx.operators.graphstats._walk_scaffold): sorted-distinct adjacency,
-    node union, step-0 frontier.  ONE definition of the adjacency
-    semantics so the DeepWalk and node2vec oracles can never drift."""
-    prev = "CAST(NULL AS VARCHAR) AS prev,\n           " if with_prev else ""
-    return [
-        "gr_adj AS MATERIALIZED (SELECT subj, list_sort(list(DISTINCT obj)) "
-        "AS nbrs FROM gr_edges GROUP BY 1)",
-        "gr_nodes AS (SELECT subj AS label FROM gr_edges "
-        "UNION SELECT obj FROM gr_edges)",
-        f"""
-{w0_name} AS (
-    SELECT label AS start_label, CAST(w AS BIGINT) AS walk_id,
-           label AS cur, {prev}[label] AS walk
-    FROM gr_nodes, (SELECT unnest(range({walks_per_node})) AS w) ws
-)""".strip(),
-    ]
-
-
-def _random_walks_ctes(
-    length: int = 4, walks_per_node: int = 2, seed: int = 0
-) -> tuple[str, str]:
-    """CTE chain replaying kgx.operators.graphstats.node2vec_walks with
-    equal weights (uniform DeepWalk steps) on top of ``gr_edges``, written
-    independently of the weighted node2vec oracle; returns (chain,
-    final_cte_name) so the walk corpus and the skip-gram pair oracle share
-    one generator."""
-    ctes = _walk_base_ctes(walks_per_node, w0_name="w0", with_prev=False)
-    for i in range(1, length):
-        h = duckdb_md5_60(
-            f"concat_ws('|', cur, CAST(walk_id AS VARCHAR), '{i}', '{seed}')"
-        )
-        pick = f"nbrs[CAST(({h}) % len(nbrs) AS INT) + 1]"
-        ctes.append(
-            f"""
-w{i} AS (
-    SELECT start_label, walk_id,
-           CASE WHEN nbrs IS NULL THEN cur ELSE {pick} END AS cur,
-           CASE WHEN nbrs IS NULL THEN walk
-                ELSE list_append(walk, {pick}) END AS walk
-    FROM w{i - 1} LEFT JOIN gr_adj ON w{i - 1}.cur = gr_adj.subj
-)""".strip()
-        )
-    return ",\n".join(ctes), f"w{length - 1}"
-
-
-def graph_random_walks_sql(length: int, walks_per_node: int, seed: int) -> str:
-    """Oracle for the DeepWalk-style walk corpus (mirror of
-    kgx.operators.graphstats.node2vec_walks with weights 1/1/1): the step
-    hash md5_60(cur|walk_id|i|seed) mod out-degree indexes the SAME
-    list_sort'ed adjacency array (binary string order in both engines),
-    one unrolled CTE per step, so every walk matches element-for-element."""
-    chain, final = _random_walks_ctes(length, walks_per_node, seed)
-    return f"""
-{_graph_edges_ctes()},
-{chain}
-SELECT start_label, walk_id, walk,
-       CAST(len(walk) AS BIGINT) AS walk_len
-FROM {final}
-""".strip()
-
-
-def walk_skipgram_pairs_sql(
-    length: int,
-    walks_per_node: int,
-    seed: int,
-    window: int,
-) -> str:
-    """Oracle for windowed skip-gram pair counts over the walk corpus
-    (mirror of kgx.operators.graphstats.walk_skipgram_pairs): identical
-    in-row (i, j) window enumeration via list lambdas, then one count
-    aggregate."""
-    W = int(window)
-    chain, final = _random_walks_ctes(length, walks_per_node, seed)
-    lo = f"CASE WHEN i - {W} > 1 THEN i - {W} ELSE 1 END"
-    hi = f"CASE WHEN i + {W} < len(walk) THEN i + {W} ELSE len(walk) END"
-    return f"""
-{_graph_edges_ctes()},
-{chain},
-pairs AS (
-    SELECT unnest(flatten(list_transform(range(1, len(walk) + 1), i ->
-               list_transform(list_filter(range({lo}, ({hi}) + 1),
-                                          j -> j <> i),
-                              j -> {{'center': walk[i], 'context': walk[j]}}))))
-           AS p
-    FROM {final}
-)
-SELECT p.center AS center, p.context AS context,
-       CAST(count(*) AS BIGINT) AS n_pairs
-FROM pairs GROUP BY 1, 2
-""".strip()
-
-
 def kg_negative_samples_sql(k: int, buckets: int) -> str:
     """Oracle for hash-bucketed negative sampling (mirror of
     kgx.operators.graphstats.negative_samples): md5-60 of
@@ -1672,133 +1576,6 @@ enr AS (
 SELECT doc_id, media_ref, span_pos, prev_text, next_text,
        coalesce(prev_text, next_text) AS caption
 FROM enr WHERE kind = 'media'
-""".strip()
-
-
-def kg_transe_margin_sql(dim: int, modulus: int, k: int, buckets: int) -> str:
-    """Oracle for the per-predicate TransE energy audit (mirror of
-    kgx.operators.graphstats.transe_margin): the full training-pair oracle
-    nested as a CTE, the same md5-60 + universal-hash integer embedding
-    components, the same L1 energy sum, conditional aggregation per pred,
-    toward-zero ``//`` means (NULL-guarded like the Spark CASE)."""
-    from kgx.functions.hashing import minhash_derived
-
-    half = modulus // 2
-    hs = duckdb_md5_60("concat('e|', subj)")
-    hp = duckdb_md5_60("concat('r|', pred)")
-    ho = duckdb_md5_60("concat('e|', obj)")
-
-    def comp(h: str, d: int) -> str:
-        return f"(({minhash_derived(h, d)}) % {modulus} - {half})"
-
-    energy = " + ".join(
-        f"abs({comp('hs', d)} + {comp('hp', d)} - {comp('ho', d)})"
-        for d in range(dim)
-    )
-    return f"""
-WITH tm_tp AS MATERIALIZED (
-    {kg_training_pairs_sql(k=k, buckets=buckets)}
-),
-tm_hashed AS (
-    SELECT pred, is_positive,
-           CAST({hs} AS BIGINT) AS hs,
-           CAST({hp} AS BIGINT) AS hp,
-           CAST({ho} AS BIGINT) AS ho
-    FROM tm_tp
-),
-tm_scored AS (
-    SELECT pred, is_positive, CAST({energy} AS BIGINT) AS energy
-    FROM tm_hashed
-),
-tm_agg AS (
-    SELECT pred,
-           CAST(sum(CASE WHEN is_positive = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-           CAST(sum(CASE WHEN is_positive = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg,
-           CAST(sum(CASE WHEN is_positive = 1 THEN energy ELSE 0 END) AS BIGINT) AS sum_pos_energy,
-           CAST(sum(CASE WHEN is_positive = 0 THEN energy ELSE 0 END) AS BIGINT) AS sum_neg_energy
-    FROM tm_scored GROUP BY pred
-)
-SELECT pred, n_pos, n_neg, sum_pos_energy, sum_neg_energy,
-       CAST(CASE WHEN n_pos = 0 THEN NULL
-            ELSE sum_pos_energy // n_pos END AS BIGINT) AS mean_pos_energy,
-       CAST(CASE WHEN n_neg = 0 THEN NULL
-            ELSE sum_neg_energy // n_neg END AS BIGINT) AS mean_neg_energy,
-       CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-            ELSE sum_neg_energy // n_neg - sum_pos_energy // n_pos
-            END AS BIGINT) AS margin
-FROM tm_agg
-""".strip()
-
-
-def node2vec_walks_sql(
-    length: int,
-    walks_per_node: int,
-    seed: int,
-    w_return: int,
-    w_near: int,
-    w_far: int,
-) -> str:
-    """Oracle for node2vec second-order biased walks (mirror of
-    kgx.operators.graphstats.node2vec_walks): the engine's in-row
-    cumulative-weight fold replayed RELATIONALLY — per unrolled step,
-    candidates unnest with position from the same sorted adjacency
-    array, weigh via the same return/near/far CASE, and the picked
-    candidate is the unique row whose [cum - w, cum) window contains
-    md5_60(cur|walk_id|i|seed) % total — identical integer arithmetic,
-    bit-for-bit walks."""
-    ctes = _walk_base_ctes(walks_per_node, w0_name="nv_w0", with_prev=True)
-    for i in range(1, length):
-        h = duckdb_md5_60(
-            f"concat_ws('|', cur, CAST(walk_id AS VARCHAR), '{i}', '{seed}')"
-        )
-        ctes.append(f"""
-nv_c{i} AS (
-    SELECT f.start_label, f.walk_id, f.cur, f.prev,
-           unnest(a.nbrs) AS x,
-           unnest(range(1, len(a.nbrs) + 1)) AS pos,
-           pn.pnbrs
-    FROM nv_w{i - 1} f
-    JOIN gr_adj a ON a.subj = f.cur
-    LEFT JOIN (SELECT subj AS psubj, nbrs AS pnbrs FROM gr_adj) pn
-           ON pn.psubj = f.prev
-),
-nv_k{i} AS (
-    SELECT start_label, walk_id, cur, x, pos,
-           CASE WHEN x = prev THEN CAST({w_return} AS BIGINT)
-                WHEN pnbrs IS NOT NULL AND list_contains(pnbrs, x)
-                THEN CAST({w_near} AS BIGINT)
-                ELSE CAST({w_far} AS BIGINT) END AS w
-    FROM nv_c{i}
-),
-nv_m{i} AS (
-    SELECT *,
-           sum(w) OVER (PARTITION BY start_label, walk_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS cum,
-           sum(w) OVER (PARTITION BY start_label, walk_id) AS total
-    FROM nv_k{i}
-),
-nv_p{i} AS (
-    SELECT start_label, walk_id, x
-    FROM nv_m{i}
-    WHERE ({h}) % total >= cum - w AND ({h}) % total < cum
-),
-nv_w{i} AS (
-    SELECT f.start_label, f.walk_id,
-           coalesce(p.x, f.cur) AS cur,
-           CASE WHEN p.x IS NULL THEN f.prev ELSE f.cur END AS prev,
-           CASE WHEN p.x IS NULL THEN f.walk
-                ELSE list_append(f.walk, p.x) END AS walk
-    FROM nv_w{i - 1} f
-    LEFT JOIN nv_p{i} p USING (start_label, walk_id)
-)
-""".strip())
-    chain = ",\n".join(ctes)
-    return f"""
-{_graph_edges_ctes()},
-{chain}
-SELECT start_label, walk_id, walk,
-       CAST(len(walk) AS BIGINT) AS walk_len
-FROM nv_w{length - 1}
 """.strip()
 
 

@@ -3,7 +3,10 @@
 Used by the jobs, tests and benchmarks.  The master, the shuffle-partition
 count and the driver memory are defaults: a setting the launch gave
 (``spark-submit --master``/``--conf``, ``spark-defaults.conf``) wins over
-them, and an explicit argument wins over both.  Every setting here is
+them, and an explicit argument wins over both.  The driver-memory default
+applies only where ``get_spark`` starts the driver JVM; under
+``spark-submit`` the JVM already runs, so its heap is
+``--driver-memory``'s.  Every setting here is
 cluster-safe — the same config block is what we'd ship in
 ``spark-defaults.conf`` for a 1000-executor job:
 
@@ -15,10 +18,10 @@ cluster-safe — the same config block is what we'd ship in
   coalesces from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
   downward, so oversizing is safe and undersizing is not.
 - ANSI mode and the UTC session time zone pinned (:data:`ANSWER_CONF`),
-  not inherited from a cluster's ``spark-defaults``: the fixed-point graph
-  operators (PageRank ranks, node2vec weights) and ``sentence_prune``'s
-  ``doc_id * 2^20 + idx`` order key rely on bigint overflow raising
-  ARITHMETIC_OVERFLOW; with ANSI off it would wrap around silently.
+  not inherited from a cluster's ``spark-defaults``: PageRank's fixed-point
+  ranks and ``sentence_prune``'s ``doc_id * 2^20 + idx`` order key rely on
+  bigint overflow raising ARITHMETIC_OVERFLOW; with ANSI off it would wrap
+  around silently.
 """
 
 from __future__ import annotations
@@ -96,9 +99,14 @@ def get_spark(
     defaults = {
         "spark.master": os.environ.get("KGX_MASTER", f"local[{cores}]"),
         "spark.sql.shuffle.partitions": str(max(2 * cores, 8)),
-        "spark.driver.memory": os.environ.get("KGX_DRIVER_MEM", _default_driver_mem()),
     }
     launched = _launch_conf()
+    if not launched:
+        # the heap is sized when the driver JVM starts; a running one (a
+        # spark-submit launch) keeps its own, so the conf must not claim one
+        defaults["spark.driver.memory"] = os.environ.get(
+            "KGX_DRIVER_MEM", _default_driver_mem()
+        )
     conf = {k: v for k, v in defaults.items() if k not in launched}
     if master:
         conf["spark.master"] = master

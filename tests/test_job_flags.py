@@ -21,12 +21,7 @@ CASES = [
     ("run_graph_stats", "--graph", "--lpa-iters", "-1"),
     ("run_graph_stats", "--graph", "--checkpoint-every", "-1"),
     ("run_graph_stats", "--graph", "--negatives-k", "-1"),
-    ("run_embedding_prep", "--graph", "--walk-length", "0"),
-    ("run_embedding_prep", "--graph", "--walks-per-node", "0"),
-    ("run_embedding_prep", "--graph", "--window", "0"),
     ("run_embedding_prep", "--graph", "--negatives-buckets", "0"),
-    ("run_embedding_prep", "--graph", "--embedding-dim", "0"),
-    ("run_embedding_prep", "--graph", "--embedding-modulus", "0"),
     ("run_embedding_prep", "--graph", "--negatives-k", "-1"),
     ("run_curation", "--input", "--min-tokens", "-1"),
     ("run_curation", "--input", "--near-dup-threshold", "0"),

@@ -13,7 +13,7 @@ from kgx.session import get_spark
 
 def test_get_spark_pins_ansi_mode(spark):
     # a cluster default (or an earlier caller) turning ANSI off must not
-    # survive get_spark: PageRank, node2vec weights and sentence_prune's
+    # survive get_spark: PageRank's fixed-point ranks and sentence_prune's
     # doc_id * 2^20 + idx order key rely on overflow raising
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -47,7 +47,8 @@ def test_run_pipeline_pins_answer_settings_on_the_active_session(
 
 def test_get_spark_keeps_the_spark_submit_settings(tmp_path):
     # a cluster submit must run on the cluster's master and shuffle width,
-    # not on get_spark's local defaults; ANSI is still pinned
+    # not on get_spark's local defaults; ANSI is still pinned, and a driver
+    # heap the submit did not size is not claimed in the conf
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     probe = tmp_path / "probe.py"
     probe.write_text(
@@ -55,7 +56,8 @@ def test_get_spark_keeps_the_spark_submit_settings(tmp_path):
         "s = get_spark('probe')\n"
         "print('PROBE', s.sparkContext.master,"
         " s.conf.get('spark.sql.shuffle.partitions'),"
-        " s.conf.get('spark.sql.ansi.enabled'))\n"
+        " s.conf.get('spark.sql.ansi.enabled'),"
+        " s.conf.get('spark.driver.memory', None))\n"
         "s.stop()\n"
     )
     env = {**os.environ, "PYTHONPATH": root, "PYSPARK_PYTHON": sys.executable,
@@ -68,7 +70,7 @@ def test_get_spark_keeps_the_spark_submit_settings(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     probed = [line.split()[1:] for line in proc.stdout.splitlines()
               if line.startswith("PROBE ")]
-    assert probed == [["local[1]", "3", "true"]], proc.stdout[-2000:]
+    assert probed == [["local[1]", "3", "true", "None"]], proc.stdout[-2000:]
 
 
 def test_bigint_overflow_raises(spark):

@@ -84,21 +84,6 @@ SECTIONS = [
      "equi-join of the edge list against the (label, rank) bigint table "
      "plus one partial-aggregated exchange — the plan a 10^12-doc KG "
      "needs, with checkpoint_every lineage truncation for deep runs."),
-    ("graph_random_walks",
-     "Round 5 (DeepWalk walk corpus: node2vec_walks with equal weights, "
-     "so no step joins the predecessor's adjacency): length−1 unrolled "
-     "steps, each ONE label equi-join of the walk frontier against the "
-     "lazy adjacency aggregate (every step probes the same exchange, "
-     "which Spark reuses); the distinct edge list below is "
-     "localCheckpointed so the "
-     "extraction subtree runs once; frontier rows carry only labels and "
-     "a ≤ length-string array."),
-    ("walk_skipgram_pairs",
-     "Round 5 (node2vec pair table): skip-gram windows enumerate IN-ROW "
-     "over each walk array (nested HOFs + one Generate, no self-join), "
-     "then ONE map-side-"
-     "combined count aggregate; the only full-width exchange carries "
-     "pre-combined (center, context) rows."),
 ]
 
 
